@@ -34,112 +34,23 @@ __version__ = "0.2.0"
 # Driver sweep order. The correctness driver walks the registry in
 # insertion order and records the FIRST 50 entries per round (observed
 # in rounds 1 and 2), so the registry is re-ordered after module
-# import. The classing comes from CORRECTNESS_r*.json verdicts (see
-# _reorder_registry): never-checked queries first, then upgrade
-# re-runs, then — since round 14 — every already-verified query by
-# driver-check RECENCY (oldest latest-verdict first), so the sweep
-# rotates the whole registry through fresh re-verification without a
-# hand-maintained list.
-# Verdicts recorded in rounds <= the given number are STALE for these
-# names (the query's oracle/contract was rewritten after that round, so
-# an older hash-green row no longer certifies the current code). Listed
-# names re-enter the sweep as class-0 until a fresh verdict lands in a
-# LATER round's CORRECTNESS file, at which point the entry is inert
-# (safe to leave; prune when convenient).
-_STALE_BEFORE = {
-    # x14's oracle was rewritten in round 7 (sentinel watermark-barrier
-    # contract); its only green verdict is r06 — pre-rewrite.
-    "x14_stream_stream_left_join": 7,
-    # x10's pre-r8 verdicts certify the applyInPandasWithState fallback
-    # branch (impl_path='fallback'); round 8 activates the primary
-    # transformWithStateInPandas path via the vendored protobuf runtime,
-    # so the proof that the NATIVE branch runs needs a fresh driver row.
-    "x10_transform_with_state": 7,
-    # Round-11 ADVICE fixes rewrote the Spark-side arithmetic/staging of
-    # these six (C(n,2) double-division -> shiftright int64; staging dir
-    # keyed by sf_tag + pre-write rmtree): pre-r11 hash-greens certify
-    # the old code paths.
-    "l4_band_occupancy_audit": 10,
-    "l_cross_shard_neardup_rate": 10,
-    "l_hot_bucket_skew_advisor": 10,
-    "l_dedup_stage_cost_model": 10,
-    "a57_kendall_tau": 10,
-    "pipeline_sharded_dedup": 10,
-    # staging paths re-keyed by sf_tag + pre-write rmtree in r11.
-    "s5_partitioned_sink_roundtrip": 10,
-    "pipeline_daily_publish": 10,
-    # Round-12 rewrites: the BPE trainer's round body was restated
-    # join-free (window islands + scalar argmax; superseded checkpoints
-    # released) and model_score_frame now aliases its internal text
-    # reference — pre-r12 hash-greens certify the old code paths.
-    "l_bpe_train_multistep": 11,
-    "l_bpe_encode_stats": 11,
-    "l_model_quality_scorer": 11,
-    "x20_stream_model_scoring": 11,
-    "x21_stream_gated_ingest": 11,
-    # r12 sf0.1 full drain caught a double->DECIMAL midpoint divergence
-    # (103.515 rounds differently across engines); restated in integer
-    # cents — every pre-r12 hash-green certified the old formulation.
-    "q_three_way_match": 11,
-    # r12 sf1 full drain caught two ORACLE defect classes (Spark code
-    # untouched): (1) session-island oracles ordered ties by bare ts,
-    # so the flag window and the running-sum window could order
-    # duplicate timestamps differently (sf1 tiles events 10x with
-    # identical ts) — now ORDER BY ts, event_id in both windows;
-    # (2) DuckDB's decimal->double cast double-rounds and sits 1 ulp
-    # off Spark's correctly-rounded conversion once the scaled value
-    # exceeds 2^53 — now routed through VARCHAR (correctly rounded in
-    # both engines). Pre-r12 hash-greens certified the old oracles.
-    "x3_session_window": 11,
-    "x3_stream_session_window": 11,
-    "a58_levene_brown_forsythe": 11,
-    "q_npv_discounted_cashflow": 11,
-    "w19_bollinger_bands": 11,
-}
+# import by driver-check RECENCY (see _reorder_registry): never-checked
+# queries first, then every verified query by its latest verdict's
+# round, oldest first, so the sweep rotates the whole registry through
+# fresh re-verification without a hand-maintained list.
 
-# Round-14 sweep plan. Since round 14 the already-verified tail is
-# ordered AUTOMATICALLY by driver-check recency (oldest latest-verdict
-# first — see _reorder_registry class 4/5), so the 50-slot sweep
-# rotates toward the least-recently-checked names every round without
-# a hand-maintained list; after r13 all 514 entries have a green
-# latest verdict, so the rotation is what re-anchors the union-latest
-# correctness record to current HEAD. _SWEEP_FIRST lists this round's
-# NEW registrations (never-checked, SQL-oracled — they take the head
-# slots in registration order); _SWEEP_LAST survives only as an
-# optional same-recency tiebreaker (names checked in the SAME round
-# order by their position here, then import order).
-_SWEEP_FIRST = [
-    # SQL-oracled, never driver-checked (head slots, registration
-    # order). Names are appended here as each round-14 query lands —
-    # a name in this list before its @query registration would
-    # silently deprioritize nothing but still trips the
-    # sweep-lists-reference-registered-queries test, by design.
-    "pipeline_commit_storm_mp",
-    "o_connect_compat_report",
-    "r_loopback_real_stack",
-]
-_SWEEP_LAST: list = []  # recency ordering replaced the curated tail in r14
 
-def _load_driver_verdicts() -> tuple[set, set, dict]:
-    """(any_verdict, hash_verdict, last_round) read from every
-    CORRECTNESS_r*.json at the repo root. Self-updating: when a round's
-    results land, the next import automatically demotes the
-    newly-verified names — the failure mode that cost round 2 its
-    verification budget (a manual list that new registrations silently
-    displaced) cannot recur. ``hash_verdict`` holds names with at least
-    one full rows+schema+hash green row; a name whose only rows are
-    ``err: no_oracle`` (rows-only evidence) is in ``any_verdict`` only,
-    so it can be re-queued for a hash check once it gains an oracle.
-    ``last_round`` maps each verified name to the NEWEST round that
-    recorded it (stale-oracle rounds excluded) — the recency key that
-    rotates the already-verified tail of the sweep."""
+def _load_driver_last_round() -> dict:
+    """Name -> the NEWEST round whose CORRECTNESS_r*.json at the repo
+    root recorded it. Self-updating: when a round's results land, the
+    next import automatically demotes the newly-verified names — the
+    failure mode that cost round 2 its verification budget (a manual
+    list that new registrations silently displaced) cannot recur."""
     import glob
     import json
     import os
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    verified: set = set()
-    hash_verified: set = set()
     last_round: dict = {}
     for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
         try:
@@ -149,79 +60,24 @@ def _load_driver_verdicts() -> tuple[set, set, dict]:
         try:
             with open(path) as fh:
                 rows = json.load(fh)
-            fresh = {
-                n for n in rows if rnd > _STALE_BEFORE.get(n, 0)
-            }
-            verified |= fresh
-            for n in fresh:
-                last_round[n] = max(last_round.get(n, 0), rnd)
-            hash_verified |= {
-                n
-                for n, row in rows.items()
-                if n in fresh
-                and isinstance(row, dict)
-                and row.get("hash_match")
-            }
         except Exception:
-            pass  # malformed/partial file: treat as no verdicts
-    return verified, hash_verified, last_round
+            continue  # malformed/partial file: treat as no verdicts
+        for n in rows:
+            last_round[n] = max(last_round.get(n, 0), rnd)
+    return last_round
 
 
-def _load_driver_verified() -> set:
-    """Names with ANY driver verdict (rows-only counts). See
-    :func:`_load_driver_verdicts` for the hash/rows-only split."""
-    return _load_driver_verdicts()[0]
-
-
-def _reorder_registry(
-    verified: set | None = None,
-    hash_verified: set | None = None,
-    last_round: dict | None = None,
-) -> None:
-    """Order the registry for the driver's 50-slot budget:
-
-    1. never driver-checked, has a SQL oracle, curated (hash-verifiable)
-    2. never driver-checked, rows-only, curated  (spark_rows evidence)
-    3. checked but never hash-green, oracle NOW  (upgrade re-runs — e.g.
-       a query whose only verdict predates its oracle)
-    4. never driver-checked, NOT in a curated list (registrations newer
-       than the round's committed sweep plan — they queue behind the
-       plan's upgrade re-runs so mid-round additions can never push a
-       planned slot out of the budget, and surface next round)
-    5. already hash-green or rows-only-by-design, ordered by RECENCY:
-       oldest latest-verdict round first, so every round's leftover
-       slots re-verify the names whose last driver check is furthest
-       in the past (the r13 judge's rotation ask). Curated position,
-       then import order, breaks ties within the same round.
-
-    Within classes 1-4 the curated `_SWEEP_FIRST`/`_SWEEP_LAST` order
-    is the priority tiebreaker; uncurated names follow in import
-    order."""
-    if verified is None:
-        verified, hash_verified, last_round = _load_driver_verdicts()
-    if hash_verified is None:
-        hash_verified = set()
+def _reorder_registry(last_round: dict | None = None) -> None:
+    """Order the registry for the driver's 50-slot budget by
+    (latest-verdict round, import order): never-checked names have
+    round 0 and take the head in registration order; every verified
+    name follows, oldest latest verdict first, so each round's slots
+    re-verify the names whose last driver check is furthest in the
+    past (the r13 judge's rotation ask)."""
     if last_round is None:
-        # explicit-verdict callers (tests) without a recency map: fall
-        # back to the on-disk record so class-5 ordering stays stable
-        last_round = _load_driver_verdicts()[2]
-    curated = {n: i for i, n in enumerate(_SWEEP_FIRST + _SWEEP_LAST)}
+        last_round = _load_driver_last_round()
     imported = {n: i for i, n in enumerate(QUERIES)}
-
-    def key(n: str):
-        if n not in verified:
-            if n not in curated:
-                cls = 3  # new this round: behind the committed plan
-            else:
-                cls = 0 if n in ORACLES else 1
-        elif n not in hash_verified and n in ORACLES:
-            cls = 2  # rows-only verdict but an oracle exists: upgrade it
-        else:
-            cls = 4
-        recency = last_round.get(n, 0) if cls == 4 else 0
-        return (cls, recency, curated.get(n, len(curated)), imported[n])
-
-    order = sorted(QUERIES, key=key)
+    order = sorted(QUERIES, key=lambda n: (last_round.get(n, 0), imported[n]))
     reordered = {n: QUERIES[n] for n in order}
     QUERIES.clear()
     QUERIES.update(reordered)

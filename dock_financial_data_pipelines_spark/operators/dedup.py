@@ -37,6 +37,7 @@ from dock_financial_data_pipelines_spark.catalog import (
     memo_index,
     sf_tag,
 )
+from dock_financial_data_pipelines_spark.hashing import h60_sql
 from dock_financial_data_pipelines_spark.registry import ORACLES, query
 from dock_financial_data_pipelines_spark.session import release_local_checkpoint
 
@@ -208,10 +209,7 @@ def minhash_signatures(docs: DataFrame, shingle_width: int = 3) -> DataFrame:
     )
     mins = [
         F.min(
-            F.expr(
-                "CAST(conv(substring(md5(concat(shingle, '#', "
-                f"'{i}')), 1, 15), 16, 10) AS BIGINT)"
-            )
+            F.expr(h60_sql(f"concat(shingle, '#', '{i}')", "spark"))
         ).alias(f"mh{i}")
         for i in range(_MINHASH_K)
     ]
@@ -272,10 +270,31 @@ _MH_SHINGLES_SQL = """
 """
 
 _MH_SIG_COLS = ",\n           ".join(
-    f"min(CAST(concat('0x', substring(md5(shingle || '#{i}'), 1, 15))"
-    f" AS BIGINT)) AS mh{i}"
+    "min(" + h60_sql(f"shingle || '#{i}'", "duckdb") + f") AS mh{i}"
     for i in range(_MINHASH_K)
 )
+
+
+def _mh_bands_sql(src: str) -> str:
+    """DuckDB twin of minhash_signatures + _banded_sigs over the
+    (doc_id, shingle) relation ``src``: per-family minima (mh) and the
+    band signatures built from them (bands)."""
+    return f"""
+    mh AS (
+        SELECT doc_id, f,
+               min({h60_sql("shingle || '#' || CAST(f AS VARCHAR)", "duckdb")})
+                   AS v
+        FROM {src} CROSS JOIN (SELECT unnest(range({_MINHASH_K})) AS f)
+        GROUP BY 1, 2
+    ),
+    bands AS (
+        SELECT doc_id, CAST(f // {_ROWS_PER_BAND} AS INT) AS band,
+               string_agg(CAST(v AS VARCHAR), '_' ORDER BY f) AS sig
+        FROM mh GROUP BY 1, 2
+    )"""
+
+
+_MH_BANDS_SQL = _mh_bands_sql("shingles")
 
 
 @query(
@@ -305,18 +324,7 @@ def l4_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # l4_ngram_jaccard_pairs' exact form.
     oracle=f"""
     WITH {_MH_SHINGLES_SQL},
-    mh AS (
-        SELECT doc_id, f,
-               min(CAST(concat('0x', substring(md5(shingle || '#' ||
-                   CAST(f AS VARCHAR)), 1, 15)) AS BIGINT)) AS v
-        FROM shingles CROSS JOIN (SELECT unnest(range({_MINHASH_K})) AS f)
-        GROUP BY 1, 2
-    ),
-    bands AS (
-        SELECT doc_id, CAST(f // {_ROWS_PER_BAND} AS INT) AS band,
-               string_agg(CAST(v AS VARCHAR), '_' ORDER BY f) AS sig
-        FROM mh GROUP BY 1, 2
-    ),
+    {_MH_BANDS_SQL},
     cand AS (
         SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
         FROM bands l JOIN bands r
@@ -388,7 +396,7 @@ _SIMHASH_BITS = 60
 
 def simhash_signatures(docs: DataFrame) -> DataFrame:
     tok = docs.select("doc_id", F.explode(_tokens()).alias("token")).withColumn(
-        "h", F.expr("CAST(conv(substring(md5(token), 1, 15), 16, 10) AS BIGINT)")
+        "h", F.expr(h60_sql("token", "spark"))
     )
     bit_sums = [
         F.sum(
@@ -409,21 +417,25 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return agg.select("doc_id", sig.alias("simhash"))
 
 
-@query(
-    "l4_simhash_signatures",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id,
-               CAST(concat('0x', substring(md5(token), 1, 15)) AS BIGINT) AS h
+# DuckDB twin of simhash_signatures' per-token hash and bit votes.
+_SIMHASH_BITS_SQL = f"""
+    tok AS (
+        SELECT doc_id, {h60_sql("token", "duckdb")} AS h
         FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
               FROM documents)
     ),
     bits AS (
         SELECT doc_id, b,
                sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        FROM tok CROSS JOIN (SELECT unnest(range(60)) AS b)
+        FROM tok CROSS JOIN (SELECT unnest(range({_SIMHASH_BITS})) AS b)
         GROUP BY 1, 2
-    )
+    )"""
+
+
+@query(
+    "l4_simhash_signatures",
+    oracle=f"""
+    WITH {_SIMHASH_BITS_SQL}
     SELECT doc_id,
            CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END)
                 AS BIGINT) AS simhash
@@ -441,19 +453,8 @@ def l4_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucketing exactly equivalent at this radius (≤3 differing bits
     # cannot touch all 4 chunks), so a green hash here proves both the
     # md5-simhash construction and that the bucketing loses no pair.
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id,
-               CAST(concat('0x', substring(md5(token), 1, 15)) AS BIGINT) AS h
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-              FROM documents)
-    ),
-    bits AS (
-        SELECT doc_id, b,
-               sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        FROM tok CROSS JOIN (SELECT unnest(range(60)) AS b)
-        GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_SIMHASH_BITS_SQL},
     sigs AS (
         SELECT doc_id,
                CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << b)
@@ -835,47 +836,24 @@ def _semantic_dedup_oracle() -> str:
     """
 
 
-@query("l_semantic_dedup", oracle=_semantic_dedup_oracle())
-def l_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dock_financial_data_pipelines_spark.operators.similarity import (
-        _dot,
-        _ivf_assign,
-        _ivf_train_centroids,
-    )
+def _cell_pairs(spark: SparkSession, normed: DataFrame) -> DataFrame:
+    """Every within-cell pair of ``normed`` (cell, vec_id, e, nrm) once,
+    as (cell, id_a, ea, na, id_b, eb, nb) with id_a < id_b.
 
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    centroids = memo_index(
-        spark,
-        f"ivf_centroids:{sf_tag(sf_dir)}",  # shared with l5_ivf_topk
-        lambda: _ivf_train_centroids(spark, emb).localCheckpoint(eager=True),
-    )
-    cells = _ivf_assign(
-        emb.select(F.col("vec_id").alias("_id"), F.col("e").alias("ce")),
-        centroids,
-        "ce",
-        1,
-    ).select(F.col("_id").alias("vec_id"), "cell", F.col("ce").alias("e"))
-
-    # Norms factored out per ROW (sqrt(x·x) is the same double wherever
-    # it is computed, so the per-pair cosine is bit-identical to the
-    # oracle's form — this just avoids 2 of the 3 dot products per pair).
-    normed = cells.withColumn("nrm", F.sqrt(_dot("e", "e")))
-    # COMPUTE-skew fix (r15, guide §2.5): the pair join's only key is
-    # `cell`, and K is oracle-pinned at 8 — so the quadratic within-cell
-    # pair evaluation ran on at most 8 tasks no matter the cluster
-    # (measured at sf1: 8 cores = 32 cores, ~32 s either way; the
-    # partitions are tiny in BYTES, so AQE's skew split never fires —
-    # the skew is in compute). Block-split the pair space: the b side
-    # gets a deterministic bucket gb = pmod(xxhash64(id), G), the a
-    # side replicates G ways over a target-bucket column, and the join
-    # keys (cell, tb=gb) spread the same pair set over K·G tasks.
-    # Every (a, b) pair still meets exactly once (tb enumerates all
-    # buckets, gb is single-valued), so the result is bit-identical;
-    # the a-side ×G replication is the standard salting price and G is
-    # scale-adaptive (2 waves per core over K cells), never a local
-    # constant.
+    COMPUTE-skew fix (r15, guide §2.5): the pair join's only key is
+    `cell`, and K is oracle-pinned at 8 — so the quadratic within-cell
+    pair evaluation ran on at most 8 tasks no matter the cluster
+    (measured at sf1: 8 cores = 32 cores, ~32 s either way; the
+    partitions are tiny in BYTES, so AQE's skew split never fires —
+    the skew is in compute). Block-split the pair space: the b side
+    gets a deterministic bucket gb = pmod(xxhash64(id), G), the a
+    side replicates G ways over a target-bucket column, and the join
+    keys (cell, tb=gb) spread the same pair set over K·G tasks.
+    Every (a, b) pair still meets exactly once (tb enumerates all
+    buckets, gb is single-valued), so the result is bit-identical;
+    the a-side ×G replication is the standard salting price and G is
+    scale-adaptive (2 waves per core over K cells), never a local
+    constant."""
     import math
 
     from dock_financial_data_pipelines_spark.operators.similarity import (
@@ -916,16 +894,32 @@ def l_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .repartition(n_parts, "cell", "gb")
     )
+    return (
+        a.join(b, (a["cell"] == b["cell"]) & (F.col("tb") == F.col("gb")))
+        .where(F.col("id_a") < F.col("id_b"))
+        .select(a["cell"], "id_a", "ea", "na", "id_b", "eb", "nb")
+    )
+
+
+@query("l_semantic_dedup", oracle=_semantic_dedup_oracle())
+def l_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from dock_financial_data_pipelines_spark.operators.similarity import (
+        _dot,
+        _ivf_cells,
+    )
+
+    cells = _ivf_cells(spark, sf_dir)
+
+    # Norms factored out per ROW (sqrt(x·x) is the same double wherever
+    # it is computed, so the per-pair cosine is bit-identical to the
+    # oracle's form — this just avoids 2 of the 3 dot products per pair).
+    normed = cells.withColumn("nrm", F.sqrt(_dot("e", "e")))
     cos = _dot("ea", "eb") / (F.col("na") * F.col("nb"))
     dropped = (
-        a.join(
-            b,
-            (a["cell"] == b["cell"]) & (F.col("tb") == F.col("gb")),
-        )
-        .where(F.col("id_a") < F.col("id_b"))  # within-cell pairs once
+        _cell_pairs(spark, normed)
         .withColumn("cos", cos)
         .where(F.col("cos") >= _SEM_TAU)
-        .select(a["cell"], F.col("id_b").alias("vec_id"))  # larger id drops
+        .select("cell", F.col("id_b").alias("vec_id"))  # larger id drops
         .distinct()
     )
     return (
@@ -1067,18 +1061,7 @@ _INC_MOD = 7
     "l_incremental_dedup",
     oracle=f"""
     WITH {_MH_SHINGLES_SQL},
-    mh AS (
-        SELECT doc_id, f,
-               min(CAST(concat('0x', substring(md5(shingle || '#' ||
-                   CAST(f AS VARCHAR)), 1, 15)) AS BIGINT)) AS v
-        FROM shingles CROSS JOIN (SELECT unnest(range({_MINHASH_K})) AS f)
-        GROUP BY 1, 2
-    ),
-    bands AS (
-        SELECT doc_id, CAST(f // {_ROWS_PER_BAND} AS INT) AS band,
-               string_agg(CAST(v AS VARCHAR), '_' ORDER BY f) AS sig
-        FROM mh GROUP BY 1, 2
-    ),
+    {_MH_BANDS_SQL},
     inc AS (SELECT * FROM documents WHERE doc_id % {_INC_MOD} = 0),
     corp AS (SELECT * FROM documents WHERE doc_id % {_INC_MOD} <> 0),
     exact AS (
@@ -1409,18 +1392,7 @@ def l_neardup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "l4_band_occupancy_audit",
     oracle=f"""
     WITH {_MH_SHINGLES_SQL},
-    mh AS (
-        SELECT doc_id, f,
-               min(CAST(concat('0x', substring(md5(shingle || '#' ||
-                   CAST(f AS VARCHAR)), 1, 15)) AS BIGINT)) AS v
-        FROM shingles CROSS JOIN (SELECT unnest(range({_MINHASH_K})) AS f)
-        GROUP BY 1, 2
-    ),
-    bands AS (
-        SELECT doc_id, CAST(f // {_ROWS_PER_BAND} AS INT) AS band,
-               string_agg(CAST(v AS VARCHAR), '_' ORDER BY f) AS sig
-        FROM mh GROUP BY 1, 2
-    ),
+    {_MH_BANDS_SQL},
     buckets AS (
         SELECT band, sig, count(*) AS bucket_size
         FROM bands GROUP BY band, sig
@@ -1470,18 +1442,7 @@ def l4_band_occupancy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "l4_minhash_estimate_error",
     oracle=f"""
     WITH {_MH_SHINGLES_SQL},
-    mh AS (
-        SELECT doc_id, f,
-               min(CAST(concat('0x', substring(md5(shingle || '#' ||
-                   CAST(f AS VARCHAR)), 1, 15)) AS BIGINT)) AS v
-        FROM shingles CROSS JOIN (SELECT unnest(range({_MINHASH_K})) AS f)
-        GROUP BY 1, 2
-    ),
-    bands AS (
-        SELECT doc_id, CAST(f // {_ROWS_PER_BAND} AS INT) AS band,
-               string_agg(CAST(v AS VARCHAR), '_' ORDER BY f) AS sig
-        FROM mh GROUP BY 1, 2
-    ),
+    {_MH_BANDS_SQL},
     cand AS (
         SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
         FROM bands l JOIN bands r
@@ -1597,8 +1558,7 @@ _CONT_MIN = 0.6
     WITH {_MH_SHINGLES_SQL},
     sh AS (
         SELECT DISTINCT doc_id,
-               CAST(concat('0x', substring(md5(shingle), 1, 15)) AS BIGINT)
-                   AS h
+               {h60_sql("shingle", "duckdb")} AS h
         FROM shingles
     ),
     freq AS (
@@ -1730,9 +1690,8 @@ _SPAN_MIN_TOKENS = 16
     ),
     pos_sh AS (
         SELECT doc_id, i,
-               CAST(concat('0x', substring(
-                   md5(array_to_string(ws[i + 1 : i + 8], ' ')), 1, 15))
-                   AS BIGINT) AS h
+               {h60_sql("array_to_string(ws[i + 1 : i + 8], ' ')", "duckdb")}
+                   AS h
         FROM idx
     ),
     freq AS (
@@ -2175,24 +2134,10 @@ def _semdedup_cell_audit_oracle() -> str:
 def l_semdedup_cell_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dock_financial_data_pipelines_spark.operators.similarity import (
         _dot,
-        _ivf_assign,
-        _ivf_train_centroids,
+        _ivf_cells,
     )
 
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    centroids = memo_index(
-        spark,
-        f"ivf_centroids:{sf_tag(sf_dir)}",  # shared with l5_ivf_topk
-        lambda: _ivf_train_centroids(spark, emb).localCheckpoint(eager=True),
-    )
-    cells = _ivf_assign(
-        emb.select(F.col("vec_id").alias("_id"), F.col("e").alias("ce")),
-        centroids,
-        "ce",
-        1,
-    ).select(F.col("_id").alias("vec_id"), "cell", F.col("ce").alias("e"))
+    cells = _ivf_cells(spark, sf_dir)
 
     # Operator-side accounting (the l_semantic_dedup formulation).
     op = l_semantic_dedup(spark, sf_dir).select(
@@ -2205,54 +2150,12 @@ def l_semdedup_cell_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is the same double wherever computed, so every τ decision is
     # bit-identical) — one interpreted higher-order dot per pair, not 3.
     normed = cells.withColumn("nrm", F.sqrt(_dot("e", "e")))
-    # Same compute-skew fix as l_semantic_dedup (r15): block-split the
-    # within-cell pair space over K·G explicit partitions so the
-    # quadratic recount isn't serialized onto K=8 tasks (or onto ONE —
-    # AQE coalesces the byte-tiny pair shuffle without the explicit
-    # count). Pair set and every τ decision are unchanged.
-    import math
-
-    from dock_financial_data_pipelines_spark.operators.similarity import (
-        _IVF_K,
-    )
-
-    g_blocks = max(
-        1, math.ceil(2 * spark.sparkContext.defaultParallelism / _IVF_K)
-    )
-    n_parts = _IVF_K * g_blocks
-    a = (
-        normed.select(
-            "cell",
-            F.col("vec_id").alias("id_a"),
-            F.col("e").alias("ea"),
-            F.col("nrm").alias("na"),
-        )
-        .withColumn(
-            "tb", F.explode(F.sequence(F.lit(0), F.lit(g_blocks - 1)))
-        )
-        .repartition(n_parts, "cell", "tb")
-    )
-    b = (
-        normed.select(
-            "cell",
-            F.col("vec_id").alias("id_b"),
-            F.col("e").alias("eb"),
-            F.col("nrm").alias("nb"),
-        )
-        .withColumn(
-            "gb", F.pmod(F.xxhash64("id_b"), F.lit(g_blocks)).cast("int")
-        )
-        .repartition(n_parts, "cell", "gb")
-    )
+    # Same block-split pair join as l_semantic_dedup (_cell_pairs).
     cos = _dot("ea", "eb") / (F.col("na") * F.col("nb"))
     flagged = (
-        a.join(
-            b,
-            (a["cell"] == b["cell"]) & (F.col("tb") == F.col("gb")),
-        )
-        .where(F.col("id_a") < F.col("id_b"))
+        _cell_pairs(spark, normed)
         .withColumn("is_dup", (cos >= F.lit(_SEM_TAU)).cast("int"))
-        .groupBy(a["cell"], F.col("id_b"))
+        .groupBy("cell", F.col("id_b"))
         .agg(F.max("is_dup").alias("dup"))
     )
     recount = (
@@ -2601,8 +2504,7 @@ def l_minhash_param_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_MH_SHINGLES_SQL},
     sh AS (
         SELECT DISTINCT doc_id,
-               CAST(concat('0x', substring(md5(shingle), 1, 15)) AS BIGINT)
-                   AS h
+               {h60_sql("shingle", "duckdb")} AS h
         FROM shingles
     ),
     freq AS (
@@ -2732,13 +2634,16 @@ def l_wrapper_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregate carrying count + distinct-shard count — shuffles
 # (digest, shard), never text.
 # ---------------------------------------------------------------------------
+def _doc_shard_hash():
+    return F.expr(h60_sql("CAST(doc_id AS STRING)", "spark"))
+
+
 @query(
     "l_cross_shard_dup_rate",
-    oracle="""
+    oracle=f"""
     WITH sharded AS (
         SELECT md5(text) AS dg,
-               ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                   ::BIGINT % 16 AS shard
+               {h60_sql("CAST(doc_id AS VARCHAR)", "duckdb")} % 16 AS shard
         FROM documents
     ),
     grp AS (
@@ -2763,13 +2668,7 @@ def l_cross_shard_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     sharded = docs.select(
         F.md5("text").alias("dg"),
-        F.pmod(
-            F.expr(
-                "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15),"
-                " 16, 10) AS BIGINT)"
-            ),
-            F.lit(16),
-        ).alias("shard"),
+        F.pmod(_doc_shard_hash(), F.lit(16)).alias("shard"),
     )
     grp = sharded.groupBy("dg").agg(
         F.count(F.lit(1)).alias("sz"),
@@ -2877,20 +2776,13 @@ def l_fingerprint_collision_audit(
 # join cardinality (cost model). Everything is digest/bucket-keyed
 # aggregation — no text shuffles, no all-pairs joins anywhere.
 # ---------------------------------------------------------------------------
-_SHARD_SQL = (
-    "('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT"
-)
-_SHARD_SPARK = (
-    "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10)"
-    " AS BIGINT)"
-)
-
-
 @query(
     "l_shard_count_advisor",
     oracle=f"""
     WITH base AS (
-        SELECT md5(text) AS dg, {_SHARD_SQL} AS h FROM documents
+        SELECT md5(text) AS dg,
+               {h60_sql("CAST(doc_id AS VARCHAR)", "duckdb")} AS h
+        FROM documents
     ),
     sharded AS MATERIALIZED (
         SELECT t.n, base.dg, base.h % t.n AS shard
@@ -2946,7 +2838,7 @@ def l_shard_count_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation."""
     docs = load(spark, sf_dir, "documents")
     base = docs.select(
-        F.md5("text").alias("dg"), F.expr(_SHARD_SPARK).alias("h")
+        F.md5("text").alias("dg"), _doc_shard_hash().alias("h")
     )
     sharded = base.select(
         F.explode(F.array(*[F.lit(x) for x in (4, 8, 16, 32)])).alias("n"),
@@ -3009,7 +2901,9 @@ def l_shard_count_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     "l_sharded_dedup_rehearsal",
     oracle=f"""
     WITH sharded AS MATERIALIZED (
-        SELECT md5(text) AS dg, {_SHARD_SQL} % 16 AS shard FROM documents
+        SELECT md5(text) AS dg,
+               {h60_sql("CAST(doc_id AS VARCHAR)", "duckdb")} % 16 AS shard
+        FROM documents
     ),
     local_g AS MATERIALIZED (
         SELECT shard, dg, count(*) AS cnt FROM sharded GROUP BY 1, 2
@@ -3056,7 +2950,7 @@ def l_sharded_dedup_rehearsal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     sharded = docs.select(
         F.md5("text").alias("dg"),
-        F.pmod(F.expr(_SHARD_SPARK), F.lit(16)).alias("shard"),
+        F.pmod(_doc_shard_hash(), F.lit(16)).alias("shard"),
     )
     local_g = sharded.groupBy("shard", "dg").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -3121,22 +3015,6 @@ def _banded_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MH_BANDS_SQL = f"""
-    mh AS (
-        SELECT doc_id, f,
-               min(CAST(concat('0x', substring(md5(shingle || '#' ||
-                   CAST(f AS VARCHAR)), 1, 15)) AS BIGINT)) AS v
-        FROM shingles CROSS JOIN (SELECT unnest(range({_MINHASH_K})) AS f)
-        GROUP BY 1, 2
-    ),
-    bands AS (
-        SELECT doc_id, CAST(f // {_ROWS_PER_BAND} AS INT) AS band,
-               string_agg(CAST(v AS VARCHAR), '_' ORDER BY f) AS sig
-        FROM mh GROUP BY 1, 2
-    )
-"""
-
-
 @query(
     "l_cross_shard_neardup_rate",
     oracle=f"""
@@ -3144,7 +3022,7 @@ _MH_BANDS_SQL = f"""
     {_MH_BANDS_SQL},
     bshard AS MATERIALIZED (
         SELECT band, sig,
-               {_SHARD_SQL} % 16 AS shard
+               {h60_sql("CAST(doc_id AS VARCHAR)", "duckdb")} % 16 AS shard
         FROM bands
     ),
     bsz AS (
@@ -3184,7 +3062,7 @@ def l_cross_shard_neardup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final join is a 1-row broadcast cross. Empty corpus: one row
     of zeros with rate 0.0 (the l_cross_shard_dup_rate contract)."""
     banded = _banded_sigs(spark, sf_dir).select(
-        "band", "sig", F.pmod(F.expr(_SHARD_SPARK), F.lit(16)).alias("shard")
+        "band", "sig", F.pmod(_doc_shard_hash(), F.lit(16)).alias("shard")
     ).localCheckpoint(eager=True)
     bsz = banded.groupBy("band", "sig").agg(F.count(F.lit(1)).alias("size_"))
     bssz = banded.groupBy("band", "sig", "shard").agg(
@@ -3325,18 +3203,7 @@ def l_hot_bucket_skew_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(count(*) AS BIGINT) AS units
         FROM exact_g
     ),
-    mh AS (
-        SELECT doc_id, f,
-               min(CAST(concat('0x', substring(md5(shingle || '#' ||
-                   CAST(f AS VARCHAR)), 1, 15)) AS BIGINT)) AS v
-        FROM sh2 CROSS JOIN (SELECT unnest(range({_MINHASH_K})) AS f)
-        GROUP BY 1, 2
-    ),
-    bands AS (
-        SELECT doc_id, CAST(f // {_ROWS_PER_BAND} AS INT) AS band,
-               string_agg(CAST(v AS VARCHAR), '_' ORDER BY f) AS sig
-        FROM mh GROUP BY 1, 2
-    ),
+    {_mh_bands_sql("sh2")},
     lsh_g AS (
         SELECT band, sig, count(*) AS c FROM bands GROUP BY 1, 2
     ),
@@ -3347,7 +3214,7 @@ def l_hot_bucket_skew_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     post AS (
         SELECT DISTINCT doc_id,
-               ('0x' || substring(md5(shingle), 1, 15))::BIGINT AS h
+               {h60_sql("shingle", "duckdb")} AS h
         FROM sh2
     ),
     cont_g AS (

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dock_financial_data_pipelines_spark.catalog import load, local_frame
+from dock_financial_data_pipelines_spark.hashing import h60_sql
 from dock_financial_data_pipelines_spark.registry import query
 
 _SCALE = 1_000_000_000_000  # fixed-point rank scale (1e12)
@@ -390,21 +391,18 @@ _WALK_STEPS = 3
 
 
 def _rw_pick(node_col: str, step: int) -> str:
-    return (
-        f"CAST(conv(substring(md5(concat('rw#', CAST({node_col} AS STRING),"
-        f" '#', '{step}')), 1, 15), 16, 10) AS BIGINT)"
+    return h60_sql(
+        f"concat('rw#', CAST({node_col} AS STRING), '#', '{step}')", "spark"
     )
 
 
 def _rw_oracle() -> str:
-    pick = (
-        "CAST(concat('0x', substring(md5('rw#' || CAST({n} AS VARCHAR)"
-        " || '#' || '{t}'), 1, 15)) AS BIGINT)"
-    )
     steps_sql = ""
     prev_col = "start_node"
     for t in range(1, _WALK_STEPS + 1):
-        p = pick.format(n="w.start_node", t=t)
+        p = h60_sql(
+            f"'rw#' || CAST(w.start_node AS VARCHAR) || '#' || '{t}'", "duckdb"
+        )
         steps_sql += f""",
     w{t} AS (
         SELECT w.*, a.dst AS n{t}
@@ -427,8 +425,7 @@ def _rw_oracle() -> str:
     ),
     w0 AS (
         SELECT DISTINCT src AS start_node FROM e
-        WHERE CAST(concat('0x', substring(md5(CAST(src AS VARCHAR)), 1, 15))
-                   AS BIGINT) % 4 = 0
+        WHERE {h60_sql("CAST(src AS VARCHAR)", "duckdb")} % 4 = 0
     ){steps_sql}
     SELECT start_node, n1, n2, n3
     FROM w{_WALK_STEPS} ORDER BY start_node
@@ -452,10 +449,7 @@ def g_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select("src")
         .distinct()
         .where(
-            F.expr(
-                "CAST(conv(substring(md5(CAST(src AS STRING)), 1, 15), 16, 10)"
-                " AS BIGINT) % 4 = 0"
-            )
+            F.expr(h60_sql("CAST(src AS STRING)", "spark") + " % 4 = 0")
         )
         .select(F.col("src").alias("start_node"))
     )

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dock_financial_data_pipelines_spark.catalog import dec_sum, load, maybe_broadcast
+from dock_financial_data_pipelines_spark.hashing import h60_sql
 from dock_financial_data_pipelines_spark.registry import query
 
 
@@ -910,11 +911,10 @@ def j16_grid_nearest_facility(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "j17_join_skew_advisor",
-    oracle="""
+    oracle=f"""
     WITH freq AS MATERIALIZED (
         SELECT user_id, count(*) AS c,
-               ('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15))
-                   ::BIGINT AS h
+               {h60_sql("CAST(user_id AS VARCHAR)", "duckdb")} AS h
         FROM events GROUP BY 1
     ),
     expanded AS (
@@ -954,10 +954,7 @@ def j17_join_skew_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("c")).select(
         "user_id",
         "c",
-        F.expr(
-            "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15),"
-            " 16, 10) AS BIGINT)"
-        ).alias("h"),
+        F.expr(h60_sql("CAST(user_id AS STRING)", "spark")).alias("h"),
     ).localCheckpoint(eager=True)
     expanded = freq.select(
         F.explode(F.array(*[F.lit(x) for x in (8, 32, 128)])).alias("p"),

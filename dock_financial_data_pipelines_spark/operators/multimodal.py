@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from dock_financial_data_pipelines_spark.catalog import load
+from dock_financial_data_pipelines_spark.hashing import h60_py, h60_sql
 from dock_financial_data_pipelines_spark.registry import query
 
 
@@ -247,9 +248,8 @@ _PHASH_HAMMING = 3
     oracle=f"""
     WITH ph AS (
         SELECT doc_id AS asset_id,
-               CAST(concat('0x', substring(
-                   md5(substring(text, 1, {_PHASH_PREFIX})), 1, 15))
-                   AS BIGINT) AS h
+               {h60_sql(f"substring(text, 1, {_PHASH_PREFIX})", "duckdb")}
+                   AS h
         FROM documents
     ),
     bands AS (
@@ -275,8 +275,7 @@ def l7_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ph = assets.select(
         "asset_id",
         F.expr(
-            f"CAST(conv(substring(md5(substr(content, 1, {_PHASH_PREFIX})), "
-            "1, 15), 16, 10) AS BIGINT)"
+            h60_sql(f"substr(content, 1, {_PHASH_PREFIX})", "spark")
         ).alias("h"),
     )
     bands = ph.select(
@@ -627,8 +626,7 @@ def l7_png_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH ph AS (
         SELECT doc_id AS asset_id,
-               CAST(concat('0x', substring(md5(text), 1, 15))
-                   AS BIGINT) AS h
+               {h60_sql("text", "duckdb")} AS h
         FROM documents
     ),
     bands AS (
@@ -661,8 +659,6 @@ def l7_phash_decoded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     assets = to_png_assets(docs)
 
-    import hashlib
-
     def decode_hash(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
@@ -670,9 +666,7 @@ def l7_phash_decoded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             hs = []
             for content, n in zip(pdf["content"], pdf["n_bytes"]):
                 _, _, px = _png_decode(bytes(content))
-                hs.append(
-                    int(hashlib.md5(px[: int(n)]).hexdigest()[:15], 16)
-                )
+                hs.append(h60_py(px[: int(n)]))
             yield pd.DataFrame({"asset_id": pdf["asset_id"], "h": hs})
 
     ph = assets.mapInPandas(

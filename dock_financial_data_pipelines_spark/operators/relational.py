@@ -20,6 +20,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dock_financial_data_pipelines_spark.catalog import dec_sum, load
+from dock_financial_data_pipelines_spark.hashing import h60_sql
 from dock_financial_data_pipelines_spark.registry import query
 
 
@@ -1583,10 +1584,8 @@ def u18_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_retailprice").alias("w"),
         (
             (
-                F.expr(
-                    "CAST(conv(substring(md5(CAST(p_partkey AS STRING)),"
-                    " 1, 15), 16, 10) AS BIGINT)"
-                ).cast("double")
+                F.expr(h60_sql("CAST(p_partkey AS STRING)", "spark"))
+                .cast("double")
                 + 1.0
             )
             / _WS_U_DEN

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dock_financial_data_pipelines_spark.catalog import load, local_frame, maybe_broadcast
+from dock_financial_data_pipelines_spark.hashing import h60_col, h60_sql
 from dock_financial_data_pipelines_spark.registry import query
 
 _SALT_BUCKETS = 16
@@ -1955,9 +1956,8 @@ _BOOT_HI = -(-975 * _BOOT_B // 1000)  # ceil(0.975·B)
     nn AS (SELECT count(*) AS n FROM daily),
     picks AS (
         SELECT b.b,
-               CAST(concat('0x', substring(
-                   md5(CAST(b.b AS VARCHAR) || ':' || CAST(i.i AS VARCHAR)),
-                   1, 15)) AS BIGINT) % (SELECT n FROM nn) + 1 AS pick
+               {h60_sql("CAST(b.b AS VARCHAR) || ':' || CAST(i.i AS VARCHAR)",
+                        "duckdb")} % (SELECT n FROM nn) + 1 AS pick
         FROM generate_series(1, {_BOOT_B}) AS b(b),
              generate_series(1, 4096) AS i(i)
         WHERE i.i <= (SELECT n FROM nn)
@@ -2010,8 +2010,10 @@ def a48_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             "b",
             (
                 F.expr(
-                    "CAST(conv(substring(md5(concat(CAST(b AS STRING), ':', "
-                    "CAST(i AS STRING))), 1, 15), 16, 10) AS BIGINT)"
+                    h60_sql(
+                        "concat(CAST(b AS STRING), ':', CAST(i AS STRING))",
+                        "spark",
+                    )
                 )
                 % F.col("n")
                 + 1
@@ -2301,9 +2303,8 @@ _CMS_D = 4
     true_counts AS (SELECT w, count(*) AS cnt FROM words GROUP BY 1),
     cells AS (
         SELECT r.r,
-               CAST(concat('0x', substring(
-                   md5(tc.w || '#cm' || CAST(r.r AS VARCHAR)), 1, 15))
-                   AS BIGINT) % {_CMS_W} AS bucket,
+               {h60_sql("tc.w || '#cm' || CAST(r.r AS VARCHAR)", "duckdb")}
+                   % {_CMS_W} AS bucket,
                sum(tc.cnt) AS cell
         FROM true_counts tc, (SELECT unnest(range({_CMS_D})) AS r) r
         GROUP BY 1, 2
@@ -2315,9 +2316,8 @@ _CMS_D = 4
     ),
     probe AS (
         SELECT t.w, t.cnt, t.rk, r.r,
-               CAST(concat('0x', substring(
-                   md5(t.w || '#cm' || CAST(r.r AS VARCHAR)), 1, 15))
-                   AS BIGINT) % {_CMS_W} AS bucket
+               {h60_sql("t.w || '#cm' || CAST(r.r AS VARCHAR)", "duckdb")}
+                   % {_CMS_W} AS bucket
         FROM top t, (SELECT unnest(range({_CMS_D})) AS r) r
         WHERE t.rk <= 10
     )
@@ -2336,13 +2336,11 @@ def a51_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split("text", " ")).alias("w")
     )
     true_counts = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
+    cms_hash = h60_sql("concat(w, '#cm', CAST(r AS STRING))", "spark")
     rows = F.explode(F.sequence(F.lit(0), F.lit(_CMS_D - 1))).alias("r")
     hashed = true_counts.select("w", "cnt", rows).withColumn(
         "bucket",
-        F.expr(
-            "CAST(conv(substring(md5(concat(w, '#cm', CAST(r AS STRING))),"
-            f" 1, 15), 16, 10) AS BIGINT) % {_CMS_W}"
-        ),
+        F.expr(f"{cms_hash} % {_CMS_W}"),
     )
     cells = hashed.groupBy("r", "bucket").agg(F.sum("cnt").alias("cell"))
     top = true_counts.select(
@@ -2354,10 +2352,7 @@ def a51_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("rk") <= 10)
     probe = top.select("w", "cnt", "rk", rows).withColumn(
         "bucket",
-        F.expr(
-            "CAST(conv(substring(md5(concat(w, '#cm', CAST(r AS STRING))),"
-            f" 1, 15), 16, 10) AS BIGINT) % {_CMS_W}"
-        ),
+        F.expr(f"{cms_hash} % {_CMS_W}"),
     )
     return (
         probe.join(F.broadcast(cells), ["r", "bucket"])
@@ -2503,8 +2498,7 @@ _KMV_DOM = float(2**60)
         SELECT DISTINCT
                CASE WHEN o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
                     THEN 0 ELSE 1 END AS p,
-               CAST(concat('0x', substring(
-                   md5(CAST(o_custkey AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
+               {h60_sql("CAST(o_custkey AS VARCHAR)", "duckdb")} AS hv
         FROM orders
     ),
     ranked AS (
@@ -2555,10 +2549,7 @@ def a53_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("o_orderdate") < F.lit("1998-06-01"), 0)
             .otherwise(1)
             .alias("p"),
-            F.expr(
-                "CAST(conv(substring(md5(CAST(o_custkey AS STRING)), 1, 15),"
-                " 16, 10) AS BIGINT)"
-            ).alias("hv"),
+            F.expr(h60_sql("CAST(o_custkey AS STRING)", "spark")).alias("hv"),
         )
         .distinct()
     )
@@ -3987,16 +3978,14 @@ _BLOOM_K = 3
     ),
     bits AS (
         SELECT DISTINCT
-               ('0x' || substring(md5(CAST(h AS VARCHAR) || ':' ||
-                                      CAST(k AS VARCHAR)), 1, 15))::BIGINT
-                   % {_BLOOM_M} AS bit_pos
+               {h60_sql("CAST(h AS VARCHAR) || ':' || CAST(k AS VARCHAR)",
+                        "duckdb")} % {_BLOOM_M} AS bit_pos
         FROM build CROSS JOIN (SELECT unnest(range({_BLOOM_K})) AS h)
     ),
     probe AS (
         SELECT l_orderkey, l_linenumber, l_suppkey,
-               ('0x' || substring(md5(CAST(h AS VARCHAR) || ':' ||
-                                      CAST(l_suppkey AS VARCHAR)), 1, 15))
-                   ::BIGINT % {_BLOOM_M} AS bit_pos
+               {h60_sql("CAST(h AS VARCHAR) || ':' || CAST(l_suppkey AS VARCHAR)",
+                        "duckdb")} % {_BLOOM_M} AS bit_pos
         FROM lineitem CROSS JOIN (SELECT unnest(range({_BLOOM_K})) AS h)
     ),
     hits AS (
@@ -4041,10 +4030,7 @@ def j15_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         salted = F.concat(
             F.col("h").cast("string"), F.lit(":"), key_col.cast("string")
         )
-        return (
-            F.conv(F.substring(F.md5(salted), 1, 15), 16, 10).cast("long")
-            % M
-        )
+        return h60_col(salted) % M
 
     bits = (
         build.select("k", hidx)

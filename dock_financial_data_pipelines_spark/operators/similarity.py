@@ -21,6 +21,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dock_financial_data_pipelines_spark.catalog import load, local_frame, memo_index, sf_tag
+from dock_financial_data_pipelines_spark.hashing import h60_py, h60_sql
 from dock_financial_data_pipelines_spark.registry import query
 
 _DOT = (
@@ -463,6 +464,35 @@ def _ivf_train_centroids(
     return spark.createDataFrame(cents, "cell INT, cq ARRAY<BIGINT>")
 
 
+def _ivf_centroids(spark: SparkSession, sf_dir: str):
+    """(emb, centroids): the embeddings as (vec_id, e) and the coarse
+    quantizer trained on them. Trained once per session and fixture,
+    under one memo key every IVF consumer shares: the persisted-coarse-
+    quantizer contract — at 100 TB the centroid table is built by one
+    job and every consumer reads it; locally the memo is that same
+    build-once semantics."""
+    emb = load(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    )
+    centroids = memo_index(
+        spark,
+        f"ivf_centroids:{sf_tag(sf_dir)}",
+        lambda: _ivf_train_centroids(spark, emb).localCheckpoint(eager=True),
+    )
+    return emb, centroids
+
+
+def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, cell, e): every embedding in its nearest IVF cell."""
+    emb, centroids = _ivf_centroids(spark, sf_dir)
+    return _ivf_assign(
+        emb.select(F.col("vec_id").alias("_id"), F.col("e").alias("ce")),
+        centroids,
+        "ce",
+        1,
+    ).select(F.col("_id").alias("vec_id"), "cell", F.col("ce").alias("e"))
+
+
 def _ivf_sql_prefix() -> str:
     """Shared DuckDB CTE chain replaying the integer k-means exactly:
     quantized components → md5-ordered seeds → ``_IVF_ITERS`` unrolled
@@ -590,18 +620,7 @@ def _ivf_oracle_sql() -> str:
 
 @query("l5_ivf_topk", oracle=_ivf_oracle_sql())
 def l5_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    # Train once per session and share the index with l_semantic_dedup
-    # (same key): the persisted-coarse-quantizer contract — at 100 TB
-    # the centroid table is built by one job and every consumer reads
-    # it; locally the memo is that same build-once semantics.
-    centroids = memo_index(
-        spark,
-        f"ivf_centroids:{sf_tag(sf_dir)}",
-        lambda: _ivf_train_centroids(spark, emb).localCheckpoint(eager=True),
-    )
+    emb, centroids = _ivf_centroids(spark, sf_dir)
     corpus = _ivf_assign(
         emb.select(F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ce")),
         centroids, "ce", _IVF_ASSIGN,
@@ -999,13 +1018,10 @@ _PCA_ITERS = 5  # total matvec rounds (4 driver-fed + 1 distributed)
 
 
 def _pca_v0() -> list:
-    import hashlib
-
-    out = []
-    for d in range(_EMB_DIM):
-        h = int(hashlib.md5(f"pca#{d}".encode()).hexdigest()[:15], 16)
-        out.append(4096 if h % 2 == 0 else -4096)
-    return out
+    return [
+        4096 if h60_py(f"pca#{d}".encode()) % 2 == 0 else -4096
+        for d in range(_EMB_DIM)
+    ]
 
 
 def _pca_oracle_sql() -> str:
@@ -1019,9 +1035,8 @@ def _pca_oracle_sql() -> str:
     ),
     v0 AS (
         SELECT CAST(t.i AS INT) AS i,
-               CASE WHEN CAST(concat('0x', substring(
-                        md5('pca#' || CAST(t.i AS VARCHAR)), 1, 15))
-                        AS BIGINT) % 2 = 0
+               CASE WHEN {h60_sql("'pca#' || CAST(t.i AS VARCHAR)", "duckdb")}
+                        % 2 = 0
                     THEN 4096 ELSE -4096 END AS v
         FROM range({_EMB_DIM}) t(i)
     )"""
@@ -1179,21 +1194,7 @@ def _shard_plan_oracle() -> str:
 
 @query("l_index_shard_plan", oracle=_shard_plan_oracle())
 def l_index_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    centroids = memo_index(
-        spark,
-        f"ivf_centroids:{sf_tag(sf_dir)}",  # shared with l5_ivf_topk
-        lambda: _ivf_train_centroids(spark, emb).localCheckpoint(eager=True),
-    )
-    cells = _ivf_assign(
-        emb.select(F.col("vec_id").alias("_id"), F.col("e").alias("ce")),
-        centroids,
-        "ce",
-        1,
-    ).select(F.col("_id").alias("vec_id"), "cell")
-    sizes = cells.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
+    sizes = _ivf_cells(spark, sf_dir).groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
     placed = sizes.select(
         "cell",
         "n",
@@ -1796,14 +1797,7 @@ def _nprobe_curve_oracle() -> str:
 
 @query("l_ann_nprobe_curve", oracle=_nprobe_curve_oracle())
 def l_ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    centroids = memo_index(
-        spark,
-        f"ivf_centroids:{sf_tag(sf_dir)}",
-        lambda: _ivf_train_centroids(spark, emb).localCheckpoint(eager=True),
-    )
+    emb, centroids = _ivf_centroids(spark, sf_dir)
     q = emb.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
     )

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dock_financial_data_pipelines_spark.catalog import load, maybe_broadcast
+from dock_financial_data_pipelines_spark.hashing import h60_col, h60_sql
 from dock_financial_data_pipelines_spark.registry import query
 
 _PACK_CAPACITY = 512  # tokens per packed training sequence
@@ -1505,8 +1506,8 @@ _DP_EPS = 1.0
     ),
     u AS (
         SELECT source, n,
-               CAST(('0x' || substring(md5(source), 1, 15))::BIGINT
-                    AS DOUBLE) / 1152921504606846976.0 AS uv
+               CAST({h60_sql("source", "duckdb")} AS DOUBLE)
+                   / 1152921504606846976.0 AS uv
         FROM g
     )
     SELECT source, CAST(n AS BIGINT) AS true_count,
@@ -1529,9 +1530,7 @@ def l_dp_noised_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     uv = (
-        F.expr(
-            "CAST(conv(substring(md5(source), 1, 15), 16, 10) AS BIGINT)"
-        ).cast("double")
+        F.expr(h60_sql("source", "spark")).cast("double")
         / F.lit(1152921504606846976.0)
     )
     noise_raw = F.when(
@@ -1560,7 +1559,7 @@ def l_dp_noised_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_span_mask_ratio",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id, len(string_split(text, ' ')) AS n_tok,
                unnest(range(len(string_split(text, ' ')))) AS pos
@@ -1568,9 +1567,9 @@ def l_dp_noised_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     flagged AS (
         SELECT doc_id, n_tok,
-               CASE WHEN ('0x' || substring(md5(
-                        CAST(doc_id AS VARCHAR) || ':' ||
-                        CAST(pos AS VARCHAR)), 1, 15))::BIGINT % 100 < 15
+               CASE WHEN {h60_sql(
+                        "CAST(doc_id AS VARCHAR) || ':' || CAST(pos AS VARCHAR)",
+                        "duckdb")} % 100 < 15
                     THEN 1 ELSE 0 END AS m
         FROM toks
     ),
@@ -1606,8 +1605,10 @@ def l_span_mask_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = (
         F.expr(
-            "CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':', "
-            "CAST(pos AS STRING))), 1, 15), 16, 10) AS BIGINT)"
+            h60_sql(
+                "concat(CAST(doc_id AS STRING), ':', CAST(pos AS STRING))",
+                "spark",
+            )
         )
         % 100
         < 15
@@ -1662,8 +1663,8 @@ _N_SHARDS = 16
     "l_shard_assignment_balance",
     oracle=f"""
     WITH assigned AS (
-        SELECT CAST(('0x' || substring(md5(text), 1, 15))::BIGINT
-                    % {_N_SHARDS} AS INTEGER) AS shard,
+        SELECT CAST({h60_sql("text", "duckdb")} % {_N_SHARDS} AS INTEGER)
+                   AS shard,
                len(string_split(text, ' ')) AS tk,
                length(text) AS ch
         FROM documents
@@ -1688,10 +1689,7 @@ _N_SHARDS = 16
 )
 def l_shard_assignment_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = load(spark, sf_dir, "documents").select(
-        F.expr(
-            "CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)"
-            f" % {_N_SHARDS}"
-        )
+        F.expr(f"{h60_sql('text', 'spark')} % {_N_SHARDS}")
         .cast("int")
         .alias("shard"),
         F.size(F.split("text", " ")).alias("tk"),
@@ -1746,8 +1744,7 @@ _FHASH_D = 64
     ),
     hashed AS (
         SELECT w,
-               ('0x' || substring(md5(w), 1, 15))::BIGINT % {_FHASH_D}
-                   AS bucket,
+               {h60_sql("w", "duckdb")} % {_FHASH_D} AS bucket,
                CASE WHEN ascii(substring(md5(w), 16, 1)) % 2 = 0
                     THEN 1 ELSE -1 END AS sgn
         FROM tokw
@@ -1768,7 +1765,7 @@ def l_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = tokw.select(
         "w",
         (
-            F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long") % D
+            h60_col("w") % D
         ).alias("bucket"),
         F.when(
             F.ascii(F.substring(F.md5("w"), 16, 1)) % 2 == 0, 1

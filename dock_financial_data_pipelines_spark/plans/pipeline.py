@@ -31,6 +31,7 @@ from dock_financial_data_pipelines_spark.catalog import (
     read_parquet_or_empty,
     sf_tag,
 )
+from dock_financial_data_pipelines_spark.hashing import h60_py, h60_sql
 from dock_financial_data_pipelines_spark.registry import query
 from dock_financial_data_pipelines_spark.sources.sinks import (
     write_metadata_parquet,
@@ -219,11 +220,10 @@ def pipeline_daily_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "pipeline_sharded_dedup",
-    oracle="""
+    oracle=f"""
     WITH sharded AS MATERIALIZED (
         SELECT doc_id, md5(text) AS dg,
-               ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                   ::BIGINT % 16 AS shard
+               {h60_sql("CAST(doc_id AS VARCHAR)", "duckdb")} % 16 AS shard
         FROM documents
     ),
     pass1 AS MATERIALIZED (
@@ -259,11 +259,7 @@ def pipeline_sharded_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.md5("text").alias("dg"),
         F.pmod(
-            F.expr(
-                "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15),"
-                " 16, 10) AS BIGINT)"
-            ),
-            F.lit(16),
+            F.expr(h60_sql("CAST(doc_id AS STRING)", "spark")), F.lit(16)
         ).alias("shard"),
     )
     pass1 = sharded.groupBy("shard", "dg").agg(
@@ -807,14 +803,14 @@ def pipeline_incremental_release(
 # are immutable and versioned, the manifest is the unit of atomicity,
 # and readers resolve pointer → manifest → files with no LIST races.
 # ---------------------------------------------------------------------------
-_DIG60 = (
-    "CAST(conv(substring(md5(concat(cast(doc_id AS string), ':', "
-    "cast(tokens AS string))), 1, 15), 16, 10) AS BIGINT)"
-)
-_DIG60_DUCK = (
-    "CAST(concat('0x', substring(md5(doc_id::VARCHAR || ':' || "
-    "tokens::VARCHAR), 1, 15)) AS BIGINT)"
-)
+def _row_digest(dialect: str) -> str:
+    """h60 of 'doc_id:tokens' (NULL when either is NULL): the per-row
+    digest the shard manifests xor-fold."""
+    if dialect == "spark":
+        arg = "concat(cast(doc_id AS string), ':', cast(tokens AS string))"
+    else:
+        arg = "doc_id::VARCHAR || ':' || tokens::VARCHAR"
+    return h60_sql(arg, dialect)
 
 
 def _release_root(sf_dir: str, name: str) -> str:
@@ -876,7 +872,7 @@ def _shard_manifest(data: DataFrame) -> DataFrame:
     return data.groupBy("shard").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.coalesce(F.sum("tokens"), F.lit(0)).cast("long").alias("n_tokens"),
-        F.coalesce(F.expr(f"bit_xor({_DIG60})"), F.lit(0))
+        F.coalesce(F.expr(f"bit_xor({_row_digest('spark')})"), F.lit(0))
         .cast("long")
         .alias("digest"),
     )
@@ -892,52 +888,65 @@ _LOCAL_MANIFEST_MAX_ROWS = 131072
 _LOCAL_MANIFEST_MAX_BYTES = 64 << 20
 
 
+def _committer_readback(data_dir: str, columns: list):
+    """The committer's bounded read-back of the parquet files under
+    ``data_dir``: ``columns`` as one arrow table per directory holding
+    parquet files, or None when the files exceed the committer bounds
+    (the caller then falls back to a Spark aggregate) — guide §5's
+    bounded-driver rule. Both bounds are checked before any column data
+    is read: bytes from the file sizes, rows from the parquet footers.
+    One threaded dataset serves the row count and the read, so each
+    footer is parsed once (a per-file read_table loop cost ~3-5 ms of
+    open/footer overhead per file — a second's worth of serial driver
+    work for the small-file-debris stagers)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    by_dir: dict = {}
+    total_bytes = 0
+    for dirpath, _dirnames, filenames in os.walk(data_dir):
+        for fn in filenames:
+            if fn.endswith(".parquet"):
+                p = os.path.join(dirpath, fn)
+                by_dir.setdefault(dirpath, []).append(p)
+                total_bytes += os.path.getsize(p)
+    if total_bytes > _LOCAL_MANIFEST_MAX_BYTES:
+        return None  # pragma: no cover - scale fallback
+    if not by_dir:
+        return {}
+    dataset = ds.dataset(
+        [p for files in by_dir.values() for p in files], format="parquet"
+    )
+    if dataset.count_rows() > _LOCAL_MANIFEST_MAX_ROWS:
+        return None
+    if len(by_dir) == 1:
+        return {d: dataset.to_table(columns=columns) for d in by_dir}
+    tbl = dataset.to_table(columns=[*columns, "__filename"])
+    return {
+        d: tbl.filter(pc.is_in(tbl["__filename"], pa.array(files)))
+        for d, files in by_dir.items()
+    }
+
+
 def _local_shard_manifest(data_dir: str):
     """Per-shard manifest rows computed driver-side from the staged
     parquet files themselves (flat layout only) — bit-identical to
     ``_shard_manifest`` over the read-back: n_docs = count, n_tokens =
     sum(tokens) nulls-skipped (0 when all null), digest = bit_xor over
-    ``conv(substring(md5(doc_id || ':' || tokens), 1, 15), 16, 10)``
-    with null inputs skipped (0 when all null). Returns None when the
-    staged version exceeds the driver-side bounds (falls back to the
-    Spark aggregate) — guide §5's bounded-driver rule.
+    ``_row_digest`` with null inputs skipped (0 when all null). Returns
+    None past the committer bounds (see _committer_readback).
 
     This IS still the protocol's read-back honesty proof: the manifest
     derives from the bytes the staging write landed, not from the
     in-flight DataFrame — only the scan engine changed (the committer
     process reads its own output files, as real table formats do when
     they write manifest stats at commit time)."""
-    import hashlib
-
-    import pyarrow.parquet as pq
-
-    files = []
-    total_bytes = 0
-    for dirpath, _dirnames, filenames in os.walk(data_dir):
-        for fn in filenames:
-            if fn.endswith(".parquet"):
-                p = os.path.join(dirpath, fn)
-                files.append(p)
-                total_bytes += os.path.getsize(p)
-    if total_bytes > _LOCAL_MANIFEST_MAX_BYTES:
+    tables = _committer_readback(data_dir, ["doc_id", "tokens", "shard"])
+    if tables is None:
         return None
-    # ONE threaded dataset read over the whole file list — a per-file
-    # read_table loop costs ~3-5 ms of open/footer overhead per file,
-    # which the small-file-debris stagers (hundreds of
-    # maxRecordsPerFile files) turned into a second's worth of serial
-    # driver work (measured: compact_snapshot +1.1 s on the first cut
-    # of this fold). The row cap is enforced on the materialized
-    # table: the bytes gate above already bounds the read itself.
-    if files:
-        tbl = pq.ParquetDataset(files).read(
-            columns=["doc_id", "tokens", "shard"], use_threads=True
-        )
-    else:
-        tbl = None
-    if tbl is not None and tbl.num_rows > _LOCAL_MANIFEST_MAX_ROWS:
-        return None  # pragma: no cover - scale fallback
     stats: dict = {}
-    if tbl is not None:
+    for tbl in tables.values():
         doc_ids = tbl.column("doc_id").to_pylist()
         toks = tbl.column("tokens").to_pylist()
         shards = tbl.column("shard").to_pylist()
@@ -949,12 +958,7 @@ def _local_shard_manifest(data_dir: str):
             if tokens is not None:
                 acc[1] = tokens if acc[1] is None else acc[1] + tokens
             if doc_id is not None and tokens is not None:
-                d = int(
-                    hashlib.md5(
-                        f"{doc_id}:{tokens}".encode()
-                    ).hexdigest()[:15],
-                    16,
-                )
+                d = h60_py(f"{doc_id}:{tokens}".encode())
                 acc[2] = d if acc[2] is None else acc[2] ^ d
     # A null shard would need the hive default-partition dir name the
     # distributed writer produces — fall back rather than write a
@@ -997,34 +1001,24 @@ def _pe_local_manifest(data_dir: str):
     name) — bit-identical to the Spark aggregate it replaces: n_rows =
     count, n_days = count distinct non-null day, min/max day null-
     skipped (None when all null; Python and Spark string min/max are
-    both byte-lexicographic). Returns None past the driver bounds or
+    both byte-lexicographic). Returns None past the committer bounds or
     on an unexpected layout — the Spark aggregate fallback runs then."""
-    import pyarrow.parquet as pq
-
-    by_dir: dict = {}
-    total_bytes = 0
-    for dirpath, _dirnames, filenames in os.walk(data_dir):
-        for fn in filenames:
-            if fn.endswith(".parquet"):
-                p = os.path.join(dirpath, fn)
-                by_dir.setdefault(dirpath, []).append(p)
-                total_bytes += os.path.getsize(p)
-    if total_bytes > _LOCAL_MANIFEST_MAX_BYTES:
-        return None  # pragma: no cover - scale fallback
+    tables = _committer_readback(data_dir, ["day"])
+    if tables is None:
+        return None
     rows = []
-    total_rows = 0
-    for dirpath in sorted(by_dir):
+    for dirpath in sorted(tables):
         base = os.path.basename(dirpath)
-        # '%' marks a hive-escaped char in the dir name; parsing it
-        # verbatim would round-trip a different value — fall back.
-        if not base.startswith("p=") or "%" in base:
-            return None  # pragma: no cover - unexpected layout
-        tbl = pq.ParquetDataset(by_dir[dirpath]).read(
-            columns=["day"], use_threads=True
-        )
-        total_rows += tbl.num_rows
-        if total_rows > _LOCAL_MANIFEST_MAX_ROWS:
-            return None  # pragma: no cover - scale fallback
+        # '%' marks a hive-escaped char in the dir name and the default
+        # partition stands for a null p; parsing either verbatim would
+        # round-trip a different value — fall back.
+        if (
+            not base.startswith("p=")
+            or "%" in base
+            or base == "p=__HIVE_DEFAULT_PARTITION__"
+        ):
+            return None
+        tbl = tables[dirpath]
         days = [d for d in tbl.column("day").to_pylist() if d is not None]
         rows.append(
             {
@@ -1238,7 +1232,7 @@ def _diff_oracle() -> str:
                (sum(tokens) OVER (ORDER BY doc_id
                                   ROWS UNBOUNDED PRECEDING) - tokens)
                    // {_EXPORT_TOKEN_BUDGET} AS shard,
-               {_DIG60_DUCK} AS dig
+               {_row_digest('duckdb')} AS dig
         FROM (SELECT doc_id, len(string_split(text, ' ')) AS tokens
               FROM documents WHERE doc_id % 2 = 0)
     ),
@@ -1247,7 +1241,7 @@ def _diff_oracle() -> str:
                (sum(tokens) OVER (ORDER BY doc_id
                                   ROWS UNBOUNDED PRECEDING) - tokens)
                    // {_EXPORT_TOKEN_BUDGET} AS shard,
-               {_DIG60_DUCK} AS dig
+               {_row_digest('duckdb')} AS dig
         FROM (SELECT doc_id, len(string_split(text, ' ')) AS tokens
               FROM documents WHERE doc_id % 2 = 1)
     ),
@@ -1908,7 +1902,7 @@ def _snap_stat(
     names = ["stage_ord", "stage", "n_docs", "n_tokens", "n_shards"]
     if digest:
         cols.append(
-            F.coalesce(F.expr(f"bit_xor({_DIG60})"), F.lit(0))
+            F.coalesce(F.expr(f"bit_xor({_row_digest('spark')})"), F.lit(0))
             .cast("long")
             .alias("digest")
         )
@@ -2075,7 +2069,7 @@ def _compact_oracle() -> str:
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(coalesce(sum(tokens), 0) AS BIGINT) AS n_tokens,
            CAST(count(DISTINCT shard) AS BIGINT) AS n_shards,
-           CAST(coalesce(bit_xor({_DIG60_DUCK}), 0) AS BIGINT) AS digest
+           CAST(coalesce(bit_xor({_row_digest('duckdb')}), 0) AS BIGINT) AS digest
     FROM {src}"""
 
     return f"""
@@ -3315,7 +3309,7 @@ def _read_mor(
 
 
 def _dv_oracle() -> str:
-    dig = f"CAST(coalesce(bit_xor({_DIG60_DUCK}), 0) AS BIGINT)"
+    dig = f"CAST(coalesce(bit_xor({_row_digest('duckdb')}), 0) AS BIGINT)"
     return f"""
     WITH base AS (
         SELECT doc_id, len(string_split(text, ' ')) AS tokens,
@@ -3679,7 +3673,7 @@ def _zc_oracle() -> str:
         _s21_interleave_sql,
     )
 
-    dig = f"CAST(coalesce(bit_xor({_DIG60_DUCK}), 0) AS BIGINT)"
+    dig = f"CAST(coalesce(bit_xor({_row_digest('duckdb')}), 0) AS BIGINT)"
     z = _s21_interleave_sql("cb", "tb").replace(" IDIV ", " // ")
     n = 1 << _S21_BITS
 
@@ -3918,41 +3912,29 @@ _BLM_SHARDS = 20
 _BLM_MOD, _BLM_RES = 101, 17   # probe keys: doc_id % 101 = 17
 
 
-def _blm_shard(cast_str: str, hexcast: str) -> str:
-    h = (
-        "substring(md5(concat('s:', CAST(doc_id AS "
-        + cast_str
-        + "))), 1, 8)"
-    )
-    return hexcast.format(h=h) + f" % {_BLM_SHARDS}"
+def _blm_shard(dialect: str) -> str:
+    h = "substring(md5(concat('s:', CAST(doc_id AS STRING))), 1, 8)"
+    if dialect == "spark":
+        return f"CAST(conv({h}, 16, 10) AS BIGINT) % {_BLM_SHARDS}"
+    return f"CAST(concat('0x', {h}) AS BIGINT) % {_BLM_SHARDS}"
 
 
-def _blm_pos(j: int, cast_str: str, hexcast: str) -> str:
-    h = (
-        "substring(md5(concat('"
-        + str(j)
-        + ":', CAST(doc_id AS "
-        + cast_str
-        + "))), 1, 15)"
-    )
-    return hexcast.format(h=h) + f" % {_BLM_BITS}"
-
-
-_HEX_SPARK = "CAST(conv({h}, 16, 10) AS BIGINT)"
-_HEX_DUCK = "CAST(concat('0x', {h}) AS BIGINT)"
+def _blm_pos(j: int, dialect: str) -> str:
+    arg = f"concat('{j}:', CAST(doc_id AS STRING))"
+    return f"{h60_sql(arg, dialect)} % {_BLM_BITS}"
 
 
 def _blm_oracle() -> str:
-    dig = f"CAST(coalesce(bit_xor({_DIG60_DUCK}), 0) AS BIGINT)"
-    shard = _blm_shard("VARCHAR", _HEX_DUCK)
+    dig = f"CAST(coalesce(bit_xor({_row_digest('duckdb')}), 0) AS BIGINT)"
+    shard = _blm_shard("duckdb")
     pos_selects = " UNION ALL ".join(
         f"SELECT doc_id, shard, {j} AS j, "
-        f"{_blm_pos(j, 'VARCHAR', _HEX_DUCK)} AS pos FROM rows_"
+        f"{_blm_pos(j, 'duckdb')} AS pos FROM rows_"
         for j in range(_BLM_K)
     )
     key_pos = " UNION ALL ".join(
         f"SELECT doc_id, {j} AS j, "
-        f"{_blm_pos(j, 'VARCHAR', _HEX_DUCK)} AS pos FROM keys"
+        f"{_blm_pos(j, 'duckdb')} AS pos FROM keys"
         for j in range(_BLM_K)
     )
     return f"""
@@ -4041,7 +4023,7 @@ def pipeline_manifest_bloom_skipping(
         "doc_id",
         F.size(F.split("text", " ")).cast("long").alias("tokens"),
         F.md5("text").alias("dg"),
-        F.expr(_blm_shard("STRING", _HEX_SPARK)).cast("long").alias("shard"),
+        F.expr(_blm_shard("spark")).cast("long").alias("shard"),
     )
     data_dir = os.path.join(root, "data", "v=1")
     man_dir = os.path.join(root, "manifest", "v=1")
@@ -4050,7 +4032,7 @@ def pipeline_manifest_bloom_skipping(
 
     pos_arr = F.array(
         *[
-            F.expr(_blm_pos(j, "STRING", _HEX_SPARK)).cast("long")
+            F.expr(_blm_pos(j, "spark")).cast("long")
             for j in range(_BLM_K)
         ]
     )
@@ -4082,7 +4064,7 @@ def pipeline_manifest_bloom_skipping(
         part = keys.select(
             "doc_id",
             F.lit(j).alias("j"),
-            F.expr(_blm_pos(j, "STRING", _HEX_SPARK))
+            F.expr(_blm_pos(j, "spark"))
             .cast("long")
             .alias("pos"),
         )
@@ -4209,7 +4191,7 @@ def _commit_mor_merge(
 
 
 def _mor_merge_oracle() -> str:
-    dig = f"CAST(coalesce(bit_xor({_DIG60_DUCK}), 0) AS BIGINT)"
+    dig = f"CAST(coalesce(bit_xor({_row_digest('duckdb')}), 0) AS BIGINT)"
     return f"""
     WITH base AS (
         SELECT doc_id, len(string_split(text, ' ')) AS tokens,

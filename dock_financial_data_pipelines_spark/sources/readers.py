@@ -44,6 +44,7 @@ from dock_financial_data_pipelines_spark.catalog import (
     read_parquet_or_empty,
     sf_tag,
 )
+from dock_financial_data_pipelines_spark.hashing import h60_sql
 from dock_financial_data_pipelines_spark.registry import query
 
 
@@ -1194,9 +1195,8 @@ def _s20s_layout_sql(label: str, order_by: str) -> str:
                      AND o_custkey < {_S20_CUST_HI}
                     THEN 1 ELSE 0 END AS hit
         FROM (SELECT * FROM orders
-              WHERE CAST(concat('0x',
-                        substring(md5(CAST(o_orderkey AS VARCHAR)), 1, 15))
-                    AS BIGINT) % {_S20S_MOD} = 0)
+              WHERE {h60_sql("CAST(o_orderkey AS VARCHAR)", "duckdb")}
+                    % {_S20S_MOD} = 0)
     """
 
 
@@ -1248,8 +1248,8 @@ def s20_sort_layout_advisor_sampled(
 
     sample = load(spark, sf_dir, "orders").where(
         F.expr(
-            "CAST(conv(substring(md5(CAST(o_orderkey AS STRING)), 1, 15),"
-            f" 16, 10) AS BIGINT) % {_S20S_MOD} = 0"
+            f"{h60_sql('CAST(o_orderkey AS STRING)', 'spark')}"
+            f" % {_S20S_MOD} = 0"
         )
     )
     date_lo = F.lit(_S20_DATE_LO).cast("timestamp")
@@ -1468,12 +1468,11 @@ _S21S_MOD = 100  # keep 1 of every 100 keys, by md5 bucket
 _S21S_RG = 10    # 1000-row groups x 1% sample
 
 
-def _s21s_stmt() -> str:
+def _s21s_stmt(dialect: str) -> str:
     n = 1 << _S21_BITS
     sample = (
         "SELECT * FROM orders WHERE "
-        "HEXCAST(substring(md5(CAST(o_orderkey AS CASTT)), 1, 15)) "
-        f"% {_S21S_MOD} = 0"
+        f"{h60_sql('CAST(o_orderkey AS STRING)', dialect)} % {_S21S_MOD} = 0"
     )
     return f"""
 WITH ranked AS (
@@ -1536,24 +1535,13 @@ FROM classed GROUP BY 1
 
 @query(
     "s21_zorder_layout_probe_sampled",
-    oracle=_s21s_stmt()
-    .replace(" IDIV ", " // ")
-    .replace("HEXCAST(", "CAST(concat('0x', ")
-    .replace(") % ", ") AS BIGINT) % ", 1)
-    .replace("CASTT", "VARCHAR"),
+    oracle=_s21s_stmt("duckdb").replace(" IDIV ", " // "),
 )
 def s21_zorder_layout_probe_sampled(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    stmt = (
-        _s21s_stmt()
-        .replace(" IDIV ", " div ")
-        .replace("HEXCAST(", "CAST(conv(")
-        .replace(") % ", ", 16, 10) AS BIGINT) % ", 1)
-        .replace("CASTT", "STRING")
-    )
-    return spark.sql(stmt)
+    return spark.sql(_s21s_stmt("spark").replace(" IDIV ", " div "))
 
 
 # ---------------------------------------------------------------------------

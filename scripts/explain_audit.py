@@ -37,6 +37,12 @@ def plan_of(spark, name: str, execute: bool = False) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def n_scans(plan: str) -> int:
+    # executedPlan().toString() renders the AQE final plan AND the
+    # initial plan — each true scan appears twice.
+    return plan.count("FileScan parquet") // (2 if "== Initial Plan ==" in plan else 1)
+
+
 def main() -> int:
     spark = get_spark("explain-audit")
     spark.sparkContext.setLogLevel("ERROR")
@@ -201,14 +207,11 @@ def main() -> int:
         "EXISTS/NOT EXISTS as per-order window collect_sets over ONE "
         "pass of the fact (r15: the r14 aggregate-join-back computed "
         "the lineitem⋈orders subtree twice) — one Window, exactly one "
-        "fact-sized Exchange, no semi/anti re-passes, lineitem scanned "
-        "once",
-        # count scans in the FINAL adaptive plan only — executedPlan's
-        # toString appends the pre-AQE "Initial Plan" section, which
-        # would double-count every scan.
+        "fact-sized Exchange, no semi/anti re-passes, each table "
+        "(lineitem, orders, supplier) scanned once",
         "Window" in p and "collect_set" in p
         and "LeftSemi" not in p and "LeftAnti" not in p
-        and p.split("Initial Plan")[0].count("lineitem.parquet") == 1,
+        and n_scans(p) == 3,
     )
     check(
         "tpch_q21_waiting_suppliers",
@@ -319,11 +322,6 @@ def main() -> int:
         and "hashpartitioning(l_returnflag" in p
         and "BatchEvalPython" not in p,
     )
-
-    def n_scans(plan: str) -> int:
-        # executedPlan().toString() renders the AQE final plan AND the
-        # initial plan — each true scan appears twice.
-        return plan.count("FileScan parquet") // (2 if "== Initial Plan ==" in plan else 1)
 
     p = plan_of(spark, "q_column_profile", execute=True)
     check(

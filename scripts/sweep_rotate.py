@@ -1,25 +1,13 @@
-"""Generate the next round's driver-sweep rotation.
+"""Emit the COVERAGE.md driver-verification ledger.
 
-The correctness driver records the FIRST 50 registry entries per round
-(see pkg/__init__.py). This script reads every CORRECTNESS_r*.json in
-the repo root, computes which registered queries still lack a driver
-verdict, and prints the `_SWEEP_FIRST` / `_SWEEP_LAST` blocks for the
-next round: never-checked SQL-oracled queries first (up to the 50-slot
-budget), rows-only queries after, everything already verified last.
-
-Run at the start of a round, then paste the output into
-dock_financial_data_pipelines_spark/__init__.py:
-
-    python scripts/sweep_rotate.py
-
-`--ledger` instead emits the COVERAGE.md driver-verification ledger:
-one markdown row per registry entry with every driver verdict on file
+One markdown row per registry entry with every driver verdict on file
 (round: hash-green / rows-only / FAIL) and the entry's slot in the
-NEXT round's 50-slot sweep (from the live `_reorder_registry` order).
-Because rows derive from the actual CORRECTNESS_r*.json keys, the
-ledger can never drift from the driver record (the round-6 defect:
-hand-predicted slots the driver did not take). Paste between the
-LEDGER-BEGIN/LEDGER-END markers in COVERAGE.md:
+NEXT round's 50-slot sweep (from the live `_reorder_registry` order,
+see pkg/__init__.py). Because rows derive from the actual
+CORRECTNESS_r*.json keys, the ledger can never drift from the driver
+record (the round-6 defect: hand-predicted slots the driver did not
+take). Paste between the LEDGER-BEGIN/LEDGER-END markers in
+COVERAGE.md:
 
     python scripts/sweep_rotate.py --ledger
 """
@@ -56,12 +44,6 @@ def ledger() -> int:
                 status = "rows-only"
             else:
                 status = "FAIL"
-            try:
-                rnd_num = int(rnd.lstrip("r"))
-            except ValueError:
-                rnd_num = 0
-            if rnd_num <= getattr(engine, "_STALE_BEFORE", {}).get(name, 0):
-                status += " (stale-oracle: predates oracle rewrite)"
             verdicts.setdefault(name, []).append(f"{rnd}: {status}")
 
     slot = {n: i + 1 for i, n in enumerate(list(engine.QUERIES)[:BUDGET])}
@@ -72,7 +54,7 @@ def ledger() -> int:
     )
     greens = sum(
         1 for v in verdicts.values()
-        if any(s.endswith("hash-green") for s in v)  # stale rows excluded
+        if any(s.endswith("hash-green") for s in v)
     )
     print(f"One row per registry entry, generated from the actual")
     print(f"`CORRECTNESS_r*.json` keys by `scripts/sweep_rotate.py --ledger`")
@@ -91,53 +73,8 @@ def ledger() -> int:
     return 0
 
 
-def main() -> int:
-    engine.load_all()
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        with open(path) as fh:
-            rows = json.load(fh)
-        print(f"# read {os.path.basename(path)}: {len(rows)} entries")
-    verified, hash_verified, last_round = engine._load_driver_verdicts()
-
-    allq = list(engine.QUERIES)
-    never = [n for n in allq if n not in verified]
-    sql_never = [n for n in never if n in engine.ORACLES]
-    rows_never = [n for n in never if n not in engine.ORACLES]
-    upgrades = [n for n in allq
-                if n in verified and n not in hash_verified
-                and n in engine.ORACLES]
-
-    print(f"# registry={len(allq)} verified={len(verified & set(allq))} "
-          f"never-checked={len(never)} (sql={len(sql_never)}, "
-          f"rows-only={len(rows_never)}) upgrade-reruns={len(upgrades)} "
-          f"{upgrades}")
-    if len(sql_never) > BUDGET:
-        print(f"# NOTE: {len(sql_never) - BUDGET} SQL-oracled queries spill "
-              f"past the {BUDGET}-slot budget; they head the next rotation.")
-
-    def block(names: list[str]) -> str:
-        return "".join(f'    "{n}",\n' for n in names)
-
-    print("\n_SWEEP_FIRST = [")
-    print("    # SQL-oracled, never driver-checked (slots 1-%d)" % min(
-        BUDGET, len(sql_never)))
-    print(block(sql_never), end="")
-    print("    # rows-only (no SQL oracle; driver records spark_rows)")
-    print(block(rows_never), end="")
-    print("]")
-    # Since r14 the verified tail orders itself by driver-check recency
-    # (oldest latest-verdict first); nothing to paste for it. Show the
-    # slots the next sweep will actually take, with each name's last
-    # checked round, so the rotation is auditable at a glance.
-    print("\n# next sweep (live _reorder_registry order, %d slots):"
-          % BUDGET)
-    for i, n in enumerate(allq[:BUDGET], 1):
-        print(f"#   {i:2d}. {n}  (last checked: "
-              f"{'never' if n not in last_round else 'r%02d' % last_round[n]})")
-    return 0
-
-
 if __name__ == "__main__":
-    raise SystemExit(ledger() if "--ledger" in sys.argv else main())
+    if "--ledger" not in sys.argv[1:]:
+        print(__doc__, file=sys.stderr)
+        raise SystemExit(2)
+    raise SystemExit(ledger())

@@ -87,78 +87,32 @@ def test_balance_report_job_runs(spark, sf_dir, tmp_path):
 
 
 def test_sweep_rotation_self_updates():
-    """The registry order must adapt to driver verdicts automatically:
-    never-checked SQL-oracled queries first, rows-only next, upgrade
-    re-runs (rows-only verdict but an oracle now exists) next, verified
-    last — and when a simulated new CORRECTNESS round lands, its names
-    demote without any manual list edit. Round-3 regression: this test
+    """The registry order must follow driver-check recency
+    automatically: never-checked names first, then oldest latest
+    verdict first — and when a simulated new CORRECTNESS round lands
+    for the 50-slot head, those names demote behind everything else
+    without any manual list edit. Round-3 regression: this test
     hardcoded r01+r02 while the runtime globs CORRECTNESS_r*.json, so
-    it broke the moment r03 landed; it now uses the runtime's loader."""
+    it broke the moment r03 landed; it uses the runtime's loader."""
     import dock_financial_data_pipelines_spark as engine
 
     engine.load_all()
-    verified, hash_verified, _last_round = engine._load_driver_verdicts()
-
-    curated = set(engine._SWEEP_FIRST) | set(engine._SWEEP_LAST)
-
-    def classes(names, ver, hv):
-        out = []
-        for n in names:
-            if n not in ver:
-                if n not in curated:
-                    out.append(3)  # new registration: behind the plan
-                else:
-                    out.append(0 if n in engine.ORACLES else 1)
-            elif n not in hv and n in engine.ORACLES:
-                out.append(2)
-            else:
-                out.append(4)
-        return out
-
+    last_round = engine._load_driver_last_round()
+    saved = dict(engine.QUERIES)
     try:
         order = list(engine.QUERIES)
-        cls = classes(order, verified, hash_verified)
-        assert cls == sorted(cls), "classes must be contiguous 0..4 blocks"
-        n0 = cls.count(0)
-        head = min(n0, 50)
-        assert cls[:head] == [0] * head, "budget head must be oracled backlog"
+        rounds = [last_round.get(n, 0) for n in order]
+        assert rounds == sorted(rounds), "registry must be in recency order"
 
-        # Upgrade slot: any query whose only driver rows are rows-only
-        # but which now carries an oracle must outrank hash-green
-        # re-runs (a3_approx_count_distinct after round 3).
-        upgrades = [n for n in order if classes([n], verified, hash_verified) == [2]]
-        if "a3_approx_count_distinct" not in verified:
-            pass  # not yet driver-checked at all; class 0/1 covers it
-        elif "a3_approx_count_distinct" not in hash_verified:
-            assert "a3_approx_count_distinct" in upgrades
-
-        # Simulate the next round's verdicts landing (as full hash
-        # verdicts): the head names must demote and any remaining
-        # backlog must surface.
-        fake = verified | set(order[:50])
-        fake_hash = hash_verified | set(order[:50])
-        engine._reorder_registry(fake, fake_hash)
+        head = order[:50]
+        landed = max(last_round.values(), default=0) + 1
+        engine._reorder_registry(dict(last_round, **dict.fromkeys(head, landed)))
         order2 = list(engine.QUERIES)
-        cls2 = classes(order2, fake, fake_hash)
-        assert cls2 == sorted(cls2)
-        n_backlog = sum(1 for c in cls2 if c < 4)
-        assert not set(order2[:n_backlog]) & fake_hash, "verified names must demote"
+        assert order2[-len(head):] == head, "verified head must demote"
+        assert order2[: -len(head)] == order[len(head):]
     finally:
-        engine._reorder_registry()  # restore the real order for other tests
-
-
-def test_sweep_lists_reference_registered_queries():
-    """A typo in _SWEEP_FIRST/_SWEEP_LAST silently deprioritizes the
-    intended query (unknown names sort as 'uncurated'); catch it."""
-    import dock_financial_data_pipelines_spark as engine
-
-    engine.load_all()
-    unknown = [
-        n
-        for n in engine._SWEEP_FIRST + engine._SWEEP_LAST
-        if n not in engine.QUERIES
-    ]
-    assert unknown == [], f"sweep lists name unregistered queries: {unknown}"
+        engine.QUERIES.clear()
+        engine.QUERIES.update(saved)
 
 
 def test_sweep_head_is_fully_oracled():

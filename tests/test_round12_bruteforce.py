@@ -522,7 +522,6 @@ def test_bloom_bit_matrix_matches_plain_python(spark):
     from dock_financial_data_pipelines_spark.plans.pipeline import (
         _blm_pos,
         _blm_shard,
-        _HEX_SPARK,
     )
 
     doc_ids = [0, 1, 7, 42, 101, 500, 9999, 123456]
@@ -533,7 +532,7 @@ def test_bloom_bit_matrix_matches_plain_python(spark):
         r.doc_id: r.s
         for r in df.select(
             "doc_id",
-            F.expr(_blm_shard("STRING", _HEX_SPARK)).alias("s"),
+            F.expr(_blm_shard("spark")).alias("s"),
         ).collect()
     }
     for d in doc_ids:
@@ -549,7 +548,7 @@ def test_bloom_bit_matrix_matches_plain_python(spark):
         F.explode(
             F.array(
                 *[
-                    F.expr(_blm_pos(j, "STRING", _HEX_SPARK)).cast("long")
+                    F.expr(_blm_pos(j, "spark")).cast("long")
                     for j in range(_BLM_K)
                 ]
             )

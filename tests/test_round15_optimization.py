@@ -119,6 +119,74 @@ def test_local_manifest_row_cap_falls_back(tmp_path, spark):
         pl._LOCAL_MANIFEST_MAX_ROWS = old
 
 
+def _write_pe(spark, data_dir, rows):
+    from dock_financial_data_pipelines_spark.plans.pipeline import _PE_DDL
+    from dock_financial_data_pipelines_spark.sources.sinks import (
+        write_partitioned,
+    )
+
+    df = spark.createDataFrame(rows, _PE_DDL)
+    write_partitioned(df.repartition("p"), data_dir, "p")
+
+
+def test_readback_row_cap_reads_no_column_data(spark, tmp_path, monkeypatch):
+    """An over-cap staged version falls back on its footer row count
+    alone: no column data is read for either manifest."""
+    import pyarrow.dataset as ds
+
+    from dock_financial_data_pipelines_spark.plans import pipeline as pl
+
+    _root, data_dir, _man_dir = _stage_sample(spark, tmp_path, _SAMPLE)
+    pe_dir = str(tmp_path / "pe_data")
+    _write_pe(spark, pe_dir, [(1, 10, "1998-01-01", "1998-01-01")] * 3)
+
+    real_dataset = ds.dataset
+
+    class FootersOnly:
+        def __init__(self, dataset):
+            self._dataset = dataset
+
+        def count_rows(self):
+            return self._dataset.count_rows()
+
+        def to_table(self, *args, **kwargs):
+            raise AssertionError("column data read past the row cap")
+
+    monkeypatch.setattr(
+        ds, "dataset", lambda *a, **k: FootersOnly(real_dataset(*a, **k))
+    )
+    # the guard is live: an under-cap read-back does hit the reader
+    with pytest.raises(AssertionError, match="column data read"):
+        pl._local_shard_manifest(data_dir)
+    monkeypatch.setattr(pl, "_LOCAL_MANIFEST_MAX_ROWS", 2)
+    assert pl._local_shard_manifest(data_dir) is None
+    assert pl._pe_local_manifest(pe_dir) is None
+
+
+def test_pe_local_manifest_default_partition_falls_back(spark, tmp_path):
+    """A null p lands in p=__HIVE_DEFAULT_PARTITION__; the committer
+    must not publish that dir name as a value, so the Spark aggregate
+    (which reads it back as a null p) runs instead."""
+    from dock_financial_data_pipelines_spark.plans.pipeline import (
+        _PE_DDL,
+        _pe_local_manifest,
+    )
+
+    data_dir = str(tmp_path / "pe_data")
+    _write_pe(
+        spark,
+        data_dir,
+        [(1, 10, "1998-01-01", "1998-01-01"), (2, 11, "1998-01-02", None)],
+    )
+    assert "p=__HIVE_DEFAULT_PARTITION__" in os.listdir(data_dir)
+    assert _pe_local_manifest(data_dir) is None
+    back = read_parquet_or_empty(spark, data_dir, _PE_DDL)
+    assert sorted(
+        (r["p"] is None, r["n"])
+        for r in back.groupBy("p").agg(F.count(F.lit(1)).alias("n")).collect()
+    ) == [(False, 1), (True, 1)]
+
+
 def test_pe_local_manifest_matches_spark_aggregate(spark, tmp_path):
     from dock_financial_data_pipelines_spark.plans.pipeline import (
         _PE_DDL,
