@@ -12,6 +12,7 @@ pruning / predicate pushdown / partition pruning apply unchanged.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -48,10 +49,10 @@ def sf_tag(sf_dir: str) -> str:
     for name in TABLES:
         p = os.path.join(root, f"{name}.parquet")
         if os.path.exists(p):
-            # Full float mtime + size, matching _LOAD_CACHE's key
-            # resolution: a fixture regenerated in place within the same
-            # second must still produce a fresh tag, or memo_index would
-            # serve a stale persisted LSH/MinHash/centroid index.
+            # Full float mtime + size: a fixture regenerated in place
+            # within the same second must still produce a fresh tag, or
+            # memo_index would serve a stale persisted LSH/MinHash/centroid
+            # index.
             st = os.stat(p)
             sig.append(f"{name}:{st.st_mtime!r}:{st.st_size}")
     digest = hashlib.sha1("|".join(sig).encode()).hexdigest()[:10]
@@ -93,13 +94,32 @@ def maybe_broadcast(df: DataFrame) -> DataFrame:
     return df if disabled == "true" else F.broadcast(df)
 
 
-# (applicationId, path, mtime) → analyzed DataFrame. spark.read.parquet
-# costs ~100-130 ms per call (file listing + footer schema read) and the
-# bench/driver call load() 1-4× per query run; the logical plan is
+# (session key, path) → (listing, analyzed DataFrame). spark.read.parquet
+# costs ~100-130 ms per call (file listing + a schema-inference job) and
+# the bench/driver call load() 1-4× per query run; the logical plan is
 # immutable, so reusing it is exactly what a warehouse catalog does with
-# table metadata. mtime in the key invalidates rewritten fixtures;
-# applicationId scopes entries to the owning JVM context.
+# table metadata. The listing — (relative path, mtime_ns, size) of every
+# file under the table — decides whether the entry still holds: one rule
+# for single files and directory tables, and it sees a part file
+# rewritten in place even when the directory's own mtime does not move.
+# A changed listing replaces the entry, so rewrites do not grow the dict.
 _LOAD_CACHE: dict = {}
+
+
+def _listing(path: str, rel: str = "") -> list:
+    """(relative path, mtime_ns, size) of every file under ``path`` (a
+    file lists itself); empty when nothing is there locally."""
+    try:
+        st = os.stat(path)
+    except OSError:  # missing, or not a local path (s3a://, hdfs://…)
+        return []
+    if not stat.S_ISDIR(st.st_mode):
+        return [(rel, st.st_mtime_ns, st.st_size)]
+    return [
+        entry
+        for name in sorted(os.listdir(path))
+        for entry in _listing(os.path.join(path, name), os.path.join(rel, name))
+    ]
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -107,15 +127,14 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     engine semantics (UTC timezone, AQE) hold on driver-owned sessions."""
     tune(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if not os.path.isfile(path):
-        # directory-shaped datasets: a partition overwrite can leave the
-        # top-level mtime unchanged, so never cache those.
-        return _normalize_nanos(spark.read.parquet(path))
-    key = (_session_key(spark), path, os.path.getmtime(path))
-    df = _LOAD_CACHE.get(key)
-    if df is None:
-        df = _normalize_nanos(spark.read.parquet(path))
-        _LOAD_CACHE[key] = df
+    listing = _listing(path)
+    key = (_session_key(spark), path)
+    hit = _LOAD_CACHE.get(key)
+    if hit is not None and hit[0] == listing:
+        return hit[1]
+    df = _normalize_nanos(spark.read.parquet(path))
+    if listing:  # nothing local to key on: read afresh every call
+        _LOAD_CACHE[key] = (listing, df)
     return df
 
 

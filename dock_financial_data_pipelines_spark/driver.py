@@ -8,9 +8,15 @@ here, in a thin driver any external scheduler (cron, Airflow, Dagster)
 can invoke:
 
     spark-submit --py-files dock_fdp_spark.zip \
+        --conf spark.sql.codegen.cache.maxEntries=10000 \
         -m dock_financial_data_pipelines_spark.driver \
         --job balance_report --day 2024-01-01 --out /data/reports
     # or: python -m dock_financial_data_pipelines_spark.driver ...
+
+(The codegen-cache size is a static conf, so ``session.tune`` cannot
+apply it to a session it did not build: pass it with ``--conf`` as
+above — ``session.CODEGEN_CACHE_MAX_ENTRIES`` — or warm runs recompile
+the jobs' generated classes.)
 
 Operational semantics:
 
@@ -26,9 +32,11 @@ Operational semantics:
   ``replace=True``, REPORT:172). A ``_SUCCESS_DAY=<day>`` marker makes
   ``max_active_runs=1`` + skip-if-done (``catchup=False``) checkable by
   the scheduler.
-- **Metrics**: each attempt logs wall time and output rows through
-  ``observability.MetricsStore`` — the engine's form of the reference's
-  per-stage ``logging.info`` (REPORT:34, :69, :106...).
+- **Result**: each run returns a ``RunResult`` (attempts, wall time,
+  published rows; the CLI prints it as one JSON line) and writes the
+  rows into the day's marker. The rows are counted from the parquet
+  footers of the day's partition directory, not by a Spark read-back
+  (see ``_published_rows``).
 """
 
 from __future__ import annotations
@@ -36,6 +44,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 from dataclasses import dataclass
@@ -98,12 +107,48 @@ class RunResult:
     skipped: bool = False
 
 
+# Partition values Spark writes into a directory name verbatim.
+_PLAIN_VALUE = re.compile(r"[0-9A-Za-z_.\-]+")
+
+
 def _marker(out_dir: str, day: str) -> str:
     # Markers live NEXT TO the dataset, not inside it: a non-parquet file
     # under out_dir would break Spark's file-index scan of the target.
     d = f"{out_dir.rstrip('/')}_markers"
     os.makedirs(d, exist_ok=True)
     return os.path.join(d, f"day_{day}.json")
+
+
+def _published_rows(spark: SparkSession, out_dir: str, day: str, schema) -> int:
+    """Rows under ``out_dir``'s ``report_date=<day>`` partition.
+
+    Counted from the parquet footers of the partition's files — the
+    files Spark would read, within the committer's byte bound — instead
+    of a Spark read-back, which costs a schema-inference job over every
+    day plus a two-job count. A day with no rows has no partition
+    directory and counts 0. Spark counts instead past the byte bound,
+    for a non-local target, and for a day Spark would escape in the
+    directory name (or write as the null partition); that read takes
+    ``schema``, so it needs no inference and an empty target reads as
+    empty."""
+    from pyspark.sql import functions as F
+
+    from dock_financial_data_pipelines_spark.catalog import (
+        read_parquet_or_empty,
+    )
+    from dock_financial_data_pipelines_spark.plans.pipeline import (
+        parquet_footers,
+    )
+
+    if os.path.isdir(out_dir) and _PLAIN_VALUE.fullmatch(day):
+        footers = parquet_footers(os.path.join(out_dir, f"report_date={day}"))
+        if footers is not None:
+            return footers[2]
+    return (
+        read_parquet_or_empty(spark, out_dir, schema)
+        .where(F.col("report_date") == day)
+        .count()
+    )
 
 
 def run_job(
@@ -139,9 +184,7 @@ def run_job(
                 .partitionBy("report_date")
                 .parquet(out_dir)
             )
-            rows = spark.read.parquet(out_dir).where(
-                f"report_date = '{day}'"
-            ).count()
+            rows = _published_rows(spark, out_dir, day, df.schema)
             with open(_marker(out_dir, day), "w") as fh:
                 fh.write(json.dumps({"job": job_name, "day": day, "rows": rows}))
             return RunResult(

@@ -124,6 +124,27 @@ def _walk_plan_metrics(jplan, acc: dict, seen: set | None = None) -> None:
         _walk_plan_metrics(kids.next(), acc, seen)
 
 
+def codegen_compiles(spark: SparkSession) -> int | None:
+    """Janino classes compiled so far in this session's JVM (Spark's
+    ``CodegenMetrics`` compilation-time histogram count; JVM-wide, so it
+    also counts other sessions sharing the context). A warm call whose
+    generated code is still cached adds 0. On Spark Connect there is no
+    py4j gateway: warn once and return None, never a measured-looking 0."""
+    from dock_financial_data_pipelines_spark import connect_compat
+
+    if not connect_compat.is_connect(spark):
+        jvm = spark.sparkContext._jvm
+        metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+        return int(metrics.METRIC_COMPILATION_TIME().getCount())
+    connect_compat.warn_once(
+        connect_compat.session_key(spark),
+        "codegen-compiles",
+        "no py4j gateway (Spark Connect?): the server JVM's codegen "
+        "compile count is unavailable; returning None.",
+    )
+    return None
+
+
 def run_with_metrics(
     name: str, df: DataFrame, store: MetricsStore, max_rows: int = 100_000
 ) -> int:

@@ -888,38 +888,62 @@ _LOCAL_MANIFEST_MAX_ROWS = 131072
 _LOCAL_MANIFEST_MAX_BYTES = 64 << 20
 
 
-def _committer_readback(data_dir: str, columns: list):
-    """The committer's bounded read-back of the parquet files under
-    ``data_dir``: ``columns`` as one arrow table per directory holding
-    parquet files, or None when the files exceed the committer bounds
-    (the caller then falls back to a Spark aggregate) — guide §5's
-    bounded-driver rule. Both bounds are checked before any column data
-    is read: bytes from the file sizes, rows from the parquet footers.
-    One threaded dataset serves the row count and the read, so each
-    footer is parsed once (a per-file read_table loop cost ~3-5 ms of
-    open/footer overhead per file — a second's worth of serial driver
-    work for the small-file-debris stagers)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def _spark_hidden(name: str) -> bool:
+    """Names Spark's file index skips: ``.``-files and ``_``-files
+    (``_SUCCESS``, ``_temporary``), except ``_col=value`` partitions."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def parquet_footers(data_dir: str):
+    """The parquet files Spark would read under ``data_dir``, as
+    ``(by_dir, dataset, n_rows)``: the files grouped by directory, one
+    pyarrow dataset over them, and its row count from the footers alone.
+    None when the files exceed the committer byte bound, checked from
+    file sizes before any file is opened — guide §5's bounded-driver
+    rule; the caller then falls back to Spark. One threaded dataset
+    serves the row count and any later read, so each footer is parsed
+    once (a per-file read_table loop cost ~3-5 ms of open/footer
+    overhead per file — a second's worth of serial driver work for the
+    small-file-debris stagers)."""
     import pyarrow.dataset as ds
 
     by_dir: dict = {}
     total_bytes = 0
-    for dirpath, _dirnames, filenames in os.walk(data_dir):
+    for dirpath, dirnames, filenames in os.walk(data_dir):
+        dirnames[:] = [d for d in dirnames if not _spark_hidden(d)]
         for fn in filenames:
-            if fn.endswith(".parquet"):
+            if not _spark_hidden(fn):
                 p = os.path.join(dirpath, fn)
                 by_dir.setdefault(dirpath, []).append(p)
                 total_bytes += os.path.getsize(p)
     if total_bytes > _LOCAL_MANIFEST_MAX_BYTES:
-        return None  # pragma: no cover - scale fallback
+        return None
     if not by_dir:
-        return {}
+        return {}, None, 0
     dataset = ds.dataset(
         [p for files in by_dir.values() for p in files], format="parquet"
     )
-    if dataset.count_rows() > _LOCAL_MANIFEST_MAX_ROWS:
+    return by_dir, dataset, dataset.count_rows()
+
+
+def _committer_readback(data_dir: str, columns: list):
+    """The committer's bounded read-back of the parquet files under
+    ``data_dir``: ``columns`` as one arrow table per directory holding
+    parquet files, or None past the committer bounds (the caller then
+    falls back to a Spark aggregate). Both bounds are checked before any
+    column data is read: bytes from the file sizes, rows from the
+    parquet footers (``parquet_footers``)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    footers = parquet_footers(data_dir)
+    if footers is None:
+        return None  # pragma: no cover - scale fallback
+    by_dir, dataset, n_rows = footers
+    if n_rows > _LOCAL_MANIFEST_MAX_ROWS:
         return None
+    if not by_dir:
+        return {}
     if len(by_dir) == 1:
         return {d: dataset.to_table(columns=columns) for d in by_dir}
     tbl = dataset.to_table(columns=[*columns, "__filename"])

@@ -6,6 +6,13 @@ UTC session timezone so date semantics match the oracle, Arrow for every
 pandas interchange. These are all *runtime-settable* SQL confs, so
 ``tune()`` can also be applied to an externally provided session (the
 driver creates its own ``SparkSession`` for ``__spark_entry__``).
+
+The generated-code cache size (``CODEGEN_CACHE_MAX_ENTRIES``) is a
+*static* conf: only ``get_spark`` can set it, when the JVM context is
+built. ``tune()`` cannot apply it to an external session; such callers
+pass it at launch, e.g. ``spark-submit --conf
+spark.sql.codegen.cache.maxEntries=10000``. Without it the warm calls of
+the daily jobs recompile generated classes on every run.
 """
 
 from __future__ import annotations
@@ -38,7 +45,26 @@ _RUNTIME_CONF = {
     # NTZ column that slips through (e.g. a session where this conf was
     # captured before tune() ran).
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # The codegen cache is keyed by the generated source, and by default
+    # the source names its class after the whole-stage codegen id. AQE
+    # numbers stages in the order they are re-planned, which follows
+    # which stage finishes first, so the same pipeline came back under a
+    # new class name on some warm calls and compiled again
+    # (pipeline_atomic_publish: 2-10 classes on 3 of 9 warm calls). The
+    # id stays in the generated code's comment.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
+
+
+# Janino classes kept compiled per JVM (spark.sql.codegen.cache.maxEntries,
+# Spark default 100, a segmented LRU). One pass of the daily publish jobs
+# needs ~100 distinct classes, so with the default every warm pass
+# recompiled (and the JVM re-JITted) 59-79 of them. Sized to hold
+# the largest measured working set, the full scripts/check_all.py sweep
+# (5,581 classes at sf0.001, 5,638 at sf0.01), with headroom;
+# check_all prints the session's compile total next to this size and
+# warns past it.
+CODEGEN_CACHE_MAX_ENTRIES = 10000
 
 
 def release_local_checkpoint(df) -> None:
@@ -145,6 +171,9 @@ def get_spark(app_name: str = "dock-fdp-spark") -> SparkSession:
         .config("spark.python.worker.reuse", "true")
         .config("spark.python.worker.idleTimeoutSeconds", "0")
         .config("spark.python.worker.killOnIdleTimeout", "false")
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES)
+        )
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

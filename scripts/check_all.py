@@ -22,6 +22,7 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import dock_financial_data_pipelines_spark as engine
+from dock_financial_data_pipelines_spark.observability import codegen_compiles
 from dock_financial_data_pipelines_spark.session import get_spark
 from tests._compare import compare_frames, duck_connection
 
@@ -56,6 +57,22 @@ def _changed_queries(rev: str) -> list[str]:
         if src in changed:
             names.append(name)
     return sorted(names)
+
+
+def _report_codegen(spark) -> None:
+    """Print the session's Janino compiles next to the codegen cache
+    size. With no evictions the total is the sweep's working set of
+    generated classes; a total above the size means the working set
+    has outgrown session.CODEGEN_CACHE_MAX_ENTRIES."""
+    compiles = codegen_compiles(spark)
+    size = int(spark.conf.get("spark.sql.codegen.cache.maxEntries"))
+    print(f"codegen: {compiles} classes compiled, cache holds {size}")
+    if compiles is not None and compiles > size:
+        print(
+            f"WARNING: {compiles} compiles exceed the codegen cache size "
+            f"{size}: raise session.CODEGEN_CACHE_MAX_ENTRIES",
+            file=sys.stderr,
+        )
 
 
 def main() -> int:
@@ -100,6 +117,7 @@ def main() -> int:
             failures.append((name, traceback.format_exc(limit=20)))
         print(f"{status} {name:40s} {time.time()-t0:6.1f}s", flush=True)
     print(f"\n{len(only) - len(failures)}/{len(only)} passed")
+    _report_codegen(spark)
     for name, msg in failures:
         print(f"\n===== {name} =====\n{msg[:3000]}")
     return 1 if failures else 0

@@ -182,3 +182,89 @@ def test_backfill_cli_mode(sf_dir, tmp_path):
     lines = [json.loads(x) for x in buf.getvalue().strip().splitlines()]
     assert [x["day"] for x in lines] == ["2024-01-01", "2024-01-02"]
     assert all(not x["skipped"] for x in lines)
+
+
+def test_empty_day_into_fresh_target_publishes_zero_rows(spark, sf_dir, tmp_path):
+    """An empty daily partition is routine: the run counts 0 rows and
+    writes its marker on the first attempt, with no Spark read-back of
+    a target that has no partition to infer a schema from."""
+    out = str(tmp_path / "fresh")
+    res = driver.run_job(
+        spark, "daily_events", sf_dir, "2031-01-01", out, retries=1
+    )
+    assert (res.attempts, res.rows, res.skipped) == (1, 0, False)
+    assert json.load(open(driver._marker(out, "2031-01-01")))["rows"] == 0
+
+
+def _multi_file_events(monkeypatch):
+    real = driver.JOBS["daily_events"]
+    monkeypatch.setitem(
+        driver.JOBS, "daily_events",
+        lambda spark_, sf, day: real(spark_, sf, day).repartition(3),
+    )
+
+
+@pytest.fixture
+def spark_reads(monkeypatch):
+    """Records every Spark read-back the driver's row count makes."""
+    from dock_financial_data_pipelines_spark import catalog
+
+    calls: list = []
+    real_read = catalog.read_parquet_or_empty
+    monkeypatch.setattr(
+        catalog, "read_parquet_or_empty",
+        lambda *a, **k: calls.append(a) or real_read(*a, **k),
+    )
+    return calls
+
+
+def _spark_count(spark, out, day):
+    return spark.read.parquet(out).where(f"report_date = '{day}'").count()
+
+
+def test_footer_count_equals_spark_count_for_multi_file_day(
+    spark, sf_dir, tmp_path, monkeypatch, spark_reads
+):
+    _multi_file_events(monkeypatch)
+    out = str(tmp_path / "events_out")
+    driver.run_job(spark, "daily_events", sf_dir, "2024-01-06", out)
+    res = driver.run_job(spark, "daily_events", sf_dir, "2024-01-05", out)
+    day_dir = os.path.join(out, "report_date=2024-01-05")
+    parts = [f for f in os.listdir(day_dir) if f.endswith(".parquet")]
+    assert len(parts) > 1
+    assert res.rows == _spark_count(spark, out, "2024-01-05") > 0
+    assert spark_reads == []  # counted from the footers
+
+
+def test_count_falls_back_to_spark_past_the_byte_bound(
+    spark, sf_dir, tmp_path, monkeypatch, spark_reads
+):
+    from dock_financial_data_pipelines_spark.plans import pipeline as pl
+
+    _multi_file_events(monkeypatch)
+    monkeypatch.setattr(pl, "_LOCAL_MANIFEST_MAX_BYTES", 0)
+    out = str(tmp_path / "events_out")
+    res = driver.run_job(spark, "daily_events", sf_dir, "2024-01-05", out)
+    assert len(spark_reads) == 1
+    assert res.rows == _spark_count(spark, out, "2024-01-05") > 0
+
+
+def test_count_falls_back_to_spark_for_an_escaped_day(
+    spark, sf_dir, tmp_path, monkeypatch, spark_reads
+):
+    """Spark writes report_date 'a:b' as the directory report_date=a%3Ab,
+    so no directory is named after the day verbatim: Spark counts."""
+    from pyspark.sql import functions as F
+
+    from dock_financial_data_pipelines_spark.catalog import load
+
+    monkeypatch.setitem(
+        driver.JOBS, "daily_events",
+        lambda spark_, sf, day: load(spark_, sf, "region")
+        .withColumn("report_date", F.lit(day)),
+    )
+    out = str(tmp_path / "odd_out")
+    res = driver.run_job(spark, "daily_events", sf_dir, "a:b", out)
+    assert os.path.isdir(os.path.join(out, "report_date=a%3Ab"))
+    assert len(spark_reads) == 1
+    assert res.rows == load(spark, sf_dir, "region").count() == 5

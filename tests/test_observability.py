@@ -4,11 +4,15 @@ queries on a live session."""
 
 from __future__ import annotations
 
+import logging
+
+import pytest
 from pyspark.sql import functions as F
 
 from dock_financial_data_pipelines_spark.catalog import load
 from dock_financial_data_pipelines_spark.observability import (
     MetricsStore,
+    codegen_compiles,
     run_with_metrics,
 )
 
@@ -138,3 +142,50 @@ def test_hashed_shingle_join_shuffles_less_than_raw(spark, sf_dir):
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["balance_report", "account_statement", "daily_events",
+     "pipeline_atomic_publish"],
+)
+def test_warm_call_compiles_no_classes(spark, sf_dir, tmp_path, op):
+    """The daily publish path keeps its generated code compiled: a
+    second identical call adds no Janino compile (the codegen cache set
+    by session.get_spark holds the whole working set)."""
+    import dock_financial_data_pipelines_spark as engine
+    from dock_financial_data_pipelines_spark import driver
+
+    def call():
+        if op in driver.JOBS:
+            driver.run_job(
+                spark, op, sf_dir, "2024-01-15", str(tmp_path / op), force=True
+            )
+        else:
+            engine.QUERIES[op](spark, sf_dir).toPandas()
+
+    call()
+    before = codegen_compiles(spark)
+    call()
+    assert before > 0 and codegen_compiles(spark) == before
+
+
+def test_codegen_compiles_is_none_on_connect(spark):
+    from dock_financial_data_pipelines_spark import connect_compat as cc
+
+    cc.reset_warnings()
+    records: list = []
+
+    class _Capture(logging.Handler):
+        def emit(self, record):
+            records.append(record.getMessage())
+
+    cap = _Capture()
+    cc.log.addHandler(cap)
+    try:
+        facade = cc.ConnectFacadeSession(spark)
+        assert codegen_compiles(facade) is None
+        assert codegen_compiles(facade) is None
+    finally:
+        cc.log.removeHandler(cap)
+    assert sum("codegen-compiles" in m for m in records) == 1
