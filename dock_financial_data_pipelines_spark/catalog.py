@@ -39,22 +39,22 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def sf_tag(sf_dir: str) -> str:
     """Collision-proof cache key for fixture scratch dirs: basename plus a
-    hash of the absolute path and source parquet mtimes, so (a) two sf_dirs
-    sharing a basename never collide and (b) regenerated source data
-    invalidates stale caches."""
+    hash of the absolute path and each table's file listing, so (a) two
+    sf_dirs sharing a basename never collide and (b) regenerated source
+    data invalidates stale caches."""
     import hashlib
 
     root = os.path.abspath(sf_dir.rstrip("/"))
     sig = [root]
     for name in TABLES:
-        p = os.path.join(root, f"{name}.parquet")
-        if os.path.exists(p):
-            # Full float mtime + size: a fixture regenerated in place
-            # within the same second must still produce a fresh tag, or
-            # memo_index would serve a stale persisted LSH/MinHash/centroid
-            # index.
-            st = os.stat(p)
-            sig.append(f"{name}:{st.st_mtime!r}:{st.st_size}")
+        # The listing `load` keys its cache on: nanosecond mtime + size of
+        # every file under the table, so a part file rewritten in place
+        # (directory mtime unchanged) or a fixture regenerated within the
+        # same second still produces a fresh tag, or memo_index would
+        # serve a stale persisted LSH/MinHash/centroid index.
+        listing = _listing(os.path.join(root, f"{name}.parquet"))
+        if listing:
+            sig.append(f"{name}:{listing!r}")
     digest = hashlib.sha1("|".join(sig).encode()).hexdigest()[:10]
     return f"{os.path.basename(root)}_{digest}"
 

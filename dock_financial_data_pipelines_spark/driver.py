@@ -29,7 +29,10 @@ Operational semantics:
 - **Idempotence / exactly-once effect**: output goes to a
   date-partitioned parquet target via dynamic partition overwrite, so
   re-running a day replaces exactly that day (the reference's
-  ``replace=True``, REPORT:172). A ``_SUCCESS_DAY=<day>`` marker makes
+  ``replace=True``, REPORT:172). Dynamic overwrite writes nothing for
+  an empty result, so a re-run whose day came out empty finds the day's
+  file listing unchanged and removes the old partition itself (local
+  targets). A ``_SUCCESS_DAY=<day>`` marker makes
   ``max_active_runs=1`` + skip-if-done (``catchup=False``) checkable by
   the scheduler.
 - **Result**: each run returns a ``RunResult`` (attempts, wall time,
@@ -45,6 +48,7 @@ import argparse
 import json
 import os
 import re
+import shutil
 import sys
 import time
 from dataclasses import dataclass
@@ -119,6 +123,14 @@ def _marker(out_dir: str, day: str) -> str:
     return os.path.join(d, f"day_{day}.json")
 
 
+def _day_dir(out_dir: str, day: str) -> str | None:
+    """The local directory Spark writes ``day``'s partition to, or None
+    for a non-local target or a day Spark would escape in the name."""
+    if os.path.isdir(out_dir) and _PLAIN_VALUE.fullmatch(day):
+        return os.path.join(out_dir, f"report_date={day}")
+    return None
+
+
 def _published_rows(spark: SparkSession, out_dir: str, day: str, schema) -> int:
     """Rows under ``out_dir``'s ``report_date=<day>`` partition.
 
@@ -140,8 +152,9 @@ def _published_rows(spark: SparkSession, out_dir: str, day: str, schema) -> int:
         parquet_footers,
     )
 
-    if os.path.isdir(out_dir) and _PLAIN_VALUE.fullmatch(day):
-        footers = parquet_footers(os.path.join(out_dir, f"report_date={day}"))
+    day_dir = _day_dir(out_dir, day)
+    if day_dir:
+        footers = parquet_footers(day_dir)
         if footers is not None:
             return footers[2]
     return (
@@ -162,6 +175,8 @@ def run_job(
     force: bool = False,
 ) -> RunResult:
     """One scheduled run: skip-if-done, retry loop, idempotent publish."""
+    from dock_financial_data_pipelines_spark.catalog import _listing
+
     if not force and os.path.exists(_marker(out_dir, day)):
         return RunResult(job_name, day, 0, 0, 0.0, out_dir, skipped=True)
 
@@ -175,6 +190,8 @@ def run_job(
                 from pyspark.sql import functions as F
 
                 df = df.withColumn("report_date", F.lit(day))
+            day_dir = _day_dir(out_dir, day)
+            before = _listing(day_dir) if day_dir else []
             # Per-write option, not a session conf: a session-wide
             # "dynamic" would silently leak into every later plain
             # overwrite on a shared session and leave stale partitions.
@@ -184,6 +201,10 @@ def run_job(
                 .partitionBy("report_date")
                 .parquet(out_dir)
             )
+            if before and _listing(day_dir) == before:
+                # An empty result writes no partition, so dynamic
+                # overwrite left the day's old files: the day is empty.
+                shutil.rmtree(day_dir)
             rows = _published_rows(spark, out_dir, day, df.schema)
             with open(_marker(out_dir, day), "w") as fh:
                 fh.write(json.dumps({"job": job_name, "day": day, "rows": rows}))

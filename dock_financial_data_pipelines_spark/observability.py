@@ -88,16 +88,16 @@ class MetricsStore:
         )
 
 
-def _walk_plan_metrics(jplan, acc: dict, seen: set | None = None) -> None:
-    """Sum SQLMetric values over a JVM SparkPlan tree (py4j, read-only).
+def plan_nodes(jplan, seen: set | None = None):
+    """Every node of a JVM SparkPlan tree (py4j, read-only), each once.
 
     AQE wraps the plan in AdaptiveSparkPlanExec (whose ``children()`` is
     empty — the real tree hangs off ``executedPlan()``), and materialized
     stages appear as QueryStageExec nodes wrapping their stage via
     ``plan()``; descend through both. Node ids already visited are
     skipped so a subtree reachable twice — a ReusedExchangeExec pointing
-    at an exchange also walked via its original parent, or a node
-    exposing both an unwrap and children — is summed exactly once."""
+    at an exchange also reached via its original parent, or a node
+    exposing both an unwrap and children — is yielded exactly once."""
     if seen is None:
         seen = set()
     try:
@@ -107,21 +107,27 @@ def _walk_plan_metrics(jplan, acc: dict, seen: set | None = None) -> None:
         seen.add(node_id)
     except Exception:
         pass  # id() missing on some wrappers: walk it, unwraps still dedup
-    it = jplan.metrics().iterator()
-    while it.hasNext():
-        kv = it.next()
-        key = kv._1()
-        if key in _METRIC_KEYS:
-            acc[_METRIC_KEYS[key]] += max(0, kv._2().value())
+    yield jplan
     for unwrap in ("executedPlan", "plan"):
         try:
             inner = getattr(jplan, unwrap)()
-            _walk_plan_metrics(inner, acc, seen)
         except Exception:
-            pass
+            continue  # this node has no such unwrap
+        yield from plan_nodes(inner, seen)
     kids = jplan.children().iterator()
     while kids.hasNext():
-        _walk_plan_metrics(kids.next(), acc, seen)
+        yield from plan_nodes(kids.next(), seen)
+
+
+def _walk_plan_metrics(jplan, acc: dict, seen: set | None = None) -> None:
+    """Sum SQLMetric values over every node ``plan_nodes`` yields."""
+    for node in plan_nodes(jplan, seen):
+        it = node.metrics().iterator()
+        while it.hasNext():
+            kv = it.next()
+            key = kv._1()
+            if key in _METRIC_KEYS:
+                acc[_METRIC_KEYS[key]] += max(0, kv._2().value())
 
 
 def codegen_compiles(spark: SparkSession) -> int | None:

@@ -26,6 +26,7 @@ Scale design:
 
 from __future__ import annotations
 
+from fractions import Fraction
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +41,7 @@ from dock_financial_data_pipelines_spark.catalog import (
 from dock_financial_data_pipelines_spark.hashing import h60_sql
 from dock_financial_data_pipelines_spark.registry import ORACLES, query
 from dock_financial_data_pipelines_spark.session import release_local_checkpoint
+from dock_financial_data_pipelines_spark.shingles import word_shingles
 
 def _tokens():
     return F.split(F.col("text"), " ")
@@ -193,20 +195,7 @@ def minhash_signatures(docs: DataFrame, shingle_width: int = 3) -> DataFrame:
     (shingle, family) and one shuffle on doc_id; no 64-bit multiply
     tricks, which ANSI mode — Spark 4's default — would reject on
     overflow."""
-    # Tokenize once into a projected column: Spark does not CSE
-    # `split(text,' ')` across lambda references, so the inline form
-    # re-splits the text once per shingle (O(n²) characters per doc).
-    shingled = (
-        docs.select("doc_id", F.split("text", " ").alias("ws"))
-        .select(
-            "doc_id",
-            F.expr(
-                f"transform(sequence(0, greatest(size(ws) - {shingle_width}, 0)),"
-                f" i -> concat_ws(' ', slice(ws, i + 1, {shingle_width})))"
-            ).alias("shingles"),
-        )
-        .select("doc_id", F.explode("shingles").alias("shingle"))
-    )
+    shingled = word_shingles(docs, shingle_width, "doc_id")
     mins = [
         F.min(
             F.expr(h60_sql(f"concat(shingle, '#', '{i}')", "spark"))
@@ -250,9 +239,8 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     )
 
 
-# DuckDB twin of the shingle generation inside minhash_signatures:
-# sequence(0, greatest(size-3,0)) ↔ range(greatest(len-3,0)+1) and
-# slice(ws, i+1, 3) ↔ ws[i+1 : i+3] (both 1-based, both truncate at the
+# DuckDB twin of shingles.word_shingles(docs, 3, "doc_id"): window i in
+# range(greatest(len-3,0)+1) is ws[i+1 : i+3] (1-based, truncated at the
 # list end), so every (doc_id, shingle) row matches the engine's.
 _MH_SHINGLES_SQL = """
     toks AS (
@@ -1552,6 +1540,37 @@ _CONT_CAP = 64
 _CONT_MIN = 0.6
 
 
+def _shingle_index(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_id, h) over each doc's 3-token word shingles.
+
+    h is xxhash64, not the md5-60bit idiom (r15): h is INTERNAL — the
+    consumers' outputs carry only ids and set cardinalities, which are
+    hash-invariant modulo a ~n²/2^65 collision (the l_repetition_stats
+    argument; the oracles keep md5 and the hash compare would catch a
+    divergent collision). The md5 string path cost ~2x the whole index
+    build."""
+    return (
+        word_shingles(docs, 3, "doc_id")
+        .select("doc_id", F.expr("xxhash64(shingle)").alias("h"))
+        .distinct()
+    )
+
+
+def _capped_index(docs: DataFrame) -> DataFrame:
+    """The shingle index without shingles held by more than _CONT_CAP
+    docs: the inverted-index fanout guard of the containment joins.
+
+    (r14 probe note: the index's DISTINCT exchange subtree is identical
+    under both consumers — the df count and the join's left side — so
+    Spark's ReusedExchange evaluates the shingle explode + hash once; a
+    checkpoint of the index before the join measured as a wash.)"""
+    sh = _shingle_index(docs)
+    freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df")).where(
+        F.col("df") <= _CONT_CAP
+    )
+    return sh.join(freq.select("h"), "h")
+
+
 @query(
     "l_containment_pairs",
     oracle=f"""
@@ -1585,42 +1604,9 @@ _CONT_MIN = 0.6
 )
 def l_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    # ws projected once (no split-per-shingle re-tokenize; the
-    # minhash_signatures lesson) and capped materialized once — three
-    # consumers (sizes + both join sides) would otherwise re-run the
-    # shingle hashing three times.
-    sh = (
-        docs.select("doc_id", F.split("text", " ").alias("ws"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, greatest(size(ws) - 3, 0)),"
-                    " i -> concat_ws(' ', slice(ws, i + 1, 3)))"
-                )
-            ).alias("shingle"),
-        )
-        .select(
-            "doc_id",
-            # xxhash64, not the md5-60bit idiom (r15): h is INTERNAL —
-            # the output carries only ids and set cardinalities, which
-            # are hash-invariant modulo a ~n²/2^65 collision (the
-            # l_repetition_stats argument; the oracle keeps md5 and the
-            # hash compare would catch a divergent collision). The md5
-            # string path cost ~2x the whole index build.
-            F.expr("xxhash64(shingle)").alias("h"),
-        )
-        .distinct()
-    )
-    # (r14 probe note: unlike l_substring_span_pairs, sh's DISTINCT
-    # exchange subtree is identical under both consumers — freq and the
-    # join's left side — so Spark's ReusedExchange already evaluates
-    # the shingle explode + md5 once here; a pre-join checkpoint of sh
-    # measured as a wash and is deliberately not applied.)
-    freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df")).where(
-        F.col("df") <= _CONT_CAP
-    )
-    capped = sh.join(freq.select("h"), "h").localCheckpoint(eager=True)
+    # capped materialized once — three consumers (sizes + both join
+    # sides) would otherwise re-run the shingle hashing three times.
+    capped = _capped_index(docs).localCheckpoint(eager=True)
     sizes = capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = capped.alias("a")
     b = capped.alias("b")
@@ -1728,24 +1714,10 @@ def l_substring_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load(spark, sf_dir, "documents")
-    # Tokenize once into a projected column (the minhash_signatures
-    # lesson, dedup.py:178): Spark does not CSE split(text,' ') across
-    # lambda references, so the inline form re-splits per shingle —
-    # O(n²) characters per doc. Measured 2.3x on this operator at sf0.1.
-    pos_sh = docs.select(
-        "doc_id", F.split("text", " ").alias("ws")
-    ).select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                "transform(sequence(0, greatest(size(ws) - 8, 0)),"
-                " i -> concat_ws(' ', slice(ws, i + 1, 8)))"
-            )
-        ).alias("i", "shingle"),
-    ).select(
+    pos_sh = word_shingles(docs, 8, "doc_id", pos="i").select(
         "doc_id",
         "i",
-        # xxhash64, not md5-60bit: h is internal (see l_containment_pairs).
+        # xxhash64, not md5-60bit: h is internal (see _shingle_index).
         F.expr("xxhash64(shingle)").alias("h"),
     )
     # Materialize the positional-shingle index ONCE: freq and both pair-
@@ -2497,7 +2469,28 @@ def l_minhash_param_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 # containment operator alongside MinHash. Same df≤64-capped candidate
 # equi-join as l_containment_pairs (never all-pairs; AQE-splittable hot
 # keys, see tests/test_banded_join_skew.py).
+#
+# Size band. With n common shingles, m = min and M = max of the two
+# capped-set sizes, containment ≥ c is n ≥ c·m and jaccard < j is
+# n < j·(m + M)/(1 + j). Together they force
+#     M > (c·(1 + j)/j − 1)·m = 7/5·m   (c = 4/5, j = 1/2),
+# i.e. 5·M > 7·m. The pair join tests that band on the sizes the index
+# rows carry, so a pair that cannot pass the final filter never reaches
+# the pair aggregate; the exact double-valued filter still decides.
+# Executed pair-join rows (plans/r16): sf0.1 1,265,779 → 632,399,
+# sf0.001 14,941 → 6,627. The sizes reach the index rows through a join
+# on doc_id after the checkpoint (AQE broadcasts the doc-count-sized
+# frame here). A count window inside the checkpoint does the same job
+# but shuffles the whole capped index by doc_id and sorts it: r15
+# reverted it when nothing used the sizes in the join (bench median
+# 3.36 → 4.20 s), and with the band it still wrote ~1.2 MB more
+# shuffle per sf0.1 call than this join at the same task CPU.
 # ---------------------------------------------------------------------------
+_WRAP_CONT_MIN = Fraction(4, 5)
+_WRAP_JAC_MAX = Fraction(1, 2)
+_WRAP_BAND = _WRAP_CONT_MIN * (1 + _WRAP_JAC_MAX) / _WRAP_JAC_MAX - 1
+
+
 @query(
     "l_wrapper_pair_audit",
     oracle=f"""
@@ -2532,71 +2525,37 @@ def l_minhash_param_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
            floor(jac * 1e6 + 0.5) / 1e6 AS jaccard,
            floor(cont * 1e6 + 0.5) / 1e6 AS containment
     FROM scored
-    WHERE cont >= 0.8 AND jac < 0.5
+    WHERE cont >= {float(_WRAP_CONT_MIN)} AND jac < {float(_WRAP_JAC_MAX)}
     ORDER BY doc_a, doc_b
     """,
 )
 def l_wrapper_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    sh = (
-        docs.select("doc_id", F.split("text", " ").alias("ws"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, greatest(size(ws) - 3, 0)),"
-                    " i -> concat_ws(' ', slice(ws, i + 1, 3)))"
-                )
-            ).alias("shingle"),
-        )
-        .select(
-            "doc_id",
-            # xxhash64, not the md5-60bit idiom (r15): h is INTERNAL —
-            # the output carries only ids and set cardinalities, which
-            # are hash-invariant modulo a ~n²/2^65 collision (the
-            # l_repetition_stats argument; the oracle keeps md5 and the
-            # hash compare would catch a divergent collision). The md5
-            # string path cost ~2x the whole index build.
-            F.expr("xxhash64(shingle)").alias("h"),
-        )
-        .distinct()
-    )
-    # (r14 probe note: unlike l_substring_span_pairs, sh's DISTINCT
-    # exchange subtree is identical under both consumers — freq and the
-    # join's left side — so Spark's ReusedExchange already evaluates
-    # the shingle explode + md5 once here; a pre-join checkpoint of sh
-    # measured as a wash and is deliberately not applied.)
-    freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df")).where(
-        F.col("df") <= _CONT_CAP
-    )
-    capped = sh.join(freq.select("h"), "h").localCheckpoint(eager=True)
+    capped = _capped_index(docs).localCheckpoint(eager=True)
     sizes = capped.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = capped.alias("a")
-    b = capped.alias("b")
-    inter = (
+    # Each index row carries its doc's capped-set size into the pair
+    # join, which tests the size band; the pair aggregate then needs no
+    # sizes joins after it.
+    sized = capped.join(sizes, "doc_id")
+    a = sized.alias("a")
+    b = sized.alias("b")
+    size_a, size_b = F.col("a.sz"), F.col("b.sz")
+    big, small = F.greatest(size_a, size_b), F.least(size_a, size_b)
+    in_band = _WRAP_BAND.denominator * big > _WRAP_BAND.numerator * small
+    scored = (
         a.join(
             b,
             (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & in_band,
         )
         .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            size_a.alias("size_a"),
+            size_b.alias("size_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    # r15 probe note: carrying sz through the pair join via a count
-    # window inside the checkpoint was tried and REVERTED — the window
-    # (exchange + sort of the whole capped index, paid eagerly in the
-    # materialization) cost more than the two sizes joins it removed
-    # (bench median 3.36 → 4.20 s). A forced broadcast of sizes was
-    # also rejected: AQE already broadcasts the doc-count-sized frame
-    # at this SF, and at 100 TB sizes is corpus-sized — a hint would
-    # pin a plan that cannot scale. The r14 shape stands.
-    sa = sizes.select(
-        F.col("doc_id").alias("doc_a"), F.col("sz").alias("size_a")
-    )
-    sb = sizes.select(
-        F.col("doc_id").alias("doc_b"), F.col("sz").alias("size_b")
     )
     cont = F.col("n_common").cast("double") / F.least(
         F.col("size_a"), F.col("size_b")
@@ -2606,9 +2565,9 @@ def l_wrapper_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     f6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .where((cont >= 0.8) & (jac < 0.5))
+        scored.where(
+            (cont >= float(_WRAP_CONT_MIN)) & (jac < float(_WRAP_JAC_MAX))
+        )
         .select(
             "doc_a",
             "doc_b",
@@ -3277,29 +3236,7 @@ def l_dedup_stage_cost_model(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("units"),
         )
     )
-    post = (
-        docs.select("doc_id", F.split("text", " ").alias("ws"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, greatest(size(ws) - 3, 0)),"
-                    " i -> concat_ws(' ', slice(ws, i + 1, 3)))"
-                )
-            ).alias("shingle"),
-        )
-        .select(
-            "doc_id",
-            # xxhash64, not the md5-60bit idiom (r15): h is INTERNAL —
-            # the output carries only ids and set cardinalities, which
-            # are hash-invariant modulo a ~n²/2^65 collision (the
-            # l_repetition_stats argument; the oracle keeps md5 and the
-            # hash compare would catch a divergent collision). The md5
-            # string path cost ~2x the whole index build.
-            F.expr("xxhash64(shingle)").alias("h"),
-        )
-        .distinct()
-    )
+    post = _shingle_index(docs)
     cont_s = (
         post.groupBy("h")
         .agg(F.count(F.lit(1)).alias("c"))

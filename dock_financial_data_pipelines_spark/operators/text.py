@@ -18,6 +18,7 @@ from dock_financial_data_pipelines_spark.registry import query
 from dock_financial_data_pipelines_spark.session import (
     release_local_checkpoint,
 )
+from dock_financial_data_pipelines_spark.shingles import word_shingles
 
 def _tokens():
     return F.split(F.col("text"), " ")
@@ -571,23 +572,8 @@ def l_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collision inflating the audit count is ~n²/2^65 — negligible for
     # a contamination audit — and the oracle keeps the exact-string
     # form, so a collision at fixture scale would fail the hash compare.
-    # `ws` is projected once: Spark does not CSE `split(text,' ')`
-    # across lambda references — the inline form re-split the text once
-    # per shingle (O(n²) characters per doc).
     shingled = (
-        docs.select(
-            "doc_id", "split", F.split("text", " ").alias("ws")
-        )
-        .select(
-            "doc_id",
-            "split",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, greatest(size(ws) - {w - 1}, 1)),"
-                    f" i -> concat_ws(' ', slice(ws, i, {w})))"
-                )
-            ).alias("sh_raw"),
-        )
+        word_shingles(docs, w, "doc_id", "split", out="sh_raw")
         .select("doc_id", "split", F.xxhash64("sh_raw").alias("sh"))
         .localCheckpoint(eager=True)  # both join sides read this
     )
@@ -1454,18 +1440,8 @@ def l_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def l_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    grams = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("ws"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, greatest(size(ws) - 3, 0)),"
-                    " i -> concat_ws(' ', slice(ws, i + 1, 3)))"
-                )
-            ).alias("term"),
-        )
+    grams = word_shingles(
+        load(spark, sf_dir, "documents"), 3, "doc_id", out="term"
     )
     firsts = grams.groupBy("term").agg(F.min("doc_id").alias("first_doc"))
     n_docs = load(spark, sf_dir, "documents").agg(
@@ -2233,20 +2209,9 @@ def l_vocab_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def l_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = (
-        load(spark, sf_dir, "documents")
-        .select("source", F.split("text", " ").alias("ws"))
-        .select(
-            "source",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, greatest(size(ws) - 3, 0)),"
-                    " i -> concat_ws(' ', slice(ws, i + 1, 3)))"
-                )
-            ).alias("s"),
-        )
-        .distinct()
-    )
+    sh = word_shingles(
+        load(spark, sf_dir, "documents"), 3, "source", out="s"
+    ).distinct()
     vocab = sh.groupBy("source").agg(F.count(F.lit(1)).alias("v"))
     a = sh.select(F.col("source").alias("source_a"), "s")
     b = sh.select(F.col("source").alias("source_b"), "s")
@@ -2331,20 +2296,9 @@ def l_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def l_shingle_df_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("ws"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, greatest(size(ws) - 3, 0)),"
-                    " i -> concat_ws(' ', slice(ws, i + 1, 3)))"
-                )
-            ).alias("s"),
-        )
-        .distinct()
-    )
+    sh = word_shingles(
+        load(spark, sf_dir, "documents"), 3, "doc_id", out="s"
+    ).distinct()
     df = sh.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
     band = (
         F.when(F.col("d") == 1, "a_unique")

@@ -1459,6 +1459,15 @@ def main() -> int:
         and ("SortMergeJoin" in p or "ShuffledHashJoin" in p
              or "BroadcastHashJoin" in p),
     )
+    check(
+        "l_wrapper_pair_audit.size_band",
+        "size band 5*greatest(sz) > 7*least(sz) is in the pair join's "
+        "condition (prunes pairs before the aggregate)",
+        any(
+            "Join" in ln and "greatest(" in ln and "least(" in ln
+            for ln in p.splitlines()
+        ),
+    )
 
     p = plan_of(spark, "a57_kendall_tau", execute=True)
     check(

@@ -196,6 +196,28 @@ def test_empty_day_into_fresh_target_publishes_zero_rows(spark, sf_dir, tmp_path
     assert json.load(open(driver._marker(out, "2031-01-01")))["rows"] == 0
 
 
+def test_forced_empty_rerun_clears_the_day(spark, sf_dir, tmp_path, monkeypatch):
+    """Dynamic overwrite writes no partition for an empty frame, so the
+    driver itself removes the day's old rows; other days stay."""
+    out = str(tmp_path / "events_out")
+    kept = driver.run_job(spark, "daily_events", sf_dir, "2024-01-06", out)
+    first = driver.run_job(spark, "daily_events", sf_dir, "2024-01-05", out)
+    assert first.rows > 0 and kept.rows > 0
+    real = driver.JOBS["daily_events"]
+    monkeypatch.setitem(
+        driver.JOBS, "daily_events",
+        lambda spark_, sf, day: real(spark_, sf, day).limit(0),
+    )
+    res = driver.run_job(
+        spark, "daily_events", sf_dir, "2024-01-05", out, force=True
+    )
+    assert (res.attempts, res.rows) == (1, 0)
+    assert json.load(open(driver._marker(out, "2024-01-05")))["rows"] == 0
+    assert not os.path.exists(os.path.join(out, "report_date=2024-01-05"))
+    assert _spark_count(spark, out, "2024-01-05") == 0
+    assert _spark_count(spark, out, "2024-01-06") == kept.rows
+
+
 def _multi_file_events(monkeypatch):
     real = driver.JOBS["daily_events"]
     monkeypatch.setitem(

@@ -1,6 +1,7 @@
 """catalog.load's plan cache over directory tables: an unchanged table
 is served from the cache without a Spark job; a part file rewritten in
-place, with the directory's own mtime unchanged, is read afresh."""
+place, with the directory's own mtime unchanged, is read afresh and
+changes the table set's sf_tag."""
 
 from __future__ import annotations
 
@@ -67,3 +68,19 @@ def test_part_file_rewritten_in_place_is_read_afresh(spark, tmp_path):
     # one entry per (session, path): the rewrite replaced the old one
     path = os.path.join(str(tmp_path), "orders.parquet")
     assert sum(1 for k in catalog._LOAD_CACHE if k[1] == path) == 1
+
+
+def test_part_file_rewritten_in_place_changes_sf_tag(tmp_path):
+    """sf_tag keys memo_index's persisted indexes: it must see the same
+    rewrite the load cache sees, not just the directory's own stat."""
+    table = _split_table(str(tmp_path), "documents", 3)
+    tag = catalog.sf_tag(str(tmp_path))
+    assert catalog.sf_tag(str(tmp_path)) == tag
+
+    dir_stat = os.stat(table)
+    part = os.path.join(table, "part-00001.parquet")
+    pq.write_table(pq.read_table(part).slice(0, 2), part)
+    os.utime(table, ns=(dir_stat.st_atime_ns, dir_stat.st_mtime_ns))
+    assert os.stat(table).st_mtime_ns == dir_stat.st_mtime_ns
+
+    assert catalog.sf_tag(str(tmp_path)) != tag

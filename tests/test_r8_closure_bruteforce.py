@@ -242,13 +242,10 @@ def test_minhash_planner_matches_closed_form(spark):
         assert abs(row.p_catch_at_080 - p080) < 2e-6
 
 
-def test_wrapper_pair_audit_matches_set_arithmetic(spark):
-    """Containment/Jaccard over df-capped distinct 3-gram shingle hash
-    SETS recomputed with Python set arithmetic."""
-    got = _run(spark, "l_wrapper_pair_audit").set_index(["doc_a", "doc_b"])
-    docs = pd.read_parquet(
-        f"{SF}/documents.parquet", columns=["doc_id", "text"]
-    )
+def _wrapper_pairs(docs: pd.DataFrame) -> dict:
+    """(doc_a, doc_b) → (n_common, size_a, size_b, jaccard, containment)
+    of every pair passing the audit, from Python set arithmetic over
+    df-capped distinct 3-gram shingle hash sets."""
     sets = {}
     for _, d in docs.iterrows():
         ws = d["text"].split(" ")
@@ -288,6 +285,11 @@ def test_wrapper_pair_audit_matches_set_arithmetic(spark):
         jac = nc / (sa + sb - nc)
         if cont >= 0.8 and jac < 0.5:
             want[(a, b)] = (nc, sa, sb, jac, cont)
+    return want
+
+
+def _assert_wrapper_pairs(got: pd.DataFrame, want: dict) -> None:
+    got = got.set_index(["doc_a", "doc_b"])
     assert set(got.index) == set(want)
     for key, (nc, sa, sb, jac, cont) in want.items():
         row = got.loc[key]
@@ -295,6 +297,78 @@ def test_wrapper_pair_audit_matches_set_arithmetic(spark):
         assert row["size_b"] == sb
         assert abs(row["jaccard"] - jac) < 2e-6
         assert abs(row["containment"] - cont) < 2e-6
+
+
+def test_wrapper_pair_audit_matches_set_arithmetic(spark):
+    """Containment/Jaccard over df-capped distinct 3-gram shingle hash
+    SETS recomputed with Python set arithmetic."""
+    docs = pd.read_parquet(
+        f"{SF}/documents.parquet", columns=["doc_id", "text"]
+    )
+    _assert_wrapper_pairs(_run(spark, "l_wrapper_pair_audit"), _wrapper_pairs(docs))
+
+
+# (size of the smaller shingle set m, of the larger M, shared n): pairs
+# on each edge of the audit's predicates and of the size band 5·M > 7·m
+# they imply. True = the pair passes the audit.
+_BAND_EDGES = [
+    ((5, 8, 4), True),     # 5·n = 4·m; M = 7/5·m + 1, just inside the band
+    ((10, 15, 8), True),   # the same edges at twice the size
+    ((10, 18, 9), True),   # 3·n = m + M − 1: jaccard just below 0.5
+    ((5, 7, 4), False),    # 3·n = m + M (jaccard exactly 0.5), 5·M = 7·m
+    ((10, 14, 8), False),  # 5·n = 4·m and 3·n = m + M on the band's edge
+    ((5, 7, 5), False),    # 5·M = 7·m, containment 1: the band drops it
+    ((10, 17, 9), False),  # 3·n = m + M well inside the band
+    ((6, 8, 5), False),    # 5·M = 40 < 42 = 7·m: outside the band
+]
+
+
+def _band_edge_documents() -> pd.DataFrame:
+    """Two docs per edge, sharing nothing with any other edge: the
+    smaller holds m 3-shingles (m + 2 tokens), the larger starts with
+    n + 2 of them (n shared shingles) and adds its own tokens up to M."""
+    rows = []
+    for e, ((m, big, n), _) in enumerate(_BAND_EDGES):
+        small = [f"e{e}s{i}" for i in range(m + 2)]
+        large = small[: n + 2] + [f"e{e}l{i}" for i in range(big - n)]
+        for k, toks in enumerate((small, large)):
+            text = " ".join(toks)
+            rows.append((2 * e + k, text, "en", "src0", len(text)))
+    return pd.DataFrame(
+        rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
+    )
+
+
+def test_wrapper_pair_audit_keeps_size_band_edges(spark, tmp_path):
+    """The size band in the pair join drops no pair the audit keeps: on
+    pairs sitting exactly on each edge the operator, its DuckDB oracle
+    and Python set arithmetic agree, and the kept pairs are the ones
+    the edges predict."""
+    import duckdb
+
+    from dock_financial_data_pipelines_spark.registry import ORACLES
+
+    docs = _band_edge_documents()
+    docs.to_parquet(tmp_path / "documents.parquet", index=False)
+    want = _wrapper_pairs(docs)
+    assert sorted(want) == [
+        (2 * e, 2 * e + 1) for e, (_, ok) in enumerate(_BAND_EDGES) if ok
+    ]
+    for e, ((m, big, n), ok) in enumerate(_BAND_EDGES):
+        if ok:
+            assert want[(2 * e, 2 * e + 1)][:3] == (n, m, big)
+    got = engine.QUERIES["l_wrapper_pair_audit"](spark, str(tmp_path)).toPandas()
+    _assert_wrapper_pairs(got, want)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"'{tmp_path / 'documents.parquet'}'"
+    )
+    oracle = con.execute(ORACLES["l_wrapper_pair_audit"]).df()
+    assert oracle[["doc_a", "doc_b"]].values.tolist() == sorted(
+        [list(k) for k in want]
+    )
+    _assert_wrapper_pairs(oracle, want)
 
 
 def test_intercompany_elimination_matches_dict_rollup(spark):
