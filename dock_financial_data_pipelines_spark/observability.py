@@ -119,15 +119,24 @@ def plan_nodes(jplan, seen: set | None = None):
         yield from plan_nodes(kids.next(), seen)
 
 
-def _walk_plan_metrics(jplan, acc: dict, seen: set | None = None) -> None:
-    """Sum SQLMetric values over every node ``plan_nodes`` yields."""
+def _walk_plan_metrics(jplan, acc: dict, seen: set | None = None) -> bool:
+    """Sum SQLMetric values over every node ``plan_nodes`` yields.
+
+    Returns False when the plan holds an ``EmptyRelation``: once a stage
+    has run and come back empty, AQE swaps its subtree for that leaf,
+    and the metrics of the stage that ran leave the plan with it, so
+    the sums would read as a measured zero."""
+    complete = True
     for node in plan_nodes(jplan, seen):
+        if node.getClass().getSimpleName() == "EmptyRelationExec":
+            complete = False
         it = node.metrics().iterator()
         while it.hasNext():
             kv = it.next()
             key = kv._1()
             if key in _METRIC_KEYS:
                 acc[_METRIC_KEYS[key]] += max(0, kv._2().value())
+    return complete
 
 
 def codegen_compiles(spark: SparkSession) -> int | None:

@@ -20,7 +20,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -252,8 +252,6 @@ def pipeline_daily_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pipeline_sharded_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     docs = load(spark, sf_dir, "documents")
     sharded = docs.select(
         "doc_id",
@@ -282,14 +280,9 @@ def pipeline_sharded_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shard partition, not append (the REPORT:172 idempotence contract).
     write_partitioned(pass1, out, "shard")
     write_partitioned(pass1, out, "shard")
-    stage_schema = StructType(
-        [
-            StructField("dg", StringType()),
-            StructField("keep_id", LongType()),
-            StructField("shard", LongType()),
-        ]
+    survivors = read_parquet_or_empty(
+        spark, out, "dg string, keep_id long, shard long"
     )
-    survivors = read_parquet_or_empty(spark, out, stage_schema)
     pass2 = survivors.groupBy("dg").agg(F.min("keep_id").alias("keep_id"))
     direct = sharded.groupBy("dg").agg(F.min("doc_id").alias("keep_id"))
     mism = (
@@ -402,8 +395,6 @@ def _release_oracle() -> str:
 def pipeline_training_data_release(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql.types import LongType, StructField, StructType
-
     from dock_financial_data_pipelines_spark.operators.training import (
         _MODEL_B,
         _MODEL_STOPS,
@@ -487,14 +478,9 @@ def pipeline_training_data_release(
     write_partitioned(
         packed.repartition("shard").drop("text"), out, "shard"
     )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("tokens", LongType()),
-            StructField("shard", LongType()),
-        ]
+    back = read_parquet_or_empty(
+        spark, out, "doc_id long, tokens long, shard long"
     )
-    back = read_parquet_or_empty(spark, out, schema)
 
     funnel = flags.agg(
         F.count(F.lit(1)).cast("long").alias("n0"),
@@ -517,24 +503,16 @@ def pipeline_training_data_release(
     )
 
     release_local_checkpoint(flags)
-    head = local_frame(
+    head = _census_rows(
         spark,
         [
             (0, "raw", int(funnel["n0"]), int(funnel["t0"]), 0),
             (1, "model_gate", int(funnel["n1"]), int(funnel["t1"]), 0),
             (2, "exact_dedup", int(funnel["n2"]), int(funnel["t2"]), 0),
         ],
-        "stage_ord int, stage string, n_docs long, n_tokens long, "
-        "n_shards long",
+        _SNAP_DDL,
     )
-    back_row = back.agg(
-        F.lit(3).cast("int").alias("stage_ord"),
-        F.lit("packed_export").alias("stage"),
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.coalesce(F.sum("tokens"), F.lit(0)).cast("long").alias("n_tokens"),
-        F.countDistinct("shard").cast("long").alias("n_shards"),
-    ).select("stage_ord", "stage", "n_docs", "n_tokens", "n_shards")
-    return head.unionAll(back_row)
+    return head.unionAll(_snap_stat(back, 3, "packed_export"))
 
 
 # ---------------------------------------------------------------------------
@@ -647,8 +625,6 @@ def _incr_release_oracle() -> str:
 def pipeline_incremental_release(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from dock_financial_data_pipelines_spark.operators.training import (
         _MODEL_B,
         _MODEL_STOPS,
@@ -683,14 +659,6 @@ def pipeline_incremental_release(
         F.expr(f"(cum - tokens) div {_EXPORT_TOKEN_BUDGET}").cast("long"),
     ).drop("cum")
     write_partitioned(bpack.repartition("shard"), out, "shard")
-    rel_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("tokens", LongType()),
-            StructField("dg", StringType()),
-            StructField("shard", LongType()),
-        ]
-    )
     # The published artifact is the dedup reference AND the shard-offset
     # source — both come from the READ-BACK, not the plan that wrote it.
     # Eagerly SNAPSHOT it (localCheckpoint): (a) semantically, the
@@ -699,9 +667,9 @@ def pipeline_incremental_release(
     # combined table; (b) physically, two lazy scans of the same path
     # are canonically equal, and scan reuse would serve BOTH stage rows
     # from whichever file listing materialized first.
-    published = read_parquet_or_empty(spark, out, rel_schema).localCheckpoint(
-        eager=True
-    )
+    published = read_parquet_or_empty(
+        spark, out, _REL_SCHEMA_DDL
+    ).localCheckpoint(eager=True)
     offset = published.agg(
         (F.coalesce(F.max("shard"), F.lit(-1)) + 1).alias("offset")
     )
@@ -760,38 +728,24 @@ def pipeline_incremental_release(
     # Append: every incremental shard id is >= offset, so dynamic
     # overwrite cannot touch a base partition.
     write_partitioned(ipack.repartition("shard"), out, "shard")
-    combined = read_parquet_or_empty(spark, out, rel_schema)
-
-    def stat(df, ord_, name, with_shards=False):
-        return df.agg(
-            F.lit(ord_).cast("int").alias("stage_ord"),
-            F.lit(name).alias("stage"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.coalesce(F.sum("tokens"), F.lit(0))
-            .cast("long")
-            .alias("n_tokens"),
-            (
-                F.countDistinct("shard") if with_shards else F.lit(0)
-            ).cast("long").alias("n_shards"),
-        ).select("stage_ord", "stage", "n_docs", "n_tokens", "n_shards")
-
+    combined = read_parquet_or_empty(spark, out, _REL_SCHEMA_DDL)
     return (
-        stat(published, 0, "base_release", with_shards=True)
-        .unionAll(stat(newb, 1, "new_batch_raw"))
-        .unionAll(stat(gate, 2, "model_gate"))
-        .unionAll(stat(nodup, 3, "vs_release_dedup"))
-        .unionAll(stat(bdedup, 4, "batch_exact_dedup"))
-        .unionAll(stat(combined, 5, "combined_release", with_shards=True))
+        _snap_stat(published, 0, "base_release")
+        .unionAll(_snap_stat(newb, 1, "new_batch_raw", n_shards=0))
+        .unionAll(_snap_stat(gate, 2, "model_gate", n_shards=0))
+        .unionAll(_snap_stat(nodup, 3, "vs_release_dedup", n_shards=0))
+        .unionAll(_snap_stat(bdedup, 4, "batch_exact_dedup", n_shards=0))
+        .unionAll(_snap_stat(combined, 5, "combined_release"))
     )
 
 
 # ---------------------------------------------------------------------------
 # Atomic publish protocol (transactional-table-lite): a release is
-# visible ONLY through a committed manifest. Data shards for version N
-# land under <root>/data/v=N/, the manifest (per-shard row counts,
-# token sums and bit_xor content digests, built from the READ-BACK of
-# the staged files, never from the writing plan) lands under
-# <root>/manifest/v=N/, and the commit is a single atomic os.replace
+# visible ONLY through a committed manifest. Version N's data shards
+# and its manifest (per-shard row counts, token sums and bit_xor
+# content digests, built from the READ-BACK of the staged files, never
+# from the writing plan) land in N's own directories (_version_dir
+# lays the table out), and the commit is a single atomic os.replace
 # of the CURRENT pointer file. A writer killed after staging shards
 # but before the pointer swap leaves orphan files that NO reader ever
 # sees — the crash-consistency guarantee the reference approximates
@@ -833,48 +787,125 @@ def _pack_half(docs: DataFrame, parity: int, offset=None) -> DataFrame:
     return packed
 
 
+def _version_dir(root: str, version: int, kind: str = "data") -> str:
+    """The directory of one version of a snapshot table. The layout
+    under ``root``, spelled here and nowhere else:
+
+    - ``data/v=N/`` — version N's data files, immutable once N is in
+      the commit log;
+    - ``manifest/v=N/`` — its shard manifest (``_MANIFEST_DDL``, under
+      ``part=`` dirs), or the per-shard stats of the pruning tables;
+    - ``dv/v=N/`` — a merge-on-read delete-key file (``_DV_DDL``);
+    - ``layout/vN.layout`` — the data versions and DV chain N reads;
+    - ``log/vN.commit`` plus checkpoints — the append-only commit log;
+    - ``CURRENT`` and the other ref files, registered under ``refs/``,
+      and the immutable ``tags/`` — the pointers a reader resolves.
+
+    ``kind`` is ``"data"``, ``"manifest"`` or ``"dv"``."""
+    return os.path.join(root, kind, f"v={version}")
+
+
 _REL_SCHEMA_DDL = "doc_id long, tokens long, dg string, shard long"
 _MANIFEST_DDL = "shard long, n_docs long, n_tokens long, digest long"
 
 
-def _rel_schema():
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+def _pa_fields(ddl: str) -> list:
+    """The pyarrow fields of a flat ``name type, ...`` DDL string of
+    long, int and string columns, for committer-side writes."""
+    import pyarrow as pa
+
+    types = {"long": pa.int64(), "int": pa.int32(), "string": pa.string()}
+    return [
+        pa.field(name, types[t])
+        for name, t in (col.split() for col in ddl.split(","))
+    ]
+
+
+# ---------------------------------------------------------------------------
+# Census rows: each protocol query reports one row per stage — the
+# engine's form of the reference DAG's per-stage structured log
+# (REPORT:34, :69, :106) — keyed by ``stage_ord int, stage string`` and
+# followed by the query's named measures.
+# ---------------------------------------------------------------------------
+_SNAP_DDL = "n_docs long, n_tokens long, n_shards long"
+
+
+def _census(df: DataFrame, ord_: int, stage: str, **measures) -> DataFrame:
+    """One-row aggregate of ``df``: ``stage_ord``, ``stage``, then the
+    ``measures`` in keyword order. A measure is an aggregate Column,
+    kept at its own type, or an int literal, a long; None leaves the
+    measure out."""
+    return df.agg(
+        F.lit(ord_).cast("int").alias("stage_ord"),
+        F.lit(stage).alias("stage"),
+        *(
+            (m if isinstance(m, Column) else F.lit(m).cast("long")).alias(n)
+            for n, m in measures.items()
+            if m is not None
+        ),
     )
 
-    return StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("tokens", LongType()),
-            StructField("dg", StringType()),
-            StructField("shard", LongType()),
-        ]
+
+def _census_rows(
+    spark: SparkSession, rows: list, measures_ddl: str
+) -> DataFrame:
+    """Constant census rows ``(stage_ord, stage, *measures)``, the
+    measures typed by ``measures_ddl``. local_frame, not
+    createDataFrame: census rows are evaluated at every run of every
+    protocol query, and the Python-local-relation path pays a Python
+    worker task per evaluation (catalog.local_frame)."""
+    return local_frame(
+        spark, rows, f"stage_ord int, stage string, {measures_ddl}"
     )
 
 
-def _manifest_schema():
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    return StructType(
-        [
-            StructField("shard", LongType()),
-            StructField("n_docs", LongType()),
-            StructField("n_tokens", LongType()),
-            StructField("digest", LongType()),
-        ]
+def _value_census(spark: SparkSession, rows: list) -> DataFrame:
+    """``(stage_ord, stage, value)`` rows of protocol constants."""
+    return _census_rows(
+        spark, [(o, s, int(v)) for o, s, v in rows], "value long"
     )
+
+
+def _snap_stat(
+    df: DataFrame, ord_: int, name: str, digest=False, **measures
+) -> DataFrame:
+    """The snapshot census of a table read: n_docs, n_tokens (0 when
+    every token count is NULL), n_shards and, with ``digest=True``, the
+    xor of the row digests; any other ``digest`` than a bool is the
+    digest measure itself. ``measures`` replace a preset measure by
+    name (None drops it) or append a new one."""
+    snap = {
+        "n_docs": F.count(F.lit(1)),
+        "n_tokens": F.coalesce(F.sum("tokens"), F.lit(0)),
+        "n_shards": F.countDistinct("shard"),
+    }
+    if digest is True:
+        digest = _xor_digest()
+    if digest is not False:
+        snap["digest"] = digest
+    return _census(df, ord_, name, **{**snap, **measures})
+
+
+def _snap_const_row(
+    spark: SparkSession, ord_: int, name: str, n_docs: int, n_shards: int
+) -> DataFrame:
+    """A constant snapshot census row with n_tokens 0."""
+    return _census_rows(spark, [(ord_, name, n_docs, 0, n_shards)], _SNAP_DDL)
+
+
+def _xor_digest() -> Column:
+    """xor of the row digests, 0 over no digestible row: the content
+    digest of a manifest shard or of a census read."""
+    return F.coalesce(
+        F.expr(f"bit_xor({_row_digest('spark')})"), F.lit(0)
+    ).cast("long")
 
 
 def _shard_manifest(data: DataFrame) -> DataFrame:
     return data.groupBy("shard").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.coalesce(F.sum("tokens"), F.lit(0)).cast("long").alias("n_tokens"),
-        F.coalesce(F.expr(f"bit_xor({_row_digest('spark')})"), F.lit(0))
-        .cast("long")
-        .alias("digest"),
+        _xor_digest().alias("digest"),
     )
 
 
@@ -1008,17 +1039,6 @@ def _local_shard_manifest(data_dir: str):
     return rows
 
 
-def _manifest_pa_fields():
-    import pyarrow as pa
-
-    return [
-        pa.field("shard", pa.int64()),
-        pa.field("n_docs", pa.int64()),
-        pa.field("n_tokens", pa.int64()),
-        pa.field("digest", pa.int64()),
-    ]
-
-
 def _pe_local_manifest(data_dir: str):
     """Committer-side per-directory stats for the partition-evolution
     manifests (hive layout: the partition value lives in the p=… dir
@@ -1066,8 +1086,7 @@ def _publish_version(
     _stage_version(spark, df, root, version)
     _commit_pointer(root, version)
     return read_parquet_or_empty(
-        spark, os.path.join(root, "manifest", f"v={version}"),
-        _manifest_schema(),
+        spark, _version_dir(root, version, "manifest"), _MANIFEST_DDL
     ).drop("part")
 
 
@@ -1108,9 +1127,7 @@ def _read_visible(
     version = _resolve_current(root, ref)
     if version is None:
         return spark.createDataFrame([], _REL_SCHEMA_DDL)
-    return read_parquet_or_empty(
-        spark, os.path.join(root, "data", f"v={version}"), _rel_schema()
-    )
+    return _read_version(spark, root, version)
 
 
 def _atomic_oracle() -> str:
@@ -1173,24 +1190,19 @@ def pipeline_atomic_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # v2 attempt: pack the odd half above v1's shard range, stage ONLY
     # the first shard, then crash before commit (no manifest, no swap).
-    v1_data = read_parquet_or_empty(
-        spark, os.path.join(root, "data", "v=1"), _rel_schema()
-    )
-    offset = v1_data.agg(
+    offset = _read_version(spark, root, 1).agg(
         (F.coalesce(F.max("shard"), F.lit(-1)) + 1).alias("offset")
     )
     v2 = _pack_half(docs, 1, offset=offset)
     v2_first = v2.join(F.broadcast(offset), v2["shard"] == F.col("offset"))
     write_partitioned(
         v2_first.drop("offset").repartition("shard"),
-        os.path.join(root, "data", "v=2"),
+        _version_dir(root, 2),
         "shard",
     )
     # -- crash here: no manifest/v=2, CURRENT still points at 1 --
 
-    staged_v2 = read_parquet_or_empty(
-        spark, os.path.join(root, "data", "v=2"), _rel_schema()
-    )
+    staged_v2 = _read_version(spark, root, 2)
     visible = _read_visible(spark, root)
     recount = _shard_manifest(visible)
     audit = manifest.alias("m").join(
@@ -1203,44 +1215,22 @@ def pipeline_atomic_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         | (F.col("m.n_tokens") != F.col("d.n_tokens"))
         | (F.col("m.digest") != F.col("d.digest"))
     )
-
-    def stat(df, ord_, name):
-        return df.agg(
-            F.lit(ord_).cast("int").alias("stage_ord"),
-            F.lit(name).alias("stage"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.coalesce(F.sum("tokens"), F.lit(0))
-            .cast("long")
-            .alias("n_tokens"),
-            F.countDistinct("shard").cast("long").alias("n_shards"),
-        ).select("stage_ord", "stage", "n_docs", "n_tokens", "n_shards")
-
-    audit_row = audit.agg(
-        F.lit(3).cast("int").alias("stage_ord"),
-        F.lit("manifest_audit").alias("stage"),
-        F.coalesce(F.sum(mismatch.cast("long")), F.lit(0))
-        .cast("long")
-        .alias("n_docs"),
-        F.lit(0).cast("long").alias("n_tokens"),
-        F.countDistinct("shard").cast("long").alias("n_shards"),
-    ).select("stage_ord", "stage", "n_docs", "n_tokens", "n_shards")
-
+    audit_row = _snap_stat(
+        audit, 3, "manifest_audit",
+        n_docs=F.coalesce(F.sum(mismatch.cast("long")), F.lit(0)),
+        n_tokens=0,
+    )
     # Manifest rows are shard-grain: stage 0 sums the manifest's own
     # columns (the numbers a reader would trust WITHOUT scanning data).
-    manifest_row = manifest.agg(
-        F.lit(0).cast("int").alias("stage_ord"),
-        F.lit("v1_manifest").alias("stage"),
-        F.coalesce(F.sum("n_docs"), F.lit(0)).cast("long").alias("n_docs"),
-        F.coalesce(F.sum("n_tokens"), F.lit(0))
-        .cast("long")
-        .alias("n_tokens"),
-        F.countDistinct("shard").cast("long").alias("n_shards"),
-    ).select("stage_ord", "stage", "n_docs", "n_tokens", "n_shards")
-
+    manifest_row = _snap_stat(
+        manifest, 0, "v1_manifest",
+        n_docs=F.coalesce(F.sum("n_docs"), F.lit(0)),
+        n_tokens=F.coalesce(F.sum("n_tokens"), F.lit(0)),
+    )
     return (
         manifest_row
-        .unionAll(stat(staged_v2, 1, "v2_staged_partial"))
-        .unionAll(stat(visible, 2, "visible_after_crash"))
+        .unionAll(_snap_stat(staged_v2, 1, "v2_staged_partial"))
+        .unionAll(_snap_stat(visible, 2, "visible_after_crash"))
         .unionAll(audit_row)
     )
 
@@ -1413,37 +1403,16 @@ def pipeline_release_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     retained = sum(
         1
         for v in (1, 2)
-        if os.path.isdir(os.path.join(root, "manifest", f"v={v}"))
-    )
-
-    def stat(df, ord_, name):
-        return df.agg(
-            F.lit(ord_).cast("int").alias("stage_ord"),
-            F.lit(name).alias("stage"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.coalesce(F.sum("tokens"), F.lit(0))
-            .cast("long")
-            .alias("n_tokens"),
-            F.countDistinct("shard").cast("long").alias("n_shards"),
-        ).select("stage_ord", "stage", "n_docs", "n_tokens", "n_shards")
-
-    v1_data = read_parquet_or_empty(
-        spark, os.path.join(root, "data", "v=1"), _rel_schema()
-    )
-    v2_data = read_parquet_or_empty(
-        spark, os.path.join(root, "data", "v=2"), _rel_schema()
-    )
-    retained_row = local_frame(spark, 
-        [(4, "retained_versions", retained, 0, 0)],
-        "stage_ord int, stage string, n_docs long, n_tokens long, "
-        "n_shards long",
+        if os.path.isdir(_version_dir(root, v, "manifest"))
     )
     return (
-        stat(v1_data, 0, "v1_published")
-        .unionAll(stat(v2_data, 1, "v2_published"))
-        .unionAll(stat(before, 2, "visible_before_rollback"))
-        .unionAll(stat(after, 3, "visible_after_rollback"))
-        .unionAll(retained_row)
+        _snap_stat(_read_version(spark, root, 1), 0, "v1_published")
+        .unionAll(_snap_stat(_read_version(spark, root, 2), 1, "v2_published"))
+        .unionAll(_snap_stat(before, 2, "visible_before_rollback"))
+        .unionAll(_snap_stat(after, 3, "visible_after_rollback"))
+        .unionAll(
+            _snap_const_row(spark, 4, "retained_versions", retained, 0)
+        )
     )
 
 
@@ -1806,8 +1775,8 @@ def _stage_version(
             f"version {version} is committed and immutable; "
             "re-read the current version and stage a fresh number"
         )
-    data_dir = os.path.join(root, "data", f"v={version}")
-    man_dir = os.path.join(root, "manifest", f"v={version}")
+    data_dir = _version_dir(root, version)
+    man_dir = _version_dir(root, version, "manifest")
     shutil.rmtree(data_dir, ignore_errors=True)
     shutil.rmtree(man_dir, ignore_errors=True)
     if layout == "flat":
@@ -1836,7 +1805,7 @@ def _stage_version(
         writer.parquet(data_dir)
     else:
         write_partitioned(df.repartition("shard"), data_dir, "shard")
-    staged = read_parquet_or_empty(spark, data_dir, _rel_schema())
+    staged = _read_version(spark, root, version)
     # The manifest is shard-count-sized metadata computed from a
     # read-back of the staged files (the protocol's honesty proof,
     # unchanged). r14 moved the manifest WRITE driver-side; r15 folds
@@ -1854,7 +1823,7 @@ def _stage_version(
         )
 
         write_rows_pyarrow(
-            local_rows, _manifest_pa_fields(), man_dir, "part"
+            local_rows, _pa_fields(_MANIFEST_DDL), man_dir, "part"
         )
     else:  # pragma: no cover - scale fallback
         write_metadata_parquet(
@@ -1872,7 +1841,7 @@ def _read_version(spark: SparkSession, root: str, version: int) -> DataFrame:
     just CURRENT — the data and manifest of a committed version are
     immutable once the log entry exists."""
     return read_parquet_or_empty(
-        spark, os.path.join(root, "data", f"v={version}"), _rel_schema()
+        spark, _version_dir(root, version), _REL_SCHEMA_DDL
     )
 
 
@@ -1891,11 +1860,19 @@ def _snap_pack_sql(cond: str, budget: int = None) -> str:
               FROM documents WHERE {cond})"""
 
 
-def _snap_stat_sql(ord_: int, stage: str, src: str) -> str:
+def _snap_stat_sql(ord_: int, stage: str, src: str, digest=False) -> str:
+    """DuckDB twin of ``_snap_stat``."""
+    dig = (
+        f""",
+           CAST(coalesce(bit_xor({_row_digest('duckdb')}), 0) AS BIGINT)
+               AS digest"""
+        if digest
+        else ""
+    )
     return f"""SELECT {ord_} AS stage_ord, '{stage}' AS stage,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(coalesce(sum(tokens), 0) AS BIGINT) AS n_tokens,
-           CAST(count(DISTINCT shard) AS BIGINT) AS n_shards
+           CAST(count(DISTINCT shard) AS BIGINT) AS n_shards{dig}
     FROM {src}"""
 
 
@@ -1911,41 +1888,6 @@ def _timetravel_oracle() -> str:
     UNION ALL SELECT 4, 'snapshot_log', CAST(3 AS BIGINT),
            CAST(0 AS BIGINT), CAST(3 AS BIGINT)
     """
-
-
-def _snap_stat(
-    df: DataFrame, ord_: int, name: str, digest: bool = False
-) -> DataFrame:
-    cols = [
-        F.lit(ord_).cast("int").alias("stage_ord"),
-        F.lit(name).alias("stage"),
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.coalesce(F.sum("tokens"), F.lit(0)).cast("long").alias("n_tokens"),
-        F.countDistinct("shard").cast("long").alias("n_shards"),
-    ]
-    names = ["stage_ord", "stage", "n_docs", "n_tokens", "n_shards"]
-    if digest:
-        cols.append(
-            F.coalesce(F.expr(f"bit_xor({_row_digest('spark')})"), F.lit(0))
-            .cast("long")
-            .alias("digest")
-        )
-        names.append("digest")
-    return df.agg(*cols).select(*names)
-
-
-def _snap_const_row(
-    spark: SparkSession, ord_: int, name: str, n_docs: int, n_shards: int
-) -> DataFrame:
-    # local_frame, not createDataFrame: census rows are evaluated at
-    # every run of every protocol query, and the Python-local-relation
-    # path pays a Python worker task per evaluation (catalog.local_frame).
-    return local_frame(
-        spark,
-        [(ord_, name, n_docs, 0, n_shards)],
-        "stage_ord int, stage string, n_docs long, n_tokens long, "
-        "n_shards long",
-    )
 
 
 @query("pipeline_snapshot_timetravel", oracle=_timetravel_oracle())
@@ -2088,22 +2030,14 @@ def _compact_oracle() -> str:
         _EXPORT_TOKEN_BUDGET,
     )
 
-    def stat(ord_, stage, src):
-        return f"""SELECT {ord_} AS stage_ord, '{stage}' AS stage,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(coalesce(sum(tokens), 0) AS BIGINT) AS n_tokens,
-           CAST(count(DISTINCT shard) AS BIGINT) AS n_shards,
-           CAST(coalesce(bit_xor({_row_digest('duckdb')}), 0) AS BIGINT) AS digest
-    FROM {src}"""
-
     return f"""
     WITH small AS ({_snap_pack_sql('doc_id % 2 = 0',
                                    _COMPACT_SMALL_BUDGET)}),
     big AS ({_snap_pack_sql('doc_id % 2 = 0', _EXPORT_TOKEN_BUDGET)})
-    {stat(0, 'v1_small_shards', 'small')}
-    UNION ALL {stat(1, 'v2_compacted', 'big')}
-    UNION ALL {stat(2, 'timetravel_v1', 'small')}
-    UNION ALL {stat(3, 'current', 'big')}
+    {_snap_stat_sql(0, 'v1_small_shards', 'small', digest=True)}
+    UNION ALL {_snap_stat_sql(1, 'v2_compacted', 'big', digest=True)}
+    UNION ALL {_snap_stat_sql(2, 'timetravel_v1', 'small', digest=True)}
+    UNION ALL {_snap_stat_sql(3, 'current', 'big', digest=True)}
     """
 
 
@@ -2173,7 +2107,7 @@ def pipeline_compact_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             int(r["n_shards"]), int(r["digest"]),
         )
 
-    return local_frame(
+    return _census_rows(
         spark,
         [
             row(v1, 0, "v1_small_shards"),
@@ -2181,8 +2115,7 @@ def pipeline_compact_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             row(v1, 2, "timetravel_v1"),
             row(cur, 3, "current"),
         ],
-        "stage_ord int, stage string, n_docs long, n_tokens long, "
-        "n_shards long, digest long",
+        f"{_SNAP_DDL}, digest long",
     )
 
 
@@ -2217,14 +2150,10 @@ def _expire_snapshot(root: str, version: int) -> bool:
     with open(tomb + ".tmp", "w") as fh:
         fh.write(str(version))
     os.replace(tomb + ".tmp", tomb)
-    shutil.rmtree(os.path.join(root, "data", f"v={version}"),
-                  ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "manifest", f"v={version}"),
-                  ignore_errors=True)
     # The guard above proved no live layout references this version's
     # DV either, so its delete-vector bytes are reclaimable too.
-    shutil.rmtree(os.path.join(root, "dv", f"v={version}"),
-                  ignore_errors=True)
+    for kind in ("data", "manifest", "dv"):
+        shutil.rmtree(_version_dir(root, version, kind), ignore_errors=True)
     return True
 
 
@@ -2594,10 +2523,10 @@ def pipeline_manifest_pruned_read(
     docs = load(spark, sf_dir, "documents")
     root = _release_root(sf_dir, "manifest_pruned")
     packed = _pack_where(docs, "doc_id % 2 = 0", _COMPACT_SMALL_BUDGET)
-    data_dir = os.path.join(root, "data", "v=1")
-    man_dir = os.path.join(root, "manifest", "v=1")
+    data_dir = _version_dir(root, 1)
+    man_dir = _version_dir(root, 1, "manifest")
     write_partitioned(packed.repartition("shard"), data_dir, "shard")
-    staged = read_parquet_or_empty(spark, data_dir, _rel_schema())
+    staged = _read_version(spark, root, 1)
     write_metadata_parquet(_shard_manifest_stats(staged), man_dir)
     assert _commit_cas(root, None, 1)
 
@@ -2610,12 +2539,11 @@ def pipeline_manifest_pruned_read(
             (F.col("max_doc") >= _PRUNE_LO) & (F.col("min_doc") <= _PRUNE_HI)
         ).collect()
     ]
-    census = _snap_const_row(
-        spark, 0, "manifest_census", total, 0
-    ).withColumn("n_tokens", F.lit(len(hit)).cast("long"))
-
+    census = _census_rows(
+        spark, [(0, "manifest_census", total, len(hit), 0)], _SNAP_DDL
+    )
     if hit:
-        pruned = spark.read.schema(_rel_schema()).option(
+        pruned = spark.read.schema(_REL_SCHEMA_DDL).option(
             "basePath", data_dir
         ).parquet(
             *[os.path.join(data_dir, f"shard={s}") for s in sorted(hit)]
@@ -2627,8 +2555,7 @@ def pipeline_manifest_pruned_read(
     )
     full = staged.where(F.col("doc_id").between(_PRUNE_LO, _PRUNE_HI))
     return (
-        census.select("stage_ord", "stage", "n_docs", "n_tokens", "n_shards")
-        .unionAll(_snap_stat(pruned, 1, "pruned_read"))
+        census.unionAll(_snap_stat(pruned, 1, "pruned_read"))
         .unionAll(_snap_stat(full, 2, "full_scan_twin"))
     )
 
@@ -2685,36 +2612,34 @@ def pipeline_snapshot_schema_evolution(
     v2 = _pack_where(docs, "doc_id % 2 = 1").join(
         docs.select("doc_id", "lang"), "doc_id"
     )
-    data_dir = os.path.join(root, "data", "v=2")
+    data_dir = _version_dir(root, 2)
     write_partitioned(v2.repartition("shard"), data_dir, "shard")
     assert _commit_cas(root, 1, 2)
 
-    evolved = _rel_schema().add("lang", "string")
-    v1_orig = _read_version(spark, root, 1)
-    v1_evo = read_parquet_or_empty(
-        spark, os.path.join(root, "data", "v=1"), evolved
-    )
+    evolved = f"{_REL_SCHEMA_DDL}, lang string"
+    v1_evo = read_parquet_or_empty(spark, _version_dir(root, 1), evolved)
     v2_evo = read_parquet_or_empty(spark, data_dir, evolved)
-
-    def stat(df, ord_, name):
-        return df.agg(
-            F.lit(ord_).cast("int").alias("stage_ord"),
-            F.lit(name).alias("stage"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.lit(len(df.columns)).cast("long").alias("n_cols"),
-            (
-                F.coalesce(F.count("lang"), F.lit(0)).cast("long")
+    out = None
+    for ord_, (name, df) in enumerate(
+        [
+            ("asof_v1_original", _read_version(spark, root, 1)),
+            ("asof_v1_evolved_reader", v1_evo),
+            ("current_v2", v2_evo),
+            ("union_all_versions", v1_evo.unionAll(v2_evo)),
+        ]
+    ):
+        row = _census(
+            df, ord_, name,
+            n_docs=F.count(F.lit(1)),
+            n_cols=len(df.columns),
+            n_lang=(
+                F.coalesce(F.count("lang"), F.lit(0))
                 if "lang" in df.columns
-                else F.lit(0).cast("long")
-            ).alias("n_lang"),
-        ).select("stage_ord", "stage", "n_docs", "n_cols", "n_lang")
-
-    return (
-        stat(v1_orig, 0, "asof_v1_original")
-        .unionAll(stat(v1_evo, 1, "asof_v1_evolved_reader"))
-        .unionAll(stat(v2_evo, 2, "current_v2"))
-        .unionAll(stat(v1_evo.unionAll(v2_evo), 3, "union_all_versions"))
-    )
+                else 0
+            ),
+        )
+        out = row if out is None else out.unionAll(row)
+    return out
 
 
 def _merge_oracle() -> str:
@@ -2843,41 +2768,27 @@ def pipeline_snapshot_merge_upsert(
         .otherwise("update")
         .alias("op")
     )
-
-    def n_of(op, ord_, name):
-        return cls.where(F.col("op") == op).agg(
-            F.lit(ord_).cast("int").alias("stage_ord"),
-            F.lit(name).alias("stage"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.lit(0).cast("long").alias("n_tokens"),
-        ).select("stage_ord", "stage", "n_docs", "n_tokens")
-
-    def tok_stat(df, ord_, name):
-        return df.agg(
-            F.lit(ord_).cast("int").alias("stage_ord"),
-            F.lit(name).alias("stage"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.coalesce(F.sum("tokens"), F.lit(0))
-            .cast("long")
-            .alias("n_tokens"),
-        ).select("stage_ord", "stage", "n_docs", "n_tokens")
-
     v2 = _read_visible(spark, root)
     deleted_ids = chg.where(F.col("op") == "delete").select("doc_id")
     still = v2.join(deleted_ids, "doc_id", "left_semi")
-    return (
-        tok_stat(_read_version(spark, root, 1), 0, "base_v1")
-        .unionAll(n_of("insert", 1, "inserts"))
-        .unionAll(n_of("update", 2, "updates"))
-        .unionAll(n_of("delete", 3, "deletes"))
-        .unionAll(tok_stat(v2, 4, "merged_v2"))
-        .unionAll(
-            still.agg(
-                F.lit(5).cast("int").alias("stage_ord"),
-                F.lit("deleted_still_present").alias("stage"),
-                F.count(F.lit(1)).cast("long").alias("n_docs"),
-                F.lit(0).cast("long").alias("n_tokens"),
-            ).select("stage_ord", "stage", "n_docs", "n_tokens")
+    out = _snap_stat(
+        _read_version(spark, root, 1), 0, "base_v1", n_shards=None
+    )
+    for ord_, (op, name) in enumerate(
+        [("insert", "inserts"), ("update", "updates"), ("delete", "deletes")],
+        start=1,
+    ):
+        out = out.unionAll(
+            _snap_stat(
+                cls.where(F.col("op") == op), ord_, name,
+                n_tokens=0, n_shards=None,
+            )
+        )
+    return out.unionAll(
+        _snap_stat(v2, 4, "merged_v2", n_shards=None)
+    ).unionAll(
+        _snap_stat(
+            still, 5, "deleted_still_present", n_tokens=0, n_shards=None
         )
     )
 
@@ -2905,25 +2816,28 @@ def _advance_consumer(root: str, name: str, version: int) -> None:
 
 
 def _version_delta(
-    spark: SparkSession, root: str, v_from, v_to: int
+    spark: SparkSession, root: str, v_from, v_to: int,
+    ord_: int = 0, stage: str = "delta",
 ) -> DataFrame:
-    """(n_ins, n_del, n_upd) between two committed versions — the same
-    digest-carrying full-outer join as pipeline_snapshot_changes, at
-    count grain. v_from=None means the empty pre-table."""
+    """The census row (n_ins, n_del, n_upd) between two committed
+    versions — the same digest-carrying full-outer join as
+    pipeline_snapshot_changes, at count grain. v_from=None means the
+    empty pre-table."""
     if v_from is None:
         a = spark.createDataFrame([], _REL_SCHEMA_DDL).alias("a")
     else:
         a = _read_version(spark, root, v_from).alias("a")
     b = _read_version(spark, root, v_to).alias("b")
     j = a.join(b, F.col("a.doc_id") == F.col("b.doc_id"), "full_outer")
-    return j.agg(
-        F.coalesce(
+    return _census(
+        j, ord_, stage,
+        n_ins=F.coalesce(
             F.sum(F.col("a.doc_id").isNull().cast("long")), F.lit(0)
-        ).cast("long").alias("n_ins"),
-        F.coalesce(
+        ),
+        n_del=F.coalesce(
             F.sum(F.col("b.doc_id").isNull().cast("long")), F.lit(0)
-        ).cast("long").alias("n_del"),
-        F.coalesce(
+        ),
+        n_upd=F.coalesce(
             F.sum(
                 (
                     F.col("a.doc_id").isNotNull()
@@ -2932,7 +2846,7 @@ def _version_delta(
                 ).cast("long")
             ),
             F.lit(0),
-        ).cast("long").alias("n_upd"),
+        ),
     )
 
 
@@ -3014,45 +2928,41 @@ def pipeline_log_tail_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     _stage_version(spark, _pack_where(docs2, "true"), root, 2)
     assert _commit_cas(root, 1, 2)
 
-    def consume(tag_start: int):
+    def consume(tag_start: int, call: str):
         off = _consumer_offset(root, "A")
         new = [v for v in _committed_versions(root) if v > off]
         rows = []
         prev = off if off > 0 else None
         for i, v in enumerate(new):
-            d = _version_delta(spark, root, prev, v).select(
-                F.lit(tag_start + i).cast("int").alias("stage_ord"),
-                F.lit(f"c?_v{v}").alias("stage"),
-                "n_ins",
-                "n_del",
-                "n_upd",
+            rows.append(
+                _version_delta(
+                    spark, root, prev, v, tag_start + i, f"{call}_v{v}"
+                )
             )
-            rows.append((v, d))
             prev = v
         if new:
             _advance_consumer(root, "A", new[-1])
         return rows
 
-    batch1 = consume(1)  # v1, v2
+    batch1 = consume(1, "c1")  # v1, v2
     _stage_version(spark, _pack_where(docs, "doc_id % 2 = 1"), root, 3)
     assert _commit_cas(root, 2, 3)
-    batch2 = consume(3)  # v3 only
-    batch3 = consume(99)  # nothing new
+    batch2 = consume(3, "c2")  # v3 only
+    batch3 = consume(99, "c3")  # nothing new
 
     out = None
-    for call, rows in (("c1", batch1), ("c2", batch2)):
-        for v, d in rows:
-            d = d.withColumn("stage", F.lit(f"{call}_v{v}"))
-            out = d if out is None else out.unionAll(d)
-    empty_row = local_frame(spark, 
-        [(4, "c3_nothing_new", len(batch3), 0, 0)],
-        "stage_ord int, stage string, n_ins long, n_del long, n_upd long",
+    for d in batch1 + batch2:
+        out = d if out is None else out.unionAll(d)
+    delta_ddl = "n_ins long, n_del long, n_upd long"
+    return out.unionAll(
+        _census_rows(spark, [(4, "c3_nothing_new", len(batch3), 0, 0)],
+                     delta_ddl)
+    ).unionAll(
+        _census_rows(
+            spark, [(5, "final_offset", _consumer_offset(root, "A"), 0, 0)],
+            delta_ddl,
+        )
     )
-    offset_row = local_frame(spark, 
-        [(5, "final_offset", _consumer_offset(root, "A"), 0, 0)],
-        "stage_ord int, stage string, n_ins long, n_del long, n_upd long",
-    )
-    return out.unionAll(empty_row).unionAll(offset_row)
 
 
 def _gc_orphans(root: str) -> list:
@@ -3268,7 +3178,7 @@ def _stage_dv(
             f"version {version} is committed and immutable; "
             "re-read the current version and stage a fresh number"
         )
-    dv_dir = os.path.join(root, "dv", f"v={version}")
+    dv_dir = _version_dir(root, version, "dv")
     shutil.rmtree(dv_dir, ignore_errors=True)
     deletes.select(F.col("doc_id").cast("long")).write.mode(
         "overwrite"
@@ -3313,7 +3223,7 @@ def _read_mor(
         keys = None
         for v in versions:
             k = read_parquet_or_empty(
-                spark, os.path.join(root, "dv", f"v={v}"), _DV_DDL
+                spark, _version_dir(root, v, "dv"), _DV_DDL
             )
             keys = k if keys is None else keys.unionAll(k)
         return keys.distinct() if keys is not None else None
@@ -3426,10 +3336,10 @@ def pipeline_snapshot_delete_vectors(
         for n in os.listdir(os.path.join(root, "data"))
         if n.startswith("v=")
     ]
-    fs_row = local_frame(spark, 
+    fs_row = _census_rows(
+        spark,
         [(5, "data_versions_before_rewrite", len(data_dirs), 0, 0, 0)],
-        "stage_ord int, stage string, n_docs long, n_tokens long, "
-        "n_shards long, digest long",
+        f"{_SNAP_DDL}, digest long",
     )
 
     compacted = mor3.select("doc_id", "tokens", "dg", "shard")
@@ -3437,18 +3347,7 @@ def pipeline_snapshot_delete_vectors(
     assert _write_layout(root, 4, 4, [])
     assert _commit_cas(root, 3, 4)
     v4 = _read_mor(spark, root)
-
-    def keys_stat(df, ord_, name):
-        return df.agg(
-            F.lit(ord_).cast("int").alias("stage_ord"),
-            F.lit(name).alias("stage"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.lit(0).cast("long").alias("n_tokens"),
-            F.lit(0).cast("long").alias("n_shards"),
-            F.lit(0).cast("long").alias("digest"),
-        ).select(
-            "stage_ord", "stage", "n_docs", "n_tokens", "n_shards", "digest"
-        )
+    keys = {"n_tokens": 0, "n_shards": 0, "digest": 0}  # a key-set count
 
     # Census reads the COMMITTED DV artifacts (dv/v=2, dv/v=3) instead
     # of re-deriving the delete sets from the base data — cheaper (the
@@ -3456,25 +3355,26 @@ def pipeline_snapshot_delete_vectors(
     # commits actually staged (r14; values identical by construction,
     # the files were written from exactly these frames).
     dv1_back = read_parquet_or_empty(
-        spark, os.path.join(root, "dv", "v=2"), _DV_DDL
+        spark, _version_dir(root, 2, "dv"), _DV_DDL
     )
     dv2_back = read_parquet_or_empty(
-        spark, os.path.join(root, "dv", "v=3"), _DV_DDL
+        spark, _version_dir(root, 3, "dv"), _DV_DDL
     )
     all_deleted = dv1_back.unionAll(dv2_back).distinct()
     return (
         _snap_stat(_read_version(spark, root, 1), 0, "base_v1", digest=True)
-        .unionAll(keys_stat(dv1_back, 1, "dv_v2_keys"))
+        .unionAll(_snap_stat(dv1_back, 1, "dv_v2_keys", **keys))
         .unionAll(_snap_stat(mor2, 2, "mor_read_v2", digest=True))
-        .unionAll(keys_stat(dv2_back, 3, "dv_v3_keys"))
+        .unionAll(_snap_stat(dv2_back, 3, "dv_v3_keys", **keys))
         .unionAll(_snap_stat(mor3, 4, "mor_read_v3", digest=True))
         .unionAll(fs_row)
         .unionAll(_snap_stat(v4, 6, "compacted_v4", digest=True))
         .unionAll(
-            keys_stat(
+            _snap_stat(
                 v4.join(all_deleted, "doc_id", "left_semi"),
                 7,
                 "deleted_still_visible",
+                **keys,
             )
         )
     )
@@ -3755,35 +3655,6 @@ def _zc_oracle() -> str:
     """
 
 
-def _zc_census_row(spark, man, ord_, name):
-    return man.agg(
-        F.lit(ord_).cast("int").alias("stage_ord"),
-        F.lit(name).alias("stage"),
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.count(
-            F.when(
-                (F.col("cmn") < _ZC_BOX_CB) & (F.col("tmx") >= _ZC_BOX_TB),
-                F.lit(1),
-            )
-        )
-        .cast("long")
-        .alias("n_tokens"),
-        F.count(
-            F.when(
-                (F.col("cmn") < _ZC_BOX_CB)
-                & (F.col("tmx") >= _ZC_BOX_TB)
-                & (F.col("mh") == 0),
-                F.lit(1),
-            )
-        )
-        .cast("long")
-        .alias("n_shards"),
-        F.lit(0).cast("long").alias("digest"),
-    ).select(
-        "stage_ord", "stage", "n_docs", "n_tokens", "n_shards", "digest"
-    )
-
-
 @query("pipeline_zorder_cluster_rewrite", oracle=_zc_oracle())
 def pipeline_zorder_cluster_rewrite(
     spark: SparkSession, sf_dir: str
@@ -3839,8 +3710,8 @@ def pipeline_zorder_cluster_rewrite(
                 f"div {_ZC_RG} AS LONG)"
             ),
         ).select("doc_id", "tokens", "dg", "cb", "tb", "shard")
-        data_dir = os.path.join(root, "data", f"v={version}")
-        man_dir = os.path.join(root, "manifest", f"v={version}")
+        data_dir = _version_dir(root, version)
+        man_dir = _version_dir(root, version, "manifest")
         shutil.rmtree(data_dir, ignore_errors=True)
         shutil.rmtree(man_dir, ignore_errors=True)
         write_partitioned(sharded.repartition("shard"), data_dir, "shard")
@@ -3862,13 +3733,13 @@ def pipeline_zorder_cluster_rewrite(
     # are stored columns, so no global re-ranking is needed) and
     # re-shards along the Morton curve
     v1_back = read_parquet_or_empty(
-        spark, os.path.join(root, "data", "v=1"), _ZC_DDL
+        spark, _version_dir(root, 1), _ZC_DDL
     ).withColumn("z", z_expr)
     v2 = publish(v1_back, "z, doc_id", 2, 1).drop("z")
 
     def pruned_read(version, ord_, name):
-        man_dir = os.path.join(root, "manifest", f"v={version}")
-        data_dir = os.path.join(root, "data", f"v={version}")
+        man_dir = _version_dir(root, version, "manifest")
+        data_dir = _version_dir(root, version)
         man = read_parquet_or_empty(
             spark, man_dir, "shard long, cmn int, tmx int, mh long"
         )
@@ -3897,11 +3768,18 @@ def pipeline_zorder_cluster_rewrite(
 
     p1, man1 = pruned_read(1, 1, "v1_pruned_read")
     p2, man2 = pruned_read(2, 3, "v2_pruned_read")
-
+    # per manifest: shards, shards the box probe keeps, and the kept
+    # shards holding no box row (the probe's false positives)
+    box = (F.col("cmn") < _ZC_BOX_CB) & (F.col("tmx") >= _ZC_BOX_TB)
+    prune = {
+        "n_tokens": F.count(F.when(box, F.lit(1))),
+        "n_shards": F.count(F.when(box & (F.col("mh") == 0), F.lit(1))),
+        "digest": 0,
+    }
     return (
-        _zc_census_row(spark, man1, 0, "v1_census")
+        _snap_stat(man1, 0, "v1_census", **prune)
         .unionAll(p1)
-        .unionAll(_zc_census_row(spark, man2, 2, "v2_census"))
+        .unionAll(_snap_stat(man2, 2, "v2_census", **prune))
         .unionAll(p2)
         .unionAll(_snap_stat(v2, 4, "rewrite_content_identity", digest=True))
     )
@@ -4049,10 +3927,10 @@ def pipeline_manifest_bloom_skipping(
         F.md5("text").alias("dg"),
         F.expr(_blm_shard("spark")).cast("long").alias("shard"),
     )
-    data_dir = os.path.join(root, "data", "v=1")
-    man_dir = os.path.join(root, "manifest", "v=1")
+    data_dir = _version_dir(root, 1)
+    man_dir = _version_dir(root, 1, "manifest")
     write_partitioned(rows.repartition("shard"), data_dir, "shard")
-    staged = read_parquet_or_empty(spark, data_dir, _rel_schema())
+    staged = _read_version(spark, root, 1)
 
     pos_arr = F.array(
         *[
@@ -4129,7 +4007,7 @@ def pipeline_manifest_bloom_skipping(
 
     hit_shards = [r.shard for r in cand.select("shard").distinct().collect()]
     if hit_shards:
-        scanned = spark.read.schema(_rel_schema()).option(
+        scanned = spark.read.schema(_REL_SCHEMA_DDL).option(
             "basePath", data_dir
         ).parquet(
             *[
@@ -4141,40 +4019,17 @@ def pipeline_manifest_bloom_skipping(
         scanned = spark.createDataFrame([], _REL_SCHEMA_DDL)
     looked = scanned.where(f"doc_id % {_BLM_MOD} = {_BLM_RES}")
 
-    def pair_stat(df, ord_, name, with_shards=True):
-        return df.agg(
-            F.lit(ord_).cast("int").alias("stage_ord"),
-            F.lit(name).alias("stage"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.lit(0).cast("long").alias("n_tokens"),
-            (
-                F.countDistinct("shard")
-                if with_shards
-                else F.lit(0).cast("long")
-            )
-            .cast("long")
-            .alias("n_shards"),
-            F.lit(0).cast("long").alias("digest"),
-        ).select(
-            "stage_ord", "stage", "n_docs", "n_tokens", "n_shards", "digest"
-        )
-
-    census = keys.agg(
-        F.lit(0).cast("int").alias("stage_ord"),
-        F.lit("census").alias("stage"),
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.lit(0).cast("long").alias("n_tokens"),
-        F.lit(
-            staged.select("shard").distinct().count()
-        ).cast("long").alias("n_shards"),
-        F.lit(0).cast("long").alias("digest"),
-    ).select(
-        "stage_ord", "stage", "n_docs", "n_tokens", "n_shards", "digest"
+    pairs = {"n_tokens": 0, "digest": 0}  # (key, shard) pair counts
+    census = _snap_stat(
+        keys, 0, "census",
+        n_shards=staged.select("shard").distinct().count(), **pairs,
     )
     return (
-        census.unionAll(pair_stat(mmcand, 1, "minmax_candidates"))
-        .unionAll(pair_stat(cand, 2, "bloom_candidates"))
-        .unionAll(pair_stat(fneg, 3, "bloom_false_negatives", False))
+        census.unionAll(_snap_stat(mmcand, 1, "minmax_candidates", **pairs))
+        .unionAll(_snap_stat(cand, 2, "bloom_candidates", **pairs))
+        .unionAll(
+            _snap_stat(fneg, 3, "bloom_false_negatives", n_shards=0, **pairs)
+        )
         .unionAll(_snap_stat(looked, 4, "lookup_result", digest=True))
     )
 
@@ -4312,7 +4167,7 @@ def pipeline_mor_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             for st in (os.stat(os.path.join(d, n)),)
         )
 
-    before = _stat_set(os.path.join(root, "data", "v=1"))
+    before = _stat_set(_version_dir(root, 1))
 
     chg = docs.where("doc_id % 3 = 0").select(
         "doc_id",
@@ -4343,12 +4198,12 @@ def pipeline_mor_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     mor3 = _read_mor(spark, root, version=3)
 
     # row 6: the base data files were never rewritten by the MERGE
-    after = _stat_set(os.path.join(root, "data", "v=1"))
+    after = _stat_set(_version_dir(root, 1))
     rewritten = 0 if before == after else 1
-    fs_row = local_frame(spark, 
+    fs_row = _census_rows(
+        spark,
         [(6, "base_files_rewritten", rewritten, 0, 0, 0)],
-        "stage_ord int, stage string, n_docs long, n_tokens long, "
-        "n_shards long, digest long",
+        f"{_SNAP_DDL}, digest long",
     )
 
     compacted = mor3.select("doc_id", "tokens", "dg", "shard")
@@ -4356,34 +4211,21 @@ def pipeline_mor_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert _write_layout(root, 4, 4, [])
     assert _commit_cas(root, 3, 4)
     v4 = _read_mor(spark, root)
-
-    def keys_stat(df, ord_, name):
-        return df.agg(
-            F.lit(ord_).cast("int").alias("stage_ord"),
-            F.lit(name).alias("stage"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.lit(0).cast("long").alias("n_tokens"),
-            F.lit(0).cast("long").alias("n_shards"),
-            F.lit(0).cast("long").alias("digest"),
-        ).select(
-            "stage_ord", "stage", "n_docs", "n_tokens", "n_shards", "digest"
-        )
-
+    keys = {"n_tokens": 0, "n_shards": 0, "digest": 0}  # a key-set count
     all_deleted = dv1.unionAll(dv2).distinct()
     survivors = v4.join(
         all_deleted.join(app, "doc_id", "left_anti"), "doc_id", "left_semi"
     )
     return (
         _snap_stat(_read_version(spark, root, 1), 0, "base_v1", digest=True)
-        .unionAll(keys_stat(dv1, 1, "dv_v2_tombstones"))
-        .unionAll(_snap_stat(app, 2, "append_v2_rows", digest=False)
-                  .withColumn("digest", F.lit(0).cast("long")))
+        .unionAll(_snap_stat(dv1, 1, "dv_v2_tombstones", **keys))
+        .unionAll(_snap_stat(app, 2, "append_v2_rows", digest=0))
         .unionAll(_snap_stat(mor2, 3, "mor_read_v2", digest=True))
-        .unionAll(keys_stat(dv2, 4, "dv_v3_keys"))
+        .unionAll(_snap_stat(dv2, 4, "dv_v3_keys", **keys))
         .unionAll(_snap_stat(mor3, 5, "mor_read_v3", digest=True))
         .unionAll(fs_row)
         .unionAll(_snap_stat(v4, 7, "compacted_v4", digest=True))
-        .unionAll(keys_stat(survivors, 8, "deleted_still_visible"))
+        .unionAll(_snap_stat(survivors, 8, "deleted_still_visible", **keys))
     )
 
 
@@ -4598,18 +4440,12 @@ def pipeline_snapshot_asof_timestamp(
             if v is not None
             else spark.createDataFrame([], _REL_SCHEMA_DDL)
         )
-        row = read.agg(
-            F.lit(ord_).cast("int").alias("stage_ord"),
-            F.lit(name).alias("stage"),
-            F.lit(-1 if v is None else v).cast("int").alias("resolved"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.coalesce(F.sum("tokens"), F.lit(0))
-            .cast("long")
-            .alias("n_tokens"),
-            F.countDistinct("shard").cast("long").alias("n_shards"),
-        ).select(
-            "stage_ord", "stage", "resolved", "n_docs", "n_tokens",
-            "n_shards",
+        row = _census(
+            read, ord_, name,
+            resolved=F.lit(-1 if v is None else v).cast("int"),
+            n_docs=F.count(F.lit(1)),
+            n_tokens=F.coalesce(F.sum("tokens"), F.lit(0)),
+            n_shards=F.countDistinct("shard"),
         )
         out = row if out is None else out.unionAll(row)
     return out
@@ -4658,7 +4494,7 @@ def _storm_stage_raw(root: str, version: int, rows: list) -> None:
     storm's shared allocator; single-writer protocol queries). The
     process storm stages via _storm_stage_dir + _commit_cas_data
     instead."""
-    _storm_stage_dir(os.path.join(root, "data", f"v={version}"), rows)
+    _storm_stage_dir(_version_dir(root, version), rows)
 
 
 def _storm_read_raw(root: str, version) -> list:
@@ -4668,7 +4504,7 @@ def _storm_read_raw(root: str, version) -> list:
 
     if version is None:
         return []
-    d = os.path.join(root, "data", f"v={version}")
+    d = _version_dir(root, version)
     out = []
     for n in sorted(os.listdir(d)):
         if n.endswith(".parquet"):
@@ -4778,7 +4614,7 @@ def _commit_cas_data(
         committed = _committed_versions(root)
         if committed and version <= committed[-1]:
             return False
-        dest = os.path.join(root, "data", f"v={version}")
+        dest = _version_dir(root, version)
         shutil.rmtree(dest, ignore_errors=True)  # unreachable leftovers only
         os.rename(staged_dir, dest)
         if not _append_commit_log(
@@ -4890,10 +4726,7 @@ def pipeline_commit_storm(spark: SparkSession, sf_dir: str) -> DataFrame:
         (5, "writers_fully_landed", fully),
         (6, "orphan_dirs_after_gc", stats["orphan_dirs_left"]),
     ]
-    return local_frame(spark, 
-        [(a, b, int(c)) for a, b, c in rows],
-        "stage_ord int, stage string, value long",
-    )
+    return _value_census(spark, rows)
 
 
 def _storm_mp_oracle() -> str:
@@ -4953,10 +4786,7 @@ def pipeline_commit_storm_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
         (6, "orphan_dirs_after_gc", stats["orphan_dirs_left"]),
         (7, "stage_dirs_left", stage_left),
     ]
-    return local_frame(spark, 
-        [(a, b, int(c)) for a, b, c in rows],
-        "stage_ord int, stage string, value long",
-    )
+    return _value_census(spark, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -5065,9 +4895,10 @@ def pipeline_backfill_catchup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (4, "force_rerun_equal", "", force_equal),
         (5, "catchup_false_published_days", "", published_nocatch),
     ]
-    return local_frame(spark, 
+    return _census_rows(
+        spark,
         [(a, b, c, int(v)) for a, b, c, v in rows],
-        "stage_ord int, stage string, day string, value long",
+        "day string, value long",
     ).orderBy("stage_ord", "day")
 
 
@@ -5138,7 +4969,7 @@ def pipeline_mor_expire_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     _stage_version(spark, _read_mor(spark, root), root, 3)
     assert _commit_cas(root, 2, 3)
 
-    dv_dir = os.path.join(root, "dv", "v=2")
+    dv_dir = _version_dir(root, 2, "dv")
     expired_v2 = int(_expire_snapshot(root, 2))
     dv_gone = int(not os.path.isdir(dv_dir))
     expired_v1 = int(_expire_snapshot(root, 1))
@@ -5158,10 +4989,7 @@ def pipeline_mor_expire_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         (5, "current_rows_after_expiry", int(agg["n"])),
         (6, "current_tokens_after_expiry", int(agg["t"])),
     ]
-    return local_frame(spark, 
-        [(a, b, int(v)) for a, b, v in rows],
-        "stage_ord int, stage string, value long",
-    )
+    return _value_census(spark, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -5203,7 +5031,7 @@ def _pe_read_spec(root: str, version: int) -> dict:
 def _pe_dirs(root: str, version: int) -> list:
     """Partition values of one version's layout — a pure LISTing, the
     metadata read a real format gets from its manifest."""
-    d = os.path.join(root, "data", f"v={version}")
+    d = _version_dir(root, version)
     try:
         return sorted(
             n.split("=", 1)[1] for n in os.listdir(d) if n.startswith("p=")
@@ -5222,7 +5050,7 @@ def _pe_prune(dirs: list, spec: dict, probe_day: str) -> list:
 
 
 def _pe_read(spark: SparkSession, root: str, version: int, parts=None):
-    data_dir = os.path.join(root, "data", f"v={version}")
+    data_dir = _version_dir(root, version)
     if parts is None:
         return read_parquet_or_empty(spark, data_dir, _PE_DDL)
     if not parts:
@@ -5327,26 +5155,21 @@ def pipeline_partition_evolution(
         the same committed-bytes-derived rows), or None when the era
         exceeded the driver bounds and the Spark aggregate + collect
         path ran instead."""
-        data_dir = os.path.join(root, "data", f"v={version}")
-        man_dir = os.path.join(root, "manifest", f"v={version}")
+        data_dir = _version_dir(root, version)
+        man_dir = _version_dir(root, version, "manifest")
         write_partitioned(df.repartition("p"), data_dir, "p")
         rows = _pe_local_manifest(data_dir)
         if rows is not None:
-            import pyarrow as pa
-
             from dock_financial_data_pipelines_spark.sources.sinks import (
                 write_rows_pyarrow,
             )
 
             write_rows_pyarrow(
                 rows,
-                [
-                    pa.field("p", pa.string()),
-                    pa.field("n_rows", pa.int64()),
-                    pa.field("n_days", pa.int64()),
-                    pa.field("min_day", pa.string()),
-                    pa.field("max_day", pa.string()),
-                ],
+                _pa_fields(
+                    "p string, n_rows long, n_days long, min_day string, "
+                    "max_day string"
+                ),
                 man_dir,
             )
         else:  # pragma: no cover - scale fallback
@@ -5380,7 +5203,7 @@ def pipeline_partition_evolution(
         else {
             r["p"]: r
             for r in spark.read.parquet(
-                os.path.join(root, "manifest", "v=1")
+                _version_dir(root, 1, "manifest")
             ).collect()
         }
         if dirs1
@@ -5392,7 +5215,7 @@ def pipeline_partition_evolution(
         else {
             r["p"]: r
             for r in spark.read.parquet(
-                os.path.join(root, "manifest", "v=2")
+                _version_dir(root, 2, "manifest")
             ).collect()
         }
         if dirs2
@@ -5463,10 +5286,10 @@ def pipeline_partition_evolution(
         (4, "probe_coarse_residual", resid_n, len(hit2), 2),
         (5, "probe_coarse_scanned", scan_n, scan_days, 2),
     ]
-    return local_frame(spark, 
+    return _census_rows(
+        spark,
         [(a, b, int(c), int(d), e_) for a, b, c, d, e_ in rows],
-        "stage_ord int, stage string, n_rows long, n_dirs long, "
-        "spec_id long",
+        "n_rows long, n_dirs long, spec_id long",
     )
 
 
@@ -5565,10 +5388,7 @@ def pipeline_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         (7, "parent_chain_intact", chain_ok),
         (8, "rows_visible_current", _read_visible(spark, root).count()),
     ]
-    return local_frame(spark, 
-        [(a, b, int(v)) for a, b, v in out],
-        "stage_ord int, stage string, value long",
-    )
+    return _value_census(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -5739,10 +5559,7 @@ def pipeline_refs_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
         (9, "expire_after_branch_delete", expire_freed),
         (10, "rows_at_current", _read_visible(spark, root).count()),
     ]
-    return local_frame(spark, 
-        [(a, b, int(v)) for a, b, v in out],
-        "stage_ord int, stage string, value long",
-    )
+    return _value_census(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -5788,7 +5605,7 @@ def _shallow_clone(src_root: str, clone_root: str) -> bool:
     os.makedirs(clone_root, exist_ok=True)
     tmp = os.path.join(clone_root, "clone_source.tmp")
     with open(tmp, "w") as fh:
-        fh.write(os.path.join(src_root, "data", f"v={v}"))
+        fh.write(_version_dir(src_root, v))
     os.replace(tmp, os.path.join(clone_root, "clone_source"))
     if not _write_layout(clone_root, 1, [0], []):
         return False
@@ -5811,12 +5628,13 @@ def _read_clone(
     data_vs, _ = _read_layout(clone_root, version)
     out = None
     for d in data_vs:
-        path = (
-            _clone_src_path(clone_root)
+        df = (
+            read_parquet_or_empty(
+                spark, _clone_src_path(clone_root), _REL_SCHEMA_DDL
+            )
             if d == 0
-            else os.path.join(clone_root, "data", f"v={d}")
+            else _read_version(spark, clone_root, d)
         )
-        df = read_parquet_or_empty(spark, path, _rel_schema())
         out = df if out is None else out.unionAll(df)
     return out
 
@@ -5833,7 +5651,7 @@ def _clone_materialize(clone_root: str) -> bool:
     price of outliving the source's retention policy, paid only when
     chosen."""
     src = _clone_src_path(clone_root)
-    local = os.path.join(clone_root, "data", "v=0")
+    local = _version_dir(clone_root, 0)
     if os.path.abspath(src) == os.path.abspath(local):
         return True
     shutil.rmtree(local, ignore_errors=True)
@@ -5936,10 +5754,7 @@ def pipeline_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         (8, "unmaterialized_clone_rows_after_expire", b_after_expire),
         (9, "source_rows_final", _read_visible(spark, src).count()),
     ]
-    return local_frame(spark, 
-        [(i, s, int(v)) for i, s, v in out],
-        "stage_ord int, stage string, value long",
-    )
+    return _value_census(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -6035,7 +5850,7 @@ def pipeline_commit_constraints(
     )
     landed2, n_null, n_check = _commit_checked(spark, bad, root, 2, 1)
     nothing_staged = int(
-        not os.path.exists(os.path.join(root, "data", "v=2"))
+        not os.path.exists(_version_dir(root, 2))
     )
     cur_after = int(_resolve_current(root) == 1)
     rows_after = _read_visible(spark, root).count()
@@ -6058,10 +5873,7 @@ def pipeline_commit_constraints(
         (7, "clean_commit_lands", int(landed3)),
         (8, "rows_final", _read_visible(spark, root).count()),
     ]
-    return local_frame(spark, 
-        [(i, s, int(v)) for i, s, v in out],
-        "stage_ord int, stage string, value long",
-    )
+    return _value_census(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -6085,7 +5897,7 @@ def _rl_write(root: str, version: int, rows, n_files: int = 1) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    d = os.path.join(root, "data", f"v={version}")
+    d = _version_dir(root, version)
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d)
     chunks = [rows[i::n_files] for i in range(n_files)]
@@ -6105,7 +5917,7 @@ def _rl_write(root: str, version: int, rows, n_files: int = 1) -> None:
 def _rl_read(root: str, version: int):
     import pyarrow.parquet as pq
 
-    d = os.path.join(root, "data", f"v={version}")
+    d = _version_dir(root, version)
     out = []
     for n in sorted(os.listdir(d)):
         if n.endswith(".parquet"):
@@ -6117,7 +5929,7 @@ def _rl_read(root: str, version: int):
 
 
 def _rl_files(root: str, version: int) -> int:
-    d = os.path.join(root, "data", f"v={version}")
+    d = _version_dir(root, version)
     return sum(1 for n in os.listdir(d) if n.endswith(".parquet"))
 
 
@@ -6208,7 +6020,4 @@ def pipeline_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         (7, "rows_final", len(rows3)),
         (8, "watermark_final", _rl_hwm(root)),
     ]
-    return local_frame(spark, 
-        [(i, s, int(v)) for i, s, v in out],
-        "stage_ord int, stage string, value long",
-    )
+    return _value_census(spark, out)

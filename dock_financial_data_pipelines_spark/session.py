@@ -136,6 +136,13 @@ def _ship_package(spark: SparkSession) -> None:
                     zf.write(full, rel)
     os.replace(staging, final)
     connect_compat.ship_package(spark, final)
+    if sc is not None:
+        # Driver-side Python runners (a Python streaming source's
+        # offset planner, transformWithState's driver worker) start
+        # from the function's env PYTHONPATH and skip the shipped
+        # includes: put the package's parent directory there too.
+        paths = [os.path.dirname(pkg_dir), sc.environment.get("PYTHONPATH")]
+        sc.environment["PYTHONPATH"] = os.pathsep.join(p for p in paths if p)
     try:
         carrier._dock_fdp_shipped = True
     except Exception:  # pragma: no cover - slotted session object

@@ -2308,6 +2308,8 @@ def x25_stream_mor_upsert_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the lakehouse streaming-upsert ingest path (Delta/Iceberg CDC
     apply) priced per batch: changeset-sized writes, zero rewrite."""
     from dock_financial_data_pipelines_spark.plans.pipeline import (
+        _SNAP_DDL,
+        _census_rows,
         _commit_mor_merge,
         _committed_versions,
         _fast_forward,
@@ -2389,10 +2391,10 @@ def x25_stream_mor_upsert_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     out = out.unionAll(
-        local_frame(spark, 
+        _census_rows(
+            spark,
             [(6, "layout_census", len(data_vs), len(dvs), n_data_dirs)],
-            "stage_ord int, stage string, n_docs long, n_tokens long, "
-            "n_shards long",
+            _SNAP_DDL,
         )
     )
     return out.unionAll(

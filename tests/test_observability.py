@@ -78,6 +78,21 @@ def test_reused_exchange_not_double_counted(spark, sf_dir):
     assert twice.shuffle_bytes_written < 2.5 * max(once.shuffle_bytes_written, 1)
 
 
+def test_empty_result_is_flagged_not_a_measured_zero(spark, sf_dir):
+    """When the last stage comes back empty, AQE swaps the executed
+    plan for a bare EmptyRelation and the metrics of the scan that ran
+    go with it: the run is flagged, never recorded as a measured 0."""
+    empty = (
+        load(spark, sf_dir, "orders")
+        .where(F.col("o_totalprice") < 0)
+        .groupBy("o_orderstatus")
+        .count()
+    )
+    store = MetricsStore()
+    assert run_with_metrics("empty_agg", empty, store) == 0
+    assert not store.runs[0].plan_metrics_ok
+
+
 def test_metrics_store_accumulates_and_exports(spark, sf_dir):
     store = MetricsStore()
     run_with_metrics("scan", load(spark, sf_dir, "region"), store)

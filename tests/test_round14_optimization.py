@@ -106,8 +106,8 @@ def test_stage_version_flat_default_matches_hive_through_reader(
     spark, tmp_path
 ):
     from dock_financial_data_pipelines_spark.plans.pipeline import (
-        _manifest_schema,
-        _rel_schema,
+        _MANIFEST_DDL,
+        _REL_SCHEMA_DDL,
         _shard_manifest,
         _stage_version,
     )
@@ -127,11 +127,11 @@ def test_stage_version_flat_default_matches_hive_through_reader(
     # manifests identical and equal to a recount of the staged data
     for root in (flat_root, hive_root):
         man = read_parquet_or_empty(
-            spark, os.path.join(root, "manifest", "v=1"), _manifest_schema()
+            spark, os.path.join(root, "manifest", "v=1"), _MANIFEST_DDL
         ).drop("part")
         recount = _shard_manifest(
             read_parquet_or_empty(
-                spark, os.path.join(root, "data", "v=1"), _rel_schema()
+                spark, os.path.join(root, "data", "v=1"), _REL_SCHEMA_DDL
             )
         )
         assert _rows(man) == _rows(recount)

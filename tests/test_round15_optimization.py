@@ -68,13 +68,13 @@ _SAMPLE = [
 def test_local_manifest_matches_spark_aggregate(spark, tmp_path):
     from dock_financial_data_pipelines_spark.plans.pipeline import (
         _local_shard_manifest,
-        _manifest_schema,
-        _rel_schema,
+        _MANIFEST_DDL,
+        _REL_SCHEMA_DDL,
         _shard_manifest,
     )
 
     _root, data_dir, man_dir = _stage_sample(spark, tmp_path, _SAMPLE)
-    staged = read_parquet_or_empty(spark, data_dir, _rel_schema())
+    staged = read_parquet_or_empty(spark, data_dir, _REL_SCHEMA_DDL)
     want = {
         r["shard"]: (r["n_docs"], r["n_tokens"], r["digest"])
         for r in _shard_manifest(staged).collect()
@@ -90,7 +90,7 @@ def test_local_manifest_matches_spark_aggregate(spark, tmp_path):
         assert r["part"] == r["shard"] % 4  # non-negative shards here
     # and the manifest actually written by _stage_version reads back
     # identically through the protocol reader
-    back = read_parquet_or_empty(spark, man_dir, _manifest_schema())
+    back = read_parquet_or_empty(spark, man_dir, _MANIFEST_DDL)
     assert {
         r["shard"]: (r["n_docs"], r["n_tokens"], r["digest"])
         for r in back.collect()
