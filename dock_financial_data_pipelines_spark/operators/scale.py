@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import math
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,6 +25,7 @@ from pyspark.sql import functions as F
 from dock_financial_data_pipelines_spark.catalog import load, local_frame, maybe_broadcast
 from dock_financial_data_pipelines_spark.hashing import h60_col, h60_sql
 from dock_financial_data_pipelines_spark.registry import query
+from dock_financial_data_pipelines_spark.scratch import work_dir
 
 _SALT_BUCKETS = 16
 
@@ -111,9 +111,8 @@ def s7_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed tables: Catalyst elides the shuffle on both sides (no
     Exchange above either scan). The one-time bucketing cost is paid at
     ingest; every subsequent join is co-located."""
-    from dock_financial_data_pipelines_spark.catalog import sf_tag
-    tag = sf_tag(sf_dir).replace(".", "_")
-    wh = os.path.join(tempfile.gettempdir(), "dock_fdp_spark", f"bucketed_{tag}")
+    wh = work_dir(sf_dir, "bucketed")
+    tag = os.path.basename(wh).replace(".", "_")  # one table pair per dir
     (
         load(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_quantity")

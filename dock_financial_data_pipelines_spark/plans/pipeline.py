@@ -18,7 +18,6 @@ from __future__ import annotations
 import contextlib
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window
@@ -29,10 +28,10 @@ from dock_financial_data_pipelines_spark.catalog import (
     load,
     local_frame,
     read_parquet_or_empty,
-    sf_tag,
 )
 from dock_financial_data_pipelines_spark.hashing import h60_py, h60_sql
 from dock_financial_data_pipelines_spark.registry import query
+from dock_financial_data_pipelines_spark.scratch import work_dir
 from dock_financial_data_pipelines_spark.sources.sinks import (
     write_metadata_parquet,
     write_partitioned,
@@ -162,16 +161,7 @@ def run_daily_pipeline(spark: SparkSession, sf_dir: str, as_of: str, out: str) -
     """,
 )
 def pipeline_daily_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # sf_tag-keyed + cleared BEFORE the first run (not between the two —
-    # the second run exists to prove dynamic-overwrite idempotence): an
-    # empty customer base writes no partitions, so a prior non-empty run
-    # at a colliding path would otherwise leak into the read-back.
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "dock_fdp_spark",
-        f"publish_{sf_tag(sf_dir)}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
+    out = work_dir(sf_dir, "publish")
     # Run twice for the same date: second run must overwrite, not append
     # (the reference's replace=True idempotence, REPORT:172).
     run_daily_pipeline(spark, sf_dir, "1998-12-31", out)
@@ -263,19 +253,7 @@ def pipeline_sharded_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass1 = sharded.groupBy("shard", "dg").agg(
         F.min("doc_id").alias("keep_id")
     )
-    # Keyed by sf_tag (path-hash + source mtimes), never bare basename:
-    # two sf_dirs sharing a basename must not share staging, and a
-    # regenerated fixture invalidates the key. Dynamic partition
-    # overwrite only replaces partitions PRESENT in the current write,
-    # so a shard that is empty this run (tiny/empty fixtures) would
-    # otherwise retain stale rows from a previous run at the same path —
-    # clear the staging dir before the first publish.
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "dock_fdp_spark",
-        f"dedup_stage_{sf_tag(sf_dir)}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
+    out = work_dir(sf_dir, "dedup_stage")
     # Publish twice: the second run must dynamically overwrite every
     # shard partition, not append (the REPORT:172 idempotence contract).
     write_partitioned(pass1, out, "shard")
@@ -469,12 +447,7 @@ def pipeline_training_data_release(
         )
         .drop("cum")
     )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "dock_fdp_spark",
-        f"release_{sf_tag(sf_dir)}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
+    out = work_dir(sf_dir, "release")
     write_partitioned(
         packed.repartition("shard").drop("text"), out, "shard"
     )
@@ -635,12 +608,7 @@ def pipeline_incremental_release(
     )
 
     docs = load(spark, sf_dir, "documents")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "dock_fdp_spark",
-        f"incr_release_{sf_tag(sf_dir)}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
+    out = work_dir(sf_dir, "incr_release")
 
     cum = F.sum("tokens").over(
         Window.orderBy("doc_id").rowsBetween(
@@ -765,14 +733,6 @@ def _row_digest(dialect: str) -> str:
     else:
         arg = "doc_id::VARCHAR || ':' || tokens::VARCHAR"
     return h60_sql(arg, dialect)
-
-
-def _release_root(sf_dir: str, name: str) -> str:
-    root = os.path.join(
-        tempfile.gettempdir(), "dock_fdp_spark", f"{name}_{sf_tag(sf_dir)}"
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return root
 
 
 def _pack_half(docs: DataFrame, parity: int, offset=None) -> DataFrame:
@@ -1183,7 +1143,7 @@ def pipeline_atomic_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     the v1 manifest must reconcile per-shard with a recount of the
     visible data (manifest_audit mismatches == 0)."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "atomic_publish")
+    root = work_dir(sf_dir, "atomic_publish")
 
     v1 = _pack_half(docs, 0)
     manifest = _publish_version(spark, v1, root, 1)
@@ -1302,7 +1262,7 @@ def pipeline_release_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans data files (at 100 TB the manifests are MBs while the data
     is the lake)."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "release_diff")
+    root = work_dir(sf_dir, "release_diff")
     m1 = _publish_version(spark, _pack_half(docs, 0), root, 1)
     m2 = _publish_version(spark, _pack_half(docs, 1), root, 2)
     j = m1.alias("m1").join(m2.alias("m2"), "shard", "full_outer")
@@ -1390,7 +1350,7 @@ def pipeline_release_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     view before and after: visible_before == v2 exactly, visible_after
     == v1 exactly — a reader can never observe a blend."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "release_rollback")
+    root = work_dir(sf_dir, "release_rollback")
     _publish_version(spark, _pack_half(docs, 0), root, 1)
     _publish_version(spark, _pack_half(docs, 1), root, 2)
 
@@ -1493,15 +1453,14 @@ def _log_dir(root: str) -> str:
 
 def _append_commit_log(root: str, version: int, parent: int) -> bool:
     """One immutable log entry per commit, created EXCLUSIVELY
-    (O_EXCL): a version number can be committed exactly once, ever —
+    (a hard link): a version number can be committed exactly once, ever —
     across all refs, since versions are table-global like Iceberg
     snapshot ids. Returns False (writes nothing) if the entry already
     exists, so append-only is enforced by the filesystem, not by
-    caller discipline. The content is still published whole: O_EXCL
-    create + single write of a short string is torn-read-safe here
-    because readers only enumerate NAMES (the content — parent pointer
-    and commit timestamp — is read only by forensics and AS-OF-ts
-    resolution). The third field is the commit's wall-clock
+    caller discipline. The entry is written whole under a private name
+    and hard-linked in (the link is the exclusive create), so the
+    checkpointer, which reads every entry's content, never sees it
+    half-written. The third field is the commit's wall-clock
     microseconds, forced STRICTLY MONOTONE across the table's commits
     (max(now, last+1)) so AS OF <timestamp> resolution is total even
     when two commits land inside one clock tick. last_ts is read from
@@ -1512,6 +1471,7 @@ def _append_commit_log(root: str, version: int, parent: int) -> bool:
     writers can still land ts slightly out of version order (both read
     the same predecessor); _resolve_asof_ts absorbs that by returning
     max(version) among entries with ts <= probe."""
+    import threading
     import time as _time
 
     os.makedirs(_log_dir(root), exist_ok=True)
@@ -1524,12 +1484,15 @@ def _append_commit_log(root: str, version: int, parent: int) -> bool:
     last_ts = _commit_ts(root, committed[-1]) if committed else 0
     ts = max(_time.time_ns() // 1000, last_ts + 1)
     path = os.path.join(_log_dir(root), f"v{version}.commit")
+    tmp = f"{path}.{os.getpid()}.{threading.get_ident()}.tmp"
+    with open(tmp, "w") as fh:
+        fh.write(f"{version},{parent},{ts}")
     try:
-        fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
+        os.link(tmp, path)
     except FileExistsError:
         return False
-    with os.fdopen(fd, "w") as fh:
-        fh.write(f"{version},{parent},{ts}")
+    finally:
+        os.remove(tmp)
     return True
 
 
@@ -1903,7 +1866,7 @@ def pipeline_snapshot_timetravel(
     at 100 TB each historical read costs only its own manifest lookup
     (no data is ever copied to 'keep' a snapshot)."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "snapshot_timetravel")
+    root = work_dir(sf_dir, "snapshot_timetravel")
     for base, ver, cond in (
         (None, 1, "doc_id % 2 = 0"),
         (1, 2, "doc_id % 2 = 1"),
@@ -1962,7 +1925,7 @@ def pipeline_concurrent_commit_cas(
     property Iceberg/Delta users actually buy. Metadata-only retry
     cost: B recomputes its own output, nothing else."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "concurrent_cas")
+    root = work_dir(sf_dir, "concurrent_cas")
     from dock_financial_data_pipelines_spark.sources.sinks import (
         _EXPORT_TOKEN_BUDGET,
     )
@@ -2055,7 +2018,7 @@ def pipeline_compact_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     block (they resolve whichever pointer they loaded), and a crashed
     compactor publishes nothing."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "compact_snapshot")
+    root = work_dir(sf_dir, "compact_snapshot")
     from dock_financial_data_pipelines_spark.sources.sinks import (
         _EXPORT_TOKEN_BUDGET,
     )
@@ -2200,7 +2163,7 @@ def pipeline_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB retention is what makes time travel affordable — old
     snapshots cost only their delta files until the vacuum horizon."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "snapshot_expire")
+    root = work_dir(sf_dir, "snapshot_expire")
     for base, ver, cond in (
         (None, 1, "doc_id % 2 = 0"),
         (1, 2, "doc_id % 2 = 1"),
@@ -2290,7 +2253,7 @@ def pipeline_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the change feed costs two snapshot scans + one equi-join,
     not a recompute of either pipeline."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "snapshot_changes")
+    root = work_dir(sf_dir, "snapshot_changes")
     _stage_version(spark, _pack_where(docs, "doc_id % 2 = 0"), root, 1)
     assert _commit_cas(root, None, 1)
     docs2 = docs.where("doc_id % 4 IN (0, 3)").withColumn(
@@ -2407,7 +2370,7 @@ def pipeline_write_audit_publish(
     files: at 100 TB the whole audit workflow costs the candidate's
     own write + the gate query."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "write_audit_publish")
+    root = work_dir(sf_dir, "write_audit_publish")
 
     _stage_version(spark, _pack_where(docs, "doc_id % 2 = 0"), root, 1)
     assert _commit_cas(root, None, 1)
@@ -2521,7 +2484,7 @@ def pipeline_manifest_pruned_read(
     are tight (clustered layout), which is exactly what
     s20_sort_layout_advisor measures for."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "manifest_pruned")
+    root = work_dir(sf_dir, "manifest_pruned")
     packed = _pack_where(docs, "doc_id % 2 = 0", _COMPACT_SMALL_BUDGET)
     data_dir = _version_dir(root, 1)
     man_dir = _version_dir(root, 1, "manifest")
@@ -2604,7 +2567,7 @@ def pipeline_snapshot_schema_evolution(
     rewrite — this query is the proof the reader merges schemas
     rather than requiring one."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "schema_evolution")
+    root = work_dir(sf_dir, "schema_evolution")
     _stage_version(spark, _pack_where(docs, "doc_id % 2 = 0"), root, 1)
     assert _commit_cas(root, None, 1)
 
@@ -2712,7 +2675,7 @@ def pipeline_snapshot_merge_upsert(
     key-shuffled join + the rewrite of touched shards, and readers
     stay on v1 until the single pointer swing."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "merge_upsert")
+    root = work_dir(sf_dir, "merge_upsert")
 
     base = docs.where("doc_id % 2 = 0").select(
         "doc_id",
@@ -2915,7 +2878,7 @@ def pipeline_log_tail_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a change PROPAGATION system — at 100 TB a consumer reads two
     snapshot scans per version, never the history."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "log_tail")
+    root = work_dir(sf_dir, "log_tail")
 
     _stage_version(spark, _pack_where(docs, "doc_id % 2 = 0"), root, 1)
     assert _commit_cas(root, None, 1)
@@ -3044,7 +3007,7 @@ def pipeline_orphan_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     and it is metadata-driven: LIST versions + log lookup, no data
     read."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "orphan_gc")
+    root = work_dir(sf_dir, "orphan_gc")
 
     _stage_version(spark, _pack_where(docs, "doc_id % 2 = 0"), root, 1)
     assert _commit_cas(root, None, 1)
@@ -3311,7 +3274,7 @@ def pipeline_snapshot_delete_vectors(
     replace=True publish (REPORT:172) with the row-delete verb its
     append-only tables never needed."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "delete_vectors")
+    root = work_dir(sf_dir, "delete_vectors")
 
     base = docs.where("doc_id % 2 = 0").select(
         "doc_id",
@@ -3680,7 +3643,7 @@ def pipeline_zorder_cluster_rewrite(
     from pyspark.sql import Window
 
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "zorder_rewrite")
+    root = work_dir(sf_dir, "zorder_rewrite")
     n = 1 << _S21_BITS
 
     ranked = docs.select(
@@ -3919,7 +3882,7 @@ def pipeline_manifest_bloom_skipping(
     md5-derived so the DuckDB oracle rebuilds the identical bit
     matrix (algorithm twin)."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "bloom_skip")
+    root = work_dir(sf_dir, "bloom_skip")
 
     rows = docs.select(
         "doc_id",
@@ -4147,7 +4110,7 @@ def pipeline_mor_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     changeset-sized (the one key join to classify matches + two
     changeset-sized writes); the rewrite happens once, at compaction."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "mor_merge")
+    root = work_dir(sf_dir, "mor_merge")
 
     base = docs.where("doc_id % 2 = 0").select(
         "doc_id",
@@ -4316,7 +4279,7 @@ def pipeline_snapshot_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     here stand in for the manifest-aggregated stats a production
     history view would serve without touching data."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "snapshot_history")
+    root = work_dir(sf_dir, "snapshot_history")
 
     base = docs.where("doc_id % 2 = 0").select(
         "doc_id",
@@ -4414,7 +4377,7 @@ def pipeline_snapshot_asof_timestamp(
     The probe timestamps are read FROM the log (never generated), so
     the output is deterministic at any scale or clock speed."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "asof_ts")
+    root = work_dir(sf_dir, "asof_ts")
 
     for version, cond in (
         (1, "doc_id % 2 = 0"),
@@ -4625,16 +4588,15 @@ def _commit_cas_data(
         return True
 
 
-def _storm_mp_writer(args: tuple) -> int:
-    """One PROCESS-isolated storm committer (module-level so spawn can
-    pickle it). Unlike the thread variant there is no shared version
+def _storm_mp_writer(root: str, w: int, commits: int) -> int:
+    """One PROCESS-isolated storm committer (this module's ``python -m``
+    entry point). Unlike the thread variant there is no shared version
     allocator: each attempt proposes head+1, stages to a
     writer-private dir, and lets the flock-guarded _commit_cas_data
     arbitrate — a lost race (pointer moved, or the number was taken)
     re-reads and retries from the NEW base, so every increment
     eventually lands exactly once. Returns the writer's refused-CAS
     count (forensic only; schedule-dependent)."""
-    root, w, commits = args
     refused = 0
     staged = os.path.join(root, "data", f".stage-w{w}")
     for seq in range(commits):
@@ -4656,22 +4618,36 @@ def run_commit_storm_mp(
     root: str, writers: int = _STORM_WRITERS, commits: int = _STORM_COMMITS
 ) -> dict:
     """Cross-PROCESS storm: same invariants as run_commit_storm, but
-    the committers are ``multiprocessing`` spawn processes, so the
-    serialization the census proves is flock's cross-process exclusion
-    — not the GIL, not an in-process mutex. This is the proof the
-    thread-only storm could not give (r13 judge finding): flock is
-    advisory per open-file-description, and only separate processes
-    exercise the kernel's cross-process grant/block path the way
-    concurrent Spark driver JOBS would against a shared table root."""
-    import multiprocessing
+    the committers are separate processes, so the serialization the
+    census proves is flock's cross-process exclusion — not the GIL, not
+    an in-process mutex. This is the proof the thread-only storm could
+    not give (r13 judge finding): flock is advisory per
+    open-file-description, and only separate processes exercise the
+    kernel's cross-process grant/block path the way concurrent Spark
+    driver JOBS would against a shared table root. Each writer runs
+    this module with ``python -m``: unlike a ``spawn`` pool, it never
+    re-runs the caller's ``__main__``."""
+    import subprocess
+    import sys
 
-    ctx = multiprocessing.get_context("spawn")
-    with ctx.Pool(processes=writers) as pool:
-        refusals = pool.map(
-            _storm_mp_writer,
-            [(root, w, commits) for w in range(writers)],
+    # The writers import this module from the caller's sys.path, as a
+    # spawn pool's would.
+    path = os.pathsep.join(filter(None, sys.path))
+    env = {**os.environ, "PYTHONPATH": path}
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-m", __name__, root, str(w), str(commits)],
+            env=env,
+            stdout=subprocess.PIPE,
+            text=True,
         )
-    return {**_storm_census(root), "refused": sum(refusals)}
+        for w in range(writers)
+    ]
+    outs = [p.communicate()[0] for p in procs]
+    if any(p.returncode for p in procs):
+        raise RuntimeError("a storm writer failed")
+    refused = sum(int(out.split()[-1]) for out in outs)
+    return {**_storm_census(root), "refused": refused}
 
 
 def _storm_oracle() -> str:
@@ -4704,7 +4680,7 @@ def pipeline_commit_storm(spark: SparkSession, sf_dir: str) -> DataFrame:
     is logged to the driver only, never returned. At 100 TB this is
     the multi-job concurrent-publish path: staging is writer-private
     I/O, the serialized section is three metadata file ops."""
-    root = _release_root(sf_dir, "commit_storm")
+    root = work_dir(sf_dir, "commit_storm")
     stats = run_commit_storm(root)
 
     vis = _read_visible(spark, root)
@@ -4747,7 +4723,7 @@ def _storm_mp_oracle() -> str:
 
 @query("pipeline_commit_storm_mp", oracle=_storm_mp_oracle())
 def pipeline_commit_storm_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CROSS-PROCESS CAS STORM: {W} spawn PROCESSES race {K}
+    """CROSS-PROCESS CAS STORM: {W} writer PROCESSES race {K}
     append-commits each through the same pointer — the r13 judge's
     missing proof that the flock critical section serializes across
     process boundaries, not just threads behind the GIL. Same
@@ -4758,7 +4734,7 @@ def pipeline_commit_storm_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
     the locked section or sweeps it on refusal). At 100 TB this is N
     independent Spark DRIVERS publishing into one table root — the
     deployment shape a single-process thread pool cannot model."""
-    root = _release_root(sf_dir, "commit_storm_mp")
+    root = work_dir(sf_dir, "commit_storm_mp")
     stats = run_commit_storm_mp(root)
 
     vis = _read_visible(spark, root)
@@ -4847,7 +4823,7 @@ def pipeline_backfill_catchup(spark: SparkSession, sf_dir: str) -> DataFrame:
     days = [r["d"].isoformat() for r in ev_days]
     want = {r["d"].isoformat(): int(r["count"]) for r in ev_days}
 
-    out = os.path.join(_release_root(sf_dir, "backfill_catchup"), "daily")
+    out = os.path.join(work_dir(sf_dir, "backfill_catchup"), "daily")
     out2 = out + "_nocatchup"
 
     first = backfill(spark, "daily_events", sf_dir, days, out)
@@ -4948,7 +4924,7 @@ def pipeline_mor_expire_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     if the guard under- or over-protects, a count moves. At 100 TB
     this is what makes vacuum safe to automate next to MoR deletes."""
     docs = load(spark, sf_dir, "documents")
-    root = _release_root(sf_dir, "mor_expire_guard")
+    root = work_dir(sf_dir, "mor_expire_guard")
 
     base = docs.where("doc_id % 2 = 0").select(
         "doc_id",
@@ -5129,7 +5105,7 @@ def pipeline_partition_evolution(
     Reference: the day-keyed landing prefixes (REPORT:166-178) this
     lets age into coarser layouts; Iceberg's partition-evolution spec
     (public docs) for the per-snapshot spec-id semantics."""
-    root = _release_root(sf_dir, "partition_evolution")
+    root = work_dir(sf_dir, "partition_evolution")
     e = load(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -5338,7 +5314,7 @@ def pipeline_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the log is the ONLY structure every reader touches
     before any data I/O: this keeps that touch O(tail) RPCs forever
     instead of O(years of commits)."""
-    root = _release_root(sf_dir, "log_checkpoint")
+    root = work_dir(sf_dir, "log_checkpoint")
     os.makedirs(root, exist_ok=True)
 
     rows = []
@@ -5519,7 +5495,7 @@ def pipeline_refs_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: a tag is ONE immutable file; the retention sweep consults
     refs before bytes, so 'keep what release-X names' is metadata
     policy, not a data copy."""
-    root = _release_root(sf_dir, "refs_catalog")
+    root = work_dir(sf_dir, "refs_catalog")
     os.makedirs(root, exist_ok=True)
 
     rows = []
@@ -5703,9 +5679,9 @@ def pipeline_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized clone still reads 7 and the unmaterialized clone
     reads 0: the hazard and its mitigation in one census. All values
     are protocol constants; Spark's work is the bounded clone reads."""
-    src = _release_root(sf_dir, "clone_src")
-    a = _release_root(sf_dir, "clone_a")
-    b = _release_root(sf_dir, "clone_b")
+    src = work_dir(sf_dir, "clone_src")
+    a = work_dir(sf_dir, "clone_a")
+    b = work_dir(sf_dir, "clone_b")
     os.makedirs(src, exist_ok=True)
 
     rows = [(i, 1, f"c{i}", 0) for i in range(1, 4)]
@@ -5828,7 +5804,7 @@ def pipeline_commit_constraints(
     tokens row counts against CHECK, not NOT NULL), CURRENT stays at
     v1 with its 4 rows and the refused candidate staged NOTHING; a
     corrected candidate then lands as v2 with the final 6 rows."""
-    root = _release_root(sf_dir, "commit_constraints")
+    root = work_dir(sf_dir, "commit_constraints")
     os.makedirs(root, exist_ok=True)
 
     clean = local_frame(spark, 
@@ -5971,7 +5947,7 @@ def pipeline_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark — and the final table has five unique ids with the
     watermark advanced. Census values are protocol constants; Spark's
     role is the bounded final census read."""
-    root = _release_root(sf_dir, "row_lineage")
+    root = work_dir(sf_dir, "row_lineage")
     os.makedirs(root, exist_ok=True)
 
     docs = [(10, 100), (20, 200), (30, 300), (40, 400)]
@@ -6021,3 +5997,9 @@ def pipeline_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         (8, "watermark_final", _rl_hwm(root)),
     ]
     return _value_census(spark, out)
+
+
+if __name__ == "__main__":  # one run_commit_storm_mp writer: ROOT W COMMITS
+    import sys
+
+    print(_storm_mp_writer(sys.argv[1], int(sys.argv[2]), int(sys.argv[3])))

@@ -87,6 +87,7 @@ def _register_query() -> None:
     )
 
     from dock_financial_data_pipelines_spark.registry import query
+    from dock_financial_data_pipelines_spark.scratch import work_dir
     from dock_financial_data_pipelines_spark.sources.readers import (
         _build_zip_fixture,
         unzip_binary_files,
@@ -120,8 +121,6 @@ def _register_query() -> None:
         against the documents table like r_sftp_landing_flow. Flags
         are constant 1 by protocol; a broken stage zeroes them."""
         import sys
-        import tempfile
-        import uuid
         from unittest import mock
 
         try:
@@ -137,10 +136,7 @@ def _register_query() -> None:
         zip_dir = _build_zip_fixture(spark, sf_dir)
         srv_root = os.path.dirname(zip_dir)
         remote_dir = os.path.basename(zip_dir)
-        work = os.path.join(
-            tempfile.gettempdir(), "dock_fdp_spark", "loopback",
-            uuid.uuid4().hex,
-        )
+        work = work_dir(sf_dir, "loopback")
         landing1 = os.path.join(work, "landing_sftp")
         landing2 = os.path.join(work, "landing_s3")
 

@@ -207,24 +207,18 @@ def register_stream(spark: SparkSession) -> bool:
 def x26_python_datasource_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from dock_financial_data_pipelines_spark.catalog import (
         read_parquet_or_empty,
-        sf_tag,
     )
+    from dock_financial_data_pipelines_spark.scratch import work_dir
 
     if not register_stream(spark):  # pragma: no cover - pyspark>=4 here
         raise NotImplementedError(
             "Python Data Source API requires pyspark >= 4"
         )
-    scratch = os.path.join(
-        tempfile.gettempdir(), "dock_fdp_spark", f"pyds_stream_{sf_tag(sf_dir)}"
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
+    scratch = work_dir(sf_dir, "pyds_stream")
     sink = os.path.join(scratch, "sink")
     ckpt = os.path.join(scratch, "ckpt")
 

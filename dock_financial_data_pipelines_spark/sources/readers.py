@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import io
 import os
-import tempfile
 import zipfile
 from collections.abc import Iterator
 
@@ -42,16 +41,14 @@ from dock_financial_data_pipelines_spark.catalog import (
     dec_sum,
     load,
     read_parquet_or_empty,
-    sf_tag,
 )
 from dock_financial_data_pipelines_spark.hashing import h60_sql
 from dock_financial_data_pipelines_spark.registry import query
-
-
-def _workdir(tag: str) -> str:
-    d = os.path.join(tempfile.gettempdir(), "dock_fdp_spark", tag)
-    os.makedirs(d, exist_ok=True)
-    return d
+from dock_financial_data_pipelines_spark.scratch import (
+    built_dir,
+    built_path,
+    work_dir,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -103,7 +100,7 @@ _CSV_SCHEMA = StructType(
     """,
 )
 def s2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _workdir(f"csv_{sf_tag(sf_dir)}")
+    out = work_dir(sf_dir, "csv")
     (
         load(spark, sf_dir, "orders")
         .select(
@@ -140,7 +137,7 @@ def s2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s3_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _workdir(f"jsonl_{sf_tag(sf_dir)}")
+    out = work_dir(sf_dir, "jsonl")
     (
         load(spark, sf_dir, "events")
         .select("event_id", "event_type", "value")
@@ -182,23 +179,18 @@ _UNZIP_SCHEMA = StructType(
 
 
 def _build_zip_fixture(spark: SparkSession, sf_dir: str) -> str:
-    out = _workdir(f"zips_{sf_tag(sf_dir)}")
-    marker = os.path.join(out, "_built")
-    if os.path.exists(marker):
-        return out
-    docs = (
-        load(spark, sf_dir, "documents").select("doc_id", "text").toPandas()
-    )  # fixture-building only; bounded by the docs table (≤5k rows at sf0.1)
-    docs = docs.sort_values("doc_id")
-    for chunk_start in range(0, len(docs), 100):
-        chunk = docs.iloc[chunk_start : chunk_start + 100]
-        zpath = os.path.join(out, f"docs_{chunk_start:06d}.zip")
-        with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
-            for _, row in chunk.iterrows():
-                zf.writestr(f"doc_{int(row.doc_id):08d}.txt", row.text)
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return out
+    def build(out: str) -> None:
+        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+        # fixture-building only; bounded by the docs table (≤5k at sf0.1)
+        docs = docs.toPandas().sort_values("doc_id")
+        for chunk_start in range(0, len(docs), 100):
+            chunk = docs.iloc[chunk_start : chunk_start + 100]
+            zpath = os.path.join(out, f"docs_{chunk_start:06d}.zip")
+            with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
+                for _, row in chunk.iterrows():
+                    zf.writestr(f"doc_{int(row.doc_id):08d}.txt", row.text)
+
+    return built_dir(sf_dir, "zips", build)
 
 
 def unzip_binary_files(binary_df: DataFrame) -> DataFrame:
@@ -255,7 +247,7 @@ def s4_zip_ingest_unzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s8_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _workdir(f"orc_{sf_tag(sf_dir)}")
+    out = work_dir(sf_dir, "orc")
     load(spark, sf_dir, "customer").write.mode("overwrite").orc(out)
     return (
         spark.read.orc(out)
@@ -326,9 +318,7 @@ def s6_date_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s9_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _workdir(f"evolve_{sf_tag(sf_dir)}")
-    marker = os.path.join(out, "_built")
-    if not os.path.exists(marker):
+    def build(out: str) -> None:
         orders = load(spark, sf_dir, "orders")
         (
             orders.where(F.year("o_orderdate") <= 1996)
@@ -350,8 +340,8 @@ def s9_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(os.path.join(out, "day=new"))
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    out = built_dir(sf_dir, "evolve", build)
     merged = (
         spark.read.option("mergeSchema", "true")
         .option("basePath", out)
@@ -388,13 +378,12 @@ def s9_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s10_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
 
-    base = _workdir(f"compact_{sf_tag(sf_dir)}")
-    frag, tight = os.path.join(base, "frag"), os.path.join(base, "tight")
-    marker = os.path.join(base, "_built")
     ev = load(spark, sf_dir, "events").withColumn(
         "day", F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
     )
-    if not os.path.exists(marker):
+
+    def build(base: str) -> None:
+        frag, tight = os.path.join(base, "frag"), os.path.join(base, "tight")
         # Fragmented layout: default parallelism → many files per day.
         ev.repartition(8).write.mode("overwrite").partitionBy("day").parquet(frag)
         # Compaction: repartition BY the partition column → exactly one
@@ -408,8 +397,9 @@ def s10_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("day")
             .parquet(tight)
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    base = built_dir(sf_dir, "compact", build)
+    frag, tight = os.path.join(base, "frag"), os.path.join(base, "tight")
     n_frag = len(glob.glob(os.path.join(frag, "day=*", "*.parquet")))
     n_tight = len(glob.glob(os.path.join(tight, "day=*", "*.parquet")))
     return (
@@ -445,8 +435,6 @@ def s10_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s12_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _workdir(f"rollup_{sf_tag(sf_dir)}")
-    marker = os.path.join(base, "_built")
     daily = (
         load(spark, sf_dir, "events")
         .groupBy(
@@ -458,12 +446,12 @@ def s12_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(27,6)")).alias("sum_value"),
         )
     )
-    if not os.path.exists(marker):
+    def build(base: str) -> None:
         daily.write.mode("overwrite").partitionBy("day").parquet(
             os.path.join(base, "daily")
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    base = built_dir(sf_dir, "rollup", build)
     # An empty source day writes no partition dirs — an empty MV, not an
     # error (daily.schema keeps the read-back contract explicit).
     rollups = read_parquet_or_empty(
@@ -495,10 +483,7 @@ def s12_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s11_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _workdir(f"xml_{sf_tag(sf_dir)}")
-    marker = os.path.join(out, "_built")
-    data_dir = os.path.join(out, "suppliers")
-    if not os.path.exists(marker):
+    def build(out: str) -> None:
         (
             load(spark, sf_dir, "supplier")
             .select("s_suppkey", "s_nationkey", "s_acctbal")
@@ -507,10 +492,10 @@ def s11_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .format("xml")
             .option("rootTag", "suppliers")
             .option("rowTag", "supplier")
-            .save(data_dir)
+            .save(os.path.join(out, "suppliers"))
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    data_dir = os.path.join(built_dir(sf_dir, "xml", build), "suppliers")
     xml_schema = StructType(
         [
             StructField("s_suppkey", LongType()),
@@ -550,7 +535,7 @@ def s11_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s13_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _workdir(f"text_{sf_tag(sf_dir)}")
+    out = work_dir(sf_dir, "text")
     load(spark, sf_dir, "documents").select("text").write.mode(
         "overwrite"
     ).text(out)
@@ -581,27 +566,24 @@ _CSV_GOOD_ROWS = 24
 # Fixture content is sf-independent (synthetic corrupt rows), so the
 # path is static — the oracle SQL must be a fixed string and DuckDB
 # reads the same file the engine just audited.
-_CORRUPT_CSV = os.path.join(
-    tempfile.gettempdir(), "dock_fdp_spark", "corrupt_csv", "feed.csv"
-)
+_CORRUPT_CSV = os.path.join(built_path(None, "corrupt_csv"), "feed.csv")
 
 
 def _corrupt_csv_fixture() -> str:
     """Deterministic CSV with value-level corrupt rows interleaved."""
-    path = _corrupt_csv_fixture_path = _CORRUPT_CSV
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
+
+    def build(tmp: str) -> None:
         lines = ["k,amount,day"]
         for k in range(_CSV_GOOD_ROWS):
             lines.append(f"{k},{(k * 137 % 1000) / 100:.2f},2024-01-{1 + k % 28:02d}")
         lines.insert(5, "100,not_a_number,2024-01-05")
         lines.insert(11, "101,3.50,not_a_date")
         lines.insert(17, "102,12.34,2024-02-30")  # impossible date Feb 30
-        staging = f"{path}.tmp{os.getpid()}"
-        with open(staging, "w") as fh:
+        with open(os.path.join(tmp, "feed.csv"), "w") as fh:
             fh.write("\n".join(lines) + "\n")
-        os.replace(staging, path)
-    return _corrupt_csv_fixture_path
+
+    built_dir(None, "corrupt_csv", build)
+    return _CORRUPT_CSV
 
 
 @query(
@@ -679,17 +661,14 @@ def s14_corrupt_csv_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # recovery behavior — the s14 lesson applied to JSON.
 # ---------------------------------------------------------------------------
 _JSONL_GOOD_ROWS = 24
-_CORRUPT_JSONL = os.path.join(
-    tempfile.gettempdir(), "dock_fdp_spark", "corrupt_jsonl", "feed.jsonl"
-)
+_CORRUPT_JSONL = os.path.join(built_path(None, "corrupt_jsonl"), "feed.jsonl")
 
 
 def _corrupt_jsonl_fixture() -> str:
     """Deterministic JSONL with malformed / wrong-typed / missing-key
     rows interleaved."""
-    path = _CORRUPT_JSONL
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
+
+    def build(tmp: str) -> None:
         lines = []
         for k in range(_JSONL_GOOD_ROWS):
             amount = (k * 137 % 1000) / 100
@@ -701,11 +680,11 @@ def _corrupt_jsonl_fixture() -> str:
         lines.insert(9, '{"k": 100, "amount": "not_a_number", "day": "2024-01-05"}')
         lines.insert(15, '{"k": 101, "amount": "3.50", "day": "2024-02-30"}')
         lines.insert(21, '{"k": 102, "amount": "7.77"}')  # missing day
-        staging = f"{path}.tmp{os.getpid()}"
-        with open(staging, "w") as fh:
+        with open(os.path.join(tmp, "feed.jsonl"), "w") as fh:
             fh.write("\n".join(lines) + "\n")
-        os.replace(staging, path)
-    return path
+
+    built_dir(None, "corrupt_jsonl", build)
+    return _CORRUPT_JSONL
 
 
 @query(
@@ -1569,9 +1548,7 @@ def s21_zorder_layout_probe_sampled(
     """,
 )
 def s22_file_metadata_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = os.path.join(
-        _workdir(f"meta_{sf_tag(sf_dir)}"), "orders_by_status"
-    )
+    out = os.path.join(work_dir(sf_dir, "meta"), "orders_by_status")
     (
         load(spark, sf_dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -1636,9 +1613,7 @@ def s22_file_metadata_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s23_type_widened_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _workdir(f"widen_{sf_tag(sf_dir)}")
-    marker = os.path.join(out, "_built")
-    if not os.path.exists(marker):
+    def build(out: str) -> None:
         orders = load(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_orderstatus",
@@ -1666,8 +1641,8 @@ def s23_type_widened_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(os.path.join(out, "gen=2"))
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    out = built_dir(sf_dir, "widen", build)
     widened = spark.read.schema(
         "o_orderkey long, o_orderstatus string, cents long"
     ).parquet(os.path.join(out, "gen=1"), os.path.join(out, "gen=2"))

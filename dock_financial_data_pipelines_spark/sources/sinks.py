@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,9 +20,9 @@ from pyspark.sql import functions as F
 from dock_financial_data_pipelines_spark.catalog import (
     load,
     read_parquet_or_empty,
-    sf_tag,
 )
 from dock_financial_data_pipelines_spark.registry import query
+from dock_financial_data_pipelines_spark.scratch import ROOT, work_dir
 
 
 def write_partitioned(
@@ -180,9 +179,7 @@ class SinkLocation:
     store path. In this sandbox the default stays a local ``file://``
     root; tests exercise the resolution logic, not a network."""
 
-    base_uri: str = "file://" + os.path.join(
-        tempfile.gettempdir(), "dock_fdp_spark", "warehouse"
-    )
+    base_uri: str = "file://" + os.path.join(ROOT, "warehouse")
 
     def path(self, *dataset: str) -> str:
         parts = [p.strip("/") for p in dataset if p]
@@ -231,17 +228,7 @@ def s3a_conf(
     """,
 )
 def s5_partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # sf_tag-keyed + cleared up front: dynamic overwrite only replaces
-    # partitions PRESENT in the current write, so a year absent from
-    # this fixture would otherwise survive from a prior run at a
-    # colliding path (same hazard the r11 ADVICE flagged in
-    # pipeline_sharded_dedup).
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "dock_fdp_spark",
-        f"sink_{sf_tag(sf_dir)}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
+    out = work_dir(sf_dir, "sink")
     orders = load(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate")
     )
@@ -274,8 +261,8 @@ def s5_partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
 # STARTS at or past k*budget — every shard holds ~budget tokens
 # (overshoot bounded by one doc), and the assignment is a pure window
 # cumsum both engines replay exactly. The write is a REAL partitioned
-# parquet sink (one file per shard via repartition("shard"),
-# sf_tag-keyed scratch, cleared up front); the manifest is then
+# parquet sink (one file per shard via repartition("shard"), into a
+# scratch work dir); the manifest is then
 # recomputed FROM THE READ-BACK, while the oracle recomputes it from
 # the source table — hash-equality proves the writer wrote every doc
 # exactly once (no loss, no duplication, no stale partitions).
@@ -345,12 +332,7 @@ def l_shard_export_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shard",
         F.expr(f"(cum - tokens) div {_EXPORT_TOKEN_BUDGET}").cast("long"),
     ).drop("cum")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "dock_fdp_spark",
-        f"shard_export_{sf_tag(sf_dir)}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
+    out = work_dir(sf_dir, "shard_export")
     # One file per shard: the release artifact a consumer downloads.
     write_partitioned(sharded.repartition("shard"), out, "shard")
     schema = StructType(

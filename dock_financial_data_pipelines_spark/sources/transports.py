@@ -260,6 +260,7 @@ def _register_query() -> None:
     from pyspark.sql import functions as F
 
     from dock_financial_data_pipelines_spark.registry import query
+    from dock_financial_data_pipelines_spark.scratch import work_dir
     from dock_financial_data_pipelines_spark.sources.readers import (
         _build_zip_fixture,
         unzip_binary_files,
@@ -275,9 +276,6 @@ def _register_query() -> None:
         """,
     )
     def r_sftp_landing_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-        import uuid
-
         from pyspark.sql.types import (
             BinaryType,
             StringType,
@@ -306,10 +304,7 @@ def _register_query() -> None:
             sensor = Sensor(remote=remote, path=remote_dir, attempts=3)
             sensor.wait_for(lambda name: name.endswith(".zip"))
 
-            landing = os.path.join(
-                tempfile.gettempdir(), "dock_fdp_spark", "landing",
-                uuid.uuid4().hex,
-            )
+            landing = work_dir(sf_dir, "landing")
             for name in remote.listdir(remote_dir):
                 if name.endswith(".zip"):
                     transfer_to_landing(

@@ -12,16 +12,15 @@ streaming run carries its own SQL oracle; only the pandas-stateful runs
 (x7/x10, whose float accumulation order is engine-private) stay
 rows-only, with their semantics covered by the SQL-oracled batch twins.
 
-All state (checkpoints, sinks) goes under a per-run temp directory so
-re-runs start clean, mirroring the reference's ``catchup=False``.
+All state (checkpoints, sinks) goes under a ``scratch.work_dir``, emptied
+on entry, so re-runs start clean, mirroring the reference's
+``catchup=False``.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -41,69 +40,66 @@ from dock_financial_data_pipelines_spark.catalog import (
     events_stream_source,
     local_frame,
     read_parquet_or_empty,
-    sf_tag,
 )
 from dock_financial_data_pipelines_spark.registry import query
-
-
-def _scratch() -> str:
-    d = os.path.join(
-        tempfile.gettempdir(), "dock_fdp_spark", "stream", uuid.uuid4().hex
-    )
-    os.makedirs(d, exist_ok=True)
-    return d
+from dock_financial_data_pipelines_spark.scratch import built_dir, work_dir
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events_stream_source(spark, sf_dir)
 
 
-def _events_stream_multibatch(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 4
-) -> DataFrame:
-    """Stream events as N time-ordered files with maxFilesPerTrigger=1 →
-    N micro-batches, so watermark advancement / late-data handling and
-    state transitions actually execute (a single file = a single batch
-    never exercises them). The chunk split is deterministic (sorted by
-    ts, event_id)."""
-    from dock_financial_data_pipelines_spark.catalog import load
-
-    chunk_dir = os.path.join(
-        tempfile.gettempdir(),
-        "dock_fdp_spark",
-        f"event_chunks_{sf_tag(sf_dir)}",
-    )
-    marker = os.path.join(chunk_dir, "_built")
-    ev = load(spark, sf_dir, "events")
-    if not os.path.exists(marker):
-        from pyspark.sql import Window
-
-        ntile = F.ntile(n_chunks).over(Window.orderBy("ts", "event_id"))
-        chunked = ev.withColumn("chunk", ntile)
-        for i in range(1, n_chunks + 1):
-            (
-                chunked.where(F.col("chunk") == i)
-                .drop("chunk")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(chunk_dir, f"chunk_{i:02d}"))
-            )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+def _chunk_stream(spark: SparkSession, schema, chunk_dir: str) -> DataFrame:
+    """Stream a dir of ``chunk_*`` files one file per micro-batch, in
+    name order."""
     return (
-        spark.readStream.schema(ev.schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .option("latestFirst", "false")
         .parquet(os.path.join(chunk_dir, "chunk_*"))
     )
 
 
+_N_CHUNKS = 4
+
+
+def _event_chunks(spark: SparkSession, sf_dir: str) -> str:
+    """The events table as N time-ordered chunk files (a deterministic
+    split, sorted by ts, event_id)."""
+    from pyspark.sql import Window
+
+    from dock_financial_data_pipelines_spark.catalog import load
+
+    def build(tmp: str) -> None:
+        ntile = F.ntile(_N_CHUNKS).over(Window.orderBy("ts", "event_id"))
+        chunked = load(spark, sf_dir, "events").withColumn("chunk", ntile)
+        for i in range(1, _N_CHUNKS + 1):
+            (
+                chunked.where(F.col("chunk") == i)
+                .drop("chunk")
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(os.path.join(tmp, f"chunk_{i:02d}"))
+            )
+
+    return built_dir(sf_dir, "event_chunks", build)
+
+
+def _events_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream events as N time-ordered files with maxFilesPerTrigger=1 →
+    N micro-batches, so watermark advancement / late-data handling and
+    state transitions actually execute (a single file = a single batch
+    never exercises them)."""
+    from dock_financial_data_pipelines_spark.catalog import load
+
+    ev = load(spark, sf_dir, "events")
+    return _chunk_stream(spark, ev.schema, _event_chunks(spark, sf_dir))
+
+
 _SENTINEL_USER = -1
 
 
-def _events_stream_with_sentinel(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 4
-) -> DataFrame:
+def _events_stream_with_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multibatch event stream plus a final SENTINEL chunk: one
     purchase + one click for ``user_id = -1`` stamped 2 h past the real
     max ts. Streaming outer joins / late-data operators can only
@@ -117,28 +113,15 @@ def _events_stream_with_sentinel(
     sentinel written last, so latestFirst=false orders it as the final
     micro-batch); the shared dir used by every other streaming query is
     never polluted with synthetic rows."""
-    import shutil as _shutil
-
     from dock_financial_data_pipelines_spark.catalog import load
 
-    # Ensure the shared chunk dir exists, then mirror it.
-    _events_stream_multibatch(spark, sf_dir, n_chunks)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "dock_fdp_spark",
-        f"event_chunks_{sf_tag(sf_dir)}",
-    )
-    sdir = base + "_sentinel"
-    marker = os.path.join(sdir, "_built")
+    base = _event_chunks(spark, sf_dir)
     ev = load(spark, sf_dir, "events")
-    if not os.path.exists(marker):
-        os.makedirs(sdir, exist_ok=True)
-        for i in range(1, n_chunks + 1):
+
+    def build(tmp: str) -> None:
+        for i in range(1, _N_CHUNKS + 1):
             name = f"chunk_{i:02d}"
-            if not os.path.exists(os.path.join(sdir, name)):
-                _shutil.copytree(
-                    os.path.join(base, name), os.path.join(sdir, name)
-                )
+            shutil.copytree(os.path.join(base, name), os.path.join(tmp, name))
         sentinel = ev.agg(
             F.max("ts").alias("max_ts"), F.max("event_id").alias("max_id")
         ).select(
@@ -163,16 +146,11 @@ def _events_stream_with_sentinel(
             for c in ev.columns
         ]
         sentinel.select(cols).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(sdir, "chunk_99")
+            os.path.join(tmp, "chunk_99")
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(os.path.join(sdir, "chunk_*"))
-    )
+
+    sdir = built_dir(sf_dir, "event_chunks_sentinel", build)
+    return _chunk_stream(spark, ev.schema, sdir)
 
 
 class _stream_partitions:
@@ -211,13 +189,12 @@ def _run_to_memory(
     propagation staircase) to fail fast with a clear message if a Spark
     upgrade changes that behavior, instead of surfacing as an opaque
     oracle hash mismatch."""
-    scratch = _scratch()
     with _stream_partitions(stream_df.sparkSession):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+            .option("checkpointLocation", work_dir(None, name))
             .trigger(availableNow=True)
             .start()
         )
@@ -225,7 +202,6 @@ def _run_to_memory(
         if progress_hook is not None:
             progress_hook(q.recentProgress)
     result = stream_df.sparkSession.table(name)
-    shutil.rmtree(scratch, ignore_errors=True)
     return result
 
 
@@ -507,8 +483,7 @@ def x6_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x9_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scratch = _scratch()
-    sink = os.path.join(scratch, "sink")
+    sink = work_dir(sf_dir, "x9_sink")
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -524,7 +499,7 @@ def x9_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _stream_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+            .option("checkpointLocation", work_dir(sf_dir, "x9_ckpt"))
             .trigger(availableNow=True)
             .start()
         )
@@ -840,8 +815,7 @@ def _x10_tws_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x8_incremental_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scratch = _scratch()
-    sink = os.path.join(scratch, "sink")
+    sink = work_dir(sf_dir, "x8_sink")
     enriched = _events_stream(spark, sf_dir).withColumn(
         "ingest_date", F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
     )
@@ -849,7 +823,7 @@ def x8_incremental_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             enriched.writeStream.format("parquet")
             .option("path", sink)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+            .option("checkpointLocation", work_dir(sf_dir, "x8_ckpt"))
             .partitionBy("ingest_date")
             .trigger(availableNow=True)
             .start()
@@ -953,11 +927,8 @@ def x12_stream_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = _corrupt_csv_fixture()
-    scratch = _scratch()
-    good_sink = os.path.join(scratch, "good")
-    dead_sink = os.path.join(scratch, "dead")
-    os.makedirs(good_sink, exist_ok=True)
-    os.makedirs(dead_sink, exist_ok=True)
+    good_sink = work_dir(sf_dir, "x12_good")
+    dead_sink = work_dir(sf_dir, "x12_dead")
 
     def split(batch_df: DataFrame, batch_id: int) -> None:
         ok = (
@@ -988,14 +959,9 @@ def x12_stream_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.readStream.schema("k STRING, amount STRING, day STRING")
             .option("header", "true")
             .option("maxFilesPerTrigger", "1")
-            # Only the fixture file itself: the fixture builder stages
-            # feed.csv.tmp<pid> in this directory before os.replace, and a
-            # stale tmp from a crashed run would be ingested by the stream
-            # but not by the shared s14 oracle (which reads feed.csv only).
-            .option("pathGlobFilter", "feed.csv")
             .csv(os.path.dirname(path))
             .writeStream.foreachBatch(split)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+            .option("checkpointLocation", work_dir(sf_dir, "x12_ckpt"))
             .trigger(availableNow=True)
             .start()
         )
@@ -1206,13 +1172,12 @@ def x15_stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    scratch = _scratch()
     with _stream_partitions(spark):
         q = (
             agg.writeStream.format("memory")
             .queryName("x15_progress")
             .outputMode("complete")
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+            .option("checkpointLocation", work_dir(sf_dir, "x15_ckpt"))
             .trigger(availableNow=True)
             .start()
         )
@@ -1222,7 +1187,6 @@ def x15_stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             for p in (q.recentProgress or [])
             if int(p["numInputRows"]) > 0
         ]
-    shutil.rmtree(scratch, ignore_errors=True)
     rows = [(i + 1, n) for i, n in enumerate(progress)]
     return local_frame(spark, 
         rows, "batch_seq INT, num_input_rows BIGINT"
@@ -1316,37 +1280,25 @@ def x16_stream_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # operator that proves the engine's late-data contract, not just its
 # happy path.
 # ---------------------------------------------------------------------------
-def _events_stream_modsplit(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 4
-) -> DataFrame:
+def _events_stream_modsplit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events as N chunks split by event_id % N (NOT time-ordered):
     every chunk spans the whole time range, so chunks 2..N arrive
     largely behind the watermark — the late-data stress source."""
     from dock_financial_data_pipelines_spark.catalog import load
 
-    chunk_dir = os.path.join(
-        tempfile.gettempdir(),
-        "dock_fdp_spark",
-        f"event_chunks_{sf_tag(sf_dir)}_modsplit",
-    )
-    marker = os.path.join(chunk_dir, "_built")
     ev = load(spark, sf_dir, "events")
-    if not os.path.exists(marker):
-        for i in range(n_chunks):
+
+    def build(tmp: str) -> None:
+        for i in range(_N_CHUNKS):
             (
-                ev.where(F.col("event_id") % n_chunks == i)
+                ev.where(F.col("event_id") % _N_CHUNKS == i)
                 .coalesce(1)
                 .write.mode("overwrite")
-                .parquet(os.path.join(chunk_dir, f"chunk_{i:02d}"))
+                .parquet(os.path.join(tmp, f"chunk_{i:02d}"))
             )
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(os.path.join(chunk_dir, "chunk_*"))
-    )
+
+    chunk_dir = built_dir(sf_dir, "event_chunks_modsplit", build)
+    return _chunk_stream(spark, ev.schema, chunk_dir)
 
 
 def _x17_check_progress(
@@ -1571,23 +1523,13 @@ def x18_stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x19_stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil as _shutil
-
     from dock_financial_data_pipelines_spark.catalog import load
 
-    # Ensure the shared time-ordered chunks exist, then stage them in
-    # two waves into a fresh source dir.
-    _events_stream_multibatch(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "dock_fdp_spark",
-        f"event_chunks_{sf_tag(sf_dir)}",
-    )
-    scratch = _scratch()
-    src = os.path.join(scratch, "src")
-    sink = os.path.join(scratch, "sink")
-    ckpt = os.path.join(scratch, "ckpt")
-    os.makedirs(src, exist_ok=True)
+    # Stage the shared time-ordered chunks in two waves into src.
+    base = _event_chunks(spark, sf_dir)
+    src = work_dir(sf_dir, "x19_src")
+    sink = work_dir(sf_dir, "x19_sink")
+    ckpt = work_dir(sf_dir, "x19_ckpt")
     ev_schema = load(spark, sf_dir, "events").schema
 
     def drain():
@@ -1607,7 +1549,7 @@ def x19_stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     for wave in ((1, 2), (3, 4)):
         for i in wave:
-            _shutil.copytree(
+            shutil.copytree(
                 os.path.join(base, f"chunk_{i:02d}"),
                 os.path.join(src, f"chunk_{i:02d}"),
             )
@@ -1626,7 +1568,7 @@ def x19_stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("day_epoch")
     )
-    # Materialize before the scratch dir is removed by later cleanup.
+    # Materialize: the next call empties these work dirs.
     return out.localCheckpoint(eager=True)
 
 
@@ -1653,13 +1595,8 @@ def _docs_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dock_financial_data_pipelines_spark.catalog import load
 
     docs = load(spark, sf_dir, "documents")
-    chunk_dir = os.path.join(
-        tempfile.gettempdir(),
-        "dock_fdp_spark",
-        f"doc_chunks_{sf_tag(sf_dir)}",
-    )
-    marker = os.path.join(chunk_dir, "_built")
-    if not os.path.exists(marker):
+
+    def build(tmp: str) -> None:
         from pyspark.sql import Window
 
         ntile = F.ntile(4).over(Window.orderBy("doc_id"))
@@ -1670,16 +1607,11 @@ def _docs_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .drop("chunk")
                 .coalesce(1)
                 .write.mode("overwrite")
-                .parquet(os.path.join(chunk_dir, f"chunk_{i:02d}"))
+                .parquet(os.path.join(tmp, f"chunk_{i:02d}"))
             )
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(os.path.join(chunk_dir, "chunk_*"))
-    )
+
+    chunk_dir = built_dir(sf_dir, "doc_chunks", build)
+    return _chunk_stream(spark, docs.schema, chunk_dir)
 
 
 @query(
@@ -1779,11 +1711,8 @@ def x21_stream_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         model_score_frame,
     )
 
-    scratch = _scratch()
-    keep_sink = os.path.join(scratch, "keep")
-    dead_sink = os.path.join(scratch, "dead")
-    os.makedirs(keep_sink, exist_ok=True)
-    os.makedirs(dead_sink, exist_ok=True)
+    keep_sink = work_dir(sf_dir, "x21_keep")
+    dead_sink = work_dir(sf_dir, "x21_dead")
 
     def split(batch_df: DataFrame, batch_id: int) -> None:
         scored = model_score_frame(batch_df, carry=("text",)).select(
@@ -1809,7 +1738,7 @@ def x21_stream_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _stream_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(split)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+            .option("checkpointLocation", work_dir(sf_dir, "x21_ckpt"))
             .trigger(availableNow=True)
             .start()
         )
@@ -2069,21 +1998,16 @@ def x23_stream_snapshot_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid-stream versions double as the consistent-snapshot guarantee: a
     reader at any point saw SOME complete batch prefix, never a torn
     merge."""
-    from dock_financial_data_pipelines_spark.plans.pipeline import (
-        _release_root,
-    )
-
-    root = _release_root(sf_dir, "x23_stream_publish")
+    root = work_dir(sf_dir, "x23_stream_publish")
 
     def publish(batch_df: DataFrame, batch_id: int) -> None:
         _x23_publish_batch(spark, root, batch_df, batch_id)
 
     stream = _events_stream_multibatch(spark, sf_dir)
-    scratch = _scratch()
     with _stream_partitions(spark):
         q = (
             stream.writeStream.foreachBatch(publish)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+            .option("checkpointLocation", work_dir(sf_dir, "x23_ckpt"))
             .trigger(availableNow=True)
             .start()
         )
@@ -2177,14 +2101,13 @@ def x24_stream_mor_delete_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         _fast_forward,
         _read_mor,
         _read_version,
-        _release_root,
         _resolve_current,
         _snap_const_row,
         _snap_stat,
         _stage_version,
     )
 
-    root = _release_root(sf_dir, "x24_stream_mor")
+    root = work_dir(sf_dir, "x24_stream_mor")
     docs = load(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
@@ -2206,12 +2129,11 @@ def x24_stream_mor_delete_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         committed = _commit_mor_delete(spark, dels, root, ver, ver - 1)
         assert committed, f"single-writer CAS cannot lose (version {ver})"
 
-    scratch = _scratch()
     with _stream_partitions(spark):
         q = (
             _docs_stream_multibatch(spark, sf_dir)
             .writeStream.foreachBatch(apply_deletes)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+            .option("checkpointLocation", work_dir(sf_dir, "x24_ckpt"))
             .trigger(availableNow=True)
             .start()
         )
@@ -2315,14 +2237,13 @@ def x25_stream_mor_upsert_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         _fast_forward,
         _read_layout,
         _read_mor,
-        _release_root,
         _resolve_current,
         _snap_const_row,
         _snap_stat,
     )
     from pyspark.sql import Window
 
-    root = _release_root(sf_dir, "x25_stream_mor_upsert")
+    root = work_dir(sf_dir, "x25_stream_mor_upsert")
 
     def apply_upserts(batch_df: DataFrame, batch_id: int) -> None:
         ver = batch_id + 1
@@ -2361,12 +2282,11 @@ def x25_stream_mor_upsert_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert committed, f"single-writer CAS cannot lose (version {ver})"
 
-    scratch = _scratch()
     with _stream_partitions(spark):
         q = (
             _events_stream_multibatch(spark, sf_dir)
             .writeStream.foreachBatch(apply_upserts)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+            .option("checkpointLocation", work_dir(sf_dir, "x25_ckpt"))
             .trigger(availableNow=True)
             .start()
         )

@@ -128,7 +128,7 @@ def test_phash_neardup_finds_planted_pairs(spark, adv_dir):
 # cross-process grant/block path).
 # ---------------------------------------------------------------------------
 def test_commit_storm_mp_cross_process(tmp_path):
-    """6 spawn PROCESSES x 4 commits racing the CAS: every commit
+    """6 writer PROCESSES x 4 commits racing the CAS: every commit
     lands, the lineage is one linear chain with zero forks, every
     writer is fully represented in the final table, no staging dirs
     leak, and commit timestamps stay strictly monotone along version

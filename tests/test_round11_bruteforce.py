@@ -11,6 +11,7 @@ import pandas as pd
 import pytest
 
 import dock_financial_data_pipelines_spark as engine
+from dock_financial_data_pipelines_spark.scratch import work_path
 
 SF = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -190,17 +191,12 @@ def test_shard_export_writer_readback_identity(spark):
 
     import pyarrow.parquet as pq
 
-    from dock_financial_data_pipelines_spark.catalog import sf_tag
     from dock_financial_data_pipelines_spark.sources.sinks import (
         _EXPORT_TOKEN_BUDGET,
     )
 
     manifest = _run(spark, "l_shard_export_writer")
-    out = os.path.join(
-        "/tmp" if os.path.isdir("/tmp") else ".",
-        "dock_fdp_spark",
-        f"shard_export_{sf_tag(SF)}",
-    )
+    out = work_path(SF, "shard_export")
     docs = pd.read_parquet(f"{SF}/documents.parquet",
                            columns=["doc_id", "text"])
     # greedy-pack replay in plain python
@@ -506,7 +502,6 @@ def test_incremental_release_matches_plain_python(spark):
     _skip_if_empty("documents")
     import glob
 
-    from dock_financial_data_pipelines_spark.catalog import sf_tag
     from dock_financial_data_pipelines_spark.operators.training import (
         _MODEL_B,
         _MODEL_STOPS,
@@ -575,15 +570,13 @@ def test_incremental_release_matches_plain_python(spark):
     exp_shards = len(base_shards) + (len(incr_shards) if bdedup else 0)
     assert got.loc[5, "n_shards"] == exp_shards
     # on-disk artifact: doc sets are disjoint and complete
-    out = os.path.join(
-        "/tmp", "dock_fdp_spark", f"incr_release_{sf_tag(SF)}"
-    )
+    out = work_path(SF, "incr_release")
     files = glob.glob(os.path.join(out, "shard=*", "*.parquet"))
-    if files:
-        disk = pd.concat(pd.read_parquet(f) for f in files)
-        assert sorted(disk["doc_id"]) == sorted(
-            list(base["doc_id"]) + [r["doc_id"] for r in bdedup]
-        )
+    assert files
+    disk = pd.concat(pd.read_parquet(f) for f in files)
+    assert sorted(disk["doc_id"]) == sorted(
+        list(base["doc_id"]) + [r["doc_id"] for r in bdedup]
+    )
 
 
 def test_bpe_trainer_and_encoder_agree_on_corpus_tokens(spark):

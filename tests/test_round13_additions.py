@@ -15,7 +15,6 @@ import pandas as pd
 import pytest
 
 import dock_financial_data_pipelines_spark as engine
-from dock_financial_data_pipelines_spark.catalog import sf_tag
 from dock_financial_data_pipelines_spark.plans.pipeline import (
     _clone_local_parquet_count,
     _clone_materialize,
@@ -28,6 +27,7 @@ from dock_financial_data_pipelines_spark.plans.pipeline import (
     _storm_stage_raw,
     _write_layout,
 )
+from dock_financial_data_pipelines_spark.scratch import built_path, work_path
 
 SF = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -132,11 +132,7 @@ def test_widened_read_physical_types_differ(spark):
 
     _skip_if_empty("orders")
     engine.QUERIES["s23_type_widened_read"](spark, SF).collect()
-    import tempfile
-
-    out = os.path.join(
-        tempfile.gettempdir(), "dock_fdp_spark", f"widen_{sf_tag(SF)}"
-    )
+    out = built_path(SF, "widen")
     g1 = sorted(glob.glob(os.path.join(out, "gen=1", "*.parquet")))
     g2 = sorted(glob.glob(os.path.join(out, "gen=2", "*.parquet")))
     assert g1 and g2
@@ -486,11 +482,8 @@ def test_pyds_stream_checkpoint_resumes(spark):
     """The query's own census proves n_appearances=1; here the sink's
     raw row count is pinned too (4 rows total, not 6 — days 0-1 were
     not re-read by the second drain)."""
-    import tempfile
-
     from dock_financial_data_pipelines_spark.catalog import (
         read_parquet_or_empty,
-        sf_tag,
     )
 
     got = (
@@ -499,10 +492,7 @@ def test_pyds_stream_checkpoint_resumes(spark):
         .sort_values("day")
     )
     assert list(got["n_appearances"]) == [1, 1, 1, 1]
-    sink = os.path.join(
-        tempfile.gettempdir(), "dock_fdp_spark",
-        f"pyds_stream_{sf_tag(SF)}", "sink",
-    )
+    sink = os.path.join(work_path(SF, "pyds_stream"), "sink")
     raw = read_parquet_or_empty(
         spark, sink,
         "day string, ticket string, file_name string, n_keys int",

@@ -9,13 +9,11 @@ that spec evolution really leaves v1's files untouched."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pandas as pd
 import pytest
 
 import dock_financial_data_pipelines_spark as engine
-from dock_financial_data_pipelines_spark.catalog import sf_tag
 from dock_financial_data_pipelines_spark.plans.pipeline import (
     _PE_DOM_SPLIT,
     _pe_dirs,
@@ -23,6 +21,7 @@ from dock_financial_data_pipelines_spark.plans.pipeline import (
     _pe_read_spec,
     _pe_write_spec,
 )
+from dock_financial_data_pipelines_spark.scratch import work_path
 
 SF = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -122,11 +121,7 @@ def test_partition_evolution_layout_on_disk(spark):
     (spec evolution never rewrites history)."""
     _skip_if_empty("events")
     engine.QUERIES["pipeline_partition_evolution"](spark, SF).collect()
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "dock_fdp_spark",
-        f"partition_evolution_{sf_tag(SF)}",
-    )
+    root = work_path(SF, "partition_evolution")
     d1, d2 = _pe_dirs(root, 1), _pe_dirs(root, 2)
     assert d1 and all(len(p) == 10 for p in d1)      # yyyy-MM-dd
     if d2:
