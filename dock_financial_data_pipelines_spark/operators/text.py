@@ -14,14 +14,21 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dock_financial_data_pipelines_spark.catalog import load, local_frame
+from dock_financial_data_pipelines_spark.operators.training import (
+    heuristic_quality,
+    heuristic_quality_sql,
+    quality_features,
+    quality_features_sql,
+)
 from dock_financial_data_pipelines_spark.registry import query
 from dock_financial_data_pipelines_spark.session import (
     release_local_checkpoint,
 )
-from dock_financial_data_pipelines_spark.shingles import word_shingles
-
-def _tokens():
-    return F.split(F.col("text"), " ")
+from dock_financial_data_pipelines_spark.shingles import (
+    tokens,
+    tokens_sql,
+    word_shingles,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -29,18 +36,18 @@ def _tokens():
 # ---------------------------------------------------------------------------
 @query(
     "l1_token_stats",
-    oracle="""
+    oracle=f"""
     SELECT lang,
            count(*) AS n_docs,
-           CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
-           round(avg(len(string_split(text, ' '))), 4) AS avg_tokens,
+           CAST(sum(len({tokens_sql('duckdb')})) AS BIGINT) AS total_tokens,
+           round(avg(len({tokens_sql('duckdb')})), 4) AS avg_tokens,
            CAST(sum(length(text)) AS BIGINT) AS total_chars,
-           max(len(string_split(text, ' '))) AS max_tokens
+           max(len({tokens_sql('duckdb')})) AS max_tokens
     FROM documents GROUP BY 1
     """,
 )
 def l1_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents").withColumn("n_tokens", F.size(_tokens()))
+    docs = load(spark, sf_dir, "documents").withColumn("n_tokens", F.size(tokens()))
     return docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
@@ -57,9 +64,9 @@ def l1_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l2_term_frequency",
-    oracle="""
+    oracle=f"""
     SELECT term, count(*) AS tf, count(DISTINCT doc_id) AS df
-    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
+    FROM (SELECT doc_id, unnest({tokens_sql('duckdb')}) AS term FROM documents)
     GROUP BY 1
     HAVING count(*) >= 10
     """,
@@ -67,7 +74,7 @@ def l1_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def l2_term_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         load(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(_tokens()).alias("term"))
+        .select("doc_id", F.explode(tokens()).alias("term"))
         .groupBy("term")
         .agg(
             F.count(F.lit(1)).alias("tf"),
@@ -85,10 +92,10 @@ def l2_term_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l2_tfidf_top_terms",
-    oracle="""
+    oracle=f"""
     WITH tf AS (
         SELECT doc_id, term, count(*) AS tf
-        FROM (SELECT doc_id, unnest(string_split(text,' ')) AS term FROM documents)
+        FROM (SELECT doc_id, unnest({tokens_sql('duckdb')}) AS term FROM documents)
         GROUP BY 1, 2
     ),
     df AS (SELECT term, count(DISTINCT doc_id) AS df FROM tf GROUP BY 1),
@@ -116,7 +123,7 @@ def l2_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     n_docs = docs.count()  # scalar cardinality; one cheap job
     tf = (
-        docs.select("doc_id", F.explode(_tokens()).alias("term"))
+        docs.select("doc_id", F.explode(tokens()).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -182,12 +189,12 @@ def _marker_score(markers: tuple[str, ...], col: str = "ws"):
 
 @query(
     "l_lang_id_heuristic",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
         SELECT doc_id, lang,
-            len(list_filter(string_split(text,' '), x -> x IN ('the','a','fast','slow')))        AS s_a,
-            len(list_filter(string_split(text,' '), x -> x IN ('data','table','row','query')))   AS s_b,
-            len(list_filter(string_split(text,' '), x -> x IN ('spark','stream','batch','window'))) AS s_c
+            len(list_filter({tokens_sql('duckdb')}, x -> x IN ('the','a','fast','slow')))        AS s_a,
+            len(list_filter({tokens_sql('duckdb')}, x -> x IN ('data','table','row','query')))   AS s_b,
+            len(list_filter({tokens_sql('duckdb')}, x -> x IN ('spark','stream','batch','window'))) AS s_c
         FROM documents
     )
     SELECT CASE WHEN s_a >= s_b AND s_a >= s_c THEN 'lang_a'
@@ -200,7 +207,7 @@ def _marker_score(markers: tuple[str, ...], col: str = "ws"):
 )
 def l_lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("ws")
+        "doc_id", tokens().alias("ws")
     )
     scored = docs.select(
         "doc_id",
@@ -225,67 +232,31 @@ def l_lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Quality scoring: length / distinct-token ratio / stopword ratio / mean
-# token length → one weighted score per document.
+# token length → one weighted score per document (the heuristic
+# composite of training.heuristic_quality).
 # ---------------------------------------------------------------------------
-_STOPWORDS = ("the", "a", "of", "and", "to", "in")
-
-
 @query(
     "l_quality_score",
-    oracle="""
-    WITH feats AS (
-        SELECT doc_id, lang,
-               len(string_split(text,' ')) AS n_tokens,
-               len(list_distinct(string_split(text,' '))) AS n_distinct,
-               len(list_filter(string_split(text,' '),
-                   x -> x IN ('the','a','of','and','to','in'))) AS n_stop,
-               length(text) AS n_char
-        FROM documents
-    )
+    oracle=f"""
     SELECT doc_id, lang, n_tokens,
            round(CAST(n_distinct AS DOUBLE) / n_tokens, 6) AS distinct_ratio,
            round(CAST(n_stop AS DOUBLE) / n_tokens, 6) AS stopword_ratio,
-           round(CAST(n_char AS DOUBLE) / n_tokens, 6) AS avg_token_len,
-           round(0.4 * (CAST(n_distinct AS DOUBLE) / n_tokens)
-               + 0.3 * (1.0 - CAST(n_stop AS DOUBLE) / n_tokens)
-               + 0.3 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0), 6) AS quality
-    FROM feats
+           round(CAST(n_chars AS DOUBLE) / n_tokens, 6) AS avg_token_len,
+           round({heuristic_quality_sql()}, 6) AS quality
+    FROM {quality_features_sql('doc_id', 'lang')}
     """,
 )
 def l_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stop_list = ", ".join(f"'{s}'" for s in _STOPWORDS)
-    # ws projected once — Spark does not CSE split() across references.
-    feats = (
-        load(spark, sf_dir, "documents")
-        .select(
-            "doc_id", "lang", F.length("text").alias("n_char"),
-            F.split("text", " ").alias("ws"),
-        )
-        .select(
-            "doc_id",
-            "lang",
-            F.size("ws").alias("n_tokens"),
-            F.size(F.array_distinct("ws")).alias("n_distinct"),
-            F.expr(f"size(filter(ws, x -> x IN ({stop_list})))").alias("n_stop"),
-            "n_char",
-        )
-    )
-    distinct_ratio = F.col("n_distinct").cast("double") / F.col("n_tokens")
-    stop_ratio = F.col("n_stop").cast("double") / F.col("n_tokens")
-    avg_tok_len = F.col("n_char").cast("double") / F.col("n_tokens")
-    quality = (
-        0.4 * distinct_ratio
-        + 0.3 * (1.0 - stop_ratio)
-        + 0.3 * F.least(F.col("n_tokens").cast("double") / 100.0, F.lit(1.0))
-    )
+    feats = quality_features(load(spark, sf_dir, "documents"), "doc_id", "lang")
+    n = F.col("n_tokens")
     return feats.select(
         "doc_id",
         "lang",
         "n_tokens",
-        F.round(distinct_ratio, 6).alias("distinct_ratio"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(avg_tok_len, 6).alias("avg_token_len"),
-        F.round(quality, 6).alias("quality"),
+        F.round(F.col("n_distinct").cast("double") / n, 6).alias("distinct_ratio"),
+        F.round(F.col("n_stop").cast("double") / n, 6).alias("stopword_ratio"),
+        F.round(F.col("n_chars").cast("double") / n, 6).alias("avg_token_len"),
+        F.round(heuristic_quality(), 6).alias("quality"),
     )
 
 
@@ -296,10 +267,10 @@ def l_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_token_count",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           len(string_split(text,' ')) AS n_words,
-           CAST(list_sum(list_transform(string_split(text,' '),
+           len({tokens_sql('duckdb')}) AS n_words,
+           CAST(list_sum(list_transform({tokens_sql('duckdb')},
                     x -> CAST(ceil(length(x) / 4.0) AS BIGINT))) AS BIGINT) AS n_subwords_est
     FROM documents
     WHERE doc_id < 200
@@ -311,9 +282,9 @@ def l_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") < 200)
         .select(
             "doc_id",
-            F.size(_tokens()).alias("n_words"),
+            F.size(tokens()).alias("n_words"),
             F.expr(
-                "aggregate(split(text,' '), 0L,"
+                f"aggregate({tokens_sql('spark')}, 0L,"
                 " (acc, x) -> acc + CAST(ceil(length(x) / 4.0) AS BIGINT))"
             ).alias("n_subwords_est"),
         )
@@ -390,11 +361,11 @@ def l_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            list_reduce(
                list_prepend(CAST(17 AS BIGINT),
-                   list_transform(string_split(text,' '),
+                   list_transform({tokens_sql('duckdb')},
                        x -> CAST(37 * length(x) + ascii(substr(x,1,1)) AS BIGINT))),
                (acc, v) -> (acc * 1000003 + v) % 2147483647
            ) AS fingerprint
@@ -405,7 +376,7 @@ def l_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr(
-            "aggregate(split(text,' '), CAST(17 AS BIGINT),"
+            f"aggregate({tokens_sql('spark')}, CAST(17 AS BIGINT),"
             " (acc, x) -> (acc * 1000003"
             "   + CAST(37 * length(x) + ascii(substring(x,1,1)) AS BIGINT))"
             "   % 2147483647)"
@@ -422,12 +393,12 @@ def l_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l8_bigram_topk",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id, u.tok, u.pos
         FROM documents,
-             LATERAL (SELECT unnest(string_split(lower(text), ' ')) AS tok,
-                             generate_subscripts(string_split(lower(text), ' '), 1) AS pos) u
+             LATERAL (SELECT unnest({tokens_sql('duckdb', 'lower(text)')}) AS tok,
+                             generate_subscripts({tokens_sql('duckdb', 'lower(text)')}, 1) AS pos) u
     ),
     bigrams AS (
         SELECT doc_id,
@@ -442,7 +413,7 @@ def l_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def l8_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = load(spark, sf_dir, "documents").select(
         "doc_id",
-        F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "tok"),
+        F.posexplode(tokens(F.lower("text"))).alias("pos", "tok"),
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
     bigrams = toks.select(
@@ -505,7 +476,7 @@ _BPE_PRETOKEN_PATTERN = (
            CAST(len(regexp_extract_all(text,
                     '{_BPE_PRETOKEN_PATTERN.replace(chr(39), chr(39) * 2)}'))
                 AS INTEGER) AS n_pretokens,
-           len(string_split(text, ' ')) AS n_words
+           len({tokens_sql('duckdb')}) AS n_words
     FROM documents WHERE doc_id < 200
     """,
 )
@@ -518,7 +489,7 @@ def l_bpe_pretokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(
                 F.regexp_extract_all("text", F.lit(_BPE_PRETOKEN_PATTERN), 0)
             ).alias("n_pretokens"),
-            F.size(_tokens()).alias("n_words"),
+            F.size(tokens()).alias("n_words"),
         )
     )
 
@@ -533,7 +504,7 @@ def l_bpe_pretokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_contamination_check",
-    oracle="""
+    oracle=f"""
     WITH assigned AS (
         SELECT doc_id, text,
                CASE WHEN ascii(substr(md5(text), 1, 1)) % 10 < 8
@@ -543,8 +514,8 @@ def l_bpe_pretokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingled AS (
         SELECT doc_id, split,
                unnest(list_transform(
-                   range(1, greatest(len(string_split(text, ' ')) - 7, 1) + 1),
-                   i -> array_to_string(string_split(text, ' ')[i:i+7], ' ')
+                   range(1, greatest(len({tokens_sql('duckdb')}) - 7, 1) + 1),
+                   i -> array_to_string({tokens_sql('duckdb')}[i:i+7], ' ')
                )) AS sh
         FROM assigned
     ),
@@ -613,9 +584,9 @@ def l_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_repetition_stats",
-    oracle="""
+    oracle=f"""
     WITH words AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS w
+        SELECT doc_id, unnest({tokens_sql('duckdb')}) AS w
         FROM documents
     ),
     word_stats AS (
@@ -629,8 +600,8 @@ def l_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigrams AS (
         SELECT doc_id,
                unnest(list_transform(
-                   range(1, greatest(len(string_split(text, ' ')) - 1, 0) + 1),
-                   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i + 1]
+                   range(1, greatest(len({tokens_sql('duckdb')}) - 1, 0) + 1),
+                   i -> {tokens_sql('duckdb')}[i] || ' ' || {tokens_sql('duckdb')}[i + 1]
                )) AS bg
         FROM documents
     ),
@@ -668,10 +639,10 @@ def l_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inner join drops bigram-less docs — the size >= 2 filter is that
     # same condition applied before any work happens.
     # Tokenize ONCE into a projected column: Spark does not
-    # common-subexpression-eliminate `split(text,' ')` across lambda
-    # bodies, so inlining it re-splits the text per reference.
+    # common-subexpression-eliminate the split across lambda bodies,
+    # so inlining it re-splits the text per reference.
     docs = load(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("ws")
+        "doc_id", tokens().alias("ws")
     )
 
     def run_stats(arr: str) -> str:
@@ -881,10 +852,10 @@ def l_url_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_zipf_fit",
-    oracle="""
+    oracle=f"""
     WITH tf AS (
         SELECT w AS term, count(*) AS cnt
-        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+        FROM (SELECT unnest({tokens_sql('duckdb')}) AS w FROM documents)
         GROUP BY 1
     ),
     top AS (
@@ -917,7 +888,7 @@ def l_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tf = (
         load(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("term"))
+        .select(F.explode(tokens()).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -977,7 +948,7 @@ _VOCAB_K = 1000
     "l_vocab_oov_rate",
     oracle=f"""
     WITH tok AS (
-        SELECT lang, unnest(string_split(text, ' ')) AS term
+        SELECT lang, unnest({tokens_sql('duckdb')}) AS term
         FROM documents
     ),
     tf AS (SELECT term, count(*) AS cnt FROM tok GROUP BY 1),
@@ -995,7 +966,7 @@ _VOCAB_K = 1000
 )
 def l_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = load(spark, sf_dir, "documents").select(
-        "lang", F.explode(F.split("text", " ")).alias("term")
+        "lang", F.explode(tokens()).alias("term")
     )
     vocab = (
         tok.groupBy("term")
@@ -1049,7 +1020,7 @@ _ROUGE_MIN_F1 = 0.75
     oracle=f"""
     WITH tokc AS (
         SELECT doc_id, term, count(*) AS cnt
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
+        FROM (SELECT doc_id, unnest({tokens_sql('duckdb')}) AS term
               FROM documents)
         GROUP BY 1, 2
     ),
@@ -1078,7 +1049,7 @@ _ROUGE_MIN_F1 = 0.75
 def l_rouge1_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokc = (
         load(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(F.split("text", " ")).alias("term"))
+        .select("doc_id", F.explode(tokens()).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -1144,9 +1115,9 @@ def l_rouge1_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_length_percentile_filter",
-    oracle="""
+    oracle=f"""
     WITH lens AS (
-        SELECT lang, len(string_split(text, ' ')) AS n_tok FROM documents
+        SELECT lang, len({tokens_sql('duckdb')}) AS n_tok FROM documents
     ),
     ranked AS (
         SELECT lang, n_tok,
@@ -1166,7 +1137,7 @@ def l_rouge1_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def l_length_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     lens = load(spark, sf_dir, "documents").select(
-        "lang", F.size(F.split("text", " ")).alias("n_tok")
+        "lang", F.size(tokens()).alias("n_tok")
     )
     ranked = lens.withColumn(
         "pr",
@@ -1211,10 +1182,10 @@ def l_length_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_token_entropy",
-    oracle="""
+    oracle=f"""
     WITH tf AS (
         SELECT lang, term, count(*) AS cnt
-        FROM (SELECT lang, unnest(string_split(text, ' ')) AS term
+        FROM (SELECT lang, unnest({tokens_sql('duckdb')}) AS term
               FROM documents)
         GROUP BY 1, 2
     ),
@@ -1238,7 +1209,7 @@ def l_length_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def l_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = (
         load(spark, sf_dir, "documents")
-        .select("lang", F.explode(F.split("text", " ")).alias("term"))
+        .select("lang", F.explode(tokens()).alias("term"))
         .groupBy("lang", "term")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -1277,14 +1248,14 @@ def l_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_langid_confusion",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
         SELECT doc_id, lang,
-            len(list_filter(string_split(text,' '),
+            len(list_filter({tokens_sql('duckdb')},
                 x -> x IN ('the','a','fast','slow')))           AS s_a,
-            len(list_filter(string_split(text,' '),
+            len(list_filter({tokens_sql('duckdb')},
                 x -> x IN ('data','table','row','query')))      AS s_b,
-            len(list_filter(string_split(text,' '),
+            len(list_filter({tokens_sql('duckdb')},
                 x -> x IN ('spark','stream','batch','window'))) AS s_c
         FROM documents
     ),
@@ -1308,7 +1279,7 @@ def l_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def l_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select(
-        "lang", F.split("text", " ").alias("ws")
+        "lang", tokens().alias("ws")
     )
     scored = docs.select(
         F.col("lang").alias("actual"),
@@ -1352,7 +1323,7 @@ def l_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT lang,
                CAST(len(regexp_extract_all(text,
                     '{{pat}}')) AS BIGINT) AS n_pre,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words
+               CAST(len({tokens_sql('duckdb')}) AS BIGINT) AS n_words
         FROM documents
     )
     SELECT lang,
@@ -1371,7 +1342,7 @@ def l_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("n_pre"),
-        F.size(_tokens()).cast("long").alias("n_words"),
+        F.size(tokens()).cast("long").alias("n_words"),
     )
     return (
         counts.groupBy("lang")
@@ -1412,8 +1383,8 @@ def l_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_heaps_vocab_growth",
-    oracle="""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ws
+    oracle=f"""
+    WITH toks AS (SELECT doc_id, {tokens_sql('duckdb')} AS ws
                   FROM documents),
     grams AS (
         SELECT doc_id,
@@ -1474,9 +1445,9 @@ def l_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_pmi_bigrams",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS ws FROM documents
+        SELECT doc_id, {tokens_sql('duckdb')} AS ws FROM documents
     ),
     uni AS (
         SELECT unnest(ws) AS tok, FROM toks
@@ -1504,7 +1475,7 @@ def l_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def l_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = load(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("ws")
+        "doc_id", tokens().alias("ws")
     )
     uni = toks.select(F.explode("ws").alias("tok"))
     ucnt = uni.groupBy("tok").agg(F.count(F.lit(1)).alias("c1"))
@@ -1551,13 +1522,13 @@ def l_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_readability_profile",
-    oracle="""
+    oracle=f"""
     WITH per_doc AS (
         SELECT source,
                CAST(len(list_filter(string_split_regex(text, '[.!?]+'),
                                     s -> trim(s) <> '')) AS DOUBLE)
                    AS n_sent,
-               CAST(len(string_split(text, ' ')) AS DOUBLE) AS n_words,
+               CAST(len({tokens_sql('duckdb')}) AS DOUBLE) AS n_words,
                CAST(len(replace(text, ' ', '')) AS DOUBLE) AS n_chars
         FROM documents
     ),
@@ -1587,7 +1558,7 @@ def l_readability_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("double")
         .alias("n_sent"),
-        F.size(F.split("text", " ")).cast("double").alias("n_words"),
+        F.size(tokens()).cast("double").alias("n_words"),
         F.length(F.replace(F.col("text"), F.lit(" "), F.lit("")))
         .cast("double")
         .alias("n_chars"),
@@ -1688,9 +1659,9 @@ def l_char_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_tfidf_cosine_pairs",
-    oracle="""
+    oracle=f"""
     WITH words AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
+        SELECT doc_id, unnest({tokens_sql('duckdb')}) AS w FROM documents
     ),
     tf AS (
         SELECT doc_id, w, count(*) AS tf FROM words GROUP BY doc_id, w
@@ -1727,7 +1698,7 @@ def l_char_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def l_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    words = docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
+    words = docs.select("doc_id", F.explode(tokens()).alias("w"))
     tf = words.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n"))
@@ -1795,10 +1766,10 @@ def l_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_vocab_coverage_curve",
-    oracle="""
+    oracle=f"""
     WITH vocab AS (
         SELECT w, count(*) AS cnt
-        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+        FROM (SELECT unnest({tokens_sql('duckdb')}) AS w FROM documents)
         GROUP BY w
     ),
     ranked AS (
@@ -1822,7 +1793,7 @@ def l_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vocab = (
         load(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("w"))
+        .select(F.explode(tokens()).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -1921,9 +1892,9 @@ def l_duplication_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_bpe_merge_step",
-    oracle="""
+    oracle=f"""
     WITH words AS (
-        SELECT unnest(string_split(text, ' ')) AS w FROM documents
+        SELECT unnest({tokens_sql('duckdb')}) AS w FROM documents
     ),
     vocab AS (
         SELECT w, count(*) AS cnt FROM words WHERE len(w) > 0 GROUP BY 1
@@ -1982,7 +1953,7 @@ def l_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vocab = (
         load(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("w"))
+        .select(F.explode(tokens()).alias("w"))
         .where(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -2072,7 +2043,7 @@ _PSI_TOP = 20
     "l_vocab_drift_psi",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id % 2 AS half, unnest(string_split(text, ' ')) AS tok
+        SELECT doc_id % 2 AS half, unnest({tokens_sql('duckdb')}) AS tok
         FROM documents
     ),
     counts AS (
@@ -2114,7 +2085,7 @@ _PSI_TOP = 20
 def l_vocab_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = load(spark, sf_dir, "documents").select(
         (F.col("doc_id") % 2).alias("half"),
-        F.explode(_tokens()).alias("tok"),
+        F.explode(tokens()).alias("tok"),
     )
     counts = toks.groupBy("tok").agg(
         F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).alias("n_ref"),
@@ -2178,9 +2149,9 @@ def l_vocab_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_source_overlap_matrix",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT source, string_split(text, ' ') AS ws FROM documents
+        SELECT source, {tokens_sql('duckdb')} AS ws FROM documents
     ),
     idx AS (
         SELECT source, ws,
@@ -2262,9 +2233,9 @@ def l_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_shingle_df_spectrum",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS ws FROM documents
+        SELECT doc_id, {tokens_sql('duckdb')} AS ws FROM documents
     ),
     sh AS (
         SELECT DISTINCT doc_id,
@@ -2342,16 +2313,16 @@ def l_shingle_df_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_tokens_per_char_by_source",
-    oracle="""
+    oracle=f"""
     SELECT source, lang,
            count(*) AS n_docs,
-           CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
+           CAST(sum(len({tokens_sql('duckdb')})) AS BIGINT) AS total_tokens,
            CAST(sum(length(text)) AS BIGINT) AS total_chars,
-           floor(CAST(sum(len(string_split(text, ' '))) AS DOUBLE)
+           floor(CAST(sum(len({tokens_sql('duckdb')})) AS DOUBLE)
                  / sum(length(text)) * 100 * 1e4 + 0.5) / 1e4
                AS tokens_per_100_chars,
            floor(CAST(sum(length(text)) AS DOUBLE)
-                 / sum(len(string_split(text, ' '))) * 1e4 + 0.5) / 1e4
+                 / sum(len({tokens_sql('duckdb')})) * 1e4 + 0.5) / 1e4
                AS chars_per_token
     FROM documents GROUP BY 1, 2 ORDER BY 1, 2
     """,
@@ -2360,7 +2331,7 @@ def l_tokens_per_char_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         "source",
         "lang",
-        F.size(F.split("text", " ")).alias("tk"),
+        F.size(tokens()).alias("tk"),
         F.length("text").alias("ch"),
     )
     tt = F.sum("tk").cast("double")
@@ -2458,10 +2429,10 @@ def l_unicode_anomaly_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_repeated_ngram_coverage",
-    oracle="""
+    oracle=f"""
     WITH ws AS (
         SELECT doc_id, source, length(text) AS n_chars,
-               string_split(text, ' ') AS w
+               {tokens_sql('duckdb')} AS w
         FROM documents
     ),
     grams AS (
@@ -2514,7 +2485,7 @@ def l_repeated_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         F.length("text").alias("n_chars"),
-        F.split("text", " ").alias("w"),
+        tokens().alias("w"),
     )
     grams = ws.select(
         "doc_id",
@@ -2608,7 +2579,7 @@ _JSD_TOP = 30
     "l_jsd_source_divergence",
     oracle=f"""
     WITH toks AS (
-        SELECT source, unnest(string_split(text, ' ')) AS tok
+        SELECT source, unnest({tokens_sql('duckdb')}) AS tok
         FROM documents
     ),
     counts AS (
@@ -2659,7 +2630,7 @@ _JSD_TOP = 30
 )
 def l_jsd_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = load(spark, sf_dir, "documents").select(
-        "source", F.explode(_tokens()).alias("tok")
+        "source", F.explode(tokens()).alias("tok")
     )
     counts = toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
     gtop = (
@@ -2756,8 +2727,8 @@ _BM25_B = 0.75
     "l_bm25_score",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, string_split(text, ' ') AS ws,
-               len(string_split(text, ' ')) AS dl
+        SELECT doc_id, {tokens_sql('duckdb')} AS ws,
+               len({tokens_sql('duckdb')}) AS dl
         FROM documents
     ),
     dt AS (
@@ -2805,7 +2776,7 @@ def l_bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     k1, b = _BM25_K1, _BM25_B
     tok = (
         load(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("ws"))
+        .select("doc_id", tokens().alias("ws"))
         .select("doc_id", "ws", F.size("ws").alias("dl"))
     )
     terms = F.array(*[F.lit(t) for t in _BM25_TERMS])
@@ -2889,7 +2860,7 @@ def l_bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # size() over the projected token array — the whole profile stays in
 # one codegen stage with the scan.
 # ---------------------------------------------------------------------------
-_STOPWORDS = (
+_PROFILE_STOPWORDS = (
     "the", "a", "and", "of", "to", "in", "is", "it", "on", "for",
 )
 
@@ -2899,9 +2870,9 @@ _STOPWORDS = (
     oracle=f"""
     WITH toks AS (
         SELECT source, lang,
-               len(string_split(text, ' ')) AS n_tok,
-               len(list_filter(string_split(text, ' '),
-                   t -> t IN ({", ".join(f"'{w}'" for w in _STOPWORDS)})))
+               len({tokens_sql('duckdb')}) AS n_tok,
+               len(list_filter({tokens_sql('duckdb')},
+                   t -> t IN ({", ".join(f"'{w}'" for w in _PROFILE_STOPWORDS)})))
                    AS n_stop
         FROM documents
     )
@@ -2924,13 +2895,13 @@ _STOPWORDS = (
 )
 def l_stopword_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    sw = ", ".join(f"'{w}'" for w in _STOPWORDS)
+    sw = ", ".join(f"'{w}'" for w in _PROFILE_STOPWORDS)
     toks = docs.select(
         "source",
         "lang",
-        F.expr("size(split(text, ' '))").alias("n_tok"),
+        F.size(tokens()).alias("n_tok"),
         F.expr(
-            f"size(filter(split(text, ' '), t -> t IN ({sw})))"
+            f"size(filter({tokens_sql('spark')}, t -> t IN ({sw})))"
         ).alias("n_stop"),
     )
     ratio = F.col("n_stop").cast("double") / F.col("n_tok")
@@ -3052,14 +3023,14 @@ def l_char_class_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_numeric_density_filter",
-    oracle=r"""
+    oracle=rf"""
     WITH d AS (
         SELECT source,
                length(text) AS nc,
                length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))
                    AS nd,
-               len(string_split(text, ' ')) AS n_tok,
-               len(list_filter(string_split(text, ' '),
+               len({tokens_sql('duckdb')}) AS n_tok,
+               len(list_filter({tokens_sql('duckdb')},
                    t -> regexp_full_match(t, '[0-9.,%$+\-]+')))
                    AS n_numtok
         FROM documents
@@ -3090,9 +3061,9 @@ def l_numeric_density_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length("text")
             - F.length(F.regexp_replace("text", "[0-9]", ""))
         ).alias("nd"),
-        F.expr("size(split(text, ' '))").alias("n_tok"),
+        F.size(tokens()).alias("n_tok"),
         F.expr(
-            r"size(filter(split(text, ' '),"
+            rf"size(filter({tokens_sql('spark')},"
             r" t -> t RLIKE '^[0-9.,%$+\\-]+$'))"
         ).alias("n_numtok"),
     )
@@ -3134,9 +3105,9 @@ def l_numeric_density_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_word_length_profile",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT source, length(unnest(string_split(text, ' '))) AS wl
+        SELECT source, length(unnest({tokens_sql('duckdb')})) AS wl
         FROM documents
     )
     SELECT source,
@@ -3156,7 +3127,7 @@ def l_numeric_density_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def l_word_length_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
-        "source", F.explode(F.split(F.col("text"), " ")).alias("tok")
+        "source", F.explode(tokens()).alias("tok")
     ).select("source", F.length("tok").alias("wl"))
     mean_wl = F.sum("wl").cast("double") / F.count(F.lit(1))
     r6 = lambda c_: F.floor(c_ * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
@@ -3191,10 +3162,10 @@ def l_word_length_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_hapax_ratio",
-    oracle="""
+    oracle=f"""
     WITH tf AS (
         SELECT source, term, count(*) AS c
-        FROM (SELECT source, unnest(string_split(text, ' ')) AS term
+        FROM (SELECT source, unnest({tokens_sql('duckdb')}) AS term
               FROM documents)
         GROUP BY 1, 2
     )
@@ -3213,7 +3184,7 @@ def l_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     tf = (
         docs.select(
-            "source", F.explode(F.split(F.col("text"), " ")).alias("term")
+            "source", F.explode(tokens()).alias("term")
         )
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -3255,9 +3226,9 @@ def l_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_common_ngram_blocklist",
-    oracle="""
+    oracle=f"""
     WITH ws AS (
-        SELECT doc_id, source, string_split(text, ' ') AS w
+        SELECT doc_id, source, {tokens_sql('duckdb')} AS w
         FROM documents
     ),
     grams AS (
@@ -3291,7 +3262,7 @@ def l_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def l_common_ngram_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    ws = docs.select("doc_id", "source", F.split(F.col("text"), " ").alias("w"))
+    ws = docs.select("doc_id", "source", tokens().alias("w"))
     grams = (
         ws.where(F.size("w") >= 5)
         .select(
@@ -3426,14 +3397,14 @@ def _bpe_chain(k_budget: int, min_pair: int = 0) -> str:
     by the trainer's merges-table oracle, the encoder's stats oracle and
     the convergence variant."""
     return (
-        """
+        f"""
     WITH symt1 AS MATERIALIZED (
         SELECT w, cnt, i + 1 AS pos, cs[i + 1] AS sym
         FROM (
             SELECT w, cnt, cs, unnest(range(len(cs))) AS i
             FROM (
                 SELECT w, count(*) AS cnt, string_split(w, '') AS cs
-                FROM (SELECT unnest(string_split(text, ' ')) AS w
+                FROM (SELECT unnest({tokens_sql('duckdb')}) AS w
                       FROM documents)
                 WHERE len(w) > 0 GROUP BY 1
             )
@@ -3497,7 +3468,7 @@ def _bpe_train_rounds(
 
     vocab = (
         load(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("w"))
+        .select(F.explode(tokens()).alias("w"))
         .where(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -3660,7 +3631,7 @@ def l_bpe_train_multistep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     wl AS (
         SELECT lang, w, count(*) AS cnt
-        FROM (SELECT lang, unnest(string_split(text, ' ')) AS w
+        FROM (SELECT lang, unnest({tokens_sql('duckdb')}) AS w
               FROM documents)
         WHERE len(w) > 0 GROUP BY 1, 2
     )
@@ -3680,7 +3651,7 @@ def l_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     syms = symt.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("ntok"))
     wl = (
         load(spark, sf_dir, "documents")
-        .select("lang", F.explode(F.split("text", " ")).alias("w"))
+        .select("lang", F.explode(tokens()).alias("w"))
         .where(F.length("w") > 0)
         .groupBy("lang", "w")
         .agg(F.count(F.lit(1)).alias("cnt"))

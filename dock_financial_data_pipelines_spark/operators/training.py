@@ -23,12 +23,13 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dock_financial_data_pipelines_spark.catalog import load, maybe_broadcast
 from dock_financial_data_pipelines_spark.hashing import h60_col, h60_sql
 from dock_financial_data_pipelines_spark.registry import query
+from dock_financial_data_pipelines_spark.shingles import tokens, tokens_sql
 
 _PACK_CAPACITY = 512  # tokens per packed training sequence
 _PACK_SHARDS = 8  # independent packing streams (doc_id % N)
@@ -50,7 +51,7 @@ _PACK_SHARDS = 8  # independent packing streams (doc_id % N)
     oracle=f"""
     WITH d AS (
         SELECT doc_id, doc_id % {_PACK_SHARDS} AS shard,
-               len(string_split(text, ' ')) AS n_tok
+               len({tokens_sql('duckdb')}) AS n_tok
         FROM documents
     ),
     c AS (
@@ -79,7 +80,7 @@ def l_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         "doc_id",
         (F.col("doc_id") % S).alias("shard"),
-        F.size(F.split("text", " ")).alias("n_tok"),
+        F.size(tokens()).alias("n_tok"),
     )
     w = (
         Window.partitionBy("shard")
@@ -121,11 +122,11 @@ _STOPWORDS = "'the', 'a', 'of', 'to', 'and', 'in', 'is'"
     oracle=f"""
     WITH stats AS (
         SELECT source,
-               len(string_split(text, ' ')) AS n_words,
-               CAST(list_sum(list_transform(string_split(text, ' '),
+               len({tokens_sql('duckdb')}) AS n_words,
+               CAST(list_sum(list_transform({tokens_sql('duckdb')},
                                             x -> length(x))) AS DOUBLE)
-                   / len(string_split(text, ' ')) AS mean_len,
-               len(list_filter(string_split(text, ' '),
+                   / len({tokens_sql('duckdb')}) AS mean_len,
+               len(list_filter({tokens_sql('duckdb')},
                                x -> x IN ({_STOPWORDS}))) AS stop_cnt
         FROM documents
     )
@@ -147,7 +148,7 @@ def l_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ws projected once — Spark does not CSE split() across references.
     stats = (
         load(spark, sf_dir, "documents")
-        .select("source", F.split("text", " ").alias("ws"))
+        .select("source", tokens().alias("ws"))
         .select(
             "source",
             F.size("ws").alias("n_words"),
@@ -190,8 +191,8 @@ _CHUNK_W, _CHUNK_STRIDE = 24, 16
     "l_chunk_overlap",
     oracle=f"""
     WITH t AS (
-        SELECT doc_id, string_split(text, ' ') AS toks,
-               len(string_split(text, ' ')) AS n
+        SELECT doc_id, {tokens_sql('duckdb')} AS toks,
+               len({tokens_sql('duckdb')}) AS n
         FROM documents
     ),
     starts AS (
@@ -214,7 +215,7 @@ def l_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     W, S = _CHUNK_W, _CHUNK_STRIDE
     t = (
         load(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("toks"))
+        .select("doc_id", tokens().alias("toks"))
         .select("doc_id", "toks", F.size("toks").alias("n"))
     )
     starts = t.select(
@@ -256,12 +257,12 @@ _DCHUNK = 8
     oracle=f"""
     WITH chunks AS (
         SELECT doc_id,
-               array_to_string(list_slice(string_split(text, ' '),
+               array_to_string(list_slice({tokens_sql('duckdb')},
                                           start_word,
                                           start_word + {_DCHUNK} - 1),
                                ' ') AS chunk
         FROM (SELECT doc_id, text,
-                     unnest(range(1, len(string_split(text, ' ')) + 1,
+                     unnest(range(1, len({tokens_sql('duckdb')}) + 1,
                                   {_DCHUNK})) AS start_word
               FROM documents)
     ),
@@ -282,7 +283,7 @@ def l_chunk_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     D = _DCHUNK
     chunks = (
         load(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("toks"))
+        .select("doc_id", tokens().alias("toks"))
         .select(
             "doc_id",
             "toks",
@@ -325,9 +326,9 @@ def l_chunk_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_unigram_logprob",
-    oracle="""
+    oracle=f"""
     WITH words AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
+        SELECT doc_id, unnest({tokens_sql('duckdb')}) AS w FROM documents
     ),
     vocab AS (SELECT w, count(*) AS cnt FROM words GROUP BY 1),
     tot AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM vocab),
@@ -347,7 +348,7 @@ def l_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.explode(
-            F.expr("transform(split(text,' '), x -> xxhash64(x))")
+            F.expr(f"transform({tokens_sql('spark')}, x -> xxhash64(x))")
         ).alias("w"),
     )
     vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
@@ -388,7 +389,7 @@ _MIX_BUDGET = 1000  # tokens per language
     "l_token_budget_mixture",
     oracle=f"""
     WITH d AS (
-        SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tok,
+        SELECT doc_id, lang, len({tokens_sql('duckdb')}) AS n_tok,
                CAST((doc_id * 2654435761) % 10000 AS DOUBLE) / 10000.0 AS u
         FROM documents
     ),
@@ -414,7 +415,7 @@ def l_token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
-        F.size(F.split("text", " ")).alias("n_tok"),
+        F.size(tokens()).alias("n_tok"),
         (((F.col("doc_id") * 2654435761) % 10000).cast("double") / 10000.0)
         .alias("u"),
     )
@@ -593,7 +594,7 @@ def pack_assignments(
     d = docs.select(
         "doc_id",
         (F.col("doc_id") % shards).alias("shard"),
-        F.size(F.split("text", " ")).alias("n_tok"),
+        F.size(tokens()).alias("n_tok"),
     )
     w = (
         W.partitionBy("shard")
@@ -636,7 +637,7 @@ def packed_sequence_texts(
     and the (shard, seq_id) aggregation. Returns shard, seq_id,
     n_tokens, text (space-joined token sequence)."""
     plan = pack_assignments(docs, capacity, shards)
-    toks = docs.select("doc_id", F.split("text", " ").alias("ws"))
+    toks = docs.select("doc_id", tokens().alias("ws"))
     sliced = plan.join(toks, "doc_id").select(
         "shard",
         "seq_id",
@@ -662,7 +663,7 @@ def packed_sequence_texts(
         .select(
             "shard",
             "seq_id",
-            F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+            F.size(tokens()).cast("long").alias("n_tokens"),
             "text",
         )
     )
@@ -684,9 +685,9 @@ def packed_sequence_texts(
 # ---------------------------------------------------------------------------
 @query(
     "l_trigram_novelty",
-    oracle="""
+    oracle=f"""
     WITH w AS (
-        SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents
+        SELECT doc_id, lang, {tokens_sql('duckdb')} AS ws FROM documents
     ),
     tri AS (
         SELECT DISTINCT doc_id, lang,
@@ -709,7 +710,7 @@ def packed_sequence_texts(
 def l_trigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = (
         load(spark, sf_dir, "documents")
-        .select("doc_id", "lang", F.split("text", " ").alias("ws"))
+        .select("doc_id", "lang", tokens().alias("ws"))
         .where(F.size("ws") >= 3)  # Spark sequence(1, 0) would DESCEND
     )
     tri = w.select(
@@ -763,23 +764,23 @@ def l_trigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_dataset_card",
-    oracle="""
+    oracle=f"""
     SELECT count(*) AS n_docs,
            count(DISTINCT lang) AS n_langs,
            count(DISTINCT source) AS n_sources,
-           CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
+           CAST(sum(len({tokens_sql('duckdb')})) AS BIGINT) AS total_tokens,
            count(*) - count(DISTINCT md5(text)) AS exact_dup_docs,
            CAST(sum(CASE WHEN lang = 'en'
-                         THEN len(string_split(text, ' ')) ELSE 0 END)
+                         THEN len({tokens_sql('duckdb')}) ELSE 0 END)
                 AS BIGINT) AS en_tokens,
-           floor(CAST(sum(len(string_split(text, ' '))) AS DOUBLE)
+           floor(CAST(sum(len({tokens_sql('duckdb')})) AS DOUBLE)
                  / count(*) * 1e6 + 0.5) / 1e6 AS mean_doc_tokens
     FROM documents
     """,
 )
 def l_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").withColumn(
-        "n_tok", F.size(F.split("text", " "))
+        "n_tok", F.size(tokens())
     )
     tok_sum = F.sum("n_tok").cast("long")
     return d.agg(
@@ -962,8 +963,8 @@ _SFT_TMPL_ASSISTANT = "\n<|assistant|>\n"
     "l_sft_format_pairs",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-        WHERE len(string_split(text, ' ')) >= {_SFT_MIN_TOKENS}
+        SELECT doc_id, {tokens_sql('duckdb')} AS ws FROM documents
+        WHERE len({tokens_sql('duckdb')}) >= {_SFT_MIN_TOKENS}
     ),
     halves AS (
         SELECT doc_id,
@@ -988,7 +989,7 @@ _SFT_TMPL_ASSISTANT = "\n<|assistant|>\n"
 def l_sft_format_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (
         load(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("ws"))
+        .select("doc_id", tokens().alias("ws"))
         .where(F.size("ws") >= _SFT_MIN_TOKENS)
     )
     half = (F.size("ws") / 2).cast("int")
@@ -1031,8 +1032,8 @@ def l_sft_format_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_bigram_cross_entropy",
-    oracle="""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ws
+    oracle=f"""
+    WITH toks AS (SELECT doc_id, {tokens_sql('duckdb')} AS ws
                   FROM documents),
     big AS (
         SELECT ws[i + 1] AS w1, ws[i + 2] AS w2
@@ -1044,7 +1045,7 @@ def l_sft_format_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1 AS (SELECT w1, CAST(sum(n12) AS BIGINT) AS n1 FROM c12 GROUP BY 1),
     vocab AS (
         SELECT count(DISTINCT w) AS v
-        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+        FROM (SELECT unnest({tokens_sql('duckdb')}) AS w FROM documents)
     ),
     terms AS (
         SELECT CAST(c12.n12 * (ln(CAST(c12.n12 + 1 AS DOUBLE))
@@ -1063,7 +1064,7 @@ def l_sft_format_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def l_bigram_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("ws")
+        "doc_id", tokens().alias("ws")
     )
     big = (
         docs.select(
@@ -1087,7 +1088,7 @@ def l_bigram_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1 = c12.groupBy("w1").agg(F.sum("n12").cast("long").alias("n1"))
     vocab = (
         load(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("w"))
+        .select(F.explode(tokens()).alias("w"))
         .agg(F.countDistinct("w").alias("v"))
     )
     terms = (
@@ -1133,9 +1134,9 @@ def l_bigram_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_perplexity_buckets",
-    oracle="""
+    oracle=f"""
     WITH words AS (
-        SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
+        SELECT doc_id, lang, unnest({tokens_sql('duckdb')}) AS w
         FROM documents
     ),
     vocab AS (SELECT w, count(*) AS cnt FROM words GROUP BY 1),
@@ -1175,7 +1176,7 @@ def l_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         F.explode(
-            F.expr("transform(split(text,' '), x -> xxhash64(x))")
+            F.expr(f"transform({tokens_sql('spark')}, x -> xxhash64(x))")
         ).alias("w"),
     )
     vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
@@ -1255,8 +1256,8 @@ def l_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "l_kneser_ney_bigram",
-    oracle="""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS ws
+    oracle=f"""
+    WITH toks AS (SELECT doc_id, {tokens_sql('duckdb')} AS ws
                   FROM documents),
     big AS (
         SELECT ws[i + 1] AS w1, ws[i + 2] AS w2
@@ -1272,7 +1273,7 @@ def l_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     tt AS (SELECT count(*) AS t FROM c12),
     vocab AS (
         SELECT count(DISTINCT w) AS v
-        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+        FROM (SELECT unnest({tokens_sql('duckdb')}) AS w FROM documents)
     ),
     terms AS (
         SELECT c12.n12,
@@ -1301,7 +1302,7 @@ def l_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def l_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("ws")
+        "doc_id", tokens().alias("ws")
     )
     big = docs.select(
         F.explode(
@@ -1323,7 +1324,7 @@ def l_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tt = c12.agg(F.count(F.lit(1)).alias("t"))
     vocab = (
         load(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("w"))
+        .select(F.explode(tokens()).alias("w"))
         .agg(F.countDistinct("w").alias("v"))
     )
     p_kn = (F.col("n12").cast("double") - 0.75) / F.col("n1") + F.lit(
@@ -1392,7 +1393,7 @@ _ALPHA_BUDGET = 20000  # total token budget across languages
     "l_mixture_alpha_sampling",
     oracle=f"""
     WITH d AS (
-        SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tok,
+        SELECT doc_id, lang, len({tokens_sql('duckdb')}) AS n_tok,
                CAST((doc_id * 2654435761) % 10000 AS DOUBLE) / 10000.0 AS u
         FROM documents
     ),
@@ -1431,7 +1432,7 @@ def l_mixture_alpha_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
-        F.size(F.split("text", " ")).alias("n_tok"),
+        F.size(tokens()).alias("n_tok"),
         (
             ((F.col("doc_id") * F.lit(2654435761)) % 10000).cast("double")
             / 10000.0
@@ -1561,8 +1562,8 @@ def l_dp_noised_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "l_span_mask_ratio",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS n_tok,
-               unnest(range(len(string_split(text, ' ')))) AS pos
+        SELECT doc_id, len({tokens_sql('duckdb')}) AS n_tok,
+               unnest(range(len({tokens_sql('duckdb')}))) AS pos
         FROM documents
     ),
     flagged AS (
@@ -1596,7 +1597,7 @@ def l_dp_noised_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def l_span_mask_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         load(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("ws"))
+        .select("doc_id", tokens().alias("ws"))
         .select(
             "doc_id",
             F.size("ws").alias("n_tok"),
@@ -1665,7 +1666,7 @@ _N_SHARDS = 16
     WITH assigned AS (
         SELECT CAST({h60_sql("text", "duckdb")} % {_N_SHARDS} AS INTEGER)
                    AS shard,
-               len(string_split(text, ' ')) AS tk,
+               len({tokens_sql('duckdb')}) AS tk,
                length(text) AS ch
         FROM documents
     ),
@@ -1692,7 +1693,7 @@ def l_shard_assignment_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"{h60_sql('text', 'spark')} % {_N_SHARDS}")
         .cast("int")
         .alias("shard"),
-        F.size(F.split("text", " ")).alias("tk"),
+        F.size(tokens()).alias("tk"),
         F.length("text").alias("ch"),
     )
     per = assigned.groupBy("shard").agg(
@@ -1740,7 +1741,7 @@ _FHASH_D = 64
     "l_feature_hashing",
     oracle=f"""
     WITH tokw AS (
-        SELECT unnest(string_split(text, ' ')) AS w FROM documents
+        SELECT unnest({tokens_sql('duckdb')}) AS w FROM documents
     ),
     hashed AS (
         SELECT w,
@@ -1760,7 +1761,7 @@ def l_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     D = _FHASH_D
     tokw = (
         load(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("w"))
+        .select(F.explode(tokens()).alias("w"))
     )
     hashed = tokw.select(
         "w",
@@ -1811,39 +1812,104 @@ _MODEL_W = {  # micro-units: a quantized serving checkpoint
     "n_stop": 900,
 }
 _MODEL_B = -120000  # intercept, micro-units
+# The stopwords of both quality scores: the model's n_stop feature and
+# the heuristic composite's stopword ratio.
 _MODEL_STOPS = ("the", "a", "of", "and", "to", "in")
 
 
-_MODEL_ORACLE = f"""
-    WITH feats AS (
-        SELECT doc_id,
-               len(string_split(text, ' ')) AS n_tokens,
-               length(text) AS n_chars,
-               length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))
-                   AS n_digits,
-               length(text)
-                   - length(regexp_replace(text, '[.,!?;:]', '', 'g'))
-                   AS n_punct,
-               len(list_filter(string_split(text, ' '),
-                   x -> x IN {_MODEL_STOPS})) AS n_stop
-        FROM documents
-    ),
-    scored AS (
-        SELECT doc_id,
-               CAST({_MODEL_W['n_tokens']} * n_tokens
-                    + {_MODEL_W['n_chars']} * n_chars
-                    + {_MODEL_W['n_digits']} * n_digits
-                    + {_MODEL_W['n_punct']} * n_punct
-                    + {_MODEL_W['n_stop']} * n_stop
-                    + {_MODEL_B} AS BIGINT) AS logit_micro
-        FROM feats
+# ---------------------------------------------------------------------------
+# The quality scores, one form per dialect. quality_features (Spark)
+# and quality_features_sql (DuckDB) give the same per-document features
+# and the model's logit; model_score_frame's UDF gives the logit again
+# as an int64 dot product. heuristic_quality(_sql) is the composite
+# 0.4·distinct/n + 0.3·(1 − stop/n) + 0.3·min(n/100, 1) over those
+# features, in IEEE basic ops in the same order on both engines, so a
+# threshold on it compares identical bits.
+# ---------------------------------------------------------------------------
+def quality_features(docs: DataFrame, *keep: str) -> DataFrame:
+    """The ``keep`` columns of ``docs`` plus the quality features of its
+    ``text`` (INT): n_tokens, n_distinct, n_stop, n_chars, n_digits,
+    n_punct, and the model's logit as BIGINT ``logit_micro``. Columns a
+    caller does not read are pruned from its plan."""
+    stops = ", ".join(f"'{s}'" for s in _MODEL_STOPS)
+    # The token array is projected once: Spark does not share split()
+    # across references. The text is carried as _text so that ``keep``
+    # may name ``text``.
+    split = docs.select(
+        *keep,
+        F.length("text").alias("n_chars"),
+        tokens().alias("_ws"),
+        F.col("text").alias("_text"),
     )
+    feats = split.select(
+        *keep,
+        F.size("_ws").alias("n_tokens"),
+        F.size(F.array_distinct("_ws")).alias("n_distinct"),
+        F.expr(f"size(filter(_ws, x -> x IN ({stops})))").alias("n_stop"),
+        "n_chars",
+        (
+            F.col("n_chars") - F.length(F.regexp_replace("_text", "[0-9]", ""))
+        ).alias("n_digits"),
+        (
+            F.col("n_chars")
+            - F.length(F.regexp_replace("_text", "[.,!?;:]", ""))
+        ).alias("n_punct"),
+    )
+    logit = sum(
+        (F.col(f).cast("long") * w for f, w in _MODEL_W.items()),
+        F.lit(_MODEL_B).cast("long"),
+    )
+    return feats.withColumn("logit_micro", logit)
+
+
+def quality_features_sql(*keep: str) -> str:
+    """DuckDB form of quality_features over ``documents``, as a
+    parenthesized subquery."""
+    stops = ", ".join(f"'{s}'" for s in _MODEL_STOPS)
+    logit = " + ".join(f"{w} * {f}" for f, w in _MODEL_W.items())
+    cols = "".join(f"{c}, " for c in keep)
+    return f"""(
+        SELECT *, CAST({logit} + {_MODEL_B} AS BIGINT) AS logit_micro
+        FROM (
+            SELECT {cols}len(ws) AS n_tokens,
+                   len(list_distinct(ws)) AS n_distinct,
+                   len(list_filter(ws, x -> x IN ({stops}))) AS n_stop,
+                   length(text) AS n_chars,
+                   length(text)
+                       - length(regexp_replace(text, '[0-9]', '', 'g'))
+                       AS n_digits,
+                   length(text)
+                       - length(regexp_replace(text, '[.,!?;:]', '', 'g'))
+                       AS n_punct
+            FROM (SELECT *, {tokens_sql('duckdb')} AS ws FROM documents)
+        )
+    )"""
+
+
+def heuristic_quality() -> Column:
+    """The heuristic composite over quality_features' columns."""
+    n = F.col("n_tokens")
+    return (
+        F.lit(0.4) * (F.col("n_distinct").cast("double") / n)
+        + F.lit(0.3) * (F.lit(1.0) - F.col("n_stop").cast("double") / n)
+        + F.lit(0.3) * F.least(n.cast("double") / 100.0, F.lit(1.0))
+    )
+
+
+def heuristic_quality_sql() -> str:
+    """DuckDB form of heuristic_quality."""
+    return """(0.4 * (CAST(n_distinct AS DOUBLE) / n_tokens)
+               + 0.3 * (1.0 - CAST(n_stop AS DOUBLE) / n_tokens)
+               + 0.3 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0))"""
+
+
+_MODEL_ORACLE = f"""
     SELECT doc_id, logit_micro,
            0.5 + (CAST(logit_micro AS DOUBLE) / 1000000.0)
                / (2.0 * (1.0 + abs(CAST(logit_micro AS DOUBLE)
                                    / 1000000.0))) AS score,
            CASE WHEN logit_micro >= 0 THEN 1 ELSE 0 END AS pred_keep
-    FROM scored
+    FROM {quality_features_sql('doc_id')}
     """
 
 
@@ -1856,47 +1922,15 @@ def model_score_frame(docs: DataFrame, carry: tuple = ()) -> DataFrame:
     from pyspark.sql.functions import pandas_udf
 
     # 'doc_id' is always emitted internally, so a caller carrying it
-    # would project the same attribute twice; 'text' is consumed via an
-    # aliased copy (__msf_text) below so carry=('text',) (x21) passes
-    # the original through without an AMBIGUOUS_REFERENCE hazard on
-    # derived/renamed inputs.
+    # would project the same attribute twice.
     carry = tuple(c for c in carry if c != "doc_id")
-
-    stop_list = ", ".join(f"'{s}'" for s in _MODEL_STOPS)
-    feats = (
-        docs
-        .select(*carry, "doc_id",
-                F.length("text").alias("n_chars"),
-                F.split("text", " ").alias("ws"),
-                F.col("text").alias("__msf_text"))
-        .select(
-            *carry,
-            "doc_id",
-            F.size("ws").cast("long").alias("n_tokens"),
-            F.col("n_chars").cast("long"),
-            (
-                F.col("n_chars")
-                - F.length(F.regexp_replace("__msf_text", "[0-9]", ""))
-            ).cast("long").alias("n_digits"),
-            (
-                F.col("n_chars")
-                - F.length(F.regexp_replace("__msf_text", "[.,!?;:]", ""))
-            ).cast("long").alias("n_punct"),
-            F.expr(f"size(filter(ws, x -> x IN ({stop_list})))")
-            .cast("long")
-            .alias("n_stop"),
-        )
-    )
+    feats = quality_features(docs, *carry, "doc_id")
 
     # Weight vector pinned OUTSIDE the UDF in feature order; the closure
     # serializes once per executor (broadcast semantics on a cluster).
     import numpy as np
 
-    w = np.array(
-        [_MODEL_W[c] for c in
-         ("n_tokens", "n_chars", "n_digits", "n_punct", "n_stop")],
-        dtype=np.int64,
-    )
+    w = np.array(list(_MODEL_W.values()), dtype=np.int64)
     b = np.int64(_MODEL_B)
 
     @pandas_udf("logit_micro long, score double")
@@ -1911,12 +1945,7 @@ def model_score_frame(docs: DataFrame, carry: tuple = ()) -> DataFrame:
         score = 0.5 + x / (2.0 * (1.0 + np.abs(x)))
         return pd.DataFrame({"logit_micro": logit, "score": score})
 
-    out = feats.select(
-        *carry,
-        "doc_id",
-        infer("n_tokens", "n_chars", "n_digits", "n_punct", "n_stop")
-        .alias("m"),
-    )
+    out = feats.select(*carry, "doc_id", infer(*_MODEL_W).alias("m"))
     return out.select(
         *carry,
         "doc_id",
@@ -1940,9 +1969,6 @@ def l_model_quality_scorer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # disagreements — model-keeps-heuristic-drops is the new data the model
 # admits; heuristic-keeps-model-drops is what switching would discard.
 # Single hash-aggregate over a map-side projection; no join, no UDF.
-# Cross-engine exactness: the logit is int64; the heuristic composite
-# is IEEE basic ops evaluated in the same literal order on both
-# engines, so the 0.5 threshold compares identical bits.
 # ---------------------------------------------------------------------------
 _HEUR_KEEP_THRESHOLD = 0.5
 
@@ -1950,34 +1976,12 @@ _HEUR_KEEP_THRESHOLD = 0.5
 @query(
     "l_scorer_agreement_audit",
     oracle=f"""
-    WITH feats AS (
-        SELECT doc_id,
-               len(string_split(text, ' ')) AS n_tokens,
-               len(list_distinct(string_split(text, ' '))) AS n_distinct,
-               len(list_filter(string_split(text, ' '),
-                   x -> x IN {_MODEL_STOPS})) AS n_stop,
-               length(text) AS n_chars,
-               length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))
-                   AS n_digits,
-               length(text)
-                   - length(regexp_replace(text, '[.,!?;:]', '', 'g'))
-                   AS n_punct
-        FROM documents
-    ),
-    verdicts AS (
+    WITH verdicts AS (
         SELECT n_tokens,
-               CASE WHEN {_MODEL_W['n_tokens']} * n_tokens
-                    + {_MODEL_W['n_chars']} * n_chars
-                    + {_MODEL_W['n_digits']} * n_digits
-                    + {_MODEL_W['n_punct']} * n_punct
-                    + {_MODEL_W['n_stop']} * n_stop
-                    + {_MODEL_B} >= 0 THEN 1 ELSE 0 END AS model_keep,
-               CASE WHEN 0.4 * (CAST(n_distinct AS DOUBLE) / n_tokens)
-                    + 0.3 * (1.0 - CAST(n_stop AS DOUBLE) / n_tokens)
-                    + 0.3 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
-                    >= {_HEUR_KEEP_THRESHOLD} THEN 1 ELSE 0 END
-                   AS heuristic_keep
-        FROM feats
+               CASE WHEN logit_micro >= 0 THEN 1 ELSE 0 END AS model_keep,
+               CASE WHEN {heuristic_quality_sql()} >= {_HEUR_KEEP_THRESHOLD}
+                    THEN 1 ELSE 0 END AS heuristic_keep
+        FROM {quality_features_sql()}
     )
     SELECT model_keep, heuristic_keep,
            CAST(count(*) AS BIGINT) AS n_docs,
@@ -1986,50 +1990,10 @@ _HEUR_KEEP_THRESHOLD = 0.5
     """,
 )
 def l_scorer_agreement_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stop_list = ", ".join(f"'{s}'" for s in _MODEL_STOPS)
-    feats = (
-        load(spark, sf_dir, "documents")
-        .select(
-            F.length("text").alias("n_chars"),
-            F.split("text", " ").alias("ws"),
-            "text",
-        )
-        .select(
-            F.size("ws").alias("n_tokens"),
-            F.size(F.array_distinct("ws")).alias("n_distinct"),
-            F.expr(f"size(filter(ws, x -> x IN ({stop_list})))").alias(
-                "n_stop"
-            ),
-            "n_chars",
-            (
-                F.col("n_chars")
-                - F.length(F.regexp_replace("text", "[0-9]", ""))
-            ).alias("n_digits"),
-            (
-                F.col("n_chars")
-                - F.length(F.regexp_replace("text", "[.,!?;:]", ""))
-            ).alias("n_punct"),
-        )
-    )
-    logit = (
-        F.lit(_MODEL_W["n_tokens"]) * F.col("n_tokens")
-        + F.lit(_MODEL_W["n_chars"]) * F.col("n_chars")
-        + F.lit(_MODEL_W["n_digits"]) * F.col("n_digits")
-        + F.lit(_MODEL_W["n_punct"]) * F.col("n_punct")
-        + F.lit(_MODEL_W["n_stop"]) * F.col("n_stop")
-        + F.lit(_MODEL_B)
-    )
-    quality = (
-        F.lit(0.4) * (F.col("n_distinct").cast("double") / F.col("n_tokens"))
-        + F.lit(0.3)
-        * (F.lit(1.0) - F.col("n_stop").cast("double") / F.col("n_tokens"))
-        + F.lit(0.3)
-        * F.least(F.col("n_tokens").cast("double") / 100.0, F.lit(1.0))
-    )
-    verdicts = feats.select(
+    verdicts = quality_features(load(spark, sf_dir, "documents")).select(
         "n_tokens",
-        F.when(logit >= 0, 1).otherwise(0).alias("model_keep"),
-        F.when(quality >= _HEUR_KEEP_THRESHOLD, 1)
+        F.when(F.col("logit_micro") >= 0, 1).otherwise(0).alias("model_keep"),
+        F.when(heuristic_quality() >= _HEUR_KEEP_THRESHOLD, 1)
         .otherwise(0)
         .alias("heuristic_keep"),
     )
@@ -2059,24 +2023,11 @@ def l_scorer_agreement_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # classification. Two hash aggregates over one scored scan; the bin
 # spine is 10 rows — driver-safe at any corpus size.
 # ---------------------------------------------------------------------------
-_DRIFT_ORACLE = ""  # assigned below (shares the scorer's weight table)
-
-
 def _drift_oracle() -> str:
-    stops = ", ".join(f"'{s}'" for s in _MODEL_STOPS)
     return f"""
     WITH feats AS (
-        SELECT doc_id % 2 AS half,
-               {_MODEL_W['n_tokens']} * len(string_split(text, ' '))
-               + {_MODEL_W['n_chars']} * length(text)
-               + {_MODEL_W['n_digits']} * (length(text)
-                   - length(regexp_replace(text, '[0-9]', '', 'g')))
-               + {_MODEL_W['n_punct']} * (length(text)
-                   - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-               + {_MODEL_W['n_stop']} * len(list_filter(
-                     string_split(text, ' '), x -> x IN ({stops})))
-               + {_MODEL_B} AS logit_micro
-        FROM documents
+        SELECT doc_id % 2 AS half, logit_micro
+        FROM {quality_features_sql('doc_id')}
     ),
     scored AS (
         SELECT half,
@@ -2202,9 +2153,9 @@ def l_scorer_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every token of that source once (ceil(A/alloc)). One groupBy scan +
 # an n-source sort; n is source-count-sized, never corpus-sized.
 # ---------------------------------------------------------------------------
-_MIX_ORACLE = """
+_MIX_ORACLE = f"""
     WITH avail AS (
-        SELECT source, CAST(sum(len(string_split(text, ' '))) AS BIGINT)
+        SELECT source, CAST(sum(len({tokens_sql('duckdb')})) AS BIGINT)
                    AS avail_tokens
         FROM documents GROUP BY 1
     ),
@@ -2257,7 +2208,7 @@ def l_mixture_epoch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents")
         .groupBy("source")
         .agg(
-            F.sum(F.size(F.split("text", " ")))
+            F.sum(F.size(tokens()))
             .cast("long")
             .alias("avail_tokens")
         )

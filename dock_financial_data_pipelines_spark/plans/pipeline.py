@@ -24,7 +24,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dock_financial_data_pipelines_spark.catalog import (
-    dec_sum,
     load,
     local_frame,
     read_parquet_or_empty,
@@ -32,6 +31,7 @@ from dock_financial_data_pipelines_spark.catalog import (
 from dock_financial_data_pipelines_spark.hashing import h60_py, h60_sql
 from dock_financial_data_pipelines_spark.registry import query
 from dock_financial_data_pipelines_spark.scratch import work_dir
+from dock_financial_data_pipelines_spark.shingles import tokens, tokens_sql
 from dock_financial_data_pipelines_spark.sources.sinks import (
     write_metadata_parquet,
     write_partitioned,
@@ -309,9 +309,7 @@ def pipeline_sharded_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def _release_oracle() -> str:
     from dock_financial_data_pipelines_spark.operators.training import (
-        _MODEL_B,
-        _MODEL_STOPS,
-        _MODEL_W,
+        quality_features_sql,
     )
     from dock_financial_data_pipelines_spark.sources.sinks import (
         _EXPORT_TOKEN_BUDGET,
@@ -319,18 +317,8 @@ def _release_oracle() -> str:
 
     return f"""
     WITH t AS (
-        SELECT doc_id, text,
-               len(string_split(text, ' ')) AS tokens,
-               {_MODEL_W['n_tokens']} * len(string_split(text, ' '))
-               + {_MODEL_W['n_chars']} * length(text)
-               + {_MODEL_W['n_digits']} * (length(text)
-                   - length(regexp_replace(text, '[0-9]', '', 'g')))
-               + {_MODEL_W['n_punct']} * (length(text)
-                   - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-               + {_MODEL_W['n_stop']} * len(list_filter(
-                     string_split(text, ' '), x -> x IN {_MODEL_STOPS}))
-               + {_MODEL_B} AS logit
-        FROM documents
+        SELECT doc_id, text, n_tokens AS tokens, logit_micro AS logit
+        FROM {quality_features_sql('doc_id', 'text')}
     ),
     gate AS (SELECT * FROM t WHERE logit >= 0),
     dedup AS (
@@ -374,38 +362,19 @@ def pipeline_training_data_release(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from dock_financial_data_pipelines_spark.operators.training import (
-        _MODEL_B,
-        _MODEL_STOPS,
-        _MODEL_W,
+        quality_features,
     )
     from dock_financial_data_pipelines_spark.sources.sinks import (
         _EXPORT_TOKEN_BUDGET,
     )
 
-    stop_list = ", ".join(f"'{s}'" for s in _MODEL_STOPS)
-    t = load(spark, sf_dir, "documents").select(
+    t = quality_features(
+        load(spark, sf_dir, "documents"), "doc_id", "text"
+    ).select(
         "doc_id",
         "text",
-        F.size(F.split("text", " ")).cast("long").alias("tokens"),
-        (
-            F.lit(_MODEL_W["n_tokens"]) * F.size(F.split("text", " "))
-            + F.lit(_MODEL_W["n_chars"]) * F.length("text")
-            + F.lit(_MODEL_W["n_digits"])
-            * (
-                F.length("text")
-                - F.length(F.regexp_replace("text", "[0-9]", ""))
-            )
-            + F.lit(_MODEL_W["n_punct"])
-            * (
-                F.length("text")
-                - F.length(F.regexp_replace("text", "[.,!?;:]", ""))
-            )
-            + F.lit(_MODEL_W["n_stop"])
-            * F.expr(
-                f"size(filter(split(text, ' '), x -> x IN ({stop_list})))"
-            )
-            + F.lit(_MODEL_B)
-        ).cast("long").alias("logit"),
+        F.col("n_tokens").cast("long").alias("tokens"),
+        F.col("logit_micro").alias("logit"),
     )
     # r14 restructure: the raw/gate/dedup census branches used to
     # re-evaluate progressively longer prefixes of the scoring + window
@@ -510,9 +479,7 @@ def pipeline_training_data_release(
 # ---------------------------------------------------------------------------
 def _incr_release_oracle() -> str:
     from dock_financial_data_pipelines_spark.operators.training import (
-        _MODEL_B,
-        _MODEL_STOPS,
-        _MODEL_W,
+        quality_features_sql,
     )
     from dock_financial_data_pipelines_spark.sources.sinks import (
         _EXPORT_TOKEN_BUDGET,
@@ -520,7 +487,7 @@ def _incr_release_oracle() -> str:
 
     return f"""
     WITH base AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS tokens,
+        SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens,
                md5(text) AS dg
         FROM documents WHERE doc_id % 2 = 0
     ),
@@ -533,18 +500,10 @@ def _incr_release_oracle() -> str:
     ),
     mx AS (SELECT coalesce(max(shard), -1) + 1 AS shard_off FROM bpack),
     newb AS (
-        SELECT doc_id, text, len(string_split(text, ' ')) AS tokens,
-               md5(text) AS dg,
-               {_MODEL_W['n_tokens']} * len(string_split(text, ' '))
-               + {_MODEL_W['n_chars']} * length(text)
-               + {_MODEL_W['n_digits']} * (length(text)
-                   - length(regexp_replace(text, '[0-9]', '', 'g')))
-               + {_MODEL_W['n_punct']} * (length(text)
-                   - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-               + {_MODEL_W['n_stop']} * len(list_filter(
-                     string_split(text, ' '), x -> x IN {_MODEL_STOPS}))
-               + {_MODEL_B} AS logit
-        FROM documents WHERE doc_id % 2 = 1
+        SELECT doc_id, text, n_tokens AS tokens, md5(text) AS dg,
+               logit_micro AS logit
+        FROM {quality_features_sql('doc_id', 'text')}
+        WHERE doc_id % 2 = 1
     ),
     gate AS (SELECT * FROM newb WHERE logit >= 0),
     nodup AS (
@@ -599,9 +558,7 @@ def pipeline_incremental_release(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from dock_financial_data_pipelines_spark.operators.training import (
-        _MODEL_B,
-        _MODEL_STOPS,
-        _MODEL_W,
+        quality_features,
     )
     from dock_financial_data_pipelines_spark.sources.sinks import (
         _EXPORT_TOKEN_BUDGET,
@@ -619,7 +576,7 @@ def pipeline_incremental_release(
     # --- publish the existing release (the even half) ---
     base = docs.where(F.col("doc_id") % 2 == 0).select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("tokens"),
+        F.size(tokens()).cast("long").alias("tokens"),
         F.md5("text").alias("dg"),
     )
     bpack = base.withColumn("cum", cum).withColumn(
@@ -643,31 +600,14 @@ def pipeline_incremental_release(
     )
 
     # --- the incremental batch (the odd half) ---
-    stop_list = ", ".join(f"'{s}'" for s in _MODEL_STOPS)
-    newb = docs.where(F.col("doc_id") % 2 == 1).select(
+    newb = quality_features(
+        docs.where(F.col("doc_id") % 2 == 1), "doc_id", "text"
+    ).select(
         "doc_id",
         "text",
-        F.size(F.split("text", " ")).cast("long").alias("tokens"),
+        F.col("n_tokens").cast("long").alias("tokens"),
         F.md5("text").alias("dg"),
-        (
-            F.lit(_MODEL_W["n_tokens"]) * F.size(F.split("text", " "))
-            + F.lit(_MODEL_W["n_chars"]) * F.length("text")
-            + F.lit(_MODEL_W["n_digits"])
-            * (
-                F.length("text")
-                - F.length(F.regexp_replace("text", "[0-9]", ""))
-            )
-            + F.lit(_MODEL_W["n_punct"])
-            * (
-                F.length("text")
-                - F.length(F.regexp_replace("text", "[.,!?;:]", ""))
-            )
-            + F.lit(_MODEL_W["n_stop"])
-            * F.expr(
-                f"size(filter(split(text, ' '), x -> x IN ({stop_list})))"
-            )
-            + F.lit(_MODEL_B)
-        ).cast("long").alias("logit"),
+        F.col("logit_micro").alias("logit"),
     )
     gate = newb.where(F.col("logit") >= 0)
     nodup = gate.join(
@@ -1101,7 +1041,7 @@ def _atomic_oracle() -> str:
                (sum(tokens) OVER (ORDER BY doc_id
                                   ROWS UNBOUNDED PRECEDING) - tokens)
                    // {_EXPORT_TOKEN_BUDGET} AS shard
-        FROM (SELECT doc_id, len(string_split(text, ' ')) AS tokens
+        FROM (SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens
               FROM documents WHERE doc_id % 2 = 0)
     ),
     off AS (SELECT coalesce(max(shard), -1) + 1 AS o FROM v1),
@@ -1111,7 +1051,7 @@ def _atomic_oracle() -> str:
                                   ROWS UNBOUNDED PRECEDING) - tokens)
                    // {_EXPORT_TOKEN_BUDGET}
                    + (SELECT o FROM off) AS shard
-        FROM (SELECT doc_id, len(string_split(text, ' ')) AS tokens
+        FROM (SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens
               FROM documents WHERE doc_id % 2 = 1)
     ),
     v2first AS (SELECT * FROM v2 WHERE shard = (SELECT o FROM off))
@@ -1207,7 +1147,7 @@ def _diff_oracle() -> str:
                                   ROWS UNBOUNDED PRECEDING) - tokens)
                    // {_EXPORT_TOKEN_BUDGET} AS shard,
                {_row_digest('duckdb')} AS dig
-        FROM (SELECT doc_id, len(string_split(text, ' ')) AS tokens
+        FROM (SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens
               FROM documents WHERE doc_id % 2 = 0)
     ),
     v2 AS (
@@ -1216,7 +1156,7 @@ def _diff_oracle() -> str:
                                   ROWS UNBOUNDED PRECEDING) - tokens)
                    // {_EXPORT_TOKEN_BUDGET} AS shard,
                {_row_digest('duckdb')} AS dig
-        FROM (SELECT doc_id, len(string_split(text, ' ')) AS tokens
+        FROM (SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens
               FROM documents WHERE doc_id % 2 = 1)
     ),
     m1 AS (SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1307,7 +1247,7 @@ def _rollback_oracle() -> str:
                (sum(tokens) OVER (ORDER BY doc_id
                                   ROWS UNBOUNDED PRECEDING) - tokens)
                    // {_EXPORT_TOKEN_BUDGET} AS shard
-        FROM (SELECT doc_id, len(string_split(text, ' ')) AS tokens
+        FROM (SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens
               FROM documents WHERE doc_id % 2 = 0)
     ),
     v2 AS (
@@ -1315,7 +1255,7 @@ def _rollback_oracle() -> str:
                (sum(tokens) OVER (ORDER BY doc_id
                                   ROWS UNBOUNDED PRECEDING) - tokens)
                    // {_EXPORT_TOKEN_BUDGET} AS shard
-        FROM (SELECT doc_id, len(string_split(text, ' ')) AS tokens
+        FROM (SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens
               FROM documents WHERE doc_id % 2 = 1)
     )
     SELECT 0 AS stage_ord, 'v1_published' AS stage,
@@ -1441,7 +1381,7 @@ def _pack_where(docs: DataFrame, cond: str, budget: int = None) -> DataFrame:
 
     sub = docs.where(F.expr(cond)).select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("tokens"),
+        F.size(tokens()).cast("long").alias("tokens"),
         F.md5("text").alias("dg"),
     )
     return _repack(sub, budget or _EXPORT_TOKEN_BUDGET)
@@ -1819,7 +1759,7 @@ def _snap_pack_sql(cond: str, budget: int = None) -> str:
                (sum(tokens) OVER (ORDER BY doc_id
                                   ROWS UNBOUNDED PRECEDING) - tokens)
                    // {b} AS shard
-        FROM (SELECT doc_id, len(string_split(text, ' ')) AS tokens
+        FROM (SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens
               FROM documents WHERE {cond})"""
 
 
@@ -1889,13 +1829,12 @@ def pipeline_snapshot_timetravel(
 
 
 def _cas_oracle() -> str:
+    long_doc = f"len({tokens_sql('duckdb')}) >= 50"
     return f"""
     WITH v1 AS ({_snap_pack_sql('doc_id % 2 = 0')}),
     v2 AS ({_snap_pack_sql('doc_id % 2 = 1')}),
-    b_stale AS ({_snap_pack_sql(
-        "doc_id % 2 = 0 AND len(string_split(text, ' ')) >= 50")}),
-    v3 AS ({_snap_pack_sql(
-        "doc_id % 2 = 1 AND len(string_split(text, ' ')) >= 50")})
+    b_stale AS ({_snap_pack_sql(f"doc_id % 2 = 0 AND {long_doc}")}),
+    v3 AS ({_snap_pack_sql(f"doc_id % 2 = 1 AND {long_doc}")})
     {_snap_stat_sql(0, 'base_v1', 'v1')}
     UNION ALL {_snap_stat_sql(1, 'a_committed', 'v2')}
     UNION ALL {_snap_stat_sql(2, 'b_stale_attempt', 'b_stale')}
@@ -2206,19 +2145,17 @@ def pipeline_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cdf_oracle() -> str:
-    return """
+    edited = "CASE WHEN doc_id % 3 = 0 THEN text || ' cdc' ELSE text END"
+    return f"""
     WITH v1 AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS tokens,
+        SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens,
                md5(text) AS dg
         FROM documents WHERE doc_id % 2 = 0
     ),
     v2 AS (
         SELECT doc_id,
-               len(string_split(CASE WHEN doc_id % 3 = 0
-                                     THEN text || ' cdc' ELSE text END,
-                                ' ')) AS tokens,
-               md5(CASE WHEN doc_id % 3 = 0
-                        THEN text || ' cdc' ELSE text END) AS dg
+               len({tokens_sql('duckdb', edited)}) AS tokens,
+               md5({edited}) AS dg
         FROM documents WHERE doc_id % 4 IN (0, 3)
     ),
     j AS (
@@ -2606,9 +2543,9 @@ def pipeline_snapshot_schema_evolution(
 
 
 def _merge_oracle() -> str:
-    return """
+    return f"""
     WITH base AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS tokens,
+        SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens,
                md5(text) AS dg
         FROM documents WHERE doc_id % 2 = 0
     ),
@@ -2616,7 +2553,7 @@ def _merge_oracle() -> str:
         SELECT doc_id,
                CASE WHEN doc_id % 10 = 0 THEN 'delete' ELSE 'upsert' END
                    AS op,
-               len(string_split(text || ' v2', ' ')) AS tokens,
+               len({tokens_sql('duckdb', "text || ' v2'")}) AS tokens,
                md5(text || ' v2') AS dg
         FROM documents WHERE doc_id % 3 = 0
     ),
@@ -2679,7 +2616,7 @@ def pipeline_snapshot_merge_upsert(
 
     base = docs.where("doc_id % 2 = 0").select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("tokens"),
+        F.size(tokens()).cast("long").alias("tokens"),
         F.md5("text").alias("dg"),
         F.pmod(F.col("doc_id"), F.lit(8)).cast("long").alias("shard"),
     )
@@ -2691,7 +2628,7 @@ def pipeline_snapshot_merge_upsert(
         F.when(F.col("doc_id") % 10 == 0, "delete")
         .otherwise("upsert")
         .alias("op"),
-        F.size(F.split(F.concat("text", F.lit(" v2")), " "))
+        F.size(tokens(F.concat("text", F.lit(" v2"))))
         .cast("long")
         .alias("tokens"),
         F.md5(F.concat("text", F.lit(" v2"))).alias("dg"),
@@ -3209,7 +3146,7 @@ def _dv_oracle() -> str:
     dig = f"CAST(coalesce(bit_xor({_row_digest('duckdb')}), 0) AS BIGINT)"
     return f"""
     WITH base AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS tokens,
+        SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens,
                doc_id % 8 AS shard
         FROM documents WHERE doc_id % 2 = 0
     ),
@@ -3278,7 +3215,7 @@ def pipeline_snapshot_delete_vectors(
 
     base = docs.where("doc_id % 2 = 0").select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("tokens"),
+        F.size(tokens()).cast("long").alias("tokens"),
         F.md5("text").alias("dg"),
         F.pmod(F.col("doc_id"), F.lit(8)).cast("long").alias("shard"),
     )
@@ -3591,7 +3528,7 @@ def _zc_oracle() -> str:
         SELECT doc_id, tokens,
                ntile({n}) OVER (ORDER BY doc_id) - 1 AS cb,
                ntile({n}) OVER (ORDER BY tokens, doc_id) - 1 AS tb
-        FROM (SELECT doc_id, len(string_split(text, ' ')) AS tokens
+        FROM (SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens
               FROM documents)
     ),
     zed AS (
@@ -3648,7 +3585,7 @@ def pipeline_zorder_cluster_rewrite(
 
     ranked = docs.select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("tokens"),
+        F.size(tokens()).cast("long").alias("tokens"),
         F.md5("text").alias("dg"),
     ).select(
         "doc_id",
@@ -3804,7 +3741,7 @@ def _blm_oracle() -> str:
     )
     return f"""
     WITH rows_ AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS tokens,
+        SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens,
                {shard} AS shard
         FROM documents
     ),
@@ -3886,7 +3823,7 @@ def pipeline_manifest_bloom_skipping(
 
     rows = docs.select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("tokens"),
+        F.size(tokens()).cast("long").alias("tokens"),
         F.md5("text").alias("dg"),
         F.expr(_blm_shard("spark")).cast("long").alias("shard"),
     )
@@ -4036,7 +3973,7 @@ def _mor_merge_oracle() -> str:
     dig = f"CAST(coalesce(bit_xor({_row_digest('duckdb')}), 0) AS BIGINT)"
     return f"""
     WITH base AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS tokens,
+        SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens,
                doc_id % 8 AS shard
         FROM documents WHERE doc_id % 2 = 0
     ),
@@ -4044,7 +3981,7 @@ def _mor_merge_oracle() -> str:
         SELECT doc_id,
                CASE WHEN doc_id % 10 = 0 THEN 'delete' ELSE 'upsert' END
                    AS op,
-               len(string_split(text || ' v2', ' ')) AS tokens
+               len({tokens_sql('duckdb', "text || ' v2'")}) AS tokens
         FROM documents WHERE doc_id % 3 = 0
     ),
     dv1 AS (SELECT c.doc_id FROM chg c
@@ -4114,7 +4051,7 @@ def pipeline_mor_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = docs.where("doc_id % 2 = 0").select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("tokens"),
+        F.size(tokens()).cast("long").alias("tokens"),
         F.md5("text").alias("dg"),
         F.pmod(F.col("doc_id"), F.lit(8)).cast("long").alias("shard"),
     )
@@ -4137,7 +4074,7 @@ def pipeline_mor_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("doc_id") % 10 == 0, "delete")
         .otherwise("upsert")
         .alias("op"),
-        F.size(F.split(F.concat("text", F.lit(" v2")), " "))
+        F.size(tokens(F.concat("text", F.lit(" v2"))))
         .cast("long")
         .alias("tokens"),
         F.md5(F.concat("text", F.lit(" v2"))).alias("dg"),
@@ -4230,9 +4167,9 @@ def _version_kind(root: str, version: int) -> str:
 
 
 def _history_oracle() -> str:
-    return """
+    return f"""
     WITH base AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS tokens
+        SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens
         FROM documents WHERE doc_id % 2 = 0
     ),
     vis2 AS (SELECT * FROM base WHERE doc_id % 10 <> 0),
@@ -4283,7 +4220,7 @@ def pipeline_snapshot_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = docs.where("doc_id % 2 = 0").select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("tokens"),
+        F.size(tokens()).cast("long").alias("tokens"),
         F.md5("text").alias("dg"),
         F.pmod(F.col("doc_id"), F.lit(8)).cast("long").alias("shard"),
     )
@@ -4889,7 +4826,7 @@ def pipeline_backfill_catchup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mor_expire_oracle() -> str:
     return f"""
     WITH base AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS tokens,
+        SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens,
                doc_id % 8 AS shard
         FROM documents WHERE doc_id % 2 = 0
     ),
@@ -4928,7 +4865,7 @@ def pipeline_mor_expire_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = docs.where("doc_id % 2 = 0").select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("tokens"),
+        F.size(tokens()).cast("long").alias("tokens"),
         F.md5("text").alias("dg"),
         F.pmod(F.col("doc_id"), F.lit(8)).cast("long").alias("shard"),
     )
@@ -5866,9 +5803,6 @@ def pipeline_commit_constraints(
 # row_number over the commit's own batch plus a watermark read — no
 # global coordination beyond the commit the writer already does.
 # ---------------------------------------------------------------------------
-_RL_SCHEMA = "row_id long, doc_id long, tokens long"
-
-
 def _rl_write(root: str, version: int, rows, n_files: int = 1) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq

@@ -1,10 +1,17 @@
-"""Word shingles: the k-token windows of a space-split text, one row each.
+"""Document tokens and the word shingles built on them.
 
-A text of n tokens (``split(text, ' ')``) has max(n - k, 0) + 1
-shingles: window i (0-based) joins tokens i+1 .. i+k with single
-spaces, and a text shorter than k tokens is one shingle of all its
-tokens. A NULL text yields the one shingle ``''``. The DuckDB oracles
-spell the same windows as ``range(greatest(len(ws) - k, 0) + 1)`` and
+A document's tokens are its text split on each single space:
+``split(text, ' ')`` in Spark, ``string_split(text, ' ')`` in DuckDB.
+Leading, trailing and doubled spaces give empty tokens, so ``''`` is
+one empty token and ``' a'`` is ``['', 'a']``; any other whitespace
+stays inside its token; a NULL text gives a NULL array. ``tokens`` and
+``tokens_sql`` are the only spellings of this rule in the package.
+
+A text of n tokens has max(n - k, 0) + 1 k-token shingles: window i
+(0-based) joins tokens i+1 .. i+k with single spaces, and a text
+shorter than k tokens is one shingle of all its tokens. A NULL text
+yields the one shingle ``''``. The DuckDB oracles spell the same
+windows as ``range(greatest(len(ws) - k, 0) + 1)`` and
 ``ws[i + 1 : i + k]``.
 
 The windows are built from k shifted slices of the token array zipped
@@ -19,8 +26,23 @@ makes a short text one shingle of all its tokens.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def tokens(expr: Column | str = "text") -> Column:
+    """The token array of ``expr``, a column or column name."""
+    return F.split(expr, " ")
+
+
+def tokens_sql(dialect: str, expr: str = "text") -> str:
+    """SQL text of the token array of ``expr`` for ``dialect`` "spark"
+    or "duckdb"."""
+    if dialect == "spark":
+        return f"split({expr}, ' ')"
+    if dialect == "duckdb":
+        return f"string_split({expr}, ' ')"
+    raise ValueError(f"unknown SQL dialect {dialect!r}")
 
 
 def word_shingles(
@@ -46,7 +68,7 @@ def word_shingles(
     # Split once into its own projection: each of the k + 1 references
     # to the token array would otherwise re-split the text.
     return (
-        df.select(*keep, F.split("text", " ").alias("_ws"))
+        df.select(*keep, tokens().alias("_ws"))
         .select(*keep, gen)
         .select(*keep, *at, shingle.alias(out))
     )

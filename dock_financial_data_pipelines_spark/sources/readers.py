@@ -49,6 +49,7 @@ from dock_financial_data_pipelines_spark.scratch import (
     built_path,
     work_dir,
 )
+from dock_financial_data_pipelines_spark.shingles import tokens, tokens_sql
 
 
 # ---------------------------------------------------------------------------
@@ -526,10 +527,10 @@ def s11_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "s13_text_roundtrip",
-    oracle="""
+    oracle=f"""
     SELECT count(*) AS n_lines,
            CAST(sum(length(text)) AS BIGINT) AS total_chars,
-           CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_words,
+           CAST(sum(len({tokens_sql('duckdb')})) AS BIGINT) AS total_words,
            CAST(max(length(text)) AS BIGINT) AS max_line_chars
     FROM documents
     """,
@@ -543,7 +544,7 @@ def s13_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lines.agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.sum(F.length("value")).cast("long").alias("total_chars"),
-        F.sum(F.size(F.split("value", " "))).cast("long").alias("total_words"),
+        F.sum(F.size(tokens("value"))).cast("long").alias("total_words"),
         F.max(F.length("value")).cast("long").alias("max_line_chars"),
     )
 

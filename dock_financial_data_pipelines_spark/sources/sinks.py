@@ -23,6 +23,7 @@ from dock_financial_data_pipelines_spark.catalog import (
 )
 from dock_financial_data_pipelines_spark.registry import query
 from dock_financial_data_pipelines_spark.scratch import ROOT, work_dir
+from dock_financial_data_pipelines_spark.shingles import tokens, tokens_sql
 
 
 def write_partitioned(
@@ -283,7 +284,7 @@ _EXPORT_TOKEN_BUDGET = 4000
     oracle=f"""
     WITH t AS (
         SELECT doc_id,
-               len(string_split(text, ' ')) AS tokens,
+               len({tokens_sql('duckdb')}) AS tokens,
                strlen(text) AS bytes,
                md5(CAST(doc_id AS VARCHAR) || '#' || md5(text)) AS dg
         FROM documents
@@ -316,7 +317,7 @@ def l_shard_export_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select(
         "doc_id",
         "text",
-        F.size(F.split("text", " ")).cast("long").alias("tokens"),
+        F.size(tokens()).cast("long").alias("tokens"),
         F.octet_length("text").cast("long").alias("bytes"),
         F.md5(
             F.concat(F.col("doc_id").cast("string"), F.lit("#"),

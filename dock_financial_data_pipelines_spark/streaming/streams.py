@@ -41,8 +41,13 @@ from dock_financial_data_pipelines_spark.catalog import (
     local_frame,
     read_parquet_or_empty,
 )
+from dock_financial_data_pipelines_spark.operators.training import (
+    model_score_frame,
+    quality_features_sql,
+)
 from dock_financial_data_pipelines_spark.registry import query
 from dock_financial_data_pipelines_spark.scratch import built_dir, work_dir
+from dock_financial_data_pipelines_spark.shingles import tokens, tokens_sql
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1617,39 +1622,15 @@ def _docs_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x20_stream_model_scoring",
     oracle=f"""
-    WITH feats AS (
-        SELECT doc_id, lang,
-               len(string_split(text, ' ')) AS n_tokens,
-               length(text) AS n_chars,
-               length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))
-                   AS n_digits,
-               length(text)
-                   - length(regexp_replace(text, '[.,!?;:]', '', 'g'))
-                   AS n_punct,
-               len(list_filter(string_split(text, ' '),
-                   x -> x IN ('the','a','of','and','to','in'))) AS n_stop
-        FROM documents
-    ),
-    scored AS (
-        SELECT lang,
-               CAST(1800 * n_tokens - 35 * n_chars - 420 * n_digits
-                    - 260 * n_punct + 900 * n_stop - 120000 AS BIGINT)
-                   AS logit_micro
-        FROM feats
-    )
     SELECT lang,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(count(CASE WHEN logit_micro >= 0 THEN 1 END) AS BIGINT)
                AS n_keep,
            CAST(coalesce(sum(logit_micro), 0) AS BIGINT) AS sum_logit_micro
-    FROM scored GROUP BY 1
+    FROM {quality_features_sql('lang')} GROUP BY 1
     """,
 )
 def x20_stream_model_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dock_financial_data_pipelines_spark.operators.training import (
-        model_score_frame,
-    )
-
     stream = _docs_stream_multibatch(spark, sf_dir)
     scored = model_score_frame(stream, carry=("lang",))
     drained = _run_to_memory(scored, "x20_scored", "append")
@@ -1679,36 +1660,19 @@ def x20_stream_model_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "x21_stream_gated_ingest",
-    oracle="""
-    WITH feats AS (
-        SELECT doc_id,
-               len(string_split(text, ' ')) AS tokens,
-               CAST(1800 * len(string_split(text, ' '))
-                    - 35 * length(text)
-                    - 420 * (length(text)
-                        - length(regexp_replace(text, '[0-9]', '', 'g')))
-                    - 260 * (length(text)
-                        - length(regexp_replace(text, '[.,!?;:]', '', 'g')))
-                    + 900 * len(list_filter(string_split(text, ' '),
-                        x -> x IN ('the','a','of','and','to','in')))
-                    - 120000 AS BIGINT) AS logit_micro
-        FROM documents
-    )
+    oracle=f"""
     SELECT CASE WHEN logit_micro >= 0 THEN 'keep' ELSE 'reject' END
                AS side,
            CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(coalesce(sum(tokens), 0) AS BIGINT) AS n_tokens,
+           CAST(coalesce(sum(n_tokens), 0) AS BIGINT) AS n_tokens,
            CAST(coalesce(sum(logit_micro), 0) AS BIGINT)
                AS sum_logit_micro
-    FROM feats GROUP BY 1
+    FROM {quality_features_sql()} GROUP BY 1
     """,
 )
 def x21_stream_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dock_financial_data_pipelines_spark.catalog import (
         read_parquet_or_empty,
-    )
-    from dock_financial_data_pipelines_spark.operators.training import (
-        model_score_frame,
     )
 
     keep_sink = work_dir(sf_dir, "x21_keep")
@@ -1719,7 +1683,7 @@ def x21_stream_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "logit_micro",
             "pred_keep",
-            F.size(F.split("text", " ")).cast("long").alias("tokens"),
+            F.size(tokens()).cast("long").alias("tokens"),
         )
         (
             scored.where(F.col("pred_keep") == 1)
@@ -2043,9 +2007,9 @@ def x23_stream_snapshot_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # x24 — streaming CDC deletes applied as merge-on-read DV commits
 # ---------------------------------------------------------------------------
-_X24_ORACLE = """
+_X24_ORACLE = f"""
 WITH d AS (
-    SELECT doc_id, len(string_split(text, ' ')) AS tokens,
+    SELECT doc_id, len({tokens_sql('duckdb')}) AS tokens,
            ntile(4) OVER (ORDER BY doc_id) AS chunk
     FROM documents
 ),
@@ -2111,7 +2075,7 @@ def x24_stream_mor_delete_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("tokens"),
+        F.size(tokens()).cast("long").alias("tokens"),
         F.md5("text").alias("dg"),
         F.pmod(F.col("doc_id"), F.lit(8)).cast("long").alias("shard"),
     )

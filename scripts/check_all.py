@@ -9,8 +9,9 @@ Usage:
         # only queries whose defining source file changed vs REV
         # (git diff --name-only REV, mapped through each registered
         # callable's source file) — keeps per-commit loops fast while
-        # the full drain stays the round gate. Falls back to the full
-        # registry (with a warning) if git or the mapping fails open."""
+        # the full drain stays the round gate. A changed package file
+        # that defines no query re-checks the full registry, as does a
+        # git failure (with a warning)."""
 
 from __future__ import annotations
 
@@ -30,12 +31,7 @@ engine.load_all()
 
 
 def _changed_queries(rev: str) -> list[str]:
-    """Registry names whose defining source file differs from ``rev``.
-
-    File-level granularity is deliberate: oracle strings are built by
-    module-level helpers next to their queries, so any edit in a module
-    re-checks every query that module defines."""
-    import inspect
+    """Registry names to re-check for the files that differ from ``rev``."""
     import subprocess
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -43,20 +39,40 @@ def _changed_queries(rev: str) -> list[str]:
         ["git", "diff", "--name-only", rev, "--"],
         cwd=repo, capture_output=True, text=True, check=True,
     ).stdout
-    changed = {
+    return _queries_for({
         os.path.normpath(os.path.join(repo, p))
         for p in out.splitlines() if p.strip()
-    }
-    names = []
+    })
+
+
+def _queries_for(changed: set[str]) -> list[str]:
+    """Registry names whose defining source file is in ``changed``
+    (absolute paths).
+
+    File-level granularity is deliberate: oracle strings are built by
+    module-level helpers next to their queries, so any edit in a module
+    re-checks every query that module defines. A changed package file
+    that defines no query (a shared owner such as ``shingles.py``) may
+    feed any query, so it re-checks the full registry. A query whose
+    source cannot be found is always re-checked."""
+    import inspect
+
+    pkg = os.path.dirname(os.path.abspath(engine.__file__))
+    sources = {}
     for name, fn in engine.QUERIES.items():
         try:
-            src = os.path.normpath(inspect.getsourcefile(fn))
+            sources[name] = os.path.normpath(inspect.getsourcefile(fn))
         except Exception:
-            names.append(name)  # unmappable → fail open, re-check
-            continue
-        if src in changed:
-            names.append(name)
-    return sorted(names)
+            sources[name] = None  # unmappable → fail open, re-check
+    defining = set(sources.values())
+    if any(
+        p.endswith(".py") and p.startswith(pkg + os.sep) and p not in defining
+        for p in changed
+    ):
+        return sorted(engine.QUERIES)
+    return sorted(
+        name for name, src in sources.items() if src is None or src in changed
+    )
 
 
 def _report_codegen(spark) -> None:

@@ -77,6 +77,8 @@ EMPTYFIX_QUERIES = [
     "l_bigram_cross_entropy",
     "l_contamination_check",
     "l_kneser_ney_bigram",
+    "o_metrics_report",
+    "o_connect_compat_report",
     # canaries
     "a1_pricing_summary",
     "w28_macd",

@@ -78,19 +78,32 @@ def test_reused_exchange_not_double_counted(spark, sf_dir):
     assert twice.shuffle_bytes_written < 2.5 * max(once.shuffle_bytes_written, 1)
 
 
-def test_empty_result_is_flagged_not_a_measured_zero(spark, sf_dir):
-    """When the last stage comes back empty, AQE swaps the executed
-    plan for a bare EmptyRelation and the metrics of the scan that ran
-    go with it: the run is flagged, never recorded as a measured 0."""
-    empty = (
-        load(spark, sf_dir, "orders")
-        .where(F.col("o_totalprice") < 0)
-        .groupBy("o_orderstatus")
+def test_empty_result_counts_the_stage_that_ran(spark, sf_dir):
+    """When a stage comes back empty, AQE swaps the executed plan for an
+    EmptyRelation leaf. The walk follows that leaf to the stages that
+    ran, so their scans are counted, not read as a measured 0: the last
+    stage empty (a filtered aggregate), and a broadcast build side
+    empty (the join and everything above it become nested
+    EmptyRelations)."""
+    orders = load(spark, sf_dir, "orders")
+    cust = load(spark, sf_dir, "customer")
+    empty_agg = orders.where(F.col("o_totalprice") < 0).groupBy(
+        "o_orderstatus"
+    ).count()
+    empty_build = (
+        orders.join(
+            F.broadcast(cust.where(F.col("c_acctbal") < -1e9)),
+            orders.o_custkey == cust.c_custkey,
+        )
+        .groupBy("c_mktsegment")
         .count()
     )
     store = MetricsStore()
-    assert run_with_metrics("empty_agg", empty, store) == 0
-    assert not store.runs[0].plan_metrics_ok
+    assert run_with_metrics("empty_agg", empty_agg, store) == 0
+    assert run_with_metrics("empty_build", empty_build, store) == 0
+    for m in store.runs:
+        assert m.plan_metrics_ok, m.query_name
+        assert m.files_read >= 1, m.query_name
 
 
 def test_metrics_store_accumulates_and_exports(spark, sf_dir):
