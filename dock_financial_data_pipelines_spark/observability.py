@@ -338,11 +338,11 @@ def o_connect_compat_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # a uniquely-named probe file: addPyFile lands files on executor
     # sys.path, so shipping a generically-named module would pollute it
-    import tempfile
+    from dock_financial_data_pipelines_spark.scratch import work_path
 
-    probe_py = os.path.join(
-        tempfile.gettempdir(), "dock_fdp_connect_compat_probe.py"
-    )
+    probe_dir = work_path(None, "connect_probe")
+    os.makedirs(probe_dir, exist_ok=True)
+    probe_py = os.path.join(probe_dir, "dock_fdp_connect_compat_probe.py")
     with open(probe_py, "w") as fh:
         fh.write("PROBE = True\n")
     classic_ship = cc.ship_package(spark, probe_py)

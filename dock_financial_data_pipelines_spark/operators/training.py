@@ -1936,14 +1936,20 @@ def model_score_frame(docs: DataFrame, carry: tuple = ()) -> DataFrame:
     @pandas_udf("logit_micro long, score double")
     def infer(nt: pd.Series, nc: pd.Series, nd: pd.Series,
               np_: pd.Series, ns: pd.Series) -> pd.DataFrame:
+        feats = (nt, nc, nd, np_, ns)
+        # A NULL text has NULL features (NaN here): its logit and score
+        # are NULL, as in SQL, not the int64 cast of a NaN.
+        null = np.logical_or.reduce([s.isna().to_numpy() for s in feats])
         X = np.stack(
-            [s.to_numpy(dtype=np.int64) for s in (nt, nc, nd, np_, ns)],
-            axis=1,
+            [s.fillna(0).to_numpy(dtype=np.int64) for s in feats], axis=1
         )
         logit = X @ w + b  # exact int64
         x = logit.astype(np.float64) / 1000000.0
         score = 0.5 + x / (2.0 * (1.0 + np.abs(x)))
-        return pd.DataFrame({"logit_micro": logit, "score": score})
+        return pd.DataFrame({
+            "logit_micro": pd.arrays.IntegerArray(logit, null),
+            "score": np.where(null, np.nan, score),
+        })
 
     out = feats.select(*carry, "doc_id", infer(*_MODEL_W).alias("m"))
     return out.select(

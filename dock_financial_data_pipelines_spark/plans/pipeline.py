@@ -33,8 +33,11 @@ from dock_financial_data_pipelines_spark.registry import query
 from dock_financial_data_pipelines_spark.scratch import work_dir
 from dock_financial_data_pipelines_spark.shingles import tokens, tokens_sql
 from dock_financial_data_pipelines_spark.sources.sinks import (
+    _METADATA_MAX_ROWS,
+    pa_fields,
     write_metadata_parquet,
     write_partitioned,
+    write_rows_pyarrow,
 )
 
 
@@ -693,8 +696,10 @@ def _version_dir(root: str, version: int, kind: str = "data") -> str:
 
     - ``data/v=N/`` — version N's data files, immutable once N is in
       the commit log;
-    - ``manifest/v=N/`` — its shard manifest (``_MANIFEST_DDL``, under
-      ``part=`` dirs), or the per-shard stats of the pruning tables;
+    - ``manifest/v=N/`` — its manifest, written by ``_build_manifest``:
+      the shard manifest (``_MANIFEST_DDL``, under ``part=`` dirs) or
+      the per-key stats of the pruning and partition-evolution tables
+      (the bloom table writes its bit matrix there itself);
     - ``dv/v=N/`` — a merge-on-read delete-key file (``_DV_DDL``);
     - ``layout/vN.layout`` — the data versions and DV chain N reads;
     - ``log/vN.commit`` plus checkpoints — the append-only commit log;
@@ -707,18 +712,6 @@ def _version_dir(root: str, version: int, kind: str = "data") -> str:
 
 _REL_SCHEMA_DDL = "doc_id long, tokens long, dg string, shard long"
 _MANIFEST_DDL = "shard long, n_docs long, n_tokens long, digest long"
-
-
-def _pa_fields(ddl: str) -> list:
-    """The pyarrow fields of a flat ``name type, ...`` DDL string of
-    long, int and string columns, for committer-side writes."""
-    import pyarrow as pa
-
-    types = {"long": pa.int64(), "int": pa.int32(), "string": pa.string()}
-    return [
-        pa.field(name, types[t])
-        for name, t in (col.split() for col in ddl.split(","))
-    ]
 
 
 # ---------------------------------------------------------------------------
@@ -801,22 +794,66 @@ def _xor_digest() -> Column:
     ).cast("long")
 
 
-def _shard_manifest(data: DataFrame) -> DataFrame:
-    return data.groupBy("shard").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.coalesce(F.sum("tokens"), F.lit(0)).cast("long").alias("n_tokens"),
-        _xor_digest().alias("digest"),
-    )
+# ---------------------------------------------------------------------------
+# Manifests: per-key stats of the files a version just staged — what a
+# reader plans from instead of opening data files. Every manifest is
+# built by _build_manifest, from a READ-BACK of the staged files (the
+# protocol's honesty proof: never from the writing plan). A manifest is
+# its DDL — the group key first, then one column per aggregate — and a
+# ``{column: aggregate}`` dict, each aggregate one of:
+#
+#   count               rows in the group
+#   sum(c)              nulls skipped, 0 when the group has no value
+#   min(c), max(c)      nulls skipped, NULL when the group has no value
+#   count_distinct(c)   distinct non-null values
+#   digest              xor of _row_digest, 0 over no digestible row
+#
+# The key is a stored column, or (``hive=True``) the ``key=value`` dir
+# name the rows sit under.
+# ---------------------------------------------------------------------------
+_SHARD_AGGS = {
+    "n_docs": "count", "n_tokens": "sum(tokens)", "digest": "digest"
+}
 
 
-# Bounds for the committer-side manifest fold below: a staged version
-# at or under these sizes has its manifest computed by the COMMITTER
-# (one pyarrow read-back of the files it just wrote) instead of a
-# second Spark job. ~128k rows of md5 cost ≈0.1 s driver-side — at
-# parity with the Spark action's fixed overhead; anything bigger keeps
-# the distributed scan.
+def _manifest_aggs(aggs: dict) -> list:
+    """``aggs`` as ``(column, kind, input column or "")`` triples."""
+    return [
+        (name, *spec.rstrip(")").partition("(")[::2])
+        for name, spec in aggs.items()
+    ]
+
+
+def _manifest_frame(
+    staged: DataFrame, man_ddl: str, aggs: dict
+) -> DataFrame:
+    """The Spark form of a manifest: one aggregate of ``staged`` by the
+    key, each column cast to its ``man_ddl`` type."""
+    key, *cols = [c.split() for c in man_ddl.split(",")]
+    types = dict(cols)
+    spark_agg = {
+        "count": lambda c: F.count(F.lit(1)),
+        "sum": lambda c: F.coalesce(F.sum(c), F.lit(0)),
+        "min": F.min,
+        "max": F.max,
+        "count_distinct": F.countDistinct,
+        "digest": lambda c: _xor_digest(),
+    }
+    return staged.groupBy(key[0]).agg(*(
+        spark_agg[kind](col).cast(types[name]).alias(name)
+        for name, kind, col in _manifest_aggs(aggs)
+    ))
+
+
+# Bounds for the committer-side fold below: a staged version at or
+# under these sizes has its manifest computed by the COMMITTER (one
+# pyarrow read-back of the files it just wrote) instead of a second
+# Spark job. ~128k rows of md5 cost ≈0.1 s driver-side — at parity with
+# the Spark action's fixed overhead; anything bigger keeps the
+# distributed scan.
 _LOCAL_MANIFEST_MAX_ROWS = 131072
 _LOCAL_MANIFEST_MAX_BYTES = 64 << 20
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _spark_hidden(name: str) -> bool:
@@ -884,95 +921,108 @@ def _committer_readback(data_dir: str, columns: list):
     }
 
 
-def _local_shard_manifest(data_dir: str):
-    """Per-shard manifest rows computed driver-side from the staged
-    parquet files themselves (flat layout only) — bit-identical to
-    ``_shard_manifest`` over the read-back: n_docs = count, n_tokens =
-    sum(tokens) nulls-skipped (0 when all null), digest = bit_xor over
-    ``_row_digest`` with null inputs skipped (0 when all null). Returns
-    None past the committer bounds (see _committer_readback).
+def _manifest_local(data_dir: str, man_ddl: str, aggs: dict, hive: bool):
+    """The committer form of a manifest: the staged files' read-back
+    grouped with pyarrow, equal to ``_manifest_frame`` over the same
+    files. None past the committer bounds, on a NULL key, and on a hive
+    dir name that is ``%``-escaped or the default partition (parsing
+    either verbatim would round-trip a different value): the Spark form
+    runs then."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    This IS still the protocol's read-back honesty proof: the manifest
-    derives from the bytes the staging write landed, not from the
-    in-flight DataFrame — only the scan engine changed (the committer
-    process reads its own output files, as real table formats do when
-    they write manifest stats at commit time)."""
-    tables = _committer_readback(data_dir, ["doc_id", "tokens", "shard"])
+    key = pa_fields(man_ddl)[0]
+    specs = _manifest_aggs(aggs)
+    digest = any(kind == "digest" for _, kind, _ in specs)
+    cols = sorted(
+        {c for _, _, c in specs if c}.union(
+            ("doc_id", "tokens") if digest else ()
+        )
+        - {key.name}
+    )
+    tables = _committer_readback(data_dir, cols if hive else [key.name, *cols])
     if tables is None:
         return None
-    stats: dict = {}
-    for tbl in tables.values():
-        doc_ids = tbl.column("doc_id").to_pylist()
-        toks = tbl.column("tokens").to_pylist()
-        shards = tbl.column("shard").to_pylist()
-        for doc_id, tokens, shard in zip(doc_ids, toks, shards):
-            acc = stats.get(shard)
-            if acc is None:
-                acc = stats[shard] = [0, None, None]
-            acc[0] += 1
-            if tokens is not None:
-                acc[1] = tokens if acc[1] is None else acc[1] + tokens
+    parts = []
+    for d, tbl in tables.items():
+        if hive:
+            name, _, value = os.path.basename(d).partition("=")
+            if name != key.name or "%" in value or value == _HIVE_NULL:
+                return None
+            tbl = tbl.append_column(
+                key.name,
+                pa.array([value] * tbl.num_rows, pa.string()).cast(key.type),
+            )
+        parts.append(tbl.select([key.name, *cols]))
+    if not parts:
+        return []
+    tbl = pa.concat_tables(parts)
+    if tbl[key.name].null_count:
+        return None
+    # count_all counts NULLs; sum with min_count=0 is 0 over no value
+    pa_aggs = [
+        ([], "count_all") if kind == "count"
+        else (col, kind, pc.ScalarAggregateOptions(min_count=0))
+        if kind == "sum" else (col, kind)
+        for _, kind, col in specs if kind != "digest"
+    ]
+    out = {n: "count_all" if k == "count" else f"{c}_{k}" for n, k, c in specs}
+    digests: dict = {}
+    if digest:  # the one per-row Python step: md5 has no arrow kernel
+        for k, doc_id, tokens in zip(
+            *(tbl[c].to_pylist() for c in (key.name, "doc_id", "tokens"))
+        ):
             if doc_id is not None and tokens is not None:
                 d = h60_py(f"{doc_id}:{tokens}".encode())
-                acc[2] = d if acc[2] is None else acc[2] ^ d
-    # A null shard would need the hive default-partition dir name the
-    # distributed writer produces — fall back rather than write a
-    # literal 'part=None' path (no current stager derives a null
-    # shard; this is the same guard write_metadata_parquet carries).
-    if None in stats:
-        return None  # pragma: no cover - defensive fallback
+                digests[k] = digests.get(k, 0) ^ d
     rows = []
-    for shard in sorted(stats):
-        n_docs, n_tokens, digest = stats[shard]
-        # part = shard % 4 with Java remainder semantics (sign follows
-        # the dividend), matching the Spark expression it replaces.
-        part = shard % 4 if shard >= 0 else -((-shard) % 4)
-        rows.append(
-            {
-                "shard": shard,
-                "n_docs": n_docs,
-                "n_tokens": 0 if n_tokens is None else n_tokens,
-                "digest": 0 if digest is None else digest,
-                "part": part,
-            }
-        )
+    for g in tbl.group_by(key.name).aggregate(pa_aggs).to_pylist():
+        k = g[key.name]
+        rows.append({key.name: k, **{
+            n: digests.get(k, 0) if kind == "digest" else g[out[n]]
+            for n, kind, _ in specs
+        }})
     return rows
 
 
-def _pe_local_manifest(data_dir: str):
-    """Committer-side per-directory stats for the partition-evolution
-    manifests (hive layout: the partition value lives in the p=… dir
-    name) — bit-identical to the Spark aggregate it replaces: n_rows =
-    count, n_days = count distinct non-null day, min/max day null-
-    skipped (None when all null; Python and Spark string min/max are
-    both byte-lexicographic). Returns None past the committer bounds or
-    on an unexpected layout — the Spark aggregate fallback runs then."""
-    tables = _committer_readback(data_dir, ["day"])
-    if tables is None:
-        return None
-    rows = []
-    for dirpath in sorted(tables):
-        base = os.path.basename(dirpath)
-        # '%' marks a hive-escaped char in the dir name and the default
-        # partition stands for a null p; parsing either verbatim would
-        # round-trip a different value — fall back.
-        if (
-            not base.startswith("p=")
-            or "%" in base
-            or base == "p=__HIVE_DEFAULT_PARTITION__"
-        ):
-            return None
-        tbl = tables[dirpath]
-        days = [d for d in tbl.column("day").to_pylist() if d is not None]
-        rows.append(
-            {
-                "p": base[2:],
-                "n_rows": tbl.num_rows,
-                "n_days": len(set(days)),
-                "min_day": min(days) if days else None,
-                "max_day": max(days) if days else None,
-            }
+def _build_manifest(
+    staged: DataFrame,
+    data_dir: str,
+    man_dir: str,
+    man_ddl: str,
+    aggs: dict,
+    hive: bool = False,
+    parts: int | None = None,
+) -> list:
+    """Write the manifest of the files under ``data_dir`` (``staged`` is
+    their Spark read) to ``man_dir`` and return its rows, as dicts in
+    key order, so a caller plans from them without reading the manifest
+    back. ``parts`` lays the manifest out under ``part=<key % parts>``
+    dirs.
+
+    The committer folds a bounded read-back itself (``_manifest_local``:
+    one Spark action per staged version, not two — the second action
+    was ~0.25-0.4 s of fixed overhead per micro-batch in the x23/x25
+    drains); otherwise the Spark form runs, collected up to the
+    metadata bound."""
+    rows = _manifest_local(data_dir, man_ddl, aggs, hive)
+    if rows is None:
+        frame = _manifest_frame(staged, man_ddl, aggs)
+        rows = [
+            r.asDict() for r in frame.limit(_METADATA_MAX_ROWS + 1).collect()
+        ]
+        if len(rows) > _METADATA_MAX_ROWS:  # pragma: no cover - scale
+            raise ValueError(f"{data_dir}: manifest over the driver bound")
+    key = man_ddl.split()[0]
+    rows.sort(key=lambda r: (r[key] is not None, r[key]))
+    for r in rows if parts else ():
+        k = r[key]  # Java remainder: the sign follows the key
+        r["part"] = (
+            None if k is None else -(-k % parts) if k < 0 else k % parts
         )
+    write_rows_pyarrow(
+        rows, pa_fields(man_ddl), man_dir, "part" if parts else None
+    )
     return rows
 
 
@@ -1104,7 +1154,7 @@ def pipeline_atomic_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     staged_v2 = _read_version(spark, root, 2)
     visible = _read_visible(spark, root)
-    recount = _shard_manifest(visible)
+    recount = _manifest_frame(visible, _MANIFEST_DDL, _SHARD_AGGS)
     audit = manifest.alias("m").join(
         recount.alias("d"), "shard", "full_outer"
     )
@@ -1645,8 +1695,6 @@ def _stage_version(
     df: DataFrame,
     root: str,
     version: int,
-    layout: str = "flat",
-    write_tasks: int | None = None,
     file_rows: int | None = None,
 ) -> DataFrame:
     """Stage data + manifest for ``version`` (writer-private until the
@@ -1659,20 +1707,15 @@ def _stage_version(
     clobber the winner's files (on an object store the same guard is
     writer-unique staging paths + the O_EXCL log create).
 
-    ``layout='flat'`` (default since r14) writes plain parquet files
-    into v=N with shard as a data column — the write commits per FILE
-    instead of per partition DIRECTORY, at a measured ~14 ms/dir of
-    Hadoop commit overhead, and file-level bin-packing is also what
-    real table formats compact (files within a partition, not
-    directories). ``layout='hive'`` writes one shard=N directory per
-    shard — required wherever a reader prunes by directory; NO
-    _stage_version reader does (the manifest-pruned and bloom-skipped
-    queries that select shard=N paths stage through write_partitioned
-    directly), which is why flat is safe as the default: the two
-    layouts are logically identical through read_parquet_or_empty's
-    explicit schema. ``write_tasks`` sizes the flat write's shuffle;
-    ``file_rows`` caps rows per output file (small-file debris from
-    ordinary-parallelism tasks instead of one task per file)."""
+    The data lands as plain parquet files in v=N with shard as a data
+    column: the write commits per FILE instead of per partition
+    DIRECTORY, at a measured ~14 ms/dir of Hadoop commit overhead, and
+    file-level bin-packing is also what real table formats compact.
+    No _stage_version reader prunes by directory (the manifest-pruned
+    and bloom-skipped queries that select shard=N paths stage through
+    write_partitioned directly). ``file_rows`` caps rows per output
+    file (small-file debris from ordinary-parallelism tasks instead of
+    one task per file)."""
     if version in _committed_versions(root):
         raise ValueError(
             f"version {version} is committed and immutable; "
@@ -1682,60 +1725,23 @@ def _stage_version(
     man_dir = _version_dir(root, version, "manifest")
     shutil.rmtree(data_dir, ignore_errors=True)
     shutil.rmtree(man_dir, ignore_errors=True)
-    if layout == "flat":
-        if not write_tasks and file_rows:
-            # An explicit task count: without one, AQE coalesces the
-            # tiny repartition("shard") to ONE post-shuffle partition
-            # and that single task writes every maxRecordsPerFile
-            # debris file serially (measured 4x slower). One task per
-            # core scales with the cluster, not with a local constant.
-            write_tasks = spark.sparkContext.defaultParallelism
-        out = (
-            df.repartition(write_tasks, "shard")
-            if write_tasks
-            else df.repartition("shard")
-        )
-        writer = out.write.mode("overwrite")
-        if file_rows:
-            # Small-file debris via the writer's per-file row cap, not
-            # via task count: one shuffle partition per core (or
-            # write_tasks) with maxRecordsPerFile splitting each task's
-            # output into many physically real small files — measured
-            # 2x cheaper than a 256-task shuffle AND yields more debris
-            # files (a 256-task write leaves empty partitions that
-            # produce none).
-            writer = writer.option("maxRecordsPerFile", str(file_rows))
-        writer.parquet(data_dir)
-    else:
-        write_partitioned(df.repartition("shard"), data_dir, "shard")
+    out, opts = df.repartition("shard"), {}
+    if file_rows:
+        # Small-file debris via the writer's per-file row cap, not via
+        # task count: maxRecordsPerFile splits each task's output into
+        # many physically real small files — measured 2x cheaper than a
+        # 256-task shuffle AND more debris files (a 256-task write
+        # leaves empty partitions that produce none). One task per core:
+        # without an explicit count, AQE coalesces the tiny shuffle to
+        # ONE partition whose task writes every debris file serially
+        # (measured 4x slower).
+        out = df.repartition(spark.sparkContext.defaultParallelism, "shard")
+        opts = {"maxRecordsPerFile": str(file_rows)}
+    out.write.mode("overwrite").options(**opts).parquet(data_dir)
     staged = _read_version(spark, root, version)
-    # The manifest is shard-count-sized metadata computed from a
-    # read-back of the staged files (the protocol's honesty proof,
-    # unchanged). r14 moved the manifest WRITE driver-side; r15 folds
-    # the read-back SCAN into the committer too for bounded versions
-    # (guide §2.4/§5: one Spark action per staged version, not two —
-    # the second action was ~0.25-0.4 s of pure fixed overhead per
-    # micro-batch in the x23/x25 drains). Oversized versions keep the
-    # distributed aggregate.
-    local_rows = None
-    if layout == "flat":
-        local_rows = _local_shard_manifest(data_dir)
-    if local_rows is not None:
-        from dock_financial_data_pipelines_spark.sources.sinks import (
-            write_rows_pyarrow,
-        )
-
-        write_rows_pyarrow(
-            local_rows, _pa_fields(_MANIFEST_DDL), man_dir, "part"
-        )
-    else:  # pragma: no cover - scale fallback
-        write_metadata_parquet(
-            _shard_manifest(staged).withColumn(
-                "part", (F.col("shard") % 4).cast("long")
-            ),
-            man_dir,
-            "part",
-        )
+    _build_manifest(
+        staged, data_dir, man_dir, _MANIFEST_DDL, _SHARD_AGGS, parts=4
+    )
     return staged
 
 
@@ -1975,13 +1981,12 @@ def pipeline_compact_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pack_where(docs, "doc_id % 2 = 0", _COMPACT_SMALL_BUDGET),
         root,
         1,
-        layout="flat",
         file_rows=10,
     )
     assert _commit_cas(root, None, 1)
 
     compacted = _repack(_read_visible(spark, root), _EXPORT_TOKEN_BUDGET)
-    _stage_version(spark, compacted, root, 2, layout="flat")
+    _stage_version(spark, compacted, root, 2)
     assert _commit_cas(root, 1, 2)
 
     # Census in ONE pass per distinct read path: v1 (version-pinned
@@ -2361,20 +2366,19 @@ def pipeline_write_audit_publish(
     )
 
 
-def _shard_manifest_stats(data: DataFrame) -> DataFrame:
-    """Manifest rows enriched with per-shard key bounds (min/max
-    doc_id) — the Iceberg column-stats idea at shard grain. Written
-    beside the data like the plain manifest; bytes-sized, never
-    data-sized."""
-    return data.groupBy("shard").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.coalesce(F.sum("tokens"), F.lit(0)).cast("long").alias("n_tokens"),
-        F.min("doc_id").cast("long").alias("min_doc"),
-        F.max("doc_id").cast("long").alias("max_doc"),
-    )
-
-
 _PRUNE_LO, _PRUNE_HI = 100, 260
+# The pruning table's manifest: the shard manifest enriched with
+# per-shard key bounds (min/max doc_id), the Iceberg column-stats idea
+# at shard grain.
+_PRUNE_MAN_DDL = (
+    "shard long, n_docs long, n_tokens long, min_doc long, max_doc long"
+)
+_PRUNE_AGGS = {
+    "n_docs": "count",
+    "n_tokens": "sum(tokens)",
+    "min_doc": "min(doc_id)",
+    "max_doc": "max(doc_id)",
+}
 
 
 def _prune_oracle() -> str:
@@ -2427,20 +2431,22 @@ def pipeline_manifest_pruned_read(
     man_dir = _version_dir(root, 1, "manifest")
     write_partitioned(packed.repartition("shard"), data_dir, "shard")
     staged = _read_version(spark, root, 1)
-    write_metadata_parquet(_shard_manifest_stats(staged), man_dir)
+    man = _build_manifest(
+        staged, data_dir, man_dir, _PRUNE_MAN_DDL, _PRUNE_AGGS, hive=True
+    )
     assert _commit_cas(root, None, 1)
 
-    man = spark.read.parquet(man_dir)
-    total = man.count()
-    # planning: manifest-only (bytes); the collect is manifest-sized
+    # planning: manifest-only (bytes); a shard of NULL doc_ids has no
+    # bounds and never overlaps the range
     hit = [
-        r.shard
-        for r in man.where(
-            (F.col("max_doc") >= _PRUNE_LO) & (F.col("min_doc") <= _PRUNE_HI)
-        ).collect()
+        r["shard"]
+        for r in man
+        if r["min_doc"] is not None
+        and r["max_doc"] >= _PRUNE_LO
+        and r["min_doc"] <= _PRUNE_HI
     ]
     census = _census_rows(
-        spark, [(0, "manifest_census", total, len(hit), 0)], _SNAP_DDL
+        spark, [(0, "manifest_census", len(man), len(hit), 0)], _SNAP_DDL
     )
     if hit:
         pruned = spark.read.schema(_REL_SCHEMA_DDL).option(
@@ -3489,6 +3495,8 @@ _ZC_BOX_TB = 192      # probe box: tb >= 192 (highest 25% of axis 2)
 _ZC_DDL = (
     "doc_id long, tokens long, dg string, cb int, tb int, shard long"
 )
+_ZC_MAN_DDL = "shard long, cmn int, tmx int"
+_ZC_AGGS = {"cmn": "min(cb)", "tmx": "max(tb)"}
 
 
 def _zc_oracle() -> str:
@@ -3616,71 +3624,60 @@ def pipeline_zorder_cluster_rewrite(
         shutil.rmtree(man_dir, ignore_errors=True)
         write_partitioned(sharded.repartition("shard"), data_dir, "shard")
         staged = read_parquet_or_empty(spark, data_dir, _ZC_DDL)
-        hit = F.when(
-            (F.col("cb") < _ZC_BOX_CB) & (F.col("tb") >= _ZC_BOX_TB), 1
-        ).otherwise(0)
-        man = staged.groupBy("shard").agg(
-            F.min("cb").alias("cmn"),
-            F.max("tb").alias("tmx"),
-            F.sum(hit).alias("mh"),
+        man = _build_manifest(
+            staged, data_dir, man_dir, _ZC_MAN_DDL, _ZC_AGGS, hive=True
         )
-        write_metadata_parquet(man, man_dir)
         assert _commit_cas(root, base, version)
-        return staged
+        return staged, man
 
-    v1 = publish(ranked, "doc_id", 1, None)
+    _, man1 = publish(ranked, "doc_id", 1, None)
     # the clustering rewrite reads BACK the committed v1 (cluster keys
     # are stored columns, so no global re-ranking is needed) and
     # re-shards along the Morton curve
     v1_back = read_parquet_or_empty(
         spark, _version_dir(root, 1), _ZC_DDL
     ).withColumn("z", z_expr)
-    v2 = publish(v1_back, "z, doc_id", 2, 1).drop("z")
+    v2, man2 = publish(v1_back, "z, doc_id", 2, 1)
 
-    def pruned_read(version, ord_, name):
-        man_dir = _version_dir(root, version, "manifest")
+    def pruned_read(version, man):
+        """The census row of ``man`` — shards, shards the box probe
+        keeps, and the kept shards holding no box row (the probe's false
+        positives, counted from the pruned scan) — then the pruned
+        read's own row."""
+        ord_ = 2 * (version - 1)
         data_dir = _version_dir(root, version)
-        man = read_parquet_or_empty(
-            spark, man_dir, "shard long, cmn int, tmx int, mh long"
+        # planning is manifest-only
+        hit_shards = sorted(
+            r["shard"]
+            for r in man
+            if r["cmn"] < _ZC_BOX_CB and r["tmx"] >= _ZC_BOX_TB
         )
-        # planning is manifest-only; the collect is shard-count-sized
-        hit_shards = [
-            r.shard
-            for r in man.where(
-                (F.col("cmn") < _ZC_BOX_CB) & (F.col("tmx") >= _ZC_BOX_TB)
-            ).collect()
-        ]
         if hit_shards:
             scanned = spark.read.schema(_ZC_DDL).option(
                 "basePath", data_dir
             ).parquet(
-                *[
-                    os.path.join(data_dir, f"shard={s}")
-                    for s in sorted(hit_shards)
-                ]
+                *[os.path.join(data_dir, f"shard={s}") for s in hit_shards]
             )
         else:
             scanned = spark.createDataFrame([], _ZC_DDL)
         matches = scanned.where(
             (F.col("cb") < _ZC_BOX_CB) & (F.col("tb") >= _ZC_BOX_TB)
         )
-        return _snap_stat(matches, ord_, name, digest=True), man
+        census = _census(
+            matches, ord_, f"v{version}_census",
+            n_docs=len(man),
+            n_tokens=len(hit_shards),
+            n_shards=F.lit(len(hit_shards)) - F.countDistinct("shard"),
+            digest=0,
+        )
+        return census.unionAll(
+            _snap_stat(matches, ord_ + 1, f"v{version}_pruned_read",
+                       digest=True)
+        )
 
-    p1, man1 = pruned_read(1, 1, "v1_pruned_read")
-    p2, man2 = pruned_read(2, 3, "v2_pruned_read")
-    # per manifest: shards, shards the box probe keeps, and the kept
-    # shards holding no box row (the probe's false positives)
-    box = (F.col("cmn") < _ZC_BOX_CB) & (F.col("tmx") >= _ZC_BOX_TB)
-    prune = {
-        "n_tokens": F.count(F.when(box, F.lit(1))),
-        "n_shards": F.count(F.when(box & (F.col("mh") == 0), F.lit(1))),
-        "digest": 0,
-    }
     return (
-        _snap_stat(man1, 0, "v1_census", **prune)
-        .unionAll(p1)
-        .unionAll(_snap_stat(man2, 2, "v2_census", **prune))
-        .unionAll(p2)
+        pruned_read(1, man1)
+        .unionAll(pruned_read(2, man2))
         .unionAll(_snap_stat(v2, 4, "rewrite_content_identity", digest=True))
     )
 
@@ -4917,6 +4914,16 @@ def pipeline_mor_expire_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a residual filter can re-tighten whatever the coarser spec lost.
 # ---------------------------------------------------------------------------
 _PE_DDL = "event_id long, user_id long, day string, p string"
+# per partition dir: rows, distinct days and the day bounds
+_PE_MAN_DDL = (
+    "p string, n_rows long, n_days long, min_day string, max_day string"
+)
+_PE_AGGS = {
+    "n_rows": "count",
+    "n_days": "count_distinct(day)",
+    "min_day": "min(day)",
+    "max_day": "max(day)",
+}
 _PE_DOM_SPLIT = 15  # day-of-month <= 15 -> fine-spec era, else coarse
 
 
@@ -5051,43 +5058,15 @@ def pipeline_partition_evolution(
         F.dayofmonth("ts").alias("dom"),
     )
 
-    def _man(staged):
-        return staged.groupBy("p").agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.countDistinct("day").cast("long").alias("n_days"),
-            F.min("day").alias("min_day"),
-            F.max("day").alias("max_day"),
-        )
-
     def _publish(df, version, spec_id, transform, parent):
-        """Publish one era; returns the manifest rows when the
-        committer computed them driver-side (r15 fold, same rationale
-        as _local_shard_manifest: the per-dir stats derive from a
-        pyarrow read-back of the committed files — one Spark action
-        per era instead of two, and the planning collects below reuse
-        the same committed-bytes-derived rows), or None when the era
-        exceeded the driver bounds and the Spark aggregate + collect
-        path ran instead."""
+        """Publish one era; returns its manifest rows."""
         data_dir = _version_dir(root, version)
         man_dir = _version_dir(root, version, "manifest")
         write_partitioned(df.repartition("p"), data_dir, "p")
-        rows = _pe_local_manifest(data_dir)
-        if rows is not None:
-            from dock_financial_data_pipelines_spark.sources.sinks import (
-                write_rows_pyarrow,
-            )
-
-            write_rows_pyarrow(
-                rows,
-                _pa_fields(
-                    "p string, n_rows long, n_days long, min_day string, "
-                    "max_day string"
-                ),
-                man_dir,
-            )
-        else:  # pragma: no cover - scale fallback
-            staged = read_parquet_or_empty(spark, data_dir, _PE_DDL)
-            write_metadata_parquet(_man(staged), man_dir)
+        rows = _build_manifest(
+            _pe_read(spark, root, version), data_dir, man_dir,
+            _PE_MAN_DDL, _PE_AGGS, hive=True,
+        )
         _pe_write_spec(root, version, spec_id, transform)
         assert _commit_cas(root, parent, version)
         return rows
@@ -5107,33 +5086,9 @@ def pipeline_partition_evolution(
     dirs1, dirs2 = _pe_dirs(root, 1), _pe_dirs(root, 2)
     spec1, spec2 = _pe_read_spec(root, 1), _pe_read_spec(root, 2)
 
-    # planning reads: manifest-sized (one row per partition dir). The
-    # committer path already holds the committed manifests' rows;
-    # only the scale fallback re-reads them through Spark.
-    man1 = (
-        {r["p"]: r for r in rows1}
-        if rows1 is not None
-        else {
-            r["p"]: r
-            for r in spark.read.parquet(
-                _version_dir(root, 1, "manifest")
-            ).collect()
-        }
-        if dirs1
-        else {}
-    )
-    man2 = (
-        {r["p"]: r for r in rows2}
-        if rows2 is not None
-        else {
-            r["p"]: r
-            for r in spark.read.parquet(
-                _version_dir(root, 2, "manifest")
-            ).collect()
-        }
-        if dirs2
-        else {}
-    )
+    # planning reads: manifest-sized (one row per partition dir)
+    man1 = {r["p"]: r for r in rows1}
+    man2 = {r["p"]: r for r in rows2}
 
     probe1 = min((r["min_day"] for r in man1.values()), default=None)
     probe2 = max((r["max_day"] for r in man2.values()), default=None)

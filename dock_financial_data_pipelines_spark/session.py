@@ -99,6 +99,41 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _package_zip(pkg_dir: str) -> str:
+    """A zip of the ``.py`` files of the package at ``pkg_dir``, in this
+    process's scratch (so it lives as long as any session shipping it)
+    and named by a hash of their paths and contents: Spark refuses a
+    shipped file whose contents change under its path, so no other
+    process or package tree may write to it."""
+    import hashlib
+    import tempfile
+    import zipfile
+
+    from dock_financial_data_pipelines_spark.scratch import work_path
+
+    top = os.path.dirname(pkg_dir)
+    files = sorted(
+        os.path.relpath(os.path.join(root, f), top)
+        for root, _, names in os.walk(pkg_dir)
+        for f in names
+        if f.endswith(".py")
+    )
+    digest = hashlib.sha1()
+    for rel in files:
+        with open(os.path.join(top, rel), "rb") as fh:
+            digest.update(rel.encode() + b"\0" + fh.read())
+    out_dir = work_path(None, "package")
+    final = os.path.join(out_dir, f"pkg-{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(final):
+        os.makedirs(out_dir, exist_ok=True)
+        fd, staging = tempfile.mkstemp(dir=out_dir, suffix=".tmp")
+        with os.fdopen(fd, "wb") as raw, zipfile.ZipFile(raw, "w") as zf:
+            for rel in files:
+                zf.write(os.path.join(top, rel), rel)
+        os.replace(staging, final)
+    return final
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers.
 
@@ -120,21 +155,8 @@ def _ship_package(spark: SparkSession) -> None:
     carrier = sc if sc is not None else spark
     if getattr(carrier, "_dock_fdp_shipped", False):
         return
-    import tempfile
-    import uuid
-    import zipfile
-
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    final = os.path.join(tempfile.gettempdir(), "dock_fdp_spark_pkg.zip")
-    staging = f"{final}.{uuid.uuid4().hex}"
-    with zipfile.ZipFile(staging, "w") as zf:
-        for root, _, files in os.walk(pkg_dir):
-            for f in sorted(files):
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    zf.write(full, rel)
-    os.replace(staging, final)
+    final = _package_zip(pkg_dir)
     connect_compat.ship_package(spark, final)
     if sc is not None:
         # Driver-side Python runners (a Python streaming source's

@@ -44,6 +44,31 @@ def write_partitioned(
 
 _METADATA_MAX_ROWS = 65536
 
+# DDL type name (a Spark ``simpleString``, or the ``long`` alias) ->
+# its pyarrow type: the committer-side writers' one type map.
+_PA_TYPES = {
+    "long": "int64",
+    "bigint": "int64",
+    "int": "int32",
+    "string": "string",
+    "double": "float64",
+    "boolean": "bool_",
+}
+
+
+def pa_fields(ddl: str) -> list | None:
+    """The pyarrow fields of a flat ``name type, ...`` DDL string, or
+    None when a column has a type outside ``_PA_TYPES``."""
+    import pyarrow as pa
+
+    fields = []
+    for col in ddl.split(","):
+        name, t = col.split()
+        if t not in _PA_TYPES:
+            return None
+        fields.append(pa.field(name, getattr(pa, _PA_TYPES[t])()))
+    return fields
+
 
 def write_metadata_parquet(
     df: DataFrame,
@@ -51,73 +76,48 @@ def write_metadata_parquet(
     partition_col: str | None = None,
     max_rows: int = _METADATA_MAX_ROWS,
 ) -> None:
-    """Driver-side parquet write for METADATA-SIZED frames (per-shard
-    manifests, commit summaries).
+    """Driver-side parquet write for a METADATA-SIZED frame (the bloom
+    index; the snapshot manifests go through the pipeline's manifest
+    builder).
 
-    A manifest is a few rows per shard; pushing it through a full Spark
-    write job pays the whole commit protocol (task launch, dynamic-
-    overwrite listing, one Hadoop commit per partition directory —
-    ~0.4 s per call measured at r14) to land a few KB. Real table
-    formats write manifests from the committer process, not as
-    distributed jobs; this is the local analogue: one bounded collect
-    (which IS the staged-data read-back scan the protocol wants) plus a
-    direct pyarrow write that reproduces the distributed writer's
-    layout — ``partition_col=N/`` hive subdirectories holding the
-    remaining columns, or a flat single file.
+    A Spark write job pays the whole commit protocol (task launch,
+    dynamic-overwrite listing, one Hadoop commit per partition
+    directory — ~0.4 s per call measured at r14) to land a few KB; this
+    is one bounded collect plus a direct pyarrow write that reproduces
+    the distributed writer's layout — ``partition_col=N/`` hive
+    subdirectories holding the remaining columns, or a flat single file.
 
     Guarded: a frame larger than ``max_rows`` falls back to the
     distributed writer (a manifest that big deserves a real job, and
     the driver must never hold unbounded rows — guide §5)."""
     rows = df.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:  # pragma: no cover - scale fallback
+    fields = pa_fields(
+        ", ".join(
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in df.schema.fields
+            if f.name != partition_col
+        )
+    )
+    # Hive-path guard: f"{col}={value}" has no hive escaping — strings
+    # with '/', '=' or escape-worthy chars would corrupt the path.
+    # Integral partition values round-trip exactly; anything else, like
+    # an exotic column type, keeps the distributed writer (which escapes
+    # properly).
+    if (
+        len(rows) > max_rows
+        or fields is None
+        or partition_col is not None
+        and not all(
+            isinstance(r[partition_col], int)
+            and not isinstance(r[partition_col], bool)
+            for r in rows
+        )
+    ):  # pragma: no cover - scale fallback
         if partition_col:
             write_partitioned(df, path, partition_col)
         else:
             df.coalesce(1).write.mode("overwrite").parquet(path)
         return
-    # Hive-path guard (r15, ADVICE): f"{col}={value}" has no hive
-    # escaping — a None would write 'part=None' instead of
-    # __HIVE_DEFAULT_PARTITION__ and strings with '/', '=' or
-    # escape-worthy chars would corrupt the path. Integral partition
-    # values round-trip exactly; anything else keeps the distributed
-    # writer (which escapes properly).
-    if partition_col is not None and not all(
-        isinstance(r[partition_col], int) and not isinstance(
-            r[partition_col], bool
-        )
-        for r in rows
-    ):  # pragma: no cover - no current caller
-        write_partitioned(df, path, partition_col)
-        return
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StringType,
-    )
-
-    _PA = {
-        LongType: pa.int64(),
-        IntegerType: pa.int32(),
-        StringType: pa.string(),
-        DoubleType: pa.float64(),
-        BooleanType: pa.bool_(),
-    }
-    fields = []
-    for f in df.schema.fields:
-        if f.name == partition_col:
-            continue
-        pa_t = _PA.get(type(f.dataType))
-        if pa_t is None:
-            # exotic column type: keep the distributed writer's path
-            if partition_col:  # pragma: no cover - no current caller
-                write_partitioned(df, path, partition_col)
-            else:
-                df.coalesce(1).write.mode("overwrite").parquet(path)
-            return
-        fields.append(pa.field(f.name, pa_t))
     names = [f.name for f in fields] + (
         [partition_col] if partition_col else []
     )
@@ -135,9 +135,8 @@ def write_rows_pyarrow(
     writer's exact file layout — ``partition_col=N/`` hive
     subdirectories or a flat single file; no rows → no partition
     directories. ``fields`` are the pyarrow data fields (the partition
-    column excluded). Shared by the collect path above and callers
-    that computed the rows driver-side to begin with (the staging
-    manifest fold)."""
+    column excluded). Shared by the collect path above and the
+    snapshot tables' manifest builder (``plans.pipeline``)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -159,6 +158,8 @@ def write_rows_pyarrow(
     # No rows -> no partition directories, matching the dynamic
     # partitioned writer's behavior on an empty frame.
     for pv, grp in groups.items():
+        # a NULL partition value lands where Spark's writer puts it
+        pv = "__HIVE_DEFAULT_PARTITION__" if pv is None else pv
         sub = os.path.join(path, f"{partition_col}={pv}")
         os.makedirs(sub, exist_ok=True)
         pq.write_table(

@@ -44,7 +44,7 @@ HELPERS = {
     "plans.pipeline": (
         "_stage_version", "_commit_cas", "_read_visible", "_read_version",
         "_publish_version", "_commit_mor_delete", "_read_mor",
-        "_shard_manifest", "_write_layout", "_append_commit_log",
+        "_build_manifest", "_write_layout", "_append_commit_log",
     ),
     "sources.sinks": ("write_partitioned",),
 }

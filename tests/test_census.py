@@ -19,12 +19,12 @@ from dock_financial_data_pipelines_spark.plans.pipeline import (
     _SNAP_DDL,
     _census,
     _census_rows,
-    _pa_fields,
     _snap_const_row,
     _snap_stat,
     _value_census,
     _version_dir,
 )
+from dock_financial_data_pipelines_spark.sources.sinks import pa_fields
 
 PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -116,14 +116,16 @@ def test_version_dir_and_pa_fields():
     assert _version_dir("/t", 3, "manifest") == os.path.join(
         "/t", "manifest", "v=3"
     )
-    fields = _pa_fields(_MANIFEST_DDL)
+    fields = pa_fields(_MANIFEST_DDL)
     assert [(f.name, str(f.type)) for f in fields] == [
         ("shard", "int64"), ("n_docs", "int64"),
         ("n_tokens", "int64"), ("digest", "int64"),
     ]
-    assert [str(f.type) for f in _pa_fields("a int, b string")] == [
+    assert [str(f.type) for f in pa_fields("a int, b string")] == [
         "int32", "string",
     ]
+    assert pa_fields("a bigint, b double, c boolean") is not None
+    assert pa_fields("a long, b array<int>") is None
 
 
 # (pattern, the one function allowed to contain it, or None for nowhere)

@@ -344,11 +344,17 @@ def test_cdf_classes_match_plain_python(spark):
 # ---------------------------------------------------------------------------
 # Manifest pruning: the skipped shards provably contain no matches
 # ---------------------------------------------------------------------------
-def test_manifest_bounds_are_sound_for_pruning(spark):
+def test_manifest_bounds_are_sound_for_pruning(spark, tmp_path):
     from dock_financial_data_pipelines_spark.plans.pipeline import (
+        _PRUNE_AGGS,
         _PRUNE_HI,
         _PRUNE_LO,
-        _shard_manifest_stats,
+        _PRUNE_MAN_DDL,
+        _REL_SCHEMA_DDL,
+        _build_manifest,
+    )
+    from dock_financial_data_pipelines_spark.sources.sinks import (
+        write_partitioned,
     )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -356,7 +362,16 @@ def test_manifest_bounds_are_sound_for_pruning(spark):
     pdf = packed.toPandas()
     if pdf.empty:
         pytest.skip("empty fixture")
-    man = _shard_manifest_stats(packed).toPandas()
+    data_dir = str(tmp_path / "data")
+    write_partitioned(packed.repartition("shard"), data_dir, "shard")
+    staged = spark.read.schema(_REL_SCHEMA_DDL).parquet(data_dir)
+    man = pd.DataFrame(
+        _build_manifest(
+            staged, data_dir, str(tmp_path / "man"), _PRUNE_MAN_DDL,
+            _PRUNE_AGGS, hive=True,
+        )
+    )
+    assert sorted(man["shard"]) == sorted(set(pdf["shard"]))
     pruned_out = set(
         man[(man["max_doc"] < _PRUNE_LO) | (man["min_doc"] > _PRUNE_HI)][
             "shard"

@@ -8,9 +8,8 @@ on:
   layout- and content-identical to the distributed writer it replaced,
   for both the hive-partitioned and flat shapes, including the 0-row
   edge every empty-fixture drain exercises.
-- ``_stage_version``'s flat default must stay logically identical to
-  the hive layout through the protocol reader (the claim that justified
-  flipping the default).
+- ``_stage_version``'s manifest must equal a recount of the data it
+  staged.
 - ``file_rows`` small-file debris must be physically real (many files)
   without a one-task-per-file shuffle.
 """
@@ -102,13 +101,12 @@ def test_metadata_writer_falls_back_over_max_rows(spark, tmp_path):
     assert _rows(back.select("shard", "n")) == _rows(df)
 
 
-def test_stage_version_flat_default_matches_hive_through_reader(
-    spark, tmp_path
-):
+def test_stage_version_manifest_matches_recount(spark, tmp_path):
     from dock_financial_data_pipelines_spark.plans.pipeline import (
         _MANIFEST_DDL,
         _REL_SCHEMA_DDL,
-        _shard_manifest,
+        _SHARD_AGGS,
+        _manifest_frame,
         _stage_version,
     )
 
@@ -116,25 +114,24 @@ def test_stage_version_flat_default_matches_hive_through_reader(
         [(i, 10 + i, f"dg{i}", i % 3) for i in range(20)],
         "doc_id long, tokens long, dg string, shard long",
     )
-    flat_root = str(tmp_path / "flat_root")
-    hive_root = str(tmp_path / "hive_root")
-    staged_flat = _stage_version(spark, df, flat_root, 1)  # default=flat
-    staged_hive = _stage_version(spark, df, hive_root, 1, layout="hive")
-    assert _rows(staged_flat) == _rows(staged_hive) == _rows(df)
-    # flat: shard is a data column (no shard= dirs); hive: one dir/shard
-    assert not glob.glob(os.path.join(flat_root, "data", "v=1", "shard=*"))
-    assert len(glob.glob(os.path.join(hive_root, "data", "v=1", "shard=*"))) == 3
-    # manifests identical and equal to a recount of the staged data
-    for root in (flat_root, hive_root):
-        man = read_parquet_or_empty(
-            spark, os.path.join(root, "manifest", "v=1"), _MANIFEST_DDL
-        ).drop("part")
-        recount = _shard_manifest(
-            read_parquet_or_empty(
-                spark, os.path.join(root, "data", "v=1"), _REL_SCHEMA_DDL
-            )
-        )
-        assert _rows(man) == _rows(recount)
+    root = str(tmp_path / "root")
+    staged = _stage_version(spark, df, root, 1)
+    assert _rows(staged) == _rows(df)
+    # shard is a data column: no shard= dirs
+    assert not glob.glob(os.path.join(root, "data", "v=1", "shard=*"))
+    # the manifest equals a recount of the staged data
+    man = read_parquet_or_empty(
+        spark, os.path.join(root, "manifest", "v=1"), _MANIFEST_DDL
+    ).drop("part")
+    recount = _manifest_frame(
+        read_parquet_or_empty(
+            spark, os.path.join(root, "data", "v=1"), _REL_SCHEMA_DDL
+        ),
+        _MANIFEST_DDL,
+        _SHARD_AGGS,
+    )
+    assert _rows(man) == _rows(recount)
+    assert len(_rows(man)) == 3
 
 
 def test_stage_version_file_rows_debris_is_many_real_files(spark, tmp_path):
@@ -147,7 +144,7 @@ def test_stage_version_file_rows_debris_is_many_real_files(spark, tmp_path):
         "doc_id long, tokens long, dg string, shard long",
     )
     root = str(tmp_path / "debris_root")
-    staged = _stage_version(spark, df, root, 1, layout="flat", file_rows=5)
+    staged = _stage_version(spark, df, root, 1, file_rows=5)
     files = glob.glob(os.path.join(root, "data", "v=1", "*.parquet"))
     # physically real small-file debris: far more files than cores,
     # every row present exactly once

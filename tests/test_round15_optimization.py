@@ -4,9 +4,9 @@ The r15 round again changed HOW internals produce bytes, never WHAT any
 query computes. These tests pin the equivalences the optimizations rely
 on:
 
-- ``_local_shard_manifest`` (the committer-side manifest fold) must be
-  bit-identical to the Spark ``_shard_manifest`` aggregate over the
-  same staged files — including null-token rows (digest/sum skip
+- the manifest builder's committer form (``_manifest_local``) must be
+  bit-identical to its Spark form (``_manifest_frame``) over the same
+  staged files — including null-token rows (digest/sum skip
   semantics) and the hive ``part=`` layout of the manifest write.
 - the fused single-scan matview deltas must equal the per-slice
   ``_mv_agg`` frames they replaced.
@@ -67,27 +67,26 @@ _SAMPLE = [
 
 def test_local_manifest_matches_spark_aggregate(spark, tmp_path):
     from dock_financial_data_pipelines_spark.plans.pipeline import (
-        _local_shard_manifest,
         _MANIFEST_DDL,
         _REL_SCHEMA_DDL,
-        _shard_manifest,
+        _SHARD_AGGS,
+        _manifest_frame,
+        _manifest_local,
     )
 
     _root, data_dir, man_dir = _stage_sample(spark, tmp_path, _SAMPLE)
     staged = read_parquet_or_empty(spark, data_dir, _REL_SCHEMA_DDL)
     want = {
         r["shard"]: (r["n_docs"], r["n_tokens"], r["digest"])
-        for r in _shard_manifest(staged).collect()
+        for r in _manifest_frame(staged, _MANIFEST_DDL, _SHARD_AGGS).collect()
     }
-    got_rows = _local_shard_manifest(data_dir)
+    got_rows = _manifest_local(data_dir, _MANIFEST_DDL, _SHARD_AGGS, False)
     assert got_rows is not None
     got = {
         r["shard"]: (r["n_docs"], r["n_tokens"], r["digest"])
         for r in got_rows
     }
     assert got == want
-    for r in got_rows:
-        assert r["part"] == r["shard"] % 4  # non-negative shards here
     # and the manifest actually written by _stage_version reads back
     # identically through the protocol reader
     back = read_parquet_or_empty(spark, man_dir, _MANIFEST_DDL)
@@ -95,11 +94,12 @@ def test_local_manifest_matches_spark_aggregate(spark, tmp_path):
         r["shard"]: (r["n_docs"], r["n_tokens"], r["digest"])
         for r in back.collect()
     } == want
-    # hive layout: one part=N dir per distinct part value
+    # hive layout: one part=N dir per distinct part value (non-negative
+    # shards here)
     parts = sorted(
         n for n in os.listdir(man_dir) if n.startswith("part=")
     )
-    assert parts == sorted({f"part={r['part']}" for r in got_rows})
+    assert parts == sorted({f"part={shard % 4}" for shard in want})
 
 
 def test_local_manifest_zero_rows_writes_no_partitions(spark, tmp_path):
@@ -114,7 +114,9 @@ def test_local_manifest_row_cap_falls_back(tmp_path, spark):
     old = pl._LOCAL_MANIFEST_MAX_ROWS
     try:
         pl._LOCAL_MANIFEST_MAX_ROWS = 2
-        assert pl._local_shard_manifest(data_dir) is None
+        assert pl._manifest_local(
+            data_dir, pl._MANIFEST_DDL, pl._SHARD_AGGS, False
+        ) is None
     finally:
         pl._LOCAL_MANIFEST_MAX_ROWS = old
 
@@ -156,11 +158,15 @@ def test_readback_row_cap_reads_no_column_data(spark, tmp_path, monkeypatch):
         ds, "dataset", lambda *a, **k: FootersOnly(real_dataset(*a, **k))
     )
     # the guard is live: an under-cap read-back does hit the reader
+    shard = (pl._MANIFEST_DDL, pl._SHARD_AGGS, False)
+    pe = (pl._PE_MAN_DDL, pl._PE_AGGS, True)
     with pytest.raises(AssertionError, match="column data read"):
-        pl._local_shard_manifest(data_dir)
+        pl._manifest_local(data_dir, *shard)
+    with pytest.raises(AssertionError, match="column data read"):
+        pl._manifest_local(pe_dir, *pe)
     monkeypatch.setattr(pl, "_LOCAL_MANIFEST_MAX_ROWS", 2)
-    assert pl._local_shard_manifest(data_dir) is None
-    assert pl._pe_local_manifest(pe_dir) is None
+    assert pl._manifest_local(data_dir, *shard) is None
+    assert pl._manifest_local(pe_dir, *pe) is None
 
 
 def test_pe_local_manifest_default_partition_falls_back(spark, tmp_path):
@@ -168,8 +174,11 @@ def test_pe_local_manifest_default_partition_falls_back(spark, tmp_path):
     must not publish that dir name as a value, so the Spark aggregate
     (which reads it back as a null p) runs instead."""
     from dock_financial_data_pipelines_spark.plans.pipeline import (
+        _PE_AGGS,
         _PE_DDL,
-        _pe_local_manifest,
+        _PE_MAN_DDL,
+        _build_manifest,
+        _manifest_local,
     )
 
     data_dir = str(tmp_path / "pe_data")
@@ -179,18 +188,29 @@ def test_pe_local_manifest_default_partition_falls_back(spark, tmp_path):
         [(1, 10, "1998-01-01", "1998-01-01"), (2, 11, "1998-01-02", None)],
     )
     assert "p=__HIVE_DEFAULT_PARTITION__" in os.listdir(data_dir)
-    assert _pe_local_manifest(data_dir) is None
+    assert _manifest_local(data_dir, _PE_MAN_DDL, _PE_AGGS, True) is None
     back = read_parquet_or_empty(spark, data_dir, _PE_DDL)
     assert sorted(
         (r["p"] is None, r["n"])
         for r in back.groupBy("p").agg(F.count(F.lit(1)).alias("n")).collect()
     ) == [(False, 1), (True, 1)]
+    rows = _build_manifest(
+        back, data_dir, str(tmp_path / "pe_man"), _PE_MAN_DDL, _PE_AGGS,
+        hive=True,
+    )
+    assert [(r["p"], r["n_rows"], r["min_day"]) for r in rows] == [
+        (None, 1, "1998-01-02"),
+        ("1998-01-01", 1, "1998-01-01"),
+    ]
 
 
 def test_pe_local_manifest_matches_spark_aggregate(spark, tmp_path):
     from dock_financial_data_pipelines_spark.plans.pipeline import (
+        _PE_AGGS,
         _PE_DDL,
-        _pe_local_manifest,
+        _PE_MAN_DDL,
+        _manifest_frame,
+        _manifest_local,
     )
     from dock_financial_data_pipelines_spark.sources.sinks import (
         write_partitioned,
@@ -208,25 +228,19 @@ def test_pe_local_manifest_matches_spark_aggregate(spark, tmp_path):
     )
     data_dir = str(tmp_path / "pe_data")
     write_partitioned(df.repartition("p"), data_dir, "p")
+    staged = read_parquet_or_empty(spark, data_dir, _PE_DDL)
     want = {
         r["p"]: (r["n_rows"], r["n_days"], r["min_day"], r["max_day"])
-        for r in read_parquet_or_empty(spark, data_dir, _PE_DDL)
-        .groupBy("p")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.countDistinct("day").cast("long").alias("n_days"),
-            F.min("day").alias("min_day"),
-            F.max("day").alias("max_day"),
-        )
-        .collect()
+        for r in _manifest_frame(staged, _PE_MAN_DDL, _PE_AGGS).collect()
     }
-    got_rows = _pe_local_manifest(data_dir)
+    got_rows = _manifest_local(data_dir, _PE_MAN_DDL, _PE_AGGS, True)
     assert got_rows is not None
     got = {
         r["p"]: (r["n_rows"], r["n_days"], r["min_day"], r["max_day"])
         for r in got_rows
     }
     assert got == want
+    assert want["1998-01-02"] == (2, 1, "1998-01-02", "1998-01-02")
 
 
 def test_matview_fused_deltas_match_mv_agg(spark, sf_dir):

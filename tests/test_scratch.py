@@ -177,10 +177,9 @@ def test_racing_builds_publish_one_complete_dir(tmp):
     assert os.listdir(runs) == []  # no staging left in any run root
 
 
-# Scratch paths outside the owner: the two files named here keep theirs
-# (the package zip handed to executors, and a probe script), neither of
-# which is engine scratch under the owner's root.
-_ALLOWED = {"scratch.py", "session.py", "observability.py"}
+# Every path under the temp dir is the owner's: no other file names a
+# fixed one (the package zip and the connect probe script included).
+_ALLOWED = {"scratch.py"}
 _SCRATCH_PATH = re.compile(r'gettempdir\(|"dock_fdp_spark"|"_built"|uuid4')
 
 
@@ -196,6 +195,34 @@ def test_no_scratch_path_outside_the_owner():
                     if _SCRATCH_PATH.search(line):
                         hits.append(f"{os.path.relpath(path, PKG)}:{n}")
     assert hits == []
+
+
+def test_package_zips_of_different_trees_do_not_share_a_path(tmp_path):
+    """Spark refuses a shipped file whose contents change under its
+    path: two package trees that differ get two zips, a tree that does
+    not gets its own zip back, and each zip is under this process's run
+    root."""
+    import zipfile
+
+    from dock_financial_data_pipelines_spark import scratch
+    from dock_financial_data_pipelines_spark.session import _package_zip
+
+    trees = []
+    for name, body in (("a", "A = 1\n"), ("b", "A = 2\n")):
+        pkg = tmp_path / name / "pkg"
+        pkg.mkdir(parents=True)
+        (pkg / "__init__.py").write_text(body)
+        (pkg / "notes.txt").write_text("not shipped")
+        trees.append(str(pkg))
+    a, b = (_package_zip(t) for t in trees)
+    assert a != b
+    assert _package_zip(trees[0]) == a
+    run_root = os.path.dirname(scratch.work_path(None, "package"))
+    for z, body in ((a, b"A = 1\n"), (b, b"A = 2\n")):
+        assert z.startswith(run_root + os.sep)
+        with zipfile.ZipFile(z) as zf:
+            assert zf.namelist() == ["pkg/__init__.py"]
+            assert zf.read("pkg/__init__.py") == body
 
 
 def test_sink_location_default_is_under_the_owner_root():

@@ -189,6 +189,27 @@ def test_quality_score_counts_the_six_stopwords(spark, tmp_path):
     assert got["quality"].tolist() == oracle["quality"].tolist()
 
 
+def test_null_text_scores_null(spark, tmp_path):
+    """A NULL text has NULL features: the model scores it NULL and does
+    not keep it, on the UDF side as in its oracle."""
+    from tests._compare import compare_frames
+
+    path = _documents(tmp_path, ["the cat sat", None, "a b c d e", "x"])
+    for name in ("l_model_quality_scorer", "l_scorer_drift_monitor"):
+        got = engine.QUERIES[name](spark, str(tmp_path)).toPandas()
+        want = _duck(path).execute(engine.ORACLES[name]).df()
+        compare_frames(got, want, name)
+    scored = (
+        engine.QUERIES["l_model_quality_scorer"](spark, str(tmp_path))
+        .toPandas()
+        .set_index("doc_id")
+    )
+    assert pd.isna(scored.loc[1, "logit_micro"])
+    assert pd.isna(scored.loc[1, "score"])
+    assert scored.loc[1, "pred_keep"] == 0
+    assert scored.drop(index=1)["logit_micro"].notna().all()
+
+
 # --- the guard -------------------------------------------------------------
 # Splits that make a different decision than the token rule: characters,
 # sentences, the order priority's "-" and the U+FFFD count.
